@@ -12,10 +12,9 @@ import graft.sources.Ingest
   *
   * events stands in for the Staging incident table; dimensions are built
   * with distinct + row_number surrogate keys exactly like the reference's
-  * DimLocation/DimIncident/DimReportType (ELT.py:192-243), and the fact
-  * assembly is the reference's multi-way LEFT JOIN (ELT.py:264-289) with
-  * every dimension broadcast — at 100 TB the fact build is a map-only
-  * stage with zero shuffles.
+  * DimLocation/DimIncident/DimReportType (ELT.py:192-243). The fact
+  * assembly (ELT.py:264-289) computes its date/time smart keys per row
+  * and LEFT JOINs only the dimensions whose surrogates are assigned.
   */
 object StarSchema {
 
@@ -26,19 +25,25 @@ object StarSchema {
     * The surrogate mirrors SERIAL's deterministic rank but is assigned
     * with the two-pass [[graft.plans.Surrogate.rankedId]] (range
     * partition + per-partition offsets) — no single-partition window.
+    * Only the raw columns the projection reads are ranked (`ts` is
+    * re-derived from `ts_ms` as in [[graft.sources.Ingest.events]]); the
+    * cast/format/regexp projection runs once, over the ranked rows,
+    * instead of in every pass `rankedId` makes over its child.
     */
   def qIngestTypecast(s: SparkSession, dir: String): DataFrame = {
-    val e = Ingest.events(s, dir)
-    val base = e.select(
+    val raw = Ingest.events(s, dir)
+      .select("event_id", "ts_ms", "user_id", "event_type", "value", "props")
+    val ts = timestamp_millis(col("ts_ms"))
+    Surrogate.rankedId(raw, Seq("event_id"), "surrogate_id").select(
       col("event_id"),
       col("ts_ms"),
-      date_format(col("ts"), "yyyy-MM-dd").as("event_date"),
-      hour(col("ts")).cast("int").as("event_hour"),
+      date_format(ts, "yyyy-MM-dd").as("event_date"),
+      hour(ts).cast("int").as("event_hour"),
       col("user_id"),
       col("event_type"),
       coalesce(col("value"), lit(0.0)).as("value_filled"),
-      regexp_extract(col("props"), "\"k\":\\s*(\\d+)", 1).cast("long").as("k_prop"))
-    Surrogate.rankedId(base, Seq("event_id"), "surrogate_id")
+      regexp_extract(col("props"), "\"k\":\\s*(\\d+)", 1).cast("long").as("k_prop"),
+      col("surrogate_id"))
   }
 
   val qIngestTypecastSql: String =
@@ -78,16 +83,28 @@ object StarSchema {
        |     WHEN month($d) = 5 AND dayofweek($d) + 1 = 2 AND day($d) >= 25 THEN 'Memorial Day'
        |     ELSE NULL END""".stripMargin
 
-  /** THE date/time surrogate-key arithmetic — one definition for every
-    * producer (standalone dims, fact-build role-playing dims, streaming
-    * enrichment). A second copy drifting from this one silently joins
-    * facts to the wrong/no dim rows.
+  /** THE date/time surrogate-key arithmetic: Kimball-style smart keys,
+    * pure functions of the timestamp, shared by every producer (the
+    * standalone dims, the batch fact build, the streaming enrichment).
+    * A second copy drifting from this one silently joins facts to the
+    * wrong/no dim rows.
     */
   private[graft] def dateIdOf(d: Column): Column =
     (year(d) * 10000 + month(d) * 100 + dayofmonth(d)).cast("int")
 
   private[graft] def timeIdOf(h: Column, m: Column, s: Column): Column =
     (h * 10000 + m * 100 + s).cast("int")
+
+  /** DimTime's TimeOfDay band of an hour-of-day column. */
+  private def timeOfDayCol(h: Column): Column =
+    when(h < 6, "Night").when(h < 12, "Morning").when(h < 18, "Afternoon").otherwise("Evening")
+
+  /** DimTime's FullTime12 (`hh:mm:ss AM`) of hour/minute/second columns. */
+  private def fullTime12Col(h: Column, m: Column, s: Column): Column =
+    concat(lpad(when(h % 12 === 0, 12).otherwise(h % 12).cast("string"), 2, "0"),
+      lit(":"), lpad(m.cast("string"), 2, "0"),
+      lit(":"), lpad(s.cast("string"), 2, "0"), lit(" "),
+      when(h < 12, "AM").otherwise("PM"))
 
   /** Generated calendar dimension (reference DimDate, ELT.py:121-148):
     * year/quarter/month/week/day/season/weekend/holiday attributes
@@ -178,14 +195,8 @@ object StarSchema {
         concat(lpad(col("hour24").cast("string"), 2, "0"), lit(":"),
                lpad(col("minute").cast("string"), 2, "0"), lit(":"),
                lpad(col("second").cast("string"), 2, "0")).as("full_time24"),
-        concat(lpad(h12.cast("string"), 2, "0"), lit(":"),
-               lpad(col("minute").cast("string"), 2, "0"), lit(":"),
-               lpad(col("second").cast("string"), 2, "0"), lit(" "),
-               when(col("hour24") < 12, "AM").otherwise("PM")).as("full_time12"),
-        when(col("hour24") < 6, "Night")
-          .when(col("hour24") < 12, "Morning")
-          .when(col("hour24") < 18, "Afternoon")
-          .otherwise("Evening").as("time_of_day"))
+        fullTime12Col(col("hour24"), col("minute"), col("second")).as("full_time12"),
+        timeOfDayCol(col("hour24")).as("time_of_day"))
   }
 
   val qDimTimeSql: String =
@@ -246,20 +257,7 @@ object StarSchema {
       |      FROM orders) t
       |ORDER BY status_id""".stripMargin
 
-  // ---- shared inline dimensions for the fact build / star report ----
-
-  private def dimDateOf(e: DataFrame): DataFrame =
-    e.select(to_date(col("ts")).as("full_date")).distinct()
-      .withColumn("date_id", dateIdOf(col("full_date")))
-
-  /** Second-granularity, matching `q_dim_time`'s key scheme — the fact
-    * table's time_id must resolve against the standalone dimension.
-    */
-  private def dimTimeOf(e: DataFrame): DataFrame =
-    e.select(hour(col("ts")).cast("int").as("h"), minute(col("ts")).cast("int").as("m"),
-             second(col("ts")).cast("int").as("sec"))
-      .distinct()
-      .withColumn("time_id", timeIdOf(col("h"), col("m"), col("sec")))
+  // ---- lookup dimensions for the fact build ----
 
   /** User dimension: cardinality grows with the data, so the surrogate
     * uses the two-pass ranked id, never a global window.
@@ -271,52 +269,36 @@ object StarSchema {
     e.select(col("event_type").as("et")).distinct()
       .withColumn("type_id", row_number().over(Window.orderBy("et")).cast("long"))
 
-  /** Fact assembly: multi-way LEFT JOIN of the staging rows to broadcast
-    * dimensions on business keys (reference FactCrime, ELT.py:264-289),
-    * with ROLE-PLAYING date/time dims — the reference joins DimDate and
-    * DimTime twice, once for the incident timestamp and once for the
-    * report timestamp (ref ELT.py:279-282). Our events carry a single
-    * timestamp, so the report timestamp is derived deterministically
-    * (ts + (event_id mod 72) hours) to exercise the same join shape.
+  /** Fact assembly (reference FactCrime, ELT.py:264-289) with
+    * ROLE-PLAYING date/time keys: the reference keys every fact twice,
+    * by incident and by report timestamp (ref ELT.py:279-282). Our
+    * events carry a single timestamp, so the report timestamp is
+    * derived deterministically (ts + (event_id mod 72) hours).
+    *
+    * Date/time ids are smart keys ([[dateIdOf]]/[[timeIdOf]]), computed
+    * per row exactly as the standalone dims and `Streams.enrichFacts`
+    * compute them, so no date/time dimension is built or joined here; a
+    * null timestamp gives null ids, as a LEFT JOIN miss would. The
+    * user and type dimensions carry assigned surrogates and remain the
+    * lookups.
     */
   def qFactBuild(s: SparkSession, dir: String): DataFrame = {
     val e = Ingest.events(s, dir)
       .withColumn("report_ts", timestamp_millis(col("ts_ms") + (col("event_id") % 72) * 3600000L))
-    val dates = e.select(to_date(col("ts")).as("full_date"))
-      .unionByName(e.select(to_date(col("report_ts")).as("full_date")))
-      .distinct()
-      .withColumn("date_id", dateIdOf(col("full_date")))
-    val times = e.select(hour(col("ts")).cast("int").as("h"), minute(col("ts")).cast("int").as("m"),
-        second(col("ts")).cast("int").as("sec"))
-      .unionByName(e.select(hour(col("report_ts")).cast("int").as("h"),
-        minute(col("report_ts")).cast("int").as("m"), second(col("report_ts")).cast("int").as("sec")))
-      .distinct()
-      .withColumn("time_id", timeIdOf(col("h"), col("m"), col("sec")))
-    def dd(role: String) = dates.select(
-      col("full_date").as(s"${role}_fd"), col("date_id").as(s"${role}_date_id"))
-    def dt(role: String) = times.select(
-      col("h").as(s"${role}_h"), col("m").as(s"${role}_m"), col("sec").as(s"${role}_s"),
-      col("time_id").as(s"${role}_time_id"))
-    e.join(broadcast(dd("incident")), to_date(col("ts")) === col("incident_fd"), "left")
-      .join(broadcast(dd("report")), to_date(col("report_ts")) === col("report_fd"), "left")
-      .join(broadcast(dt("incident")),
-        hour(col("ts")).cast("int") === col("incident_h") &&
-        minute(col("ts")).cast("int") === col("incident_m") &&
-        second(col("ts")).cast("int") === col("incident_s"), "left")
-      .join(broadcast(dt("report")),
-        hour(col("report_ts")).cast("int") === col("report_h") &&
-        minute(col("report_ts")).cast("int") === col("report_m") &&
-        second(col("report_ts")).cast("int") === col("report_s"), "left")
-      // NO broadcast hint for the user dim: its cardinality grows with
-      // the data (billions of users at 100 TB would OOM every executor).
-      // AQE picks shuffle/SMJ — or broadcasts on its own when the
-      // runtime size is genuinely under the threshold. Date/time/type
-      // dims are bounded (≤86 400 rows), so those stay broadcast.
+    def dateId(t: String) = dateIdOf(to_date(col(t)))
+    def timeId(t: String) = timeIdOf(hour(col(t)), minute(col(t)), second(col(t)))
+    // NO broadcast hint for the user dim: its cardinality grows with
+    // the data (billions of users at 100 TB would OOM every executor).
+    // AQE picks shuffle/SMJ — or broadcasts on its own when the runtime
+    // size is genuinely under the threshold. The bounded type dim joins
+    // first: its broadcast gates the fact side's exchange, so AQE
+    // normally knows the user dim's size before any fact row is
+    // shuffled, instead of shuffling both join sides at once.
+    e.join(broadcast(dimTypeOf(e)), col("event_type") === col("et"), "left")
       .join(dimUserOf(e), col("user_id") === col("u"), "left")
-      .join(broadcast(dimTypeOf(e)), col("event_type") === col("et"), "left")
       .select(col("event_id"),
-              col("incident_date_id"), col("incident_time_id"),
-              col("report_date_id"), col("report_time_id"),
+              dateId("ts").as("incident_date_id"), timeId("ts").as("incident_time_id"),
+              dateId("report_ts").as("report_date_id"), timeId("report_ts").as("report_time_id"),
               col("user_dim_id"), col("type_id"), col("value"))
   }
 
@@ -354,39 +336,31 @@ object StarSchema {
       |LEFT JOIN dty ON e.event_type = dty.et
       |ORDER BY event_id""".stripMargin
 
-  /** Star join + IN-list filter + projection: the reference's reporting
-    * feed (fetchToGSheets, ELT.py:308-332) including its year-month
-    * derivation.
+  /** The reference's reporting feed (fetchToGSheets, ELT.py:308-332):
+    * purchase/signup facts with their calendar and time-of-day
+    * attributes and the year-month derivation.
+    *
+    * Every attribute is a pure function of the event's date or
+    * (hour, minute, second) — the smart-key scheme of [[qFactBuild]] —
+    * so it is computed per row rather than joined from a date/time
+    * dimension. The `ts IS NOT NULL` filter keeps exactly the rows that
+    * the inner joins to those dimensions in [[qStarReportSql]] keep.
     */
   def qStarReport(s: SparkSession, dir: String): DataFrame = {
-    val e = Ingest.events(s, dir)
-    val dd = dimDateOf(e)
-      .withColumn("day_name", date_format(col("full_date"), "EEEE"))
-      .withColumn("is_weekend", dayofweek(col("full_date")).isin(1, 7))
-      .withColumn("holiday_name", holidayNameCol(col("full_date")))
-    val dt = dimTimeOf(e)
-      .withColumn("time_of_day",
-        when(col("h") < 6, "Night").when(col("h") < 12, "Morning")
-          .when(col("h") < 18, "Afternoon").otherwise("Evening"))
-      .withColumn("full_time12",
-        concat(lpad(when(col("h") % 12 === 0, 12).otherwise(col("h") % 12).cast("string"), 2, "0"),
-          lit(":"), lpad(col("m").cast("string"), 2, "0"),
-          lit(":"), lpad(col("sec").cast("string"), 2, "0"), lit(" "),
-          when(col("h") < 12, "AM").otherwise("PM")))
-    e.withColumn("full_date", to_date(col("ts")))
-      .withColumn("h", hour(col("ts")).cast("int"))
-      .withColumn("m", minute(col("ts")).cast("int"))
-      .withColumn("sec", second(col("ts")).cast("int"))
-      .join(broadcast(dd), Seq("full_date"))
-      .join(broadcast(dt), Seq("h", "m", "sec"))
-      .filter(col("event_type").isin("purchase", "signup"))
+    val d = to_date(col("ts"))
+    val h = hour(col("ts"))
+    Ingest.events(s, dir)
+      .filter(col("ts").isNotNull && col("event_type").isin("purchase", "signup"))
       .select(
         col("event_id"),
-        date_format(col("full_date"), "yyyy-MM-dd").as("full_date_str"),
-        col("day_name"), col("is_weekend"), col("holiday_name"),
-        col("time_of_day"), col("full_time12"),
+        date_format(d, "yyyy-MM-dd").as("full_date_str"),
+        date_format(d, "EEEE").as("day_name"),
+        dayofweek(d).isin(1, 7).as("is_weekend"),
+        holidayNameCol(d).as("holiday_name"),
+        timeOfDayCol(h).as("time_of_day"),
+        fullTime12Col(h, minute(col("ts")), second(col("ts"))).as("full_time12"),
         col("event_type"), col("value"),
-        date_format(col("full_date"), "yyyy-MM").as("year_month"))
+        date_format(d, "yyyy-MM").as("year_month"))
   }
 
   val qStarReportSql: String =

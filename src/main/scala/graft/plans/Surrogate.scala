@@ -49,6 +49,12 @@ object Surrogate {
 
   /** Append `name` = 1-based global rank of `orderCols` (must form a
     * unique key for a deterministic assignment).
+    *
+    * `df`'s plan runs more than once: in the range-sample pass that
+    * picks the partition boundaries, again in a re-sample of any skewed
+    * input partition, and finally in the shuffle-map stage. Callers
+    * should therefore rank the narrowest raw rows and apply per-row
+    * projections (casts, formats, regexps) to the ranked result.
     */
   def rankedId(df: DataFrame, orderCols: Seq[String], name: String): DataFrame = {
     val sorted = df

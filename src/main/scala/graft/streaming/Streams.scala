@@ -450,19 +450,19 @@ object Streams {
 
   /** Stream-static fact enrichment — the streaming twin of the batch
     * fact build (`StarSchema.qFactBuild`): events on the wire get
-    * their date/time surrogate keys (pure expressions of the event
-    * time, same key scheme as the batch dims) and a LEFT JOIN to a
-    * bounded static dimension. Stream-static joins are STATELESS —
-    * the static side broadcasts per micro-batch, no state store, so
-    * the stage scales with the stream alone; this is exactly the
-    * role-playing dim join a 100 TB streaming ingest runs at the
-    * edge. Input needs (ts: timestamp, event_type, ...); `typeDim`
-    * needs (event_type, type_id).
+    * their date/time ids as Kimball-style smart keys (pure expressions
+    * of the event time, computed per row exactly as the batch fact
+    * build computes them) and a LEFT JOIN to a bounded static type
+    * dimension, the one real lookup. Stream-static joins are
+    * STATELESS — the static side broadcasts per micro-batch, no state
+    * store, so the stage scales with the stream alone. Input needs
+    * (ts: timestamp, event_type, ...); `typeDim` needs
+    * (event_type, type_id).
     */
   def enrichFacts(events: DataFrame, typeDim: DataFrame): DataFrame =
     events
-      // SHARED key arithmetic with the batch star schema — by
-      // construction, not by convention (drift would mis-join facts)
+      // the batch star schema's key functions, shared by construction:
+      // a streamed fact and its batch twin carry the same keys
       .withColumn("date_id", graft.operators.StarSchema.dateIdOf(col("ts")))
       .withColumn("time_id", graft.operators.StarSchema.timeIdOf(
         hour(col("ts")), minute(col("ts")), second(col("ts"))))

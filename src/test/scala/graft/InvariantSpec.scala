@@ -453,6 +453,31 @@ class InvariantSpec extends SparkSpec {
       "nation revenue totals must conserve the corpus discounted revenue")
   }
 
+  test("null event time: q_fact_build keeps the row with null date/time ids, q_star_report drops it") {
+    // the fact build's per-row smart keys must give NULL where the
+    // oracle's LEFT JOIN to the date/time dims misses, and the report's
+    // ts IS NOT NULL filter must drop exactly what its inner joins drop
+    val s = spark
+    import s.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-events").toString
+    Seq((1L, Option("2021-03-04 05:06:07"), 10L), (2L, Option.empty[String], 11L))
+      .toDF("event_id", "ts_s", "user_id")
+      .select(col("event_id"), col("ts_s").cast("timestamp").as("ts"), col("user_id"),
+        lit("purchase").as("event_type"), lit(1.5).as("value"), lit("{\"k\": 3}").as("props"))
+      .write.parquet(s"$dir/events.parquet")
+    val keys = Seq("incident_date_id", "incident_time_id", "report_date_id", "report_time_id")
+    val fact = StarSchema.qFactBuild(spark, dir).orderBy("event_id")
+      .select((Seq("event_id", "user_dim_id", "type_id") ++ keys).map(col): _*).collect()
+      .map(_.toSeq)
+    // event 1's report time is ts + (1 mod 72) hours
+    assert(fact.toSeq === Seq(
+      Seq(1L, 1L, 1L, 20210304, 50607, 20210304, 60607),
+      Seq(2L, 2L, 1L, null, null, null, null)))
+    val report = StarSchema.qStarReport(spark, dir).collect()
+    assert(report.map(_.getAs[Long]("event_id")).toSeq === Seq(1L))
+    assert(report.head.getAs[String]("full_time12") === "05:06:07 AM")
+  }
+
   test("q_holiday_lift day and order counts partition each year") {
     val rows = StarSchema.qHolidayLift(spark, sf0001).collect()
     val expected = graft.sources.Ingest.table(spark, sf0001, "orders")

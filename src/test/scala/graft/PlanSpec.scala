@@ -671,6 +671,20 @@ class PlanSpec extends SparkSpec {
       "retention must scan the corpus exactly once")
   }
 
+  test("q_fact_build / q_star_report: date/time keys are row expressions, not re-scanned dims") {
+    // date/time ids and attributes are pure functions of each row's
+    // timestamp; deriving a dimension from events and joining it back
+    // re-scans the staging table once per dimension side. Broadcast
+    // sides count. The ranked user dimension reads events through its
+    // RDD, so the fact build's scans are the fact rows and the type dim.
+    for ((name, want) <- Seq("q_fact_build" -> 2, "q_star_report" -> 1)) {
+      val p = plan(name).split("== Initial Plan ==")(0)
+      val scans = p.linesIterator
+        .count(l => l.contains("FileScan parquet") && l.contains("events.parquet"))
+      assert(scans === want, s"$name scans events $scans times, want $want:\n$p")
+    }
+  }
+
   test("q_vocab_coverage: no window anywhere — the rank is a broadcast top-k table") {
     // the old shape ranked the ENTIRE vocabulary through an
     // unpartitioned row_number window (one partition holding every

@@ -1,21 +1,11 @@
 #!/bin/bash
 # Local bench runner (r22): full or partial graft.Bench at a given SF dir.
 #   tools/run_bench.sh [sfdir] [outjson]
-# Env passthrough: SPARK_GRAFT_ONLY, SPARK_GRAFT_CPUS, SPARK_GRAFT_EXPLAIN.
+# Env passthrough: SPARK_GRAFT_ONLY, SPARK_GRAFT_CPUS, SPARK_DRIVER_MEM,
+# SPARK_GRAFT_EXPLAIN.
 set -e
 SF=${1:-/root/testdata/sf0.1}
 OUT=${2:-/tmp/bench_r22.json}
-cd /root/repo
-CP="target/scala-2.13/classes:/opt/spark/jars/*"
-OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
-         java.util java.util.concurrent java.util.concurrent.atomic; do
-  OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} \
-SPARK_GRAFT_BENCH_OUT="$OUT" java $OPENS -Xmx48g -XX:+UseParallelGC \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "$CP" graft.Bench
+. "$(dirname "$0")/jvm_env.sh"
+SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_BENCH_OUT="$OUT" \
+  java $GRAFT_JVM -cp "$GRAFT_CP" graft.Bench

@@ -28,15 +28,14 @@ TIMEOUT_S=${TIMEOUT_S:-420}
 # its baselines linear, so it no longer needs headroom.
 HEAVY_TIMEOUT_S=${HEAVY_TIMEOUT_S:-900}
 HEAVY_RE='dedup|span_|minhash|entity|corpus|jaccard|components|triangle|clustering|kcore|self_overlap|lsh_bucket|banding'
-cd /root/repo
+cd "$(dirname "$0")/.."
 if [ ! -d "$REPLICA" ]; then
   echo "[sf1] building 10x replica at $REPLICA"
   python3 tools/make_replica.py /root/testdata/sf0.1 "$REPLICA" 10
 fi
 
 echo "[sf1] full-surface verify dump"
-SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-16} \
-  tools/run_verify.sh "$REPLICA" "$OUT" 2>&1 | grep -iE "\[verify\].*failed" || true
+tools/run_verify.sh "$REPLICA" "$OUT" 2>&1 | grep -iE "\[verify\].*failed" || true
 
 ALL=$(python3 -c "import json; print(','.join(sorted(json.load(open('$OUT/oracle_sql.json')))))")
 echo "[sf1] oracle sweep over $(echo "$ALL" | tr ',' '\n' | wc -l) queries"

@@ -6,19 +6,8 @@
 set -e
 CORPUS=${1:-/tmp/sf1hot}
 WORK=${2:-/tmp/graft-stress}
-cd /root/repo
-CP="target/scala-2.13/classes:/opt/spark/jars/*"
-OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
-         java.util java.util.concurrent java.util.concurrent.atomic; do
-  OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
+. "$(dirname "$0")/jvm_env.sh"
 rm -rf "$WORK"
-# 8g heap on purpose: the sweep's memory-bound claim is only evidence if
-# the heap is NOT generous (matches the r12 sf1 sweep protocol).
-SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} java $OPENS -Xmx8g -XX:+UseParallelGC \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "$CP" graft.StressDedup "$CORPUS" "$WORK"
+# The derived heap is at most 8g on purpose: the sweep's memory-bound
+# claim is only evidence if the heap is NOT generous.
+java $GRAFT_JVM -cp "$GRAFT_CP" graft.StressDedup "$CORPUS" "$WORK"
