@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.plans.Materialize._
+import graft.plans.Publish
 import graft.sources.Ingest
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
@@ -685,6 +686,9 @@ object Ann {
     * (AnnSpec asserts the PartitionFilters). Layout:
     * `<path>/codebook.parquet` (cell, centroid) and
     * `<path>/index.parquet/cell=N/` (vec_id, embedding, nrm).
+    * The whole root is published through [[Publish]], so codebook and
+    * cells change together and a rebuild retires every streamed
+    * increment under `<path>/index-stream`.
     */
   /** Map-only cell assignment against a frozen codebook — the pass
     * [[buildIvfIndex]] and [[ivfUpsert]] share. No join, no shuffle:
@@ -704,16 +708,13 @@ object Ann {
     import s.implicits._
     val (corpus, _) = split(s, dir)
     val cent = sessionCodebook(s, dir, corpus)
-    (0 until IvfCells).map(t => (t, cent.slice(t * Dim, (t + 1) * Dim)))
-      .toDF("cell", "centroid")
-      .write.mode("overwrite").parquet(s"$path/codebook.parquet")
-    ivfAssign(corpus.filter(indexFilter), cent)
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/index.parquet")
-    // a full rebuild supersedes every streamed increment — clear the
-    // [[ivfUpsertBatch]] directories so serve doesn't double-count
-    val streamRoot = new org.apache.hadoop.fs.Path(s"$path/index-stream")
-    val fs = streamRoot.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(streamRoot)) fs.delete(streamRoot, true)
+    Publish(s, path) { tmp =>
+      (0 until IvfCells).map(t => (t, cent.slice(t * Dim, (t + 1) * Dim)))
+        .toDF("cell", "centroid")
+        .write.parquet(s"$tmp/codebook.parquet")
+      ivfAssign(corpus.filter(indexFilter), cent)
+        .write.partitionBy("cell").parquet(s"$tmp/index.parquet")
+    }
   }
 
   /** Incremental IVF index maintenance (VERDICT r10 #5): append
@@ -742,6 +743,7 @@ object Ann {
     * gets replay-safety without that burden via [[ivfUpsertBatch]].
     */
   private[graft] def ivfUpsert(s: SparkSession, path: String, arrivals: DataFrame): Unit = {
+    Publish.recover(s, path)
     val cent = readCodebook(s, path)
     ivfAssign(arrivals, cent)
       .write.mode("append").partitionBy("cell").parquet(s"$path/index.parquet")
@@ -757,7 +759,7 @@ object Ann {
     * directory and the index converges to exactly-once contents —
     * no marker files, no commit log of our own. [[ivfServe]] unions
     * these batch directories with the resident index; a codebook
-    * retrain ([[buildIvfIndex]]) clears them, since a fresh full build
+    * retrain ([[buildIvfIndex]]) retires them, since a fresh full build
     * supersedes every streamed increment.
     */
   private[graft] def ivfUpsertBatch(s: SparkSession, path: String,
@@ -766,6 +768,7 @@ object Ann {
     // unreadable (schema-less) root behind — skip it; replaying an
     // empty batch is a no-op either way
     if (!arrivals.isEmpty) {
+      Publish.recover(s, path)
       val cent = readCodebook(s, path)
       ivfAssign(arrivals, cent)
         .write.mode("overwrite").partitionBy("cell")
@@ -774,7 +777,8 @@ object Ann {
   }
 
   /** Streamed-batch directories under `<path>/index-stream`, oldest
-    * first (empty when the index has only the resident build). */
+    * first (empty when the index has only the resident build) — the
+    * IVF and LSH layouts share it. */
   private def streamBatchRoots(s: SparkSession, path: String): Seq[String] = {
     val root = new org.apache.hadoop.fs.Path(s"$path/index-stream")
     val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -805,6 +809,7 @@ object Ann {
   private[graft] def ivfServe(s: SparkSession, dir: String, path: String,
       probes: Int = IvfProbes): DataFrame = {
     import s.implicits._
+    Publish.recover(s, path)
     val (_, queries) = split(s, dir)
     val cbRows = s.read.parquet(s"$path/codebook.parquet")
       .collect().map(r => (r.getAs[Int]("cell"), r.getSeq[Double](r.fieldIndex("centroid"))))
@@ -871,7 +876,10 @@ object Ann {
   // corpus size, so the layout scales by bucket CONTENT, not count.
   // ------------------------------------------------------------------
 
+  /** Recover the index root, then check its meta against the session
+    * constants — the first step of every LSH entry point. */
   private def lshMetaOk(s: SparkSession, path: String): Unit = {
+    Publish.recover(s, path)
     // fields read BY NAME (ADVICE r15): validation must not depend on
     // the writer's column order — an ordinal read of a reordered meta
     // file would misattribute seed/tables/dim and either spuriously
@@ -901,15 +909,14 @@ object Ann {
       indexFilter: Column = lit(true)): Unit = {
     import s.implicits._
     val (corpus, _) = split(s, dir)
-    Seq((LshSeed, LshTables, Dim)).toDF("lsh_seed", "n_tables", "dim")
-      .write.mode("overwrite").parquet(s"$path/meta.parquet")
-    lshAssign(corpus.filter(indexFilter))
-      .write.mode("overwrite").partitionBy("bkey").parquet(s"$path/index.parquet")
-    // a full rebuild supersedes every streamed increment (same
-    // contract as [[buildIvfIndex]])
-    val streamRoot = new org.apache.hadoop.fs.Path(s"$path/index-stream")
-    val fs = streamRoot.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(streamRoot)) fs.delete(streamRoot, true)
+    // one swap of the root: meta and buckets change together, and a
+    // rebuild retires the streamed batches
+    Publish(s, path) { tmp =>
+      Seq((LshSeed, LshTables, Dim)).toDF("lsh_seed", "n_tables", "dim")
+        .write.parquet(s"$tmp/meta.parquet")
+      lshAssign(corpus.filter(indexFilter))
+        .write.partitionBy("bkey").parquet(s"$tmp/index.parquet")
+    }
   }
 
   /** Append-only incremental maintenance — same contract (and caller-
@@ -958,7 +965,7 @@ object Ann {
     // the probe-list is Q×tables×probes rows — driver-safe by construction
     val probedKeys = probed.select("bkey").distinct().collect().map(_.getInt(0))
     val keyFilter = col("bkey").isin(probedKeys.map(Integer.valueOf): _*)
-    val index = (s"$path/index.parquet" +: lshStreamBatchRoots(s, path))
+    val index = (s"$path/index.parquet" +: streamBatchRoots(s, path))
       .map(r => s.read.parquet(r).filter(keyFilter))
       .reduce(_ unionByName _)
     val scored = index.join(broadcast(probed), Seq("bkey"))
@@ -1040,41 +1047,16 @@ object Ann {
     s.read.parquet(s"$path/pq_codebook.parquet")
       .orderBy(col("pos")).collect().map(_.getDouble(1))
 
-  /** CRASH RECOVERY for the [[buildIvfPqIndex]] whole-dir swap — the
-    * [[CorpusBuild.recoverPublish]] device for the PQ index root: a
-    * process killed between [[CorpusBuild.swapInto]]'s two renames
-    * leaves the index parked at `.build.old` with `path` absent;
-    * restore it before any read. Leftover `.build.tmp` staging is
-    * garbage on every path. Idempotent; called by every entry point
-    * that touches `path`.
-    */
-  private def recoverIvfPq(s: SparkSession, path: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val old = new org.apache.hadoop.fs.Path(s"$path.build.old")
-    if (!fs.exists(dst) && fs.exists(old) && !fs.rename(old, dst))
-      throw new java.io.IOException(s"recover: cannot restore $old to $dst")
-    if (fs.exists(dst) && fs.exists(old)) fs.delete(old, true)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path.build.tmp"), true)
-  }
-
   /** Build the IVF-PQ index. One corpus pass writes the float rerank
     * half (cell-partitioned); the codes half derives from reading
     * that just-written local layout back — the corpus itself is
     * scanned once.
     *
     * The whole triad (cell codebook, PQ sub-codebooks, both halves)
-    * stages into `path.build.tmp` and publishes with ONE
-    * [[CorpusBuild.swapInto]] rename (ADVICE r18): the former
-    * in-place overwrite sequence had a tear window — a crash between
-    * the `pq_codebook.parquet` overwrite and the `index.parquet`
-    * overwrite left OLD codes served under the NEW codebook's LUT,
-    * silently wrong ADC scores whenever the dir corpus had changed.
-    * Now a crash anywhere during the build leaves the previous index
-    * (including its streamed increments) fully intact and serving;
-    * the swap atomically retires the stream dirs too (a rebuild
-    * supersedes every streamed batch — they re-arrive via replay).
+    * is published as one root through [[Publish]], so codes never
+    * serve under another build's codebook, and the swap retires the
+    * stream dirs (a rebuild supersedes every streamed batch — they
+    * re-arrive via replay).
     *
     * @param indexFilter bounds the initially-indexed
     * subset (AnnSpec builds partial + [[ivfPqUpsert]]s the rest to
@@ -1083,30 +1065,25 @@ object Ann {
   private[graft] def buildIvfPqIndex(s: SparkSession, dir: String, path: String,
       indexFilter: Column = lit(true)): Unit = {
     import s.implicits._
-    recoverIvfPq(s, path)
     val (corpus, _) = split(s, dir)
     val cent = sessionCodebook(s, dir, corpus)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val tmp = s"$path.build.tmp"
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    (0 until IvfCells).map(t => (t, cent.slice(t * Dim, (t + 1) * Dim)))
-      .toDF("cell", "centroid")
-      .write.mode("overwrite").parquet(s"$tmp/codebook.parquet")
     // the PQ sub-codebooks are the triad's second frozen model — like
     // the cell codebook they train on the DIR corpus (deterministic,
     // session-cached), so a partial build + upserts and a one-shot
     // build code identically (the AnnSpec serve-equivalence contract)
     val pqCb = sessionPqCodebooks(s, dir, corpus)
-    writePqCodebook(s, tmp, pqCb)
-    ivfAssign(corpus.filter(indexFilter), cent)
-      .select(col("vec_id"), col("embedding"), col("nrm"), col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$tmp/rerank.parquet")
-    pqCode(s, s.read.parquet(s"$tmp/rerank.parquet"), pqCb, cent)
-      .select(col("vec_id"), col("codes"), col("rn"), col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$tmp/index.parquet")
-    CorpusBuild.swapInto(fs, new org.apache.hadoop.fs.Path(tmp),
-      new org.apache.hadoop.fs.Path(path), s"$path.build.old")
+    Publish(s, path) { tmp =>
+      (0 until IvfCells).map(t => (t, cent.slice(t * Dim, (t + 1) * Dim)))
+        .toDF("cell", "centroid")
+        .write.parquet(s"$tmp/codebook.parquet")
+      writePqCodebook(s, tmp, pqCb)
+      ivfAssign(corpus.filter(indexFilter), cent)
+        .select(col("vec_id"), col("embedding"), col("nrm"), col("cell"))
+        .write.partitionBy("cell").parquet(s"$tmp/rerank.parquet")
+      pqCode(s, s.read.parquet(s"$tmp/rerank.parquet"), pqCb, cent)
+        .select(col("vec_id"), col("codes"), col("rn"), col("cell"))
+        .write.partitionBy("cell").parquet(s"$tmp/index.parquet")
+    }
   }
 
   /** Append-only incremental maintenance — the [[ivfUpsert]] contract
@@ -1115,7 +1092,7 @@ object Ann {
     * halves under its cells, codes derived in the same map pass.
     */
   private[graft] def ivfPqUpsert(s: SparkSession, path: String, arrivals: DataFrame): Unit = {
-    recoverIvfPq(s, path)
+    Publish.recover(s, path)
     val cent = readCodebook(s, path)
     val pqCb = readPqCodebook(s, path)
     val assigned = ivfAssign(arrivals, cent)
@@ -1146,7 +1123,7 @@ object Ann {
   private[graft] def ivfPqUpsertBatch(s: SparkSession, path: String,
       arrivals: DataFrame, batchId: Long): Unit = {
     if (!arrivals.isEmpty) {
-      recoverIvfPq(s, path)
+      Publish.recover(s, path)
       val cent = readCodebook(s, path)
       val pqCb = readPqCodebook(s, path)
       val rerankDir = f"$path/rerank-stream/batch-$batchId%09d"
@@ -1250,7 +1227,7 @@ object Ann {
   private[graft] def ivfPqServe(s: SparkSession, dir: String, path: String,
       probes: Int = IvfProbes, rerankC: Int = PqRerankC): DataFrame = {
     import s.implicits._
-    recoverIvfPq(s, path)
+    Publish.recover(s, path)
     val vf = graft.functions.VectorFunctions
     val (_, queries) = split(s, dir)
     val cbRows = s.read.parquet(s"$path/codebook.parquet")
@@ -1318,16 +1295,6 @@ object Ann {
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         (Dedup.dotExpr("embedding", "q_emb") / (col("nrm") * col("q_nrm"))).as("cosine"))
     topK(scored)
-  }
-
-  /** Streamed-batch directories, oldest first (the [[streamBatchRoots]]
-    * device for the LSH layout). */
-  private def lshStreamBatchRoots(s: SparkSession, path: String): Seq[String] = {
-    val root = new org.apache.hadoop.fs.Path(s"$path/index-stream")
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(root))
-      fs.listStatus(root).filter(_.isDirectory).map(_.getPath.toString).sorted.toSeq
-    else Seq.empty
   }
 
   def qAnnQuantized(s: SparkSession, dir: String): DataFrame = {

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.plans.Materialize._
+import graft.plans.Publish
 import graft.sources.Ingest
 
 /** SURVEY §2 — the end-to-end corpus-build composition (VERDICT r13
@@ -238,12 +239,8 @@ object CorpusBuild {
     * a single-partition window). CorpusWriteSpec reconciles the
     * manifest against the published `q_corpus_build` census.
     *
-    * Publish is the [[Ingest.compact]] rename contract: write to
-    * `<path>.publish.tmp`, stage any existing corpus aside, two
-    * renames, roll back on failure — a reader never sees a
-    * half-written corpus (and, as there, true atomicity at 100 TB
-    * belongs to a table format's commit protocol; this is the rewrite
-    * step under one).
+    * The whole corpus dir is published through [[Publish]], so a
+    * reader never sees a half-written corpus.
     *
     * Shape at scale: the verdict pipeline's own shuffles, ONE
     * rank-range exchange, one shard-keyed repartition(nShards) whose
@@ -271,19 +268,7 @@ object CorpusBuild {
         col("lane"), col("pack_id"), col("rk"), col("shard"), col("text"))
       .materialized // consumed twice: shard write + manifest
 
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(path + ".publish.tmp")
-    fs.delete(tmp, true)
-    rows
-      .repartition(TextOps.nShards, col("shard"))
-      .sortWithinPartitions(col("shard"), col("doc_id"))
-      .write.mode("overwrite").partitionBy("shard")
-      .parquet(s"$tmp/shards.parquet")
-    manifestOf(rows)
-      .coalesce(1) // nShards rows — a report, not data
-      .write.mode("overwrite").parquet(s"$tmp/manifest.parquet")
-    swapInto(fs, tmp, new org.apache.hadoop.fs.Path(path), path + ".publish.old")
+    Publish(s, path)(writeShardsAndManifest(rows, _))
     s.read.parquet(s"$path/manifest.parquet")
   }
 
@@ -312,16 +297,13 @@ object CorpusBuild {
     * rewrite; carrying the old index by filesystem move would save
     * that pass but split the commit into two rename points, and would
     * preserve any orphan signatures a pre-r16 unfiltered bootstrap
-    * indexed — rebuilding heals them). ONE [[swapInto]] publishes
-    * everything atomically; a crash before it leaves the live corpus
-    * untouched.
+    * indexed — rebuilding heals them). ONE [[Publish]] swap commits
+    * everything; a crash before it leaves the live corpus untouched.
     *
     * @return the published (compacted) manifest
     */
   def corpusCompact(s: SparkSession, path: String): DataFrame = {
-    recoverPublish(s, path)
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(s.sparkContext.hadoopConfiguration)
+    recoverCorpus(s, path)
     val ids = s.read.parquet(s"$path/manifest.parquet")
       .select(col("shard")).collect().map(_.getAs[Int]("shard"))
     val committed = s.read.parquet(s"$path/shards.parquet")
@@ -334,34 +316,44 @@ object CorpusBuild {
       .select(col("doc_id"), col("source"), col("lang"), col("toks"),
         col("lane"), col("pack_id"), col("rk"), col("shard"), col("text"))
       .materialized // consumed four times: shards, manifest, lanes, index
-    val tmp = new org.apache.hadoop.fs.Path(path + ".compact.tmp")
-    fs.delete(tmp, true)
-    rows
-      .repartition(TextOps.nShards, col("shard"))
-      .sortWithinPartitions(col("shard"), col("doc_id"))
-      .write.mode("overwrite").partitionBy("shard")
-      .parquet(s"$tmp/shards.parquet")
-    manifestOf(rows)
-      .coalesce(1).write.mode("overwrite").parquet(s"$tmp/manifest.parquet")
-    rows.groupBy(col("lang"), col("lane")).agg(sum(col("toks")).as("lane_toks"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$tmp/lanes.parquet")
-    Dedup.buildDedupIndexFrom(rows.select(col("doc_id"), col("text")), s"$tmp/index")
-    // the staged index covers every committed row — stage the matching
-    // high-water mark so the [[corpusUpsert]] staleness tripwire stays
-    // aligned across the whole-dir swap
-    writeIndexMetaTo(s, s"$tmp/index-meta.parquet",
-      rows.agg(max(col("rk"))).collect()(0).getLong(0))
-    swapInto(fs, tmp, hPath, path + ".compact.old")
+    Publish(s, path) { tmp =>
+      writeShardsAndManifest(rows, tmp)
+      lanesOf(rows).write.parquet(s"$tmp/lanes.parquet")
+      Dedup.buildDedupIndexFrom(rows.select(col("doc_id"), col("text")), s"$tmp/index")
+      // the staged index covers every committed row — stage the matching
+      // high-water mark so the [[corpusUpsert]] staleness tripwire stays
+      // aligned across the whole-dir swap
+      indexMetaOf(s, rows.agg(max(col("rk"))).collect()(0).getLong(0))
+        .write.parquet(s"$tmp/index-meta.parquet")
+    }
     s.read.parquet(s"$path/manifest.parquet")
   }
 
   /** One-row (max_rk) marker of the highest manifest-tier rank whose
     * signatures the serve index CONTAINS — the manifest↔index
     * staleness tripwire's persisted half (see [[corpusUpsert]]). */
-  private def writeIndexMetaTo(s: SparkSession, dest: String, maxRk: Long): Unit = {
+  private def indexMetaOf(s: SparkSession, maxRk: Long): DataFrame = {
     import s.implicits._
-    Seq(maxRk).toDF("max_rk").coalesce(1).write.mode("overwrite").parquet(dest)
+    Seq(maxRk).toDF("max_rk").coalesce(1)
   }
+
+  /** Shard files (one per shard, rows by doc_id) plus their manifest,
+    * written under `root` — the layout [[corpusWrite]] and
+    * [[corpusCompact]] stage. */
+  private def writeShardsAndManifest(rows: DataFrame, root: String): Unit = {
+    rows
+      .repartition(TextOps.nShards, col("shard"))
+      .sortWithinPartitions(col("shard"), col("doc_id"))
+      .write.partitionBy("shard").parquet(s"$root/shards.parquet")
+    manifestOf(rows)
+      .coalesce(1) // nShards rows — a report, not data
+      .write.parquet(s"$root/manifest.parquet")
+  }
+
+  /** Per-(lang, lane) token cursors over corpus rows — the pack
+    * continuation state [[corpusUpsert]] reads. */
+  private def lanesOf(rows: DataFrame): DataFrame =
+    rows.groupBy(col("lang"), col("lane")).agg(sum(col("toks")).as("lane_toks")).coalesce(1)
 
   /** The manifest rollup over materialized corpus rows — shared by
     * [[corpusWrite]] and [[corpusUpsert]] so the full build and the
@@ -378,65 +370,11 @@ object CorpusBuild {
         max(col("rk")).as("max_rk"),
         expr("bit_xor(xxhash64(doc_id, text))").as("content_sig"))
 
-  /** The [[Ingest.compact]] rename contract: stage `dst` aside, publish
-    * `tmp` in its place, roll back on failure — a reader never sees a
-    * half-written target. Shared by [[corpusWrite]] (whole-corpus
-    * publish) and [[corpusUpsert]] (manifest / cursor commits).
-    */
-  private[graft] def swapInto(fs: org.apache.hadoop.fs.FileSystem,
-      tmp: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path,
-      oldName: String): Unit = {
-    val old = new org.apache.hadoop.fs.Path(oldName)
-    fs.delete(old, true)
-    if (fs.exists(dst) && !fs.rename(dst, old))
-      throw new java.io.IOException(s"publish: cannot stage $dst aside")
-    if (!fs.rename(tmp, dst)) {
-      if (fs.exists(old)) fs.rename(old, dst) // the original wins
-      throw new java.io.IOException(s"publish: cannot publish $tmp into $dst")
-    }
-    fs.delete(old, true)
-  }
-
-  /** CRASH RECOVERY for the [[swapInto]] protocol (VERDICT r16 #5):
-    * [[swapInto]] rolls back when a RENAME FAILS, but a process killed
-    * BETWEEN the two renames leaves `dst` absent with the previous
-    * state parked at `old` — every later read of `dst` would fail even
-    * though nothing was lost. This heals all four swap targets before
-    * any read:
-    *   - `dst` absent ∧ `old` present → rename `old` back (the
-    *     original wins: the commit point is rename 2 COMPLETING, so an
-    *     interrupted swap is an uncommitted publish by definition —
-    *     its data-first shard appends become orphans the
-    *     manifest-filtered bootstrap already ignores and
-    *     [[corpusCompact]] collects);
-    *   - `dst` present ∧ `old` present → the crash fell between
-    *     rename 2 and the `old` cleanup: the publish committed, drop
-    *     the stale `old`;
-    *   - any leftover `tmp` is staging garbage either way — deleted.
-    * Idempotent; called at the top of [[corpusUpsert]] and
-    * [[corpusCompact]] (CorpusWriteSpec injects the between-renames
-    * state at both the manifest and whole-corpus level and proves the
-    * next upsert sees exactly the committed corpus).
-    */
-  private[graft] def recoverPublish(s: SparkSession, path: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val targets = Seq(
-      (path, s"$path.publish.old", s"$path.publish.tmp"),
-      (path, s"$path.compact.old", s"$path.compact.tmp"),
-      (s"$path/manifest.parquet", s"$path/.manifest.old.parquet",
-        s"$path/.manifest.tmp.parquet"),
-      (s"$path/lanes.parquet", s"$path/.lanes.old.parquet",
-        s"$path/.lanes.tmp.parquet"))
-    targets.foreach { case (dstS, oldS, tmpS) =>
-      val (dst, old, tmp) = (new org.apache.hadoop.fs.Path(dstS),
-        new org.apache.hadoop.fs.Path(oldS), new org.apache.hadoop.fs.Path(tmpS))
-      if (!fs.exists(dst) && fs.exists(old) && !fs.rename(old, dst))
-        throw new java.io.IOException(s"recover: cannot restore $old to $dst")
-      if (fs.exists(dst) && fs.exists(old)) fs.delete(old, true)
-      fs.delete(tmp, true)
-    }
-  }
+  /** Recover every published target of a corpus: the root first, then
+    * the tables [[corpusUpsert]] swaps inside it. */
+  private def recoverCorpus(s: SparkSession, path: String): Unit =
+    (path +: Seq("manifest", "lanes", "index-meta").map(t => s"$path/$t.parquet"))
+      .foreach(Publish.recover(s, _))
 
   /** Auto-compaction threshold (VERDICT r16 #5): once the committed
     * manifest carries more than this many shard rows — the canonical
@@ -592,9 +530,9 @@ object CorpusBuild {
     */
   def corpusUpsert(s: SparkSession, path: String, newDocs: DataFrame,
       compactAfter: Int = CompactAfterShards): DataFrame = {
-    recoverPublish(s, path)
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(s.sparkContext.hadoopConfiguration)
+    recoverCorpus(s, path)
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(s.sparkContext.hadoopConfiguration)
     val idx = s"$path/index"
     val curManifest = s.read.parquet(s"$path/manifest.parquet").materialized
 
@@ -614,10 +552,9 @@ object CorpusBuild {
       s.read.parquet(s"$path/shards.parquet")
         .filter(col("shard").isin(ids.map(Integer.valueOf): _*))
     }
-    // tear detection + self-heal (the r17 index sibling of
-    // recoverPublish): a crash inside a build or commit-last append
-    // leaves the three index tables with mismatched counts —
-    // detected by footer-count metadata and healed by a rebuild from
+    // tear detection + self-heal: a crash inside a build or
+    // commit-last append leaves the three index tables with mismatched
+    // counts — detected by footer-count metadata and healed by a rebuild from
     // the committed corpus, so a torn index can never silently lose
     // dedup recall. A consistent index is kept as-is (the normal
     // bootstrap-once path).
@@ -625,18 +562,14 @@ object CorpusBuild {
     // reference side of the staleness tripwire below, and reused for
     // id allocation further down
     val committedMaxRk = curManifest.agg(max(col("max_rk"))).collect()(0).getLong(0)
-    def writeIndexMeta(maxRk: Long): Unit = {
-      val t = new org.apache.hadoop.fs.Path(s"$path/.index-meta.tmp.parquet")
-      fs.delete(t, true)
-      writeIndexMetaTo(s, t.toString, maxRk)
-      swapInto(fs, t, new org.apache.hadoop.fs.Path(s"$path/index-meta.parquet"),
-        s"$path/.index-meta.old.parquet")
+    def writeIndexMeta(maxRk: Long): Unit =
+      Publish(s, s"$path/index-meta.parquet")(indexMetaOf(s, maxRk).write.parquet)
+    def rebuildIndex(): Unit = {
+      fs.delete(new org.apache.hadoop.fs.Path(idx), true)
+      Dedup.buildDedupIndexFrom(committedShards().select(col("doc_id"), col("text")), idx)
     }
     if (!Dedup.dedupIndexConsistent(s, idx)) {
-      val idxPath = new org.apache.hadoop.fs.Path(idx)
-      if (fs.exists(idxPath)) fs.delete(idxPath, true)
-      Dedup.buildDedupIndexFrom(
-        committedShards().select(col("doc_id"), col("text")), idx)
+      rebuildIndex()
       writeIndexMeta(committedMaxRk) // fresh rebuild covers every committed row
     }
     // manifest↔index STALENESS tripwire (the r17 "last unguarded
@@ -658,16 +591,8 @@ object CorpusBuild {
     // together). A meta file that is AHEAD of the manifest can only
     // mean corruption — full rebuild. Missing meta (legacy layout /
     // fresh bootstrap above) aligns to the committed manifest.
-    def recomputeLanes(): Unit = {
-      val t = new org.apache.hadoop.fs.Path(s"$path/.lanes.tmp.parquet")
-      fs.delete(t, true)
-      committedShards()
-        .groupBy(col("lang"), col("lane"))
-        .agg(sum(col("toks")).as("lane_toks"))
-        .coalesce(1).write.mode("overwrite").parquet(t.toString)
-      swapInto(fs, t, new org.apache.hadoop.fs.Path(s"$path/lanes.parquet"),
-        s"$path/.lanes.old.parquet")
-    }
+    def recomputeLanes(): Unit =
+      Publish(s, s"$path/lanes.parquet")(lanesOf(committedShards()).write.parquet)
     val metaPath = new org.apache.hadoop.fs.Path(s"$path/index-meta.parquet")
     if (!fs.exists(metaPath)) {
       // legacy/pre-marker layout: before BLESSING the index as covering
@@ -687,10 +612,7 @@ object CorpusBuild {
         .join(s.read.parquet(s"$idx/sig").select(col("doc_id")),
           Seq("doc_id"), "left_anti")
       if (!missingFromIdx.isEmpty) {
-        val idxPath = new org.apache.hadoop.fs.Path(idx)
-        if (fs.exists(idxPath)) fs.delete(idxPath, true)
-        Dedup.buildDedupIndexFrom(
-          committedShards().select(col("doc_id"), col("text")), idx)
+        rebuildIndex()
         recomputeLanes()
       }
       writeIndexMeta(committedMaxRk)
@@ -707,19 +629,12 @@ object CorpusBuild {
         recomputeLanes()
         writeIndexMeta(committedMaxRk)
       } else if (idxMaxRk > committedMaxRk) {
-        val idxPath = new org.apache.hadoop.fs.Path(idx)
-        if (fs.exists(idxPath)) fs.delete(idxPath, true)
-        Dedup.buildDedupIndexFrom(
-          committedShards().select(col("doc_id"), col("text")), idx)
+        rebuildIndex()
         recomputeLanes()
         writeIndexMeta(committedMaxRk)
       }
     }
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/lanes.parquet")))
-      committedShards()
-        .groupBy(col("lang"), col("lane"))
-        .agg(sum(col("toks")).as("lane_toks"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/lanes.parquet")
+    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/lanes.parquet"))) recomputeLanes()
 
     // funnel verdicts + both dedup tiers — the shared increment chain
     // ([[incrementVerdicts]], also the streaming tier's per-batch step)
@@ -769,27 +684,19 @@ object CorpusBuild {
       .write.mode("append").partitionBy("shard").parquet(s"$path/shards.parquet")
 
     // the commit point: manifest swap
-    val mTmp = new org.apache.hadoop.fs.Path(s"$path/.manifest.tmp.parquet")
-    fs.delete(mTmp, true)
-    curManifest.unionByName(manifestOf(rows))
-      .coalesce(1).write.mode("overwrite").parquet(mTmp.toString)
-    swapInto(fs, mTmp, new org.apache.hadoop.fs.Path(s"$path/manifest.parquet"),
-      s"$path/.manifest.old.parquet")
+    Publish(s, s"$path/manifest.parquet")(
+      curManifest.unionByName(manifestOf(rows)).coalesce(1).write.parquet)
 
     // serve-structure appends: index, then lane cursors, then the
     // high-water marker LAST — the marker commits the whole tail, so
     // a crash anywhere inside it is detected (marker < manifest) and
     // healed by the staleness tripwire above on the next upsert
     Dedup.appendDedupIndex(rows.select(col("doc_id"), col("text")), idx)
-    val lTmp = new org.apache.hadoop.fs.Path(s"$path/.lanes.tmp.parquet")
-    fs.delete(lTmp, true)
-    lanes.unionByName(rows.groupBy(col("lang"), col("lane"))
-        .agg(sum(col("toks")).as("lane_toks")))
-      .groupBy(col("lang"), col("lane"))
-      .agg(sum(col("lane_toks")).as("lane_toks"))
-      .coalesce(1).write.mode("overwrite").parquet(lTmp.toString)
-    swapInto(fs, lTmp, new org.apache.hadoop.fs.Path(s"$path/lanes.parquet"),
-      s"$path/.lanes.old.parquet")
+    Publish(s, s"$path/lanes.parquet")(
+      lanes.unionByName(lanesOf(rows))
+        .groupBy(col("lang"), col("lane"))
+        .agg(sum(col("lane_toks")).as("lane_toks"))
+        .coalesce(1).write.parquet)
     writeIndexMeta(maxRk + nInc)
 
     // auto-compaction: fold generation shards once the layout is past

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.plans.Materialize._
+import graft.plans.Publish
 import graft.sources.Ingest
 
 /** Text-analysis operators for the LLM-training-data pipeline
@@ -1426,8 +1427,7 @@ object TextOps {
     */
   private[graft] def buildBpeModel(s: SparkSession, dir: String, path: String): Unit = {
     import s.implicits._
-    sessionBpeMerges(s, dir).toDF("round", "sym_a", "sym_b", "n")
-      .write.mode("overwrite").parquet(path)
+    Publish(s, path)(sessionBpeMerges(s, dir).toDF("round", "sym_a", "sym_b", "n").write.parquet)
   }
 
   /** Encode the corpus against a persisted [[buildBpeModel]] merge
@@ -1439,7 +1439,7 @@ object TextOps {
     * driver-sized frozen model (R rows). */
   private[graft] def readBpeModel(s: SparkSession,
       modelPath: String): Seq[(Int, String, String, Long)] =
-    s.read.parquet(modelPath)
+    Publish.read(s, modelPath)
       .orderBy("round").collect()
       .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
 
@@ -1668,16 +1668,15 @@ object TextOps {
   private[graft] def buildUnigramModel(s: SparkSession, dir: String, path: String): Unit = {
     import s.implicits._
     val (_, report) = sessionUnigramModel(s, dir)
-    report.zipWithIndex.map { case ((p, n), i) => (i + 1L, p, n) }
-      .toDF("rk", "piece", "n_uses")
-      .write.mode("overwrite").parquet(path)
+    Publish(s, path)(report.zipWithIndex.map { case ((p, n), i) => (i + 1L, p, n) }
+      .toDF("rk", "piece", "n_uses").write.parquet)
   }
 
   /** The persisted [[buildUnigramModel]] pieces (multi-char — the
     * segmenter's match lists; single chars are the implicit
     * fallback). Driver-sized frozen model. */
   private[graft] def readUnigramModel(s: SparkSession, modelPath: String): Seq[String] =
-    s.read.parquet(modelPath)
+    Publish.read(s, modelPath)
       .filter(length(col("piece")) >= 2)
       .orderBy("rk").collect().map(_.getString(1)).toSeq
 
@@ -3439,7 +3438,7 @@ object TextOps {
     * filter ([[lmScoreWith]]/`Streams.lmScore` serve against it).
     */
   private[graft] def buildLmModel(s: SparkSession, dir: String, path: String): Unit =
-    lmTrainModel(s, dir).write.mode("overwrite").parquet(path)
+    Publish(s, path)(lmTrainModel(s, dir).write.parquet)
 
   /** Score arbitrary documents (doc_id, lang, text) against a frozen
     * LM model table — ONE left equi-join on (lang, w1, w2) + the
@@ -3457,7 +3456,7 @@ object TextOps {
 
   /** Batch serve against a persisted [[buildLmModel]] table. */
   private[graft] def lmScoreWith(s: SparkSession, dir: String, modelPath: String): DataFrame =
-    lmScoreDocs(docs(s, dir), s.read.parquet(modelPath))
+    lmScoreDocs(docs(s, dir), Publish.read(s, modelPath))
 
   /** Order-free oracle body — see [[qQualityScoreBody]]. */
   private[graft] val qLmPerplexityBody: String =
@@ -3827,9 +3826,8 @@ object TextOps {
     */
   private[graft] def buildDsirModel(s: SparkSession, dir: String, path: String): Unit = {
     val (m, d) = dsirTrainModel(s, dir)
-    m.unionByName(d.select(lit(null).cast("string").as("f"),
-        col("default_bits").as("ratio_bits")))
-      .write.mode("overwrite").parquet(path)
+    Publish(s, path)(m.unionByName(d.select(lit(null).cast("string").as("f"),
+        col("default_bits").as("ratio_bits"))).write.parquet)
   }
 
   /** Score arbitrary documents against a trained DSIR model: one
@@ -3858,7 +3856,7 @@ object TextOps {
 
   /** Batch serve against a persisted [[buildDsirModel]] table. */
   private[graft] def dsirScoreWith(s: SparkSession, dir: String, modelPath: String): DataFrame = {
-    val m = s.read.parquet(modelPath)
+    val m = Publish.read(s, modelPath)
     dsirScoreDocs(docs(s, dir),
       m.filter(col("f").isNotNull),
       m.filter(col("f").isNull).select(col("ratio_bits").as("default_bits")))
@@ -4407,9 +4405,9 @@ object TextOps {
   private[graft] def buildPerceptronModel(s: SparkSession, dir: String, path: String): Unit = {
     val sess = s
     import sess.implicits._
-    Seq(trainPerceptron(s, dir).last).map { case (_, _, wb, w1, w2) => (wb, w1, w2) }
-      .toDF("w_bias", "w_stop", "w_nonascii")
-      .write.mode("overwrite").parquet(path)
+    Publish(s, path)(Seq(trainPerceptron(s, dir).last)
+      .map { case (_, _, wb, w1, w2) => (wb, w1, w2) }
+      .toDF("w_bias", "w_stop", "w_nonascii").write.parquet)
   }
 
   /** Score arbitrary docs (doc_id, text) against a frozen weight
@@ -4427,7 +4425,7 @@ object TextOps {
 
   /** Batch serve against a persisted [[buildPerceptronModel]] table. */
   private[graft] def perceptronScoreWith(s: SparkSession, dir: String, modelPath: String): DataFrame =
-    perceptronScoreDocs(docs(s, dir), s.read.parquet(modelPath))
+    perceptronScoreDocs(docs(s, dir), Publish.read(s, modelPath))
 
   /** Classifier evaluation: the trained [[qPerceptron]] separator
     * scored back over the corpus and graded against the `lang` label,

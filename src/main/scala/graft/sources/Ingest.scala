@@ -216,14 +216,8 @@ object Ingest {
     * a single file — at that size the layout, not the compactor, is
     * the thing to fix). Returns (files before, files after).
     *
-    * Publish: the rewrite lands in `path + ".compact.tmp"`, is
-    * audited, and swaps in via rename — a reader never sees a
-    * HALF-compacted dataset, but the swap itself is two renames, so a
-    * reader racing that instant can observe the path briefly absent.
-    * True atomic publish needs a level of indirection (catalog entry,
-    * manifest, or symlink flip) — at 100 TB this call is the rewrite
-    * step under a table format's commit protocol, not a substitute
-    * for one.
+    * The rewrite is published through [[graft.plans.Publish]], so a
+    * reader never sees a HALF-compacted dataset.
     */
   def compact(spark: SparkSession, path: String,
               targetBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
@@ -231,12 +225,14 @@ object Ingest {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
     val src = new org.apache.hadoop.fs.Path(path)
-    val leaves = {
-      val it = fs.listFiles(src, true)
+    graft.plans.Publish.recover(spark, path)
+    def parquetLeaves(root: org.apache.hadoop.fs.Path) = {
+      val it = fs.listFiles(root, true)
       val buf = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.LocatedFileStatus]
       while (it.hasNext) { val f = it.next(); if (f.getPath.getName.endsWith(".parquet")) buf += f }
       buf.toSeq
     }
+    val leaves = parquetLeaves(src)
     val before = leaves.size
     val totalBytes = leaves.map(_.getLen).sum
     val n = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
@@ -257,27 +253,15 @@ object Ingest {
       }
       cols.toSeq
     }
-    val tmp = new org.apache.hadoop.fs.Path(path + ".compact.tmp")
-    val old = new org.apache.hadoop.fs.Path(path + ".compact.old")
     val df = spark.read.parquet(path)
-    val w =
-      if (partCols.isEmpty) df.repartition(n).write
-      else df.repartition(n, partCols.map(org.apache.spark.sql.functions.col): _*)
-        .write.partitionBy(partCols: _*)
-    w.mode("overwrite").parquet(tmp.toString)
-    val after = {
-      val it = fs.listFiles(tmp, true)
-      var c = 0
-      while (it.hasNext) { if (it.next().getPath.getName.endsWith(".parquet")) c += 1 }
-      c
+    val after = graft.plans.Publish(spark, path) { tmp =>
+      val w =
+        if (partCols.isEmpty) df.repartition(n).write
+        else df.repartition(n, partCols.map(org.apache.spark.sql.functions.col): _*)
+          .write.partitionBy(partCols: _*)
+      w.parquet(tmp)
+      parquetLeaves(new org.apache.hadoop.fs.Path(tmp)).size
     }
-    fs.delete(old, true)
-    if (!fs.rename(src, old)) throw new java.io.IOException(s"compact: cannot stage $src aside")
-    if (!fs.rename(tmp, src)) {
-      fs.rename(old, src) // roll back; the original data wins
-      throw new java.io.IOException(s"compact: cannot publish $tmp")
-    }
-    fs.delete(old, true)
     (before, after)
   }
 

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
+import graft.plans.Publish
+
 /** Structured Streaming twins of the batch event-time operators
   * (SURVEY.md §2 non-query components; the reference is a *scheduled
   * incremental* pipeline — ref dags/ELT.py:365 `schedule_interval` —
@@ -378,7 +380,7 @@ object Streams {
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val s = batch.sparkSession
-        graft.operators.TextOps.lmScoreDocs(batch.toDF(), s.read.parquet(modelPath))
+        graft.operators.TextOps.lmScoreDocs(batch.toDF(), Publish.read(s, modelPath))
           .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
       }
       .option("checkpointLocation", checkpointDir)
@@ -404,7 +406,8 @@ object Streams {
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val s = batch.sparkSession
-        graft.operators.TextOps.perceptronScoreDocs(batch.toDF(), s.read.parquet(modelPath))
+        graft.operators.TextOps.perceptronScoreDocs(batch.toDF(),
+          Publish.read(s, modelPath))
           .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
       }
       .option("checkpointLocation", checkpointDir)
@@ -435,7 +438,7 @@ object Streams {
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val s = batch.sparkSession
-        val m = s.read.parquet(modelPath)
+        val m = Publish.read(s, modelPath)
         graft.operators.TextOps.dsirScoreDocs(batch.toDF(),
           m.filter(col("f").isNotNull),
           m.filter(col("f").isNull).select(col("ratio_bits").as("default_bits")))

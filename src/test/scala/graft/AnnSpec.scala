@@ -398,22 +398,22 @@ class AnnSpec extends SparkSpec {
     val ref = serveSet()
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // crash DURING a rebuild's staging (ADVICE r18's tear window: new
-    // pq_codebook landed, new codes not): with staging, the half-built
-    // state is all under .build.tmp — the published triad is untouched
-    // and KEEPS serving old-codebook codes under the old-codebook LUT
-    val tmp = new org.apache.hadoop.fs.Path(s"$path.build.tmp")
+    // crash DURING a rebuild's staging (new pq_codebook landed, new
+    // codes not): the half-built state is all under the staging
+    // sibling — the published triad is untouched and KEEPS serving
+    // old-codebook codes under the old-codebook LUT
+    val tmp = new org.apache.hadoop.fs.Path(graft.plans.Publish.tmpOf(path))
     fs.mkdirs(new org.apache.hadoop.fs.Path(tmp, "pq_codebook.parquet"))
     assert(serveSet() === ref,
       "a half-staged rebuild must be invisible: the old triad serves unchanged")
-    // crash BETWEEN swapInto's two renames: old index parked at
-    // .build.old, path absent — the next entry point heals it
-    assert(fs.rename(new org.apache.hadoop.fs.Path(path),
-      new org.apache.hadoop.fs.Path(s"$path.build.old")))
+    // crash BETWEEN the publish swap's two renames: old index parked,
+    // path absent — the next entry point heals it
+    val old = new org.apache.hadoop.fs.Path(graft.plans.Publish.oldOf(path))
+    assert(fs.rename(new org.apache.hadoop.fs.Path(path), old))
     assert(serveSet() === ref,
-      "recoverIvfPq must restore the parked index before the read")
+      "recovery must restore the parked index before the read")
     assert(!fs.exists(tmp), "recovery must sweep staging garbage")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$path.build.old")))
+    assert(!fs.exists(old))
   }
 
   /** Int8 quantization costs 4× less memory; this pins what it costs

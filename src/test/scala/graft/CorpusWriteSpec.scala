@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.CorpusBuild
+import graft.plans.Publish
 
 /** The corpus materialization ([[CorpusBuild.corpusWrite]]): manifest
   * reconciliation with the published census, independent replay of the
@@ -96,8 +97,8 @@ class CorpusWriteSpec extends SparkSpec {
       "rebuilt manifest must be identical")
     // publish over an existing corpus: full replacement, no tmp/old leftovers
     CorpusBuild.corpusWrite(spark, sf0001, a)
-    assert(!new java.io.File(a + ".publish.tmp").exists(), "tmp staging must be swapped away")
-    assert(!new java.io.File(a + ".publish.old").exists(), "the staged-aside corpus must be deleted")
+    assert(!new java.io.File(Publish.tmpOf(a)).exists(), "tmp staging must be swapped away")
+    assert(!new java.io.File(Publish.oldOf(a)).exists(), "the staged-aside corpus must be deleted")
     assert(spark.read.parquet(s"$a/shards.parquet").count() ===
       spark.read.parquet(s"$b/shards.parquet").count())
   }
@@ -482,8 +483,8 @@ class CorpusWriteSpec extends SparkSpec {
     assert(after === before, "compaction must not change corpus content")
     assert(!new java.io.File(s"$out/shards.parquet/shard=9999").exists(),
       "the orphan shard dir must be collected by the publish swap")
-    assert(!new java.io.File(out + ".compact.tmp").exists() &&
-      !new java.io.File(out + ".compact.old").exists(), "no staging leftovers")
+    assert(!new java.io.File(Publish.tmpOf(out)).exists() &&
+      !new java.io.File(Publish.oldOf(out)).exists(), "no staging leftovers")
     // manifest reconciles with the written data
     val recomputed = spark.read.parquet(s"$out/shards.parquet")
       .groupBy(col("shard"))
@@ -521,8 +522,8 @@ class CorpusWriteSpec extends SparkSpec {
   }
 
   test("crash between the manifest swap's renames: recovery restores the committed corpus") {
-    // VERDICT r16 #5 crash injection. swapInto's two renames are
-    // (1) manifest -> .manifest.old, (2) .manifest.tmp -> manifest.
+    // Crash injection. The publish swap's two renames are
+    // (1) manifest -> oldOf(manifest), (2) tmpOf(manifest) -> manifest.
     // A kill between them leaves NO manifest on disk plus the
     // data-first orphan shard the dying upsert had already appended.
     // The next upsert must heal to exactly the committed corpus:
@@ -550,14 +551,15 @@ class CorpusWriteSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$out/shards.parquet/shard=${maxShard + 1}")
     val fs = new org.apache.hadoop.fs.Path(out)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(new org.apache.hadoop.fs.Path(s"$out/manifest.parquet"),
-      new org.apache.hadoop.fs.Path(s"$out/.manifest.old.parquet")))
+    val manifest = s"$out/manifest.parquet"
+    assert(fs.rename(new org.apache.hadoop.fs.Path(manifest),
+      new org.apache.hadoop.fs.Path(Publish.oldOf(manifest))))
     spark.read.parquet(s"$out/shards.parquet") // would-be manifest incl. the orphan
       .groupBy(col("shard"))
       .agg(count(lit(1)).as("n_docs"), sum(col("toks")).as("n_tokens"),
         min(col("rk")).as("min_rk"), max(col("rk")).as("max_rk"),
         expr("bit_xor(xxhash64(doc_id, text))").as("content_sig"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$out/.manifest.tmp.parquet")
+      .coalesce(1).write.mode("overwrite").parquet(Publish.tmpOf(manifest))
 
     // next upsert: heals, commits its own survivor, never sees the orphan
     val third = shards0
@@ -571,8 +573,8 @@ class CorpusWriteSpec extends SparkSpec {
       "the restored manifest must carry every committed row unchanged")
     assert(m2.length === committed.size + 1, "plus exactly the new survivor's shard")
     assert(!m2.exists(_.getLong(4) === 99999L), "the orphan rank must never be committed")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$out/.manifest.old.parquet")) &&
-      !fs.exists(new org.apache.hadoop.fs.Path(s"$out/.manifest.tmp.parquet")),
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(Publish.oldOf(manifest))) &&
+      !fs.exists(new org.apache.hadoop.fs.Path(Publish.tmpOf(manifest))),
       "recovery must clean the staging leftovers")
     // the orphan was never indexed: the same text arriving later SURVIVES
     val m3 = CorpusBuild.corpusUpsert(spark, out,
@@ -596,12 +598,12 @@ class CorpusWriteSpec extends SparkSpec {
     val committed = spark.read.parquet(s"$out/manifest.parquet").collect()
       .map(_.toSeq).toSet
     // between-renames state of a dying corpusCompact: the whole corpus
-    // parked at .compact.old, a fully staged rewrite at .compact.tmp
+    // parked at oldOf(out), a fully staged rewrite at tmpOf(out)
     val fs = new org.apache.hadoop.fs.Path(out)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.rename(new org.apache.hadoop.fs.Path(out),
-      new org.apache.hadoop.fs.Path(out + ".compact.old")))
-    fs.mkdirs(new org.apache.hadoop.fs.Path(out + ".compact.tmp/shards.parquet"))
+      new org.apache.hadoop.fs.Path(Publish.oldOf(out))))
+    fs.mkdirs(new org.apache.hadoop.fs.Path(Publish.tmpOf(out) + "/shards.parquet"))
     val third = shards0.filter(_.getLong(0) != base.getLong(0))
       .maxBy(r => (r.getLong(2), -r.getLong(0)))
     val m2 = CorpusBuild.corpusUpsert(spark, out,
@@ -610,8 +612,8 @@ class CorpusWriteSpec extends SparkSpec {
     assert(m2.map(_.toSeq).toSet.intersect(committed) === committed,
       "the parked corpus must be restored verbatim before the upsert")
     assert(m2.length === committed.size + 1)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(out + ".compact.old")) &&
-      !fs.exists(new org.apache.hadoop.fs.Path(out + ".compact.tmp")),
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(Publish.oldOf(out))) &&
+      !fs.exists(new org.apache.hadoop.fs.Path(Publish.tmpOf(out))),
       "recovery must clean the compact staging leftovers")
   }
 

@@ -223,8 +223,8 @@ class IngestSpec extends SparkSpec {
     assert(after === 1, s"expected ceil(total/total) = 1 file, got $after")
     val back = spark.read.parquet(dir).collect()
     assert(back.map(_.getLong(0)).sorted === expected, "compaction must not change data")
-    val parent = new java.io.File(dir).getParentFile
-    assert(!parent.listFiles.exists(f => f.getName.contains(".compact.")),
+    assert(!new java.io.File(graft.plans.Publish.tmpOf(dir)).exists() &&
+      !new java.io.File(graft.plans.Publish.oldOf(dir)).exists(),
       "write-audit-publish must clean up its staging dirs")
   }
 
