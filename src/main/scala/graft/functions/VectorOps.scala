@@ -4,6 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, IntegerType, LongType}
 
@@ -251,6 +252,40 @@ case class NearestCell(child: Expression, centroids: Seq[Double], dim: Int)
     copy(child = newChild)
 }
 
+/** Row `cell` of a FIXED cell-major table (k rows of `width` doubles)
+  * as array<double>: a per-cell model row (a centroid, a norm² LUT)
+  * looked up inside the expression, where a join would have to
+  * broadcast the k-row table in every query that uses it. The table
+  * ships like [[NearestCell]]'s codebook — a codegen reference object,
+  * here one prebuilt array per cell, so a lookup allocates nothing.
+  * A cell outside [0, k) throws; a null cell yields null.
+  */
+case class CellRow(child: Expression, table: Seq[Double], width: Int)
+    extends UnaryExpression {
+
+  require(width >= 1, s"width must be positive, got $width")
+  require(table.nonEmpty && table.length % width == 0,
+    s"table length ${table.length} must be a positive multiple of width $width")
+
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+  override def prettyName: String = "graft_cell_row"
+
+  @transient private lazy val rows: Array[ArrayData] =
+    table.toArray.grouped(width).map(r => UnsafeArrayData.fromPrimitiveArray(r): ArrayData).toArray
+
+  override protected def nullSafeEval(input: Any): Any =
+    VectorOps.cellRow(rows, input.asInstanceOf[Int])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val rs = ctx.addReferenceObj("cellRows", rows,
+      "org.apache.spark.sql.catalyst.util.ArrayData[]")
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = graft.functions.VectorOps.cellRow($rs, $c);")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): CellRow =
+    copy(child = newChild)
+}
+
 /** Per-vector symmetric int8 quantization scale: max|x|/127 (0.0 for
   * an all-zero vector). One scalar per vector; with [[VecCodes8]] it
   * compresses an embedding 4× (float32 → int8 + one float), the
@@ -418,6 +453,13 @@ object VectorOps {
     best
   }
 
+  /** The [[CellRow]] lookup: row `cell` of the prebuilt per-cell arrays. */
+  def cellRow(rows: Array[ArrayData], cell: Int): ArrayData = {
+    if (cell < 0 || cell >= rows.length)
+      throw new IllegalArgumentException(s"cell $cell outside the ${rows.length}-row table")
+    rows(cell)
+  }
+
   def signBuckets(v: ArrayData, planes: Array[Double], nTables: Int, nBits: Int, dim: Int): Array[Int] = {
     val m = v.numElements()
     if (m != dim)
@@ -521,6 +563,9 @@ object VectorFunctions {
 
   def nearestCell(c: Column, centroids: Seq[Double], dim: Int): Column =
     GraftBridge.column(NearestCell(GraftBridge.expression(c), centroids, dim))
+
+  def cellRow(cell: Column, table: Seq[Double], width: Int): Column =
+    GraftBridge.column(CellRow(GraftBridge.expression(cell), table, width))
 
   def vecScale8(c: Column): Column =
     GraftBridge.column(VecScale8(GraftBridge.expression(c)))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -698,6 +698,17 @@ object Ann {
     df.withColumn("cell",
       graft.functions.VectorFunctions.nearestCell(col("embedding"), cent.toSeq, Dim))
 
+  /** Columns of the float rows [[ivfAssign]] writes: the IVF
+    * `index.parquet` and the IVF-PQ `rerank.parquet`, `cell` being the
+    * partition column. */
+  private val FloatRowsDdl = "vec_id BIGINT, embedding ARRAY<FLOAT>, nrm DOUBLE, cell INT"
+
+  /** Read a table this object wrote under the schema its writer
+    * produces. Spark would otherwise run a footer-reading job to infer
+    * it on every read. Columns still resolve by name. */
+  private def readOwn(s: SparkSession, path: String, ddl: String): DataFrame =
+    s.read.schema(ddl).parquet(path)
+
   /** @param indexFilter bounds the initially-indexed subset (the
     *   codebook still trains on the FULL corpus — AnnSpec builds a
     *   partial index and [[ivfUpsert]]s the remainder to prove
@@ -705,13 +716,10 @@ object Ann {
     */
   private[graft] def buildIvfIndex(s: SparkSession, dir: String, path: String,
       indexFilter: Column = lit(true)): Unit = {
-    import s.implicits._
     val (corpus, _) = split(s, dir)
     val cent = sessionCodebook(s, dir, corpus)
     Publish(s, path) { tmp =>
-      (0 until IvfCells).map(t => (t, cent.slice(t * Dim, (t + 1) * Dim)))
-        .toDF("cell", "centroid")
-        .write.parquet(s"$tmp/codebook.parquet")
+      writeCodebook(s, tmp, cent)
       ivfAssign(corpus.filter(indexFilter), cent)
         .write.partitionBy("cell").parquet(s"$tmp/index.parquet")
     }
@@ -787,34 +795,66 @@ object Ann {
     else Seq.empty
   }
 
-  /** The frozen codebook as the flat cell-major array
-    * [[trainCodebook]] produces. */
-  private[graft] def readCodebook(s: SparkSession, path: String): Array[Double] = {
-    val cent = new Array[Double](IvfCells * Dim)
-    s.read.parquet(s"$path/codebook.parquet").collect().foreach { r =>
-      // by-name reads (the lshMetaOk rule): never couple a persisted
-      // model's decode to its writer's column order
-      val (cell, v) = (r.getAs[Int]("cell"), r.getSeq[Double](r.fieldIndex("centroid")))
-      var i = 0
-      while (i < Dim) { cent(cell * Dim + i) = v(i); i += 1 }
-    }
-    cent
+  /** Persist the frozen cell codebook as one (cell, centroid) row per
+    * cell; [[CodebookDdl]] is the layout [[readCodebook]] reads. */
+  private def writeCodebook(s: SparkSession, root: String, cent: Array[Double]): Unit = {
+    import s.implicits._
+    (0 until IvfCells).map(t => (t, cent.slice(t * Dim, (t + 1) * Dim)))
+      .toDF("cell", "centroid")
+      .write.parquet(s"$root/codebook.parquet")
   }
 
-  /** Serve top-k from a prebuilt [[buildIvfIndex]] index. The probed
-    * cell set is computed from the (tiny) query side and pushed as a
-    * STATIC `isin` on the partition column — the scan never opens an
-    * unprobed cell directory.
-    */
-  private[graft] def ivfServe(s: SparkSession, dir: String, path: String,
-      probes: Int = IvfProbes): DataFrame = {
+  private val CodebookDdl = "cell INT, centroid ARRAY<DOUBLE>"
+
+  /** Place each collected row of a frozen model table at its key:
+    * every key must be non-null, in [0, n) and present exactly once,
+    * and every value non-null, or the read throws naming `artifact`.
+    * A missing row would otherwise leave a hole (or shift every later
+    * component), and a renamed column reads back as nulls under a
+    * declared schema. Returns the value column's rows in key order. */
+  private def placeModelRows(artifact: String, rows: Array[Row],
+      key: String, value: String, n: Int): Array[Row] = {
+    require(rows.length == n,
+      s"model table $artifact has ${rows.length} rows, expected $n")
+    val placed = new Array[Row](n)
+    rows.foreach { r =>
+      val (k, v) = (r.fieldIndex(key), r.fieldIndex(value))
+      require(!r.isNullAt(k) && !r.isNullAt(v),
+        s"model table $artifact has a null $key or $value: $r")
+      val at = r.getInt(k)
+      require(at >= 0 && at < n, s"model table $artifact: $key $at outside [0, $n)")
+      require(placed(at) == null, s"model table $artifact: $key $at appears twice")
+      placed(at) = r
+    }
+    placed
+  }
+
+  /** The frozen codebook as the flat cell-major array
+    * [[trainCodebook]] produces, one collect with every cell placed
+    * and checked by [[placeModelRows]]. */
+  private[graft] def readCodebook(s: SparkSession, path: String): Array[Double] = {
+    val artifact = s"$path/codebook.parquet"
+    placeModelRows(artifact, readOwn(s, artifact, CodebookDdl).collect(),
+        "cell", "centroid", IvfCells)
+      .flatMap { r =>
+        val v = r.getSeq[Any](r.fieldIndex("centroid"))
+        require(v.length == Dim && !v.contains(null),
+          s"model table $artifact: cell ${r.getInt(r.fieldIndex("cell"))} " +
+            s"needs $Dim non-null components")
+        v.map(_.asInstanceOf[Double])
+      }
+  }
+
+  /** Per-query probe list of the IVF serves: each query's top-`probes`
+    * cells by float cosine to the frozen centroids, plus the probed
+    * cells as a partition filter for the index scans. The list is
+    * queries × probes rows, so collecting its cells is driver-safe by
+    * construction. */
+  private def probeList(s: SparkSession, queries: DataFrame, cent: Array[Double],
+      probes: Int): (DataFrame, Column) = {
     import s.implicits._
-    Publish.recover(s, path)
-    val (_, queries) = split(s, dir)
-    val cbRows = s.read.parquet(s"$path/codebook.parquet")
-      .collect().map(r => (r.getAs[Int]("cell"), r.getSeq[Double](r.fieldIndex("centroid"))))
-    val centDf = cbRows
-      .map { case (c, v) => (c, v.map(_.toFloat).toArray) }.toSeq
+    val centDf = (0 until IvfCells)
+      .map(c => (c, cent.slice(c * Dim, (c + 1) * Dim).map(_.toFloat)))
       .toDF("cell", "centroid")
     val probed = queries
       .crossJoin(broadcast(centDf.withColumn("cnrm", Dedup.norm("centroid"))))
@@ -824,16 +864,27 @@ object Ann {
         Window.partitionBy("query_id").orderBy(col("cos").desc, col("cell"))))
       .filter(col("prk") <= probes)
       .select(col("query_id"), col("q_emb"), col("q_nrm"), col("cell"))
-    // the probe-list is Q×probes rows — driver-safe by construction
     val probedCells = probed.select("cell").distinct().collect().map(_.getInt(0))
-    val cellFilter = col("cell").isin(probedCells.map(Integer.valueOf): _*)
+    (probed, col("cell").isin(probedCells.map(Integer.valueOf): _*))
+  }
+
+  /** Serve top-k from a prebuilt [[buildIvfIndex]] index. The probed
+    * cell set is computed from the (tiny) query side and pushed as a
+    * STATIC `isin` on the partition column — the scan never opens an
+    * unprobed cell directory.
+    */
+  private[graft] def ivfServe(s: SparkSession, dir: String, path: String,
+      probes: Int = IvfProbes): DataFrame = {
+    Publish.recover(s, path)
+    val (_, queries) = split(s, dir)
+    val (probed, cellFilter) = probeList(s, queries, readCodebook(s, path), probes)
     // resident build + streamed batch dirs ([[ivfUpsertBatch]]), each
     // scanned with the same probed-cell partition pruning. The batch
     // roots are one directory per micro-batch since the last rebuild —
     // bounded by retrain cadence, and a rebuild folds them away; at
     // serve volume this is a planner-side listing, not a data cost.
     val index = (s"$path/index.parquet" +: streamBatchRoots(s, path))
-      .map(r => s.read.parquet(r).filter(cellFilter))
+      .map(r => readOwn(s, r, FloatRowsDdl).filter(cellFilter))
       .reduce(_ unionByName _)
     val scored = index.join(broadcast(probed), Seq("cell"))
       .filter(col("vec_id") =!= col("query_id"))
@@ -1014,24 +1065,25 @@ object Ann {
     * reconstruction norm (the [[qAnnPq]] arithmetic as a
     * persisted-index projection, against FROZEN model arrays).
     *
-    * r19 residual coding: codes are the subspace argmins of the CELL
-    * RESIDUAL ([[withResidual]] — `df` must carry `cell`), and the
+    * Codes are the subspace argmins of the CELL RESIDUAL
+    * ([[withResidual]] — `df` must carry `cell`), and the
     * reconstruction x̂ = c_cell + r̂ decomposes per disjoint subspace,
-    * so `rn = sqrt(adcLookup(nlut_cell, codes))` against the per-cell
-    * [[cellNlut]] table (16 × m·ks doubles, broadcast).
+    * so `rn = sqrt(adcLookup(nlut_cell, codes))`, where `nlut_cell` is
+    * row `cell` of the [[cellNlut]] table (16 × m·ks doubles) looked up
+    * inside a [[graft.functions.CellRow]] expression.
     */
-  private def pqCode(s: SparkSession, df: DataFrame, cb: Array[Double],
-      cent: Array[Double]): DataFrame = {
-    import s.implicits._
+  private[graft] def pqCode(df: DataFrame, cb: Array[Double], cent: Array[Double]): DataFrame = {
     val vf = graft.functions.VectorFunctions
-    val nl = cellNlut(cent, cb).zipWithIndex
-      .map { case (a, c) => (c, a.toSeq) }.toSeq.toDF("cell", "nlut")
-    withResidual(s, df, cent)
+    val nlut = cellNlut(cent, cb)
+    withResidual(df, cent)
       .withColumn("codes", vf.pqCodes(col("remb"), cb.toSeq, PqM, PqDsub))
-      .join(broadcast(nl), Seq("cell"))
-      .withColumn("rn", sqrt(vf.adcLookup(col("nlut"), col("codes"))))
-      .drop("remb", "nlut")
+      .withColumn("rn", sqrt(vf.adcLookup(
+        vf.cellRow(col("cell"), nlut.flatten.toSeq, nlut.head.length), col("codes"))))
+      .drop("remb")
   }
+
+  /** Columns of the codes half [[pqCode]] feeds into `index.parquet`. */
+  private val CodesDdl = "vec_id BIGINT, codes ARRAY<TINYINT>, rn DOUBLE, cell INT"
 
   /** Persist / read the PQ sub-codebooks as a flat (pos, v) model
     * table — the [[readCodebook]] device for the second frozen model
@@ -1043,9 +1095,20 @@ object Ann {
       .write.mode("overwrite").parquet(s"$path/pq_codebook.parquet")
   }
 
-  private[graft] def readPqCodebook(s: SparkSession, path: String): Array[Double] =
-    s.read.parquet(s"$path/pq_codebook.parquet")
-      .orderBy(col("pos")).collect().map(_.getDouble(1))
+  private val PqCodebookDdl = "pos INT, v DOUBLE"
+
+  /** One collect of the (pos, v) rows, each value placed at `pos` on
+    * the driver ([[placeModelRows]] checks every position is present
+    * once). The length must be a whole number of m × dsub codebook
+    * entries, so a deleted last row is caught too. */
+  private[graft] def readPqCodebook(s: SparkSession, path: String): Array[Double] = {
+    val artifact = s"$path/pq_codebook.parquet"
+    val rows = readOwn(s, artifact, PqCodebookDdl).collect()
+    require(rows.nonEmpty && rows.length % (PqM * PqDsub) == 0,
+      s"model table $artifact has ${rows.length} rows, not a positive multiple of ${PqM * PqDsub}")
+    placeModelRows(artifact, rows, "pos", "v", rows.length)
+      .map(r => r.getDouble(r.fieldIndex("v")))
+  }
 
   /** Build the IVF-PQ index. One corpus pass writes the float rerank
     * half (cell-partitioned); the codes half derives from reading
@@ -1064,7 +1127,6 @@ object Ann {
     */
   private[graft] def buildIvfPqIndex(s: SparkSession, dir: String, path: String,
       indexFilter: Column = lit(true)): Unit = {
-    import s.implicits._
     val (corpus, _) = split(s, dir)
     val cent = sessionCodebook(s, dir, corpus)
     // the PQ sub-codebooks are the triad's second frozen model — like
@@ -1073,14 +1135,12 @@ object Ann {
     // build code identically (the AnnSpec serve-equivalence contract)
     val pqCb = sessionPqCodebooks(s, dir, corpus)
     Publish(s, path) { tmp =>
-      (0 until IvfCells).map(t => (t, cent.slice(t * Dim, (t + 1) * Dim)))
-        .toDF("cell", "centroid")
-        .write.parquet(s"$tmp/codebook.parquet")
+      writeCodebook(s, tmp, cent)
       writePqCodebook(s, tmp, pqCb)
       ivfAssign(corpus.filter(indexFilter), cent)
         .select(col("vec_id"), col("embedding"), col("nrm"), col("cell"))
         .write.partitionBy("cell").parquet(s"$tmp/rerank.parquet")
-      pqCode(s, s.read.parquet(s"$tmp/rerank.parquet"), pqCb, cent)
+      pqCode(readOwn(s, s"$tmp/rerank.parquet", FloatRowsDdl), pqCb, cent)
         .select(col("vec_id"), col("codes"), col("rn"), col("cell"))
         .write.partitionBy("cell").parquet(s"$tmp/index.parquet")
     }
@@ -1098,7 +1158,7 @@ object Ann {
     val assigned = ivfAssign(arrivals, cent)
     assigned.select(col("vec_id"), col("embedding"), col("nrm"), col("cell"))
       .write.mode("append").partitionBy("cell").parquet(s"$path/rerank.parquet")
-    pqCode(s, assigned, pqCb, cent)
+    pqCode(assigned, pqCb, cent)
       .select(col("vec_id"), col("codes"), col("rn"), col("cell"))
       .write.mode("append").partitionBy("cell").parquet(s"$path/index.parquet")
   }
@@ -1143,7 +1203,7 @@ object Ann {
       ivfAssign(arrivals, cent)
         .select(col("vec_id"), col("embedding"), col("nrm"), col("cell"))
         .write.mode("overwrite").partitionBy("cell").parquet(rerankDir)
-      pqCode(s, s.read.parquet(rerankDir), pqCb, cent)
+      pqCode(readOwn(s, rerankDir, FloatRowsDdl), pqCb, cent)
         .select(col("vec_id"), col("codes"), col("rn"), col("cell"))
         .write.mode("overwrite").partitionBy("cell")
         .parquet(indexDir)
@@ -1230,34 +1290,13 @@ object Ann {
     Publish.recover(s, path)
     val vf = graft.functions.VectorFunctions
     val (_, queries) = split(s, dir)
-    val cbRows = s.read.parquet(s"$path/codebook.parquet")
-      .collect().map(r => (r.getAs[Int]("cell"), r.getSeq[Double](r.fieldIndex("centroid"))))
-    val centDf = cbRows
-      .map { case (c, v) => (c, v.map(_.toFloat).toArray) }.toSeq
-      .toDF("cell", "centroid")
-    val probed = queries
-      .crossJoin(broadcast(centDf.withColumn("cnrm", Dedup.norm("centroid"))))
-      .withColumn("cos",
-        Dedup.dotExpr("q_emb", "centroid") / (col("q_nrm") * col("cnrm")))
-      .withColumn("prk", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("cos").desc, col("cell"))))
-      .filter(col("prk") <= probes)
-      .select(col("query_id"), col("q_emb"), col("q_nrm"), col("cell"))
-    val probedCells = probed.select("cell").distinct().collect().map(_.getInt(0))
-    val cellFilter = col("cell").isin(probedCells.map(Integer.valueOf): _*)
+    val centArr = readCodebook(s, path)
+    val (probed, cellFilter) = probeList(s, queries, centArr, probes)
     // ADC query side (the queries×probes broadcast, plus the per-query
     // m·ks lookup table built once against the frozen sub-codebooks;
-    // r19 residual coding adds the per-(query, cell) coarse dot
+    // residual coding adds the per-(query, cell) coarse dot
     // qc = q·c_cell — the estimated dot is qc + Σ_m lut[code_m])
     val pqCb = readPqCodebook(s, path)
-    val centArr = {
-      val a = new Array[Double](IvfCells * Dim)
-      cbRows.foreach { case (c, v) =>
-        var i = 0
-        while (i < Dim) { a(c * Dim + i) = v(i); i += 1 }
-      }
-      a
-    }
     val probedQ = probed
       .withColumn("lut", vf.pqLut(col("q_emb"), pqCb.toSeq, PqM, PqDsub))
       .withColumn("qc",
@@ -1268,7 +1307,7 @@ object Ann {
     // streamed batch dirs ([[ivfPqUpsertBatch]]), each under the same
     // partition pruning
     val codesIdx = (s"$path/index.parquet" +: pqStreamBatchRoots(s, path, "index"))
-      .map(r => s.read.parquet(r)).reduce(_ unionByName _)
+      .map(r => readOwn(s, r, CodesDdl)).reduce(_ unionByName _)
     val cand = codesIdx.filter(cellFilter)
       .join(broadcast(probedQ), Seq("cell"))
       .filter(col("vec_id") =!= col("query_id"))
@@ -1285,7 +1324,7 @@ object Ann {
     // stage 2: float rerank of exactly the candidate ids (partition
     // pruning on cell + pushed IN on vec_id — a point lookup)
     val rer = (s"$path/rerank.parquet" +: pqStreamBatchRoots(s, path, "rerank"))
-      .map(r => s.read.parquet(r)).reduce(_ unionByName _)
+      .map(r => readOwn(s, r, FloatRowsDdl)).reduce(_ unionByName _)
       .filter(cellFilter)
       .filter(col("vec_id").isin(candIds.map(java.lang.Long.valueOf): _*))
       .select(col("vec_id"), col("embedding"), col("nrm"))
@@ -1432,25 +1471,20 @@ object Ann {
     * restores exact order within the shortlist. */
   private[graft] val PqShortC = 4 * K
 
-  /** The cell-centroid table as a broadcastable (cell, cvec) frame —
-    * the residualization lookup side. */
-  private def cellCentDf(s: SparkSession, cent: Array[Double]): DataFrame = {
-    import s.implicits._
-    (0 until IvfCells).map(t => (t, cent.slice(t * Dim, (t + 1) * Dim)))
-      .toDF("cell", "cvec")
-  }
-
-  /** RESIDUAL view of a celled frame (r19 — Jégou et al. 2011 §IV's
-    * "multiple quantization with residuals", the recall lever that
-    * replaced the judged OPQ-lite permutation, see BASELINE.md r19):
+  /** RESIDUAL view of a celled frame (Jégou et al. 2011 §IV's
+    * "multiple quantization with residuals"):
     * `remb[i] = float(double(embedding[i]) − c_cell[i])`. One exact
     * IEEE subtraction + one float rounding per component — both
     * engines perform the identical ops, so residuals are
     * bit-identical cross-engine. Requires a `cell` column (the frozen
-    * [[sessionCodebook]] assignment).
+    * [[sessionCodebook]] assignment); `c_cell` is row `cell` of the
+    * codebook, looked up inside a [[graft.functions.CellRow]]
+    * expression. Rows without a cell (a null embedding) have no
+    * residual and are dropped.
     */
-  private def withResidual(s: SparkSession, df: DataFrame, cent: Array[Double]): DataFrame =
-    df.join(broadcast(cellCentDf(s, cent)), Seq("cell"))
+  private def withResidual(df: DataFrame, cent: Array[Double]): DataFrame =
+    df.filter(col("cell").isNotNull)
+      .withColumn("cvec", graft.functions.VectorFunctions.cellRow(col("cell"), cent.toSeq, Dim))
       .withColumn("remb",
         expr("zip_with(embedding, cvec, (x, c) -> CAST(CAST(x AS DOUBLE) - c AS FLOAT))"))
       .drop("cvec")
@@ -1507,7 +1541,7 @@ object Ann {
     */
   private[graft] def trainPqCodebooks(s: SparkSession, corpus: DataFrame,
       cent: Array[Double]): Array[Double] = {
-    val rcorpus = withResidual(s,
+    val rcorpus = withResidual(
         corpus.withColumn("cell", graft.functions.VectorFunctions
           .nearestCell(col("embedding"), cent.toSeq, Dim)),
         cent)
@@ -1588,7 +1622,7 @@ object Ann {
     val (corpus, queries) = split(s, dir)
     val cent = sessionCodebook(s, dir, corpus)
     val cb = sessionPqCodebooks(s, dir, corpus)
-    val coded = pqCode(s,
+    val coded = pqCode(
         corpus.withColumn("cell",
           vf.nearestCell(col("embedding"), cent.toSeq, Dim)),
         cb, cent)

@@ -416,6 +416,105 @@ class AnnSpec extends SparkSpec {
     assert(!fs.exists(old))
   }
 
+  test("IVF-PQ lifecycle: per-entry-point job budget; the coding pass broadcasts no local table") {
+    import org.apache.spark.ListenerBusDrain
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.LocalTableScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.functions.col
+    // a fresh session: no model cached yet, so the build's count
+    // includes training and does not depend on which test ran first
+    val s = spark.newSession()
+    val sc = s.sparkContext
+    // jobs are attributed through a thread-local property, which the
+    // broadcast and subquery threads inherit from the calling thread
+    val tag = "graft.annspec.jobBudget"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(tag) != null) jobs.incrementAndGet()
+    }
+    def jobsOf(body: => Unit): Int = {
+      ListenerBusDrain(sc)
+      jobs.set(0)
+      sc.setLocalProperty(tag, "1")
+      try body finally sc.setLocalProperty(tag, null)
+      ListenerBusDrain(sc)
+      jobs.get
+    }
+    val path = java.nio.file.Files.createTempDirectory("graft-ivfpq-jobs").toString + "/idx"
+    val (corpus, _) = Ann.split(s, sf0001)
+    sc.addSparkListener(listener)
+    try {
+      val build = jobsOf(Ann.buildIvfPqIndex(s, sf0001, path, col("vec_id") % 7 =!= 0))
+      val upsert = jobsOf(Ann.ivfPqUpsertBatch(s, path, corpus.filter(col("vec_id") % 7 === 0), 1L))
+      val serve = jobsOf(Ann.ivfPqServe(s, sf0001, path).collect())
+      info(s"jobs: build $build, upsert batch $upsert, serve $serve")
+      // graft's own tables are read with their declared schema (no
+      // footer-inference job), the PQ codebook without a sort, and the
+      // per-cell model rows ride in the coding expression (no broadcast
+      // job). Reading with schema inference, sorting and broadcasting
+      // cost 21 / 12 / 21 jobs here.
+      assert(build <= 15, s"buildIvfPqIndex launched $build jobs")
+      assert(upsert <= 5, s"ivfPqUpsertBatch launched $upsert jobs")
+      assert(serve <= 13, s"ivfPqServe launched $serve jobs")
+    } finally sc.removeSparkListener(listener)
+
+    val cent = Ann.readCodebook(s, path)
+    val coded = Ann.pqCode(Ann.ivfAssign(corpus, cent), Ann.readPqCodebook(s, path), cent)
+    assert(coded.count() == corpus.count())
+    object plans extends AdaptiveSparkPlanHelper
+    val p = coded.queryExecution.executedPlan
+    val localBroadcasts = plans.collect(p) {
+      case b: BroadcastExchangeExec if b.exists(_.isInstanceOf[LocalTableScanExec]) => b
+    }
+    assert(localBroadcasts.isEmpty,
+      s"the coding pass must carry its per-cell model rows in expressions, not broadcast them:\n$p")
+  }
+
+  test("model reads: a shuffled multi-file codebook reads back; a missing, doubled or renamed row throws") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{col, rand, when}
+    val path = java.nio.file.Files.createTempDirectory("graft-ivfpq-model").toString + "/idx"
+    Ann.buildIvfPqIndex(spark, sf0001, path)
+    val cent = Ann.readCodebook(spark, path)
+    val pqCb = Ann.readPqCodebook(spark, path)
+    val tables = Seq("codebook.parquet", "pq_codebook.parquet")
+    // copy both model tables under a fresh root, each through `edit`
+    def rewrite(edit: String => DataFrame => DataFrame): String = {
+      val root = java.nio.file.Files.createTempDirectory("graft-ivfpq-model-copy").toString
+      tables.foreach(t => edit(t)(spark.read.parquet(s"$path/$t")).write.parquet(s"$root/$t"))
+      root
+    }
+    // several files, rows in shuffled order: every row lands at its key
+    val shuffle: DataFrame => DataFrame = _.orderBy(rand(7)).repartition(3)
+    val shuffled = rewrite(_ => shuffle)
+    for (t <- tables) assert(
+      new java.io.File(s"$shuffled/$t").list().count(_.endsWith(".parquet")) > 1,
+      s"fixture: $t must be written as several files")
+    assert(Ann.readCodebook(spark, shuffled).sameElements(cent))
+    assert(Ann.readPqCodebook(spark, shuffled).sameElements(pqCb))
+
+    def rejected(table: String, read: String => Array[Double])(edit: DataFrame => DataFrame): Unit = {
+      val root = rewrite(t => if (t == table) edit.andThen(shuffle) else shuffle)
+      val e = intercept[IllegalArgumentException](read(root))
+      assert(e.getMessage.contains(s"$root/$table"), s"the error must name the artifact: ${e.getMessage}")
+    }
+    val last = pqCb.length - 1
+    val pq = "pq_codebook.parquet"
+    rejected(pq, Ann.readPqCodebook(spark, _))(_.filter(col("pos") =!= 100))
+    rejected(pq, Ann.readPqCodebook(spark, _))(_.filter(col("pos") =!= last))
+    rejected(pq, Ann.readPqCodebook(spark, _))(
+      _.withColumn("pos", when(col("pos") === 101, 100).otherwise(col("pos"))))
+    rejected(pq, Ann.readPqCodebook(spark, _))(_.withColumnRenamed("v", "value"))
+    val cb = "codebook.parquet"
+    rejected(cb, Ann.readCodebook(spark, _))(_.filter(col("cell") =!= 5))
+    rejected(cb, Ann.readCodebook(spark, _))(
+      _.withColumn("cell", when(col("cell") === 6, 5).otherwise(col("cell"))))
+    rejected(cb, Ann.readCodebook(spark, _))(_.withColumnRenamed("centroid", "center"))
+  }
+
   /** Int8 quantization costs 4× less memory; this pins what it costs
     * in ANSWER quality. 127 levels over a 64-dim unit-ish vector
     * perturbs each cosine by ~1e-3 — far below the corpus's typical
