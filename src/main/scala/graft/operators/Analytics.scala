@@ -248,73 +248,28 @@ object Analytics {
        |ORDER BY node_type, node_id""".stripMargin
   }
 
+  /** Bound on min-label rounds. The co-purchase graph converges in 3
+    * rounds at sf0.001, 4 at sf0.01 and 5 at sf0.1 (the count grows
+    * about with the log of graph size), so 5 puts a zero certificate on
+    * every tested scale. The oracle unrolls the same constant.
+    */
   private val CcIters = 5
 
-  /** Connected components over the co-purchase graph by min-label
-    * propagation, [[CcIters]] fixed rounds (the bounded-round flavor of
-    * HashToMin/Pregel CC): every node starts labeled with its own id;
-    * each round it keeps the minimum of its label and its neighbors' —
-    * after k rounds labels agree within k hops, full convergence needs
-    * diameter rounds (on this bipartite graph the giant component
-    * collapses almost immediately; a production run would loop until a
-    * "labels changed this round" count hits zero — same plan per
-    * round, driver-controlled stop like [[Ann.trainCodebook]]).
-    *
-    * CONVERGENCE CENSUS (VERDICT r18 #6): the bounded-round contract
-    * is only honest if a run can SEE when the bound was too small —
-    * the inline fixpoint ([[graft.operators.Dedup.connectedComponents]])
-    * refuses loudly at non-convergence; this row now carries the same
-    * observability as per-round moved-label counts (`moved_r1..5`,
-    * the [[qKcore]] census posture pivoted onto the node rows): a
-    * final-round count of zero PROVES the labels are the fixpoint; a
-    * nonzero count names exactly how unfinished the bound left them.
-    * Hash-checked — the oracle recomputes each round's moved count
-    * from its own CTE chain. The per-round count is one node-sized
-    * aggregate over the label checkpoint the loop materializes anyway.
-    *
-    * BOUND = 5 (VERDICT r19 #1): the r19 census measured the
-    * co-purchase graph's convergence profile — 3 rounds at sf0.001,
-    * 4 at sf0.01, 5 at sf0.1 (the bound grows ≈ log of graph size) —
-    * so the former `CcIters = 3` handed out round-3 propagation
-    * states, not components, at every scale above toy. Five rounds
-    * puts a ZERO census certificate on every tested scale point; the
-    * two extra rounds are node-sized label checkpoints + one
-    * edge-linear join each (+~0.9 s at sf0.1, costed in BASELINE.md).
-    * The census stays in the output precisely so a future scale step
-    * that needs round 6 is VISIBLE in the committed hash, not silent.
-    *
-    * Pure integer MIN arithmetic — associative, partial-aggregated,
-    * bit-reproducible (contrast: hash-based CC labels drift across
-    * engines). Each round is ONE shuffle join (edges ⋈ labels on src)
-    * + ONE min-aggregate on dst + a label merge join; edges come from
-    * the shared checkpoint, never re-derived.
+  /** Connected components of the co-purchase graph by
+    * [[graft.plans.MinLabel]], at most [[CcIters]] rounds. Each node
+    * row carries the run's census `moved_r1..moved_r5`: the labels
+    * that moved in each round, zero-padded past the round that moved
+    * nothing. `moved_r5 = 0` certifies the labels are the components;
+    * a nonzero value says how unfinished the bound left them. The
+    * oracle recomputes each round's count from its own CTE chain.
     */
   def qComponents(s: SparkSession, dir: String): DataFrame = {
-    val (eb, deg) = copurchaseGraph(s, dir)
-    // node list comes from the tiny degree table, not a full-edge distinct
-    var lab = deg.select(col("nd"), col("nd").as("lab"))
-    val moved = scala.collection.mutable.ArrayBuffer.empty[Long]
-    for (_ <- 1 to CcIters) {
-      val nbr = eb.join(lab, eb("src") === lab("nd"))
-        .groupBy(col("dst")).agg(min(col("lab")).as("nlab"))
-        .select(col("dst").as("nd"), col("nlab"))
-      // lab feeds BOTH the neighbor-min join and the merge join: without a
-      // per-round cut the unrolled plan embeds each round's subtree twice
-      // (2^rounds duplication — measured as the query's cost center at
-      // sf0.1). The label table is node-sized, so the eager per-round
-      // checkpoint is a tiny job; GraphX/Pregel does the same per-round
-      // materialization for the same reason.
-      val next = lab.join(nbr, Seq("nd"), "left")
-        .select(col("nd"), col("lab").as("old_lab"),
-          least(col("lab"), coalesce(col("nlab"), col("lab"))).as("lab"))
-        .materialized
-      moved += next.filter(col("lab") =!= col("old_lab")).count()
-      lab = next.select(col("nd"), col("lab"))
-    }
+    val (eb, _) = copurchaseGraph(s, dir)
+    val (lab, moved) = graft.plans.MinLabel(eb, CcIters)
     val out = lab.select(
       when(col("nd") % 2 === 0, "customer").otherwise("supplier").as("node_type"),
       expr("nd DIV 2").as("node_id"), col("lab").as("comp"))
-    moved.zipWithIndex.foldLeft(out) { case (df, (m, i)) =>
+    moved.padTo(CcIters, 0L).zipWithIndex.foldLeft(out) { case (df, (m, i)) =>
       df.withColumn(s"moved_r${i + 1}", lit(m))
     }
   }

@@ -582,61 +582,29 @@ object Dedup {
   // A-C never surfaced as a candidate).
   // ------------------------------------------------------------------
 
-  /** Connected components of an undirected edge list (id_a, id_b) by
-    * iterative min-label propagation: every node starts labeled with
-    * itself; each round takes the min of its own and its neighbors'
-    * labels; fixpoint = components labeled by their min member.
+  /** Connected components of an undirected edge list (id_a, id_b):
+    * `(id, comp)` with every node labeled by the minimum id of its
+    * component, by [[graft.plans.MinLabel]] to its fixpoint. Near-dup
+    * clusters are near-cliques (diameter ~2-3), so a handful of rounds
+    * converge; the budget is the seed round plus `maxIter` rounds, a
+    * bound on pathological similarity chains.
     *
-    * Scale shape: each round is one shuffle join edges⋈labels plus a
-    * partial-aggregating groupBy — no global structure. Rounds needed
-    * = graph diameter, and near-dup clusters are near-cliques of
-    * duplicates (diameter ~2-3), so the driver loop converges in a
-    * handful of rounds; `maxIter` bounds pathological chains. The
-    * driver-side loop with one action per round is the standard Spark
-    * formulation of iterative graph algorithms (GraphX/GraphFrames do
-    * the same); materialization truncates lineage each round so plan
-    * size stays constant ([[graft.plans.Materialize]] — flip
-    * `spark.graft.checkpoint.reliable=true` for the preemption-safe
-    * cluster-store checkpoint in production).
+    * Never returns non-converged labels: they would give one true
+    * cluster several cluster_ids and several survivors, a dedup run
+    * that keeps duplicates while reporting clean verdicts. It throws
+    * instead and the caller decides (raise `maxIter`, or break the
+    * chain upstream).
     */
   def connectedComponents(edges: DataFrame, maxIter: Int = 20): DataFrame = {
     val sym = edges.select(col("id_a").as("src"), col("id_b").as("dst"))
       .unionByName(edges.select(col("id_b").as("src"), col("id_a").as("dst")))
       .materialized
-    // Seed labels with round 1's RESULT computed as a plain aggregate:
-    // against identity labels, "min of my and my neighbors' labels" is
-    // just least(id, min(neighbor)) — same one shuffle as the distinct
-    // the identity seeding needed, but the first edges⋈labels JOIN
-    // round disappears entirely.
-    var labels = sym.groupBy(col("src"))
-      .agg(min(col("dst")).as("mn"))
-      .select(col("src").as("id"), least(col("src"), col("mn")).as("comp"))
-    var changed = 1L
-    var i = 0
-    while (changed > 0 && i < maxIter) {
-      val nbrMin = sym
-        .join(labels.select(col("id").as("dst"), col("comp").as("dst_comp")), "dst")
-        .groupBy(col("src").as("id")).agg(min("dst_comp").as("nbr_comp"))
-      val updated = labels
-        .join(nbrMin, Seq("id"), "left")
-        .select(col("id"),
-          least(col("comp"), coalesce(col("nbr_comp"), col("comp"))).as("comp"),
-          (col("nbr_comp") < col("comp")).as("moved"))
-        .materialized
-      changed = updated.filter(col("moved")).count()
-      labels = updated.drop("moved")
-      i += 1
-    }
-    // NEVER return silently-wrong labels: non-convergence would hand
-    // one true cluster several cluster_ids and several "survivors" —
-    // a dedup run that keeps duplicates while reporting clean verdicts.
-    // Diameter > maxIter means a pathological similarity chain; the
-    // caller decides (raise maxIter, or break the chain upstream).
-    if (changed > 0)
+    val (labels, moved) = graft.plans.MinLabel(sym, maxIter + 1)
+    if (moved.last > 0)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIter rounds " +
-        s"($changed labels still moving) — graph diameter exceeds maxIter")
-    labels
+        s"(${moved.last} labels still moving) — graph diameter exceeds maxIter")
+    labels.select(col("nd").as("id"), col("lab").as("comp"))
   }
 
   /** Near-dup dedup DECISIONS over the whole corpus: every document's

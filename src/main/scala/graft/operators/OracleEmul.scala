@@ -48,11 +48,15 @@ private[operators] object OracleEmul {
       s" * 4294967296::HUGEINT) % $W)"
   }
 
-  private var mixN = 0
-  /** splitmix64-style finalizer on an expression in [0, 2^64). */
+  private val MixVar = """\bmza(\d+)""".r
+  /** splitmix64-style finalizer on an expression in [0, 2^64). Its
+    * let-variables are numbered one past the deepest `mza<n>` in `e`,
+    * so they never capture a name `e` uses and the SQL text depends on
+    * the argument alone.
+    */
   def mix(e: String): String = {
-    mixN += 1
-    val (z1, z2, z3) = (s"mza$mixN", s"mzb$mixN", s"mzc$mixN")
+    val n = MixVar.findAllMatchIn(e).map(_.group(1).toInt).maxOption.getOrElse(0) + 1
+    val (z1, z2, z3) = (s"mza$n", s"mzb$n", s"mzc$n")
     let(z1, s"(($e + $MixAdd) % $W)",
       let(z2, wrapMulC(s"xor($z1, $z1 // 1073741824::HUGEINT)", MixM1), // >>> 30
         let(z3, wrapMulC(s"xor($z2, $z2 // 134217728::HUGEINT)", MixM2), // >>> 27

@@ -185,6 +185,14 @@ class DedupSpec extends SparkSpec {
     val got = Dedup.connectedComponents(edges).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 8L -> 7L))
+    // a 12-node path needs 11 hops: the seed round plus 3 rounds cannot
+    // reach node 12, so the call must refuse rather than return labels
+    val path = (1L until 12L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    intercept[IllegalStateException](Dedup.connectedComponents(path, maxIter = 3))
+    val whole = Dedup.connectedComponents(path).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(whole === (1L to 12L).map(_ -> 1L).toMap,
+      "under the default bound the path is one component labeled 1")
   }
 
   test("q_dedup_clusters: planted near-dups cluster, singletons survive alone") {

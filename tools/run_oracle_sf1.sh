@@ -37,6 +37,11 @@ fi
 echo "[sf1] full-surface verify dump"
 tools/run_verify.sh "$REPLICA" "$OUT" 2>&1 | grep -iE "\[verify\].*failed" || true
 
+# q_components must certify its labels at this scale (moved_r5 = 0); a
+# failed census fails the sweep after the oracle compares have run
+CENSUS_OK=1
+tools/check_census.py "$OUT" "$OUT/census.json" || CENSUS_OK=0
+
 ALL=$(python3 -c "import json; print(','.join(sorted(json.load(open('$OUT/oracle_sql.json')))))")
 echo "[sf1] oracle sweep over $(echo "$ALL" | tr ',' '\n' | wc -l) queries"
 
@@ -61,9 +66,9 @@ for q in $(echo "$ALL" | tr ',' ' '); do
   fi
 done
 
-python3 - "$OUT/percheck" CORRECTNESS_SF1.json "$REPLICA" <<'EOF'
+python3 - "$OUT/percheck" CORRECTNESS_SF1.json "$REPLICA" "$OUT/census.json" <<'EOF'
 import glob, json, sys
-d, out, sf = sys.argv[1], sys.argv[2], sys.argv[3]
+d, out, sf, census_json = sys.argv[1:5]
 queries, npass, nfail, nskip = {}, 0, 0, 0
 for p in sorted(glob.glob(f"{d}/*.json")):
     j = json.load(open(p))
@@ -73,8 +78,10 @@ for p in sorted(glob.glob(f"{d}/*.json")):
         if st.startswith("pass"): npass += 1
         elif st == "skipped_oracle_cost": nskip += 1
         else: nfail += 1
+census = json.load(open(census_json))
+nfail += sum(not v["status"].startswith("pass") for v in census.values())
 json.dump({"sf": sf, "n_pass": npass, "n_fail": nfail,
-           "n_skipped_oracle_cost": nskip, "queries": queries},
+           "n_skipped_oracle_cost": nskip, "queries": queries, "census": census},
           open(out, "w"), indent=1, sort_keys=True)
 print(f"wrote {out}: {npass} pass, {nfail} fail, {nskip} skipped (oracle cost)")
 # coverage tripwire (ADVICE r16): the skipped set must not grow vs the
@@ -93,3 +100,7 @@ if os.path.exists(out):  # compare against the just-overwritten git state
             print(f"WARNING: skipped_oracle_cost set GREW vs the committed sweep: {sorted(grown)}")
             print("         raise HEAVY_TIMEOUT_S or adjudicate before committing")
 EOF
+if [ "$CENSUS_OK" = 0 ]; then
+  echo "[sf1] FAILED: q_components census did not certify convergence (see census in CORRECTNESS_SF1.json)" >&2
+  exit 1
+fi
