@@ -676,23 +676,9 @@ object Ann {
        |ORDER BY n_probes""".stripMargin
   }
 
-  /** Build the IVF index ONCE — the production shape (the `q_ann_ivf`
-    * bench row trains once per session via [[sessionCodebook]]; a
-    * deployment amortizes further: build offline, serve many). The
-    * index is PARTITIONED BY CELL, so
-    * serving gets its nProbe/k scan discount from the STORAGE layout:
-    * probing 6 of 16 cells reads 6 directories, enforced by partition
-    * pruning in the scan, not by a runtime filter over everything
-    * (AnnSpec asserts the PartitionFilters). Layout:
-    * `<path>/codebook.parquet` (cell, centroid) and
-    * `<path>/index.parquet/cell=N/` (vec_id, embedding, nrm).
-    * The whole root is published through [[Publish]], so codebook and
-    * cells change together and a rebuild retires every streamed
-    * increment under `<path>/index-stream`.
-    */
   /** Map-only cell assignment against a frozen codebook — the pass
-    * [[buildIvfIndex]] and [[ivfUpsert]] share. No join, no shuffle:
-    * the codebook ships inside the expression.
+    * [[buildIvfIndex]] and [[ivfUpsertBatch]] share. No join, no
+    * shuffle: the codebook ships inside the expression.
     */
   private[graft] def ivfAssign(df: DataFrame, cent: Array[Double]): DataFrame =
     df.withColumn("cell",
@@ -705,13 +691,27 @@ object Ann {
 
   /** Read a table this object wrote under the schema its writer
     * produces. Spark would otherwise run a footer-reading job to infer
-    * it on every read. Columns still resolve by name. */
+    * it on every read, and throw on a directory with no data files,
+    * which reads as empty here. Columns still resolve by name. */
   private def readOwn(s: SparkSession, path: String, ddl: String): DataFrame =
     s.read.schema(ddl).parquet(path)
 
-  /** @param indexFilter bounds the initially-indexed subset (the
+  /** Build the IVF index ONCE — the production shape (the `q_ann_ivf`
+    * bench row trains once per session via [[sessionCodebook]]; a
+    * deployment amortizes further: build offline, serve many). The
+    * index is PARTITIONED BY CELL, so
+    * serving gets its nProbe/k scan discount from the STORAGE layout:
+    * probing 6 of 16 cells reads 6 directories, enforced by partition
+    * pruning in the scan, not by a runtime filter over everything
+    * (AnnSpec asserts the PartitionFilters). Layout:
+    * `<path>/codebook.parquet` (cell, centroid) and
+    * `<path>/index.parquet/cell=N/` (vec_id, embedding, nrm).
+    * The whole root is published through [[Publish]], so codebook and
+    * cells change together and a rebuild retires every streamed batch.
+    *
+    * @param indexFilter bounds the initially-indexed subset (the
     *   codebook still trains on the FULL corpus — AnnSpec builds a
-    *   partial index and [[ivfUpsert]]s the remainder to prove
+    *   partial index and upserts the remainder as a batch to prove
     *   serve-equivalence with a one-shot build).
     */
   private[graft] def buildIvfIndex(s: SparkSession, dir: String, path: String,
@@ -725,75 +725,41 @@ object Ann {
     }
   }
 
-  /** Incremental IVF index maintenance (VERDICT r10 #5): append
-    * arrivals to their nearest existing cells WITHOUT retraining the
-    * codebook or touching the resident corpus. The codebook is a
-    * driver-sized frozen model (cells × dim doubles) read once; the
-    * arrival batch is assigned map-only ([[ivfAssign]] — AnnSpec pins
-    * the no-Exchange plan) and appended under the matching `cell=N`
-    * partition directories, so serving keeps its partition-pruning
-    * discount over the UNION of resident and upserted vectors.
+  /** Incremental IVF index maintenance: arrivals are assigned
+    * map-only to their nearest frozen-codebook cell ([[ivfAssign]])
+    * and published as streamed batch `batchId` ([[Publish.batchOf]]),
+    * a cell-partitioned `index.parquet` that [[ivfServe]] scans beside
+    * the resident one with the same partition pruning. Arrivals carry
+    * the index row shape (vec_id, embedding, nrm).
     *
-    * The standard IVF maintenance trade: assignments stay exact
-    * w.r.t. the frozen centroids, but as the arrival distribution
-    * drifts from the training distribution, cells imbalance and
-    * recall decays — [[qAnnRecall]] is the monitor, retraining
-    * ([[buildIvfIndex]]) the repair. Arrivals must carry the index
-    * row shape: (vec_id, embedding, nrm).
-    *
-    * CONTRACT (ADVICE r12): despite the conventional "upsert" name
-    * this is APPEND-ONLY — an arrival whose vec_id already exists in
-    * the index produces a second row for it, and duplicates can occupy
-    * multiple top-k slots in [[ivfServe]]. The caller owns vec_id
-    * uniqueness across the resident index and all batches (re-delivery
-    * and in-place embedding updates need a rebuild or a delete-aware
-    * layout, which this engine does not provide). The streaming path
-    * gets replay-safety without that burden via [[ivfUpsertBatch]].
-    */
-  private[graft] def ivfUpsert(s: SparkSession, path: String, arrivals: DataFrame): Unit = {
-    Publish.recover(s, path)
-    val cent = readCodebook(s, path)
-    ivfAssign(arrivals, cent)
-      .write.mode("append").partitionBy("cell").parquet(s"$path/index.parquet")
-  }
-
-  /** Idempotent per-micro-batch upsert — the streaming-sink variant of
-    * [[ivfUpsert]] (ADVICE r12): the batch is cell-assigned map-only
-    * exactly like the batch path, but lands under a DETERMINISTIC
-    * batchId-derived directory with OVERWRITE semantics instead of a
-    * blind append into the resident index. A micro-batch replay after
-    * a crash (foreachBatch bypasses the file sink's commit log, so
-    * replays are the norm, not the exception) rewrites the same
-    * directory and the index converges to exactly-once contents —
-    * no marker files, no commit log of our own. [[ivfServe]] unions
-    * these batch directories with the resident index; a codebook
-    * retrain ([[buildIvfIndex]]) retires them, since a fresh full build
-    * supersedes every streamed increment.
+    * A replay of the same batch id (foreachBatch re-delivers after a
+    * crash) publishes the same batch again, so the index converges to
+    * exactly-once contents. The caller owns vec_id uniqueness across
+    * the resident index and distinct batches. An empty batch is
+    * skipped. Assignments stay exact w.r.t. the frozen centroids, but
+    * as arrivals drift from the training distribution recall decays:
+    * [[qAnnRecall]] is the monitor and [[buildIvfIndex]], which
+    * retires every batch, the repair.
     */
   private[graft] def ivfUpsertBatch(s: SparkSession, path: String,
-      arrivals: DataFrame, batchId: Long): Unit = {
-    // an empty micro-batch writes no partition dirs and would leave an
-    // unreadable (schema-less) root behind — skip it; replaying an
-    // empty batch is a no-op either way
+      arrivals: DataFrame, batchId: Long): Unit =
     if (!arrivals.isEmpty) {
       Publish.recover(s, path)
       val cent = readCodebook(s, path)
-      ivfAssign(arrivals, cent)
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(f"$path/index-stream/batch-$batchId%09d")
+      Publish(s, Publish.batchOf(path, batchId)) { tmp =>
+        ivfAssign(arrivals, cent).write.partitionBy("cell").parquet(s"$tmp/index.parquet")
+      }
     }
-  }
 
-  /** Streamed-batch directories under `<path>/index-stream`, oldest
-    * first (empty when the index has only the resident build) — the
-    * IVF and LSH layouts share it. */
-  private def streamBatchRoots(s: SparkSession, path: String): Seq[String] = {
-    val root = new org.apache.hadoop.fs.Path(s"$path/index-stream")
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(root))
-      fs.listStatus(root).filter(_.isDirectory).map(_.getPath.toString).sorted.toSeq
-    else Seq.empty
-  }
+  /** The resident index root followed by every committed streamed
+    * batch; each holds the same tables. */
+  private def indexRoots(s: SparkSession, path: String): Seq[String] =
+    path +: Publish.batches(s, path).map(_._2)
+
+  /** `table` read under `ddl` from every root in `roots`, unioned. */
+  private def readRoots(s: SparkSession, roots: Seq[String], table: String,
+      ddl: String): DataFrame =
+    roots.map(r => readOwn(s, s"$r/$table", ddl)).reduce(_ unionByName _)
 
   /** Persist the frozen cell codebook as one (cell, centroid) row per
     * cell; [[CodebookDdl]] is the layout [[readCodebook]] reads. */
@@ -878,14 +844,11 @@ object Ann {
     Publish.recover(s, path)
     val (_, queries) = split(s, dir)
     val (probed, cellFilter) = probeList(s, queries, readCodebook(s, path), probes)
-    // resident build + streamed batch dirs ([[ivfUpsertBatch]]), each
-    // scanned with the same probed-cell partition pruning. The batch
-    // roots are one directory per micro-batch since the last rebuild —
-    // bounded by retrain cadence, and a rebuild folds them away; at
-    // serve volume this is a planner-side listing, not a data cost.
-    val index = (s"$path/index.parquet" +: streamBatchRoots(s, path))
-      .map(r => readOwn(s, r, FloatRowsDdl).filter(cellFilter))
-      .reduce(_ unionByName _)
+    // resident build + streamed batches, pruned to the probed cells.
+    // One batch per micro-batch since the last rebuild, which retires
+    // them: a planner-side listing, not a data cost.
+    val index = readRoots(s, indexRoots(s, path), "index.parquet", FloatRowsDdl)
+      .filter(cellFilter)
     val scored = index.join(broadcast(probed), Seq("cell"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(
@@ -912,7 +875,7 @@ object Ann {
   // for the data-OBLIVIOUS family. Layout:
   //   <path>/meta.parquet                 (lsh_seed, n_tables, dim)
   //   <path>/index.parquet/bkey=N/        (vec_id, embedding, nrm)
-  //   <path>/index-stream/batch-…/bkey=N/ (streamed increments)
+  //   <path>/stream/batch-…/index.parquet (streamed batches, same layout)
   // The "model" is the seed: the 16 cross-polytope rotations derive
   // deterministically from it inside [[graft.functions.CrossPolytopeKeys]],
   // so persisting (seed, tables, dim) persists the rotation tables —
@@ -943,6 +906,10 @@ object Ann {
         s"dim=$dim) — session expects ($LshSeed, $LshTables, $Dim); rebuild the index")
   }
 
+  /** Columns of the LSH `index.parquet`, `bkey` being the partition
+    * column. */
+  private val LshRowsDdl = "vec_id BIGINT, embedding ARRAY<FLOAT>, nrm DOUBLE, bkey INT"
+
   /** Map-only bucket assignment — the pass [[buildLshIndex]] and
     * [[lshUpsertBatch]] share. No join, no shuffle: the rotations
     * derive from the seed inside the expression.
@@ -970,31 +937,19 @@ object Ann {
     }
   }
 
-  /** Append-only incremental maintenance — same contract (and caller-
-    * owned vec_id uniqueness) as [[ivfUpsert]]; assignments are exact
-    * forever because the rotations never retrain (LSH's maintenance
-    * advantage over IVF: no codebook drift, no recall decay from a
-    * frozen model — the bucket function IS the model).
-    */
-  private[graft] def lshUpsert(s: SparkSession, path: String, arrivals: DataFrame): Unit = {
-    lshMetaOk(s, path)
-    lshAssign(arrivals)
-      .write.mode("append").partitionBy("bkey").parquet(s"$path/index.parquet")
-  }
-
-  /** Idempotent per-micro-batch upsert — the streaming-sink variant
-    * ([[ivfUpsertBatch]]'s contract: deterministic batch directory,
-    * overwrite semantics, replay-safe; empty batches are skipped).
+  /** Incremental LSH index maintenance: [[ivfUpsertBatch]]'s
+    * contract with the bucket function as the model. Assignments are
+    * exact forever because the rotations never retrain, so LSH has no
+    * codebook drift to repair.
     */
   private[graft] def lshUpsertBatch(s: SparkSession, path: String,
-      arrivals: DataFrame, batchId: Long): Unit = {
+      arrivals: DataFrame, batchId: Long): Unit =
     if (!arrivals.isEmpty) {
       lshMetaOk(s, path)
-      lshAssign(arrivals)
-        .write.mode("overwrite").partitionBy("bkey")
-        .parquet(f"$path/index-stream/batch-$batchId%09d")
+      Publish(s, Publish.batchOf(path, batchId)) { tmp =>
+        lshAssign(arrivals).write.partitionBy("bkey").parquet(s"$tmp/index.parquet")
+      }
     }
-  }
 
   /** Serve top-k from a prebuilt [[buildLshIndex]] index. The probed
     * bucket set (≤ queries × tables × probes keys) is computed on the
@@ -1016,9 +971,8 @@ object Ann {
     // the probe-list is Q×tables×probes rows — driver-safe by construction
     val probedKeys = probed.select("bkey").distinct().collect().map(_.getInt(0))
     val keyFilter = col("bkey").isin(probedKeys.map(Integer.valueOf): _*)
-    val index = (s"$path/index.parquet" +: streamBatchRoots(s, path))
-      .map(r => s.read.parquet(r).filter(keyFilter))
-      .reduce(_ unionByName _)
+    val index = readRoots(s, indexRoots(s, path), "index.parquet", LshRowsDdl)
+      .filter(keyFilter)
     val scored = index.join(broadcast(probed), Seq("bkey"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(
@@ -1046,6 +1000,7 @@ object Ann {
   //   <path>/pq_codebook.parquet    (pos, v)                   — PQ sub-codebooks, frozen
   //   <path>/index.parquet/cell=N/  (vec_id, codes[16B], rn)   — PQ codes, scanned
   //   <path>/rerank.parquet/cell=N/ (vec_id, embedding, nrm)   — floats, point-read
+  //   <path>/stream/batch-…/        (index.parquet, rerank.parquet) — streamed batches
   //
   // Serve cost shape: the scoring scan reads nProbe/k of the CODES
   // (~1/11 the bytes of the float index) and spends [[PqM]] table
@@ -1117,13 +1072,12 @@ object Ann {
     *
     * The whole triad (cell codebook, PQ sub-codebooks, both halves)
     * is published as one root through [[Publish]], so codes never
-    * serve under another build's codebook, and the swap retires the
-    * stream dirs (a rebuild supersedes every streamed batch — they
-    * re-arrive via replay).
+    * serve under another build's codebook, and the swap retires every
+    * streamed batch.
     *
-    * @param indexFilter bounds the initially-indexed
-    * subset (AnnSpec builds partial + [[ivfPqUpsert]]s the rest to
-    * prove serve-equivalence with a one-shot build).
+    * @param indexFilter bounds the initially-indexed subset (AnnSpec
+    * builds partial + [[ivfPqUpsertBatch]]es the rest to prove
+    * serve-equivalence with a one-shot build).
     */
   private[graft] def buildIvfPqIndex(s: SparkSession, dir: String, path: String,
       indexFilter: Column = lit(true)): Unit = {
@@ -1137,141 +1091,36 @@ object Ann {
     Publish(s, path) { tmp =>
       writeCodebook(s, tmp, cent)
       writePqCodebook(s, tmp, pqCb)
-      ivfAssign(corpus.filter(indexFilter), cent)
-        .select(col("vec_id"), col("embedding"), col("nrm"), col("cell"))
-        .write.partitionBy("cell").parquet(s"$tmp/rerank.parquet")
-      pqCode(readOwn(s, s"$tmp/rerank.parquet", FloatRowsDdl), pqCb, cent)
-        .select(col("vec_id"), col("codes"), col("rn"), col("cell"))
-        .write.partitionBy("cell").parquet(s"$tmp/index.parquet")
+      writePqHalves(s, tmp, corpus.filter(indexFilter), cent, pqCb)
     }
   }
 
-  /** Append-only incremental maintenance — the [[ivfUpsert]] contract
-    * (caller-owned vec_id uniqueness; frozen codebook, so assignment
-    * is map-only and exact forever): the arrival batch lands in BOTH
-    * halves under its cells, codes derived in the same map pass.
-    */
-  private[graft] def ivfPqUpsert(s: SparkSession, path: String, arrivals: DataFrame): Unit = {
-    Publish.recover(s, path)
-    val cent = readCodebook(s, path)
-    val pqCb = readPqCodebook(s, path)
-    val assigned = ivfAssign(arrivals, cent)
-    assigned.select(col("vec_id"), col("embedding"), col("nrm"), col("cell"))
-      .write.mode("append").partitionBy("cell").parquet(s"$path/rerank.parquet")
-    pqCode(assigned, pqCb, cent)
+  /** Write both IVF-PQ halves of `rows` under `root`: the float rerank
+    * half, then the codes derived from reading it back, so `rows` is
+    * scanned once. */
+  private def writePqHalves(s: SparkSession, root: String, rows: DataFrame,
+      cent: Array[Double], pqCb: Array[Double]): Unit = {
+    ivfAssign(rows, cent)
+      .select(col("vec_id"), col("embedding"), col("nrm"), col("cell"))
+      .write.partitionBy("cell").parquet(s"$root/rerank.parquet")
+    pqCode(readOwn(s, s"$root/rerank.parquet", FloatRowsDdl), pqCb, cent)
       .select(col("vec_id"), col("codes"), col("rn"), col("cell"))
-      .write.mode("append").partitionBy("cell").parquet(s"$path/index.parquet")
+      .write.partitionBy("cell").parquet(s"$root/index.parquet")
   }
 
-  /** Idempotent per-micro-batch PQ upsert — [[ivfUpsertBatch]]'s
-    * contract extended to the TWO-TABLE layout, where the plain
-    * [[ivfPqUpsert]] has a failure mode the one-table paths don't: a
-    * crash between its two appends TEARS the index (floats landed,
-    * codes didn't — the batch's vectors silently vanish from the
-    * scoring scan, and a replay would duplicate the half that DID
-    * land). Here both halves go under deterministic batchId-derived
-    * directories with OVERWRITE semantics: a torn batch is merely
-    * invisible (codes half absent → stage 1 never surfaces the ids;
-    * stage 2 only point-reads ids stage 1 produced, so an orphaned
-    * float half is never served), and the replay rewrites BOTH dirs —
-    * the index converges to exactly-once contents, tear healed. The
-    * float half is written first and the codes derive from reading it
-    * back, so arrivals are scanned once and the commit order matches
-    * the tear analysis above. A codebook retrain ([[buildIvfPqIndex]])
-    * clears both stream roots.
+  /** Incremental IVF-PQ index maintenance: [[ivfUpsertBatch]]'s
+    * contract, the batch holding both halves ([[writePqHalves]]) under
+    * the frozen codebooks. Both halves commit in the batch's one swap,
+    * so a crash never leaves codes without floats or the reverse.
     */
   private[graft] def ivfPqUpsertBatch(s: SparkSession, path: String,
-      arrivals: DataFrame, batchId: Long): Unit = {
+      arrivals: DataFrame, batchId: Long): Unit =
     if (!arrivals.isEmpty) {
       Publish.recover(s, path)
       val cent = readCodebook(s, path)
       val pqCb = readPqCodebook(s, path)
-      val rerankDir = f"$path/rerank-stream/batch-$batchId%09d"
-      val indexDir = f"$path/index-stream/batch-$batchId%09d"
-      // replay of an already-committed batch (at-least-once
-      // re-delivery) must UN-COMMIT first: if the old codes half were
-      // left standing while the float half is overwritten, a crash
-      // mid-overwrite would leave codes committed with floats absent —
-      // stage 1 surfaces the batch's vec_ids but stage 2 finds no
-      // floats, the exact reverse tear this write order exists to
-      // prevent. Deleting the codes dir restores floats-first /
-      // codes-last for EVERY attempt, not just the first.
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      val ip = new org.apache.hadoop.fs.Path(indexDir)
-      if (fs.exists(ip)) fs.delete(ip, true)
-      ivfAssign(arrivals, cent)
-        .select(col("vec_id"), col("embedding"), col("nrm"), col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(rerankDir)
-      pqCode(readOwn(s, rerankDir, FloatRowsDdl), pqCb, cent)
-        .select(col("vec_id"), col("codes"), col("rn"), col("cell"))
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(indexDir)
-      // commit evidence recorded AT WRITE TIME (ADVICE r19): the codes
-      // job finished, so stamp the batch with the engine's own marker.
-      // The serve-side commit verdict must be a pure function of the
-      // batch dir's contents — inferring it from the READER's Hadoop
-      // conf meant a batch written under a markers-disabled conf (no
-      // _SUCCESS ever exists) but later served under the default
-      // markers-enabled conf read as torn and silently vanished from
-      // serves. A crash between the codes job and this marker leaves
-      // the batch invisible (markers-off writer) or _SUCCESS-committed
-      // (markers-on writer) — either way the at-least-once replay
-      // converges it.
-      fs.create(new org.apache.hadoop.fs.Path(ip, PqCommitMarker), true).close()
+      Publish(s, Publish.batchOf(path, batchId))(writePqHalves(s, _, arrivals, cent, pqCb))
     }
-  }
-
-  /** The engine's own per-batch commit marker ([[ivfPqUpsertBatch]]
-    * writes it after the codes land; [[pqBatchCommitted]] reads it). */
-  private val PqCommitMarker = "_GRAFT_COMMIT"
-
-  /** Streamed-batch directories for one PQ half, oldest first —
-    * COMMITTED batches only: a batch counts iff its CODES half
-    * FINISHED writing (the commit-last half of [[ivfPqUpsertBatch]]'s
-    * write order), so a torn batch's orphaned float half is never
-    * listed for serve. "Finished" is NOT bare directory existence —
-    * Spark creates the output dir (holding only `_temporary`) at job
-    * START, so a crash during the codes write leaves an empty dir
-    * that would otherwise count as committed and make serve throw (or
-    * read partial codes). The commit evidence is recorded AT WRITE
-    * TIME (ADVICE r19): [[ivfPqUpsertBatch]] stamps
-    * [[PqCommitMarker]] into the codes dir after the write completes,
-    * so the verdict here is a pure function of the dir contents —
-    * never of the reader's Hadoop conf (the old conf-inferred rule
-    * classified a markers-disabled writer's batches as torn whenever
-    * the reader ran markers-enabled, silently dropping them from
-    * serves). The Hadoop `_SUCCESS` marker is accepted as equivalent
-    * evidence (a markers-enabled writer that crashed between the
-    * codes job commit and the graft stamp still committed the batch).
-    * A dir with NEITHER marker is torn, full stop — task-committed
-    * data files without a job marker (committer v2 mid-job, v1's
-    * job-commit rename window) are a PARTIAL batch, and counting them
-    * as committed serves silently-incomplete answers (ADVICE r18);
-    * the at-least-once replay rewrites and re-stamps such a batch.
-    */
-  private def pqBatchCommitted(fs: org.apache.hadoop.fs.FileSystem,
-      batchDir: org.apache.hadoop.fs.Path): Boolean =
-    fs.exists(new org.apache.hadoop.fs.Path(batchDir, PqCommitMarker)) ||
-      fs.exists(new org.apache.hadoop.fs.Path(batchDir, "_SUCCESS"))
-
-  private def pqStreamBatchRoots(s: SparkSession, path: String, half: String): Seq[String] = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val committed = {
-      val root = new org.apache.hadoop.fs.Path(s"$path/index-stream")
-      if (fs.exists(root))
-        fs.listStatus(root)
-          .filter(st => st.isDirectory && pqBatchCommitted(fs, st.getPath))
-          .map(_.getPath.getName).toSet
-      else Set.empty[String]
-    }
-    val root = new org.apache.hadoop.fs.Path(s"$path/$half-stream")
-    if (fs.exists(root))
-      fs.listStatus(root).filter(st => st.isDirectory && committed(st.getPath.getName))
-        .map(_.getPath.toString).sorted.toSeq
-    else Seq.empty
-  }
 
   /** Serve top-k from a prebuilt [[buildIvfPqIndex]] index: quantized
     * scoring over the probed cells' CODES → per-query top-`rerankC`
@@ -1304,11 +1153,9 @@ object Ann {
       .select(col("query_id"), col("lut"), col("qc"), col("q_nrm"), col("cell"))
     // stage 1: ADC table-lookup scoring over the probed cells' codes
     // only ([[PqM]] adds per candidate) — resident build + committed
-    // streamed batch dirs ([[ivfPqUpsertBatch]]), each under the same
-    // partition pruning
-    val codesIdx = (s"$path/index.parquet" +: pqStreamBatchRoots(s, path, "index"))
-      .map(r => readOwn(s, r, CodesDdl)).reduce(_ unionByName _)
-    val cand = codesIdx.filter(cellFilter)
+    // streamed batches, each under the same partition pruning
+    val roots = indexRoots(s, path)
+    val cand = readRoots(s, roots, "index.parquet", CodesDdl).filter(cellFilter)
       .join(broadcast(probedQ), Seq("cell"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
@@ -1323,8 +1170,7 @@ object Ann {
     val candIds = candPairs.map(_._2).distinct
     // stage 2: float rerank of exactly the candidate ids (partition
     // pruning on cell + pushed IN on vec_id — a point lookup)
-    val rer = (s"$path/rerank.parquet" +: pqStreamBatchRoots(s, path, "rerank"))
-      .map(r => readOwn(s, r, FloatRowsDdl)).reduce(_ unionByName _)
+    val rer = readRoots(s, roots, "rerank.parquet", FloatRowsDdl)
       .filter(cellFilter)
       .filter(col("vec_id").isin(candIds.map(java.lang.Long.valueOf): _*))
       .select(col("vec_id"), col("embedding"), col("nrm"))

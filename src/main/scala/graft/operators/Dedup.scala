@@ -915,8 +915,7 @@ object Dedup {
     // marker bootstraps check AND the table the consistency invariant
     // ([[dedupIndexConsistent]]) counts against — it lands LAST, so a
     // build/append that dies mid-way leaves either no marker or a
-    // countable shortfall, never a passing-but-torn index (the
-    // [[graft.operators.Ann.ivfPqUpsertBatch]] commit-last device).
+    // countable shortfall, never a passing-but-torn index.
     sigBandRows(sig.select(col("doc_id"), col("sig_arr")), IdxBands, IdxRows)
       .write.mode(mode).parquet(s"$path/bands")
     docsDf.select(col("doc_id"), contentMd5(col("text")).as("content_md5"))

@@ -28,6 +28,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * is idempotent, and runs at the top of every entry point that reads
   * a published artifact ([[read]] for single-table artifacts).
   *
+  * Streamed batches (the per-micro-batch increments of the IVF, LSH
+  * and IVF-PQ indexes and of the novelty hash index) are published the
+  * same way, each as its own target [[batchOf]]`(root, id)` =
+  * `<root>/stream/batch-%09d` holding the same tables as the resident
+  * root. A batch is committed iff its directory exists under its own
+  * name, and a replay is another publish of the same batch. Readers
+  * list batches through [[batches]], which recovers first. A rebuild
+  * publishes the whole root, which retires `<root>/stream` in its swap.
+  * Recovery assumes no publish of the same target is in flight: run
+  * beside one, it deletes the staging that publish is writing.
+  *
   * Staging is a sibling OUTSIDE the target, so the published tree
   * never holds it. The swap is two renames, not one: a reader racing
   * it can briefly see no target at all. True atomic replacement needs
@@ -75,6 +86,23 @@ object Publish {
         throw new java.io.IOException(s"recover: cannot rename $old back to $dst")
     }
     fs.delete(tmp, true)
+  }
+
+  /** Target of streamed batch `id` under the artifact `root`. */
+  def batchOf(root: String, id: Long): String = f"$root/stream/batch-$id%09d"
+
+  private val BatchName = """batch-(\d+)(\.publish\.(?:tmp|old))?""".r
+
+  /** The committed streamed batches under `root` as (id, path), in id
+    * order. A batch found with a staging sibling is recovered first. */
+  def batches(s: SparkSession, root: String): Seq[(Long, String)] = {
+    val dir = new Path(s"$root/stream")
+    val fs = fsOf(s, dir)
+    val found = (if (fs.exists(dir)) fs.listStatus(dir).toSeq else Nil)
+      .map(_.getPath.getName).collect { case BatchName(id, staging) => (id.toLong, staging) }
+    found.filter(_._2 != null).map(_._1).distinct.foreach(id => recover(s, batchOf(root, id)))
+    // after recovery a parked batch is back under its own name
+    found.filter(_._2 != ".publish.tmp").map(_._1).distinct.sorted.map(id => id -> batchOf(root, id))
   }
 
   /** A published single-table artifact, recovered first. */

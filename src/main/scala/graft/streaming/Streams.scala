@@ -217,27 +217,22 @@ object Streams {
     q.awaitTermination()
   }
 
-  /** Streaming ANN index maintenance — the streaming twin of
-    * `Ann.ivfUpsert` (r12): embedding arrivals on the wire are
-    * assigned to their nearest frozen-codebook cell and landed beside
-    * the served IVF index. Per micro-batch this is
-    * `foreachBatch(ivfUpsertBatch)`: a map-only assignment (the
-    * codebook ships inside the expression — no join, no state store,
-    * no corpus reshuffle) plus a partitioned write, so serving keeps
-    * its partition-pruning discount continuously as the corpus grows.
+  /** Streaming ANN index maintenance: embedding arrivals on the wire
+    * are assigned to their nearest frozen-codebook cell and published
+    * beside the served IVF index, one `foreachBatch(Ann.ivfUpsertBatch)`
+    * per micro-batch. The assignment is map-only (the codebook ships
+    * inside the expression — no join, no state store, no corpus
+    * reshuffle), so serving keeps its partition-pruning discount as
+    * the corpus grows.
     *
-    * Exactly-once (ADVICE r12): foreachBatch BYPASSES the streaming
-    * file sink's commit log, so a crash between a sink write and the
-    * checkpoint offset commit replays the micro-batch on restart. A
-    * plain append would double-land those rows (and duplicates would
-    * occupy top-k slots at serve time); instead each batch writes to
-    * a deterministic batchId-derived directory with OVERWRITE
-    * (`Ann.ivfUpsertBatch`), so the replay rewrites the same
-    * directory and the index converges to exactly-once contents.
-    * Recall decay under distribution drift is the monitored retrain
-    * trigger, same as the batch path (a retrain folds the batch dirs
-    * away). Arrivals must carry the index row shape
-    * (vec_id, embedding, nrm).
+    * Exactly-once: foreachBatch BYPASSES the streaming file sink's
+    * commit log, so a crash between a sink write and the checkpoint
+    * offset commit replays the micro-batch on restart. Each micro-batch
+    * is published as streamed batch `batchId` (`plans.Publish`), so the
+    * replay republishes the same batch and the index converges to
+    * exactly-once contents. Recall decay under distribution drift is
+    * the monitored retrain trigger; a retrain retires the batches.
+    * Arrivals must carry the index row shape (vec_id, embedding, nrm).
     */
   def ivfIndexMaintenance(
       spark: SparkSession,
@@ -288,21 +283,6 @@ object Streams {
     graft.operators.TextOps.uniEncodeMapOnly(docs,
       graft.operators.TextOps.readUnigramModel(docs.sparkSession, modelPath))
 
-  /** Streaming perplexity scoring — the streaming twin of
-    * `TextOps.lmScoreWith`: documents arriving on the wire are scored
-    * against a persisted `buildLmModel` bigram table. The model is
-    * vocab²-bounded (too big for expression literals, unlike the BPE
-    * merge fold), so each micro-batch runs the BATCH scorer — one
-    * stream-static left join + a batch-local per-doc rollup, valid
-    * because a document arrives WHOLE in one row: its bigrams never
-    * span micro-batches, so no state store and no watermark are
-    * needed. Scores land under a DETERMINISTIC batchId-derived
-    * directory with OVERWRITE semantics (the `ivfUpsertBatch` replay
-    * contract): a crash-replayed micro-batch rewrites the same
-    * directory and the output converges to exactly-once contents.
-    * Re-training ships a new model path; the scoring job restarts on
-    * it (mid-stream model swaps are a versioning event).
-    */
   /** Continuous novelty monitoring — the streaming twin of
     * `TextOps.qNoveltyCurve`: arriving documents are scored for the
     * share of window hashes never seen before (resident index + all
@@ -312,13 +292,12 @@ object Streams {
     * itself.
     *
     * State lives in parquet, not a state store: the seen set for
-    * batch N is `indexPath/resident.parquet` plus
-    * `indexPath/stream/batch=M` for M < N — batch N's OWN directory
-    * is deliberately EXCLUDED, so a crash-replayed batch scores
-    * against exactly the same seen set and rewrites identical output
-    * (the `ivfUpsertBatch`/`lmScore` deterministic-directory replay
-    * contract, spec-pinned). Scores land under `outPath/batch=N`,
-    * new hashes under the index; both OVERWRITE.
+    * batch N is `indexPath/resident.parquet` plus the committed
+    * streamed batches M < N (`plans.Publish.batches`) — batch N's OWN
+    * hashes are deliberately EXCLUDED, so a crash-replayed batch
+    * scores against exactly the same seen set and rewrites identical
+    * output. Scores OVERWRITE `outPath/batch=N`; the new hashes are
+    * published as streamed batch N of `indexPath`.
     *
     * Streamed in ingestion order, per-doc verdicts are IDENTICAL to
     * the batch rule (a hash's corpus-first carrier precedes every
@@ -334,35 +313,18 @@ object Streams {
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val s = batch.sparkSession
-        val conf = s.sparkContext.hadoopConfiguration
-        val streamRoot = new org.apache.hadoop.fs.Path(s"$indexPath/stream")
-        val fs = streamRoot.getFileSystem(conf)
-        val prior =
-          if (fs.exists(streamRoot))
-            fs.listStatus(streamRoot).map(_.getPath)
-              .filter { p =>
-                val n = p.getName
-                n.startsWith("batch=") && n.stripPrefix("batch=").toLong < batchId
-              }.map(_.toString).toSeq
-          else Seq.empty[String]
+        val prior = Publish.batches(s, indexPath).collect { case (id, p) if id < batchId => p }
         val residentPath = new org.apache.hadoop.fs.Path(s"$indexPath/resident.parquet")
         val seenPaths =
-          (if (residentPath.getFileSystem(conf).exists(residentPath))
+          (if (residentPath.getFileSystem(s.sparkContext.hadoopConfiguration).exists(residentPath))
              Seq(residentPath.toString)
            else Seq.empty[String]) ++ prior
-        val seen =
-          if (seenPaths.nonEmpty) s.read.parquet(seenPaths: _*)
-          else s.createDataFrame(
-            s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("h",
-                org.apache.spark.sql.types.BinaryType),
-              org.apache.spark.sql.types.StructField("first_doc",
-                org.apache.spark.sql.types.LongType))))
+        // the seen set needs only `h`; no paths read as an empty set
+        val seen = s.read.schema("h BINARY").parquet(seenPaths: _*)
         val (perDoc, newHashes) =
           graft.operators.TextOps.noveltyBatch(batch.toDF(), seen)
         perDoc.write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-        newHashes.write.mode("overwrite").parquet(s"$indexPath/stream/batch=$batchId")
+        Publish(s, Publish.batchOf(indexPath, batchId))(newHashes.write.parquet(_))
       }
       .option("checkpointLocation", checkpointDir)
       .outputMode(OutputMode.Append())
@@ -371,6 +333,21 @@ object Streams {
     q.awaitTermination()
   }
 
+  /** Streaming perplexity scoring — the streaming twin of
+    * `TextOps.lmScoreWith`: documents arriving on the wire are scored
+    * against a persisted `buildLmModel` bigram table. The model is
+    * vocab²-bounded (too big for expression literals, unlike the BPE
+    * merge fold), so each micro-batch runs the BATCH scorer — one
+    * stream-static left join + a batch-local per-doc rollup, valid
+    * because a document arrives WHOLE in one row: its bigrams never
+    * span micro-batches, so no state store and no watermark are
+    * needed. Scores land under a DETERMINISTIC batchId-derived
+    * directory with OVERWRITE semantics: a crash-replayed micro-batch
+    * rewrites the same directory and the output converges to
+    * exactly-once contents. Re-training ships a new model path; the
+    * scoring job restarts on it (mid-stream model swaps are a
+    * versioning event).
+    */
   def lmScore(
       arrivals: DataFrame,
       modelPath: String,

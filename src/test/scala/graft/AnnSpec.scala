@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.hadoop.fs.{FileUtil, Path}
+
 import graft.operators.Ann
+import graft.plans.Publish
 
 /** ANN correctness: brute force is the exact baseline; the LSH variant
   * is graded on recall against it.
@@ -9,6 +12,32 @@ class AnnSpec extends SparkSpec {
 
   private def topSets(rows: Array[org.apache.spark.sql.Row]): Map[Long, Set[Long]] =
     rows.groupBy(_.getLong(0)).map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
+
+  private def serveSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+
+  private def conf = spark.sparkContext.hadoopConfiguration
+  private def fs = new Path("/").getFileSystem(conf)
+  private def exists(p: String): Boolean = fs.exists(new Path(p))
+
+  /** The staging a crashed batch publish leaves beside committed batch
+    * 3 of the index at `root`: a staging sibling of batch 4 holding
+    * only `_temporary` (killed mid-write), then a replay of batch 3
+    * parked between Publish's renames (batch 3 at `oldOf`, the replay
+    * fully staged at `tmpOf`). Each must serve `expected` without
+    * throwing and recover to no staging. */
+  private def crashedBatchStates(root: String, expected: Set[(Long, Long, Long)])(
+      serve: => Set[(Long, Long, Long)]): Unit = {
+    val (b3, b4) = (Publish.batchOf(root, 3L), Publish.batchOf(root, 4L))
+    assert(fs.mkdirs(new Path(Publish.tmpOf(b4), "index.parquet/_temporary/0")))
+    assert(serve === expected, "a _temporary-only staging sibling must not be served")
+    assert(!exists(Publish.tmpOf(b4)) && !exists(b4), "batch 4 never committed")
+    assert(fs.rename(new Path(b3), new Path(Publish.oldOf(b3))))
+    assert(FileUtil.copy(fs, new Path(Publish.oldOf(b3)), fs, new Path(Publish.tmpOf(b3)), false, conf))
+    assert(serve === expected, "a replay parked between the renames must serve the committed batch")
+    assert(exists(b3) && !exists(Publish.oldOf(b3)) && !exists(Publish.tmpOf(b3)),
+      "recovery must put batch 3 back under its own name and drop the staging")
+  }
 
   test("brute force returns exactly k ranked neighbors per query") {
     val rows = Ann.qAnnBruteforce(spark, sf0001).collect()
@@ -125,7 +154,7 @@ class AnnSpec extends SparkSpec {
       s"the probed-bucket isin must prune index partitions at the scan:\n$p")
   }
 
-  test("lshUpsert: serve-after-upsert == one-shot build; replay idempotent; no assignment shuffle") {
+  test("lshUpsertBatch: serve-after-upsert == one-shot build; replay idempotent; no assignment shuffle") {
     import org.apache.spark.sql.functions.col
     val full = java.nio.file.Files.createTempDirectory("graft-lsh-full").toString
     val incr = java.nio.file.Files.createTempDirectory("graft-lsh-incr").toString
@@ -133,93 +162,60 @@ class AnnSpec extends SparkSpec {
     Ann.buildLshIndex(spark, sf0001, incr, col("vec_id") % 7 =!= 0)
     val (corpus, _) = Ann.split(spark, sf0001)
     val arrivals = corpus.filter(col("vec_id") % 7 === 0)
-    Ann.lshUpsert(spark, incr, arrivals)
-    val ref = Ann.lshServe(spark, sf0001, full).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val got = Ann.lshServe(spark, sf0001, incr).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(got === ref, "upserted index must serve exactly what a rebuild serves")
     // assignment is map-only (rotations ship inside the expression)
     val plan = Ann.lshAssign(arrivals).queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"),
       s"upsert assignment must never reshuffle the arrivals:\n$plan")
-    // streaming-sink path: deterministic batch dir, replay-safe,
-    // empty batch a no-op, rebuild folds increments away
-    val incr2 = java.nio.file.Files.createTempDirectory("graft-lsh-incr2").toString
-    Ann.buildLshIndex(spark, sf0001, incr2, col("vec_id") % 7 =!= 0)
-    Ann.lshUpsertBatch(spark, incr2, arrivals, 3L)
-    Ann.lshUpsertBatch(spark, incr2, arrivals, 3L) // crash replay
-    val residentN = spark.read.parquet(s"$incr2/index.parquet").count()
-    val streamN = spark.read.parquet(s"$incr2/index-stream/batch-000000003").count()
+    Ann.lshUpsertBatch(spark, incr, arrivals, 3L)
+    Ann.lshUpsertBatch(spark, incr, arrivals, 3L) // crash replay
+    val residentN = spark.read.parquet(s"$incr/index.parquet").count()
+    val streamN = spark.read.parquet(s"${Publish.batchOf(incr, 3L)}/index.parquet").count()
     assert(residentN + streamN === corpus.count() * Ann.LshTables,
       "replayed batch must not duplicate rows (one row per vector per table)")
-    val got2 = Ann.lshServe(spark, sf0001, incr2).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(got2 === ref, "post-replay index must serve exactly what a rebuild serves")
-    Ann.lshUpsertBatch(spark, incr2, arrivals.filter(col("vec_id") < 0), 4L)
-    assert(!new java.io.File(s"$incr2/index-stream/batch-000000004").exists(),
-      "an empty batch must not leave an unreadable directory behind")
-    Ann.buildLshIndex(spark, sf0001, incr2)
-    assert(!new java.io.File(s"$incr2/index-stream").exists(),
-      "a full rebuild must clear streamed batch directories")
-  }
-
-  test("ivfUpsert: serve-after-upsert == one-shot build serve; assignment plan has no shuffle") {
-    import org.apache.spark.sql.functions.col
-    val full = java.nio.file.Files.createTempDirectory("graft-ivf-full").toString
-    val incr = java.nio.file.Files.createTempDirectory("graft-ivf-incr").toString
-    // one-shot reference index over the whole corpus
-    Ann.buildIvfIndex(spark, sf0001, full)
-    // partial build (codebook still trains on the full corpus) + upsert
-    // of the held-out arrivals — the incremental-maintenance path
-    Ann.buildIvfIndex(spark, sf0001, incr, col("vec_id") % 7 =!= 0)
-    val (corpus, _) = Ann.split(spark, sf0001)
-    val arrivals = corpus.filter(col("vec_id") % 7 === 0)
-    Ann.ivfUpsert(spark, incr, arrivals)
-    // identical codebook + exact assignment → identical serving answers
-    val ref = Ann.ivfServe(spark, sf0001, full).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val got = Ann.ivfServe(spark, sf0001, incr).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(got === ref, "upserted index must serve exactly what a rebuild serves")
-    // the maintenance pass is map-only: no Exchange anywhere in the
-    // assignment plan (the codebook ships inside the expression)
-    val plan = Ann.ivfAssign(arrivals, Ann.readCodebook(spark, incr))
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"),
-      s"upsert assignment must never reshuffle the arrivals (or the corpus):\n$plan")
+    val ref = serveSet(Ann.lshServe(spark, sf0001, full))
+    assert(serveSet(Ann.lshServe(spark, sf0001, incr)) === ref,
+      "post-replay index must serve exactly what a rebuild serves")
+    crashedBatchStates(incr, ref)(serveSet(Ann.lshServe(spark, sf0001, incr)))
+    Ann.lshUpsertBatch(spark, incr, arrivals.filter(col("vec_id") < 0), 4L)
+    assert(!exists(Publish.batchOf(incr, 4L)), "an empty batch must publish nothing")
+    Ann.buildLshIndex(spark, sf0001, incr)
+    assert(Publish.batches(spark, incr).isEmpty, "a full rebuild must retire the streamed batches")
   }
 
   test("ivfUpsertBatch: micro-batch replay is idempotent; empty batch is a no-op") {
     import org.apache.spark.sql.functions.col
     val full = java.nio.file.Files.createTempDirectory("graft-ivfb-full").toString
     val incr = java.nio.file.Files.createTempDirectory("graft-ivfb-incr").toString
+    // one-shot reference index, and a partial build (the codebook still
+    // trains on the full corpus) whose held-out arrivals are upserted
     Ann.buildIvfIndex(spark, sf0001, full)
     Ann.buildIvfIndex(spark, sf0001, incr, col("vec_id") % 7 =!= 0)
     val (corpus, _) = Ann.split(spark, sf0001)
     val arrivals = corpus.filter(col("vec_id") % 7 === 0)
+    // the maintenance pass is map-only: no Exchange anywhere in the
+    // assignment plan (the codebook ships inside the expression)
+    val plan = Ann.ivfAssign(arrivals, Ann.readCodebook(spark, incr))
+      .queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange"),
+      s"upsert assignment must never reshuffle the arrivals (or the corpus):\n$plan")
     Ann.ivfUpsertBatch(spark, incr, arrivals, 3L)
-    // crash-replay (ADVICE r12): foreachBatch re-delivers the SAME
-    // batch id after a failure — the deterministic overwrite path must
-    // converge to exactly-once contents, not double-append
+    // crash-replay: foreachBatch re-delivers the SAME batch id after a
+    // failure, and republishing it must converge to exactly-once
+    // contents, not double-append
     Ann.ivfUpsertBatch(spark, incr, arrivals, 3L)
     val residentN = spark.read.parquet(s"$incr/index.parquet").count()
-    val streamN = spark.read.parquet(s"$incr/index-stream/batch-000000003").count()
+    val streamN = spark.read.parquet(s"${Publish.batchOf(incr, 3L)}/index.parquet").count()
     assert(residentN + streamN === corpus.count(),
       "replayed batch must not duplicate rows in the index")
-    val ref = Ann.ivfServe(spark, sf0001, full).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val got = Ann.ivfServe(spark, sf0001, incr).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(got === ref, "post-replay index must serve exactly what a rebuild serves")
-    // empty micro-batch: no directory, no schema-less read hazard
+    // identical codebook + exact assignment → identical serving answers
+    val ref = serveSet(Ann.ivfServe(spark, sf0001, full))
+    assert(serveSet(Ann.ivfServe(spark, sf0001, incr)) === ref,
+      "post-replay index must serve exactly what a rebuild serves")
+    crashedBatchStates(incr, ref)(serveSet(Ann.ivfServe(spark, sf0001, incr)))
     Ann.ivfUpsertBatch(spark, incr, arrivals.filter(col("vec_id") < 0), 4L)
-    assert(!new java.io.File(s"$incr/index-stream/batch-000000004").exists(),
-      "an empty batch must not leave an unreadable directory behind")
-    // a rebuild folds the streamed increments away
+    assert(!exists(Publish.batchOf(incr, 4L)), "an empty batch must publish nothing")
     Ann.buildIvfIndex(spark, sf0001, incr)
-    assert(!new java.io.File(s"$incr/index-stream").exists(),
-      "a full rebuild must clear streamed batch directories")
+    assert(Publish.batches(spark, incr).isEmpty, "a full rebuild must retire the streamed batches")
   }
 
   test("IVF-PQ index: codes compress 2×+ on disk; recall ≥ 0.9 vs float serve; both scans prune") {
@@ -261,21 +257,6 @@ class AnnSpec extends SparkSpec {
       s"the rerank scan must push the candidate-id IN filter into parquet:\n$p")
   }
 
-  test("ivfPqUpsert: serve-after-upsert == one-shot build serve") {
-    import org.apache.spark.sql.functions.col
-    val full = java.nio.file.Files.createTempDirectory("graft-ivfpq-full").toString
-    val incr = java.nio.file.Files.createTempDirectory("graft-ivfpq-incr").toString
-    Ann.buildIvfPqIndex(spark, sf0001, full)
-    Ann.buildIvfPqIndex(spark, sf0001, incr, col("vec_id") % 7 =!= 0)
-    val (corpus, _) = Ann.split(spark, sf0001)
-    Ann.ivfPqUpsert(spark, incr, corpus.filter(col("vec_id") % 7 === 0))
-    val ref = Ann.ivfPqServe(spark, sf0001, full).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val got = Ann.ivfPqServe(spark, sf0001, incr).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(got === ref, "upserted IVF-PQ index must serve exactly what a rebuild serves")
-  }
-
   test("ivfPqUpsertBatch: replay converges; a torn batch is invisible and heals on replay") {
     import org.apache.spark.sql.functions.col
     val full = java.nio.file.Files.createTempDirectory("graft-ivfpqb-full").toString
@@ -284,49 +265,33 @@ class AnnSpec extends SparkSpec {
     Ann.buildIvfPqIndex(spark, sf0001, incr, col("vec_id") % 7 =!= 0)
     val (corpus, _) = Ann.split(spark, sf0001)
     val batch = corpus.filter(col("vec_id") % 7 === 0)
-    def serveSet(path: String) = Ann.ivfPqServe(spark, sf0001, path).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val ref = serveSet(full)
-    val preBatch = serveSet(incr)
+    def served = serveSet(Ann.ivfPqServe(spark, sf0001, incr))
+    val ref = serveSet(Ann.ivfPqServe(spark, sf0001, full))
+    val preBatch = served
 
-    // tear injection: the batch lands, then the CODES half is deleted —
-    // the on-disk state of a crash between ivfPqUpsertBatch's two
-    // writes (floats committed, codes not)
+    // a first attempt killed after the float half landed in staging and
+    // before the codes half: the batch is invisible and its staging swept
     Ann.ivfPqUpsertBatch(spark, incr, batch, batchId = 3L)
-    val fs = new org.apache.hadoop.fs.Path(incr)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.delete(new org.apache.hadoop.fs.Path(s"$incr/index-stream/batch-000000003"), true))
-    assert(serveSet(incr) === preBatch,
-      "a torn batch (orphaned float half) must be INVISIBLE to serve, not a crash or a partial answer")
+    val b3 = Publish.batchOf(incr, 3L)
+    assert(fs.rename(new Path(b3), new Path(Publish.tmpOf(b3))))
+    assert(fs.delete(new Path(Publish.tmpOf(b3), "index.parquet"), true))
+    assert(served === preBatch,
+      "a torn batch (staged float half, no codes) must be INVISIBLE to serve")
+    assert(!exists(Publish.tmpOf(b3)) && !exists(b3))
 
-    // tear injection 2: a crash DURING the codes write — Spark creates
-    // the batch dir (holding only `_temporary`) at job start, so bare
-    // dir existence is NOT commit evidence. Such a dir must not count
-    // as committed (it has no _SUCCESS and no data files): serve
-    // neither throws nor reads partial codes.
-    val crashDir = new org.apache.hadoop.fs.Path(s"$incr/index-stream/batch-000000004")
-    fs.mkdirs(new org.apache.hadoop.fs.Path(crashDir, "_temporary"))
-    assert(serveSet(incr) === preBatch,
-      "a batch dir with only _temporary (crash mid-codes-write) must read as uncommitted")
-    assert(fs.delete(crashDir, true))
-
-    // replay with the same batchId: the stale codes half (if any) is
-    // un-committed FIRST, then both halves rewritten floats-first /
-    // codes-last → healed, and the index converges to exactly-once
-    // contents
+    // the replay publishes both halves in one swap; replaying a
+    // committed batch converges to exactly-once contents
     Ann.ivfPqUpsertBatch(spark, incr, batch, batchId = 3L)
     Ann.ivfPqUpsertBatch(spark, incr, batch, batchId = 3L) // second replay: idempotent
-    assert(serveSet(incr) === ref,
+    assert(served === ref,
       "replayed batch upserts must serve exactly what a one-shot build serves")
+    crashedBatchStates(incr, ref)(served)
 
-    // a full rebuild atomically retires the stream roots with the old
-    // dir (no old-codebook batches can survive into a new-codebook
-    // serve) — post-state: roots gone, serve == build
+    // a full rebuild retires the streamed batches with the old root (no
+    // old-codebook batch survives into a new-codebook serve)
     Ann.buildIvfPqIndex(spark, sf0001, incr)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$incr/index-stream")) &&
-      !fs.exists(new org.apache.hadoop.fs.Path(s"$incr/rerank-stream")),
-      "a rebuild must clear both stream roots")
-    assert(serveSet(incr) === ref)
+    assert(Publish.batches(spark, incr).isEmpty, "a rebuild must retire the streamed batches")
+    assert(served === ref)
   }
 
   test("q_ann_ivfadc: the registered row == explicit build + ivfPqServe, and recall is monitored") {
@@ -351,42 +316,34 @@ class AnnSpec extends SparkSpec {
 
   test("pqBatchCommitted: commit evidence is stamped at write time, independent of the reader's conf") {
     import org.apache.spark.sql.functions.col
-    // ADVICE r19: the old rule consulted the READER's Hadoop conf — a
-    // batch written under markers-disabled (no _SUCCESS ever exists)
-    // but served under the default markers-enabled conf read as torn
-    // and silently vanished from serves. The upsert now stamps its own
-    // _GRAFT_COMMIT after the codes land; the verdict is a pure
-    // function of the batch dir.
+    // a batch is committed iff its directory is in place under its own
+    // name: Hadoop's _SUCCESS markers, which depend on the writer's
+    // conf, play no part in the verdict
     val incr = java.nio.file.Files.createTempDirectory("graft-ivfpqm").toString
     Ann.buildIvfPqIndex(spark, sf0001, incr, col("vec_id") % 7 =!= 0)
     val (corpus, _) = Ann.split(spark, sf0001)
-    def serveSet() = Ann.ivfPqServe(spark, sf0001, incr).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val preBatch = serveSet()
+    def served = serveSet(Ann.ivfPqServe(spark, sf0001, incr))
+    val preBatch = served
     // write the batch under a markers-DISABLED conf: no _SUCCESS lands
-    val conf = spark.sparkContext.hadoopConfiguration
     conf.setBoolean("mapreduce.fileoutputcommitter.marksuccessfuljobs", false)
     try Ann.ivfPqUpsertBatch(spark, incr,
       corpus.filter(col("vec_id") % 7 === 0), batchId = 3L)
     finally conf.setBoolean("mapreduce.fileoutputcommitter.marksuccessfuljobs", true)
-    val fs = new org.apache.hadoop.fs.Path(incr)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bdir = s"$incr/index-stream/batch-000000003"
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$bdir/_SUCCESS")),
+    val b3 = Publish.batchOf(incr, 3L)
+    assert(!exists(s"$b3/index.parquet/_SUCCESS") && !exists(s"$b3/rerank.parquet/_SUCCESS"),
       "fixture: the markers-disabled write must leave no _SUCCESS")
-    val committed = serveSet() // reader runs markers-ENABLED (default)
+    val committed = served // reader runs markers-ENABLED (default)
     assert(committed !== preBatch,
       "a markers-disabled writer's batch must be visible to a markers-enabled reader")
-    // torn state: strip the graft stamp too (crash after task commits,
-    // before the codes job's stamp) — data files alone are PARTIAL
-    // evidence (ADVICE r18) and must read as uncommitted
-    assert(fs.delete(new org.apache.hadoop.fs.Path(s"$bdir/_GRAFT_COMMIT"), false))
-    assert(serveSet() === preBatch,
-      "a batch with neither marker must read as torn, even with data files present")
-    // the at-least-once replay rewrites and re-stamps — healed
+    // torn state: the batch's complete data files, staged but never
+    // renamed in — data files alone are not commit evidence
+    assert(fs.rename(new Path(b3), new Path(Publish.tmpOf(b3))))
+    assert(served === preBatch, "a staged batch must read as uncommitted, however complete")
+    assert(!exists(Publish.tmpOf(b3)), "the lister must sweep the staging")
+    // the at-least-once replay republishes it — healed
     Ann.ivfPqUpsertBatch(spark, incr,
       corpus.filter(col("vec_id") % 7 === 0), batchId = 3L)
-    assert(serveSet() === committed, "the replay must re-commit the batch")
+    assert(served === committed, "the replay must re-commit the batch")
   }
 
   test("buildIvfPqIndex: atomic triad publish — a crashed rebuild leaves the old index serving") {

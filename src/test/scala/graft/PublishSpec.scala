@@ -8,7 +8,8 @@ import graft.operators.{Ann, CorpusBuild, TextOps}
 import graft.plans.Publish
 import graft.sources.Ingest
 
-/** Crash injection over every artifact published through [[Publish]].
+/** Crash injection over every artifact published through [[Publish]],
+  * streamed index batches included.
   * Each family has a previous and a next committed artifact, both made
   * by the family's own writer. Three crash states are built from copies
   * of them, and the family's public read entry point must see:
@@ -176,6 +177,22 @@ class PublishSpec extends SparkSpec {
     val (prev, next) = annVersions("lsh")(Ann.buildLshIndex(spark, sf0001, _, _))
     crashStates("lsh", prev, next, identity,
       p => serveSet(Ann.lshServe(spark, sf0001, p)))
+  }
+
+  test("IVF-PQ streamed batch, ivfPqUpsertBatch: serve sees the committed batch") {
+    val base = fresh("ivfpq-batch")
+    Ann.buildIvfPqIndex(spark, sf0001, s"$base/resident", col("vec_id") % 3 =!= 0)
+    val (corpus, _) = Ann.split(spark, sf0001)
+    // two committed versions of batch 3 holding different arrivals
+    def version(tag: String, arrivals: org.apache.spark.sql.Column): String = {
+      copy(s"$base/resident", s"$base/$tag")
+      Ann.ivfPqUpsertBatch(spark, s"$base/$tag", corpus.filter(arrivals), 3L)
+      s"$base/$tag"
+    }
+    val prev = version("prev", col("vec_id") % 6 === 0)
+    val next = version("next", col("vec_id") % 3 === 0)
+    crashStates("ivfpq-batch", prev, next, Publish.batchOf(_, 3L),
+      p => serveSet(Ann.ivfPqServe(spark, sf0001, p)))
   }
 
   // ---- TextOps model tables ----
