@@ -689,13 +689,6 @@ object Ann {
     * partition column. */
   private val FloatRowsDdl = "vec_id BIGINT, embedding ARRAY<FLOAT>, nrm DOUBLE, cell INT"
 
-  /** Read a table this object wrote under the schema its writer
-    * produces. Spark would otherwise run a footer-reading job to infer
-    * it on every read, and throw on a directory with no data files,
-    * which reads as empty here. Columns still resolve by name. */
-  private def readOwn(s: SparkSession, path: String, ddl: String): DataFrame =
-    s.read.schema(ddl).parquet(path)
-
   /** Build the IVF index ONCE — the production shape (the `q_ann_ivf`
     * bench row trains once per session via [[sessionCodebook]]; a
     * deployment amortizes further: build offline, serve many). The
@@ -751,16 +744,6 @@ object Ann {
       }
     }
 
-  /** The resident index root followed by every committed streamed
-    * batch; each holds the same tables. */
-  private def indexRoots(s: SparkSession, path: String): Seq[String] =
-    path +: Publish.batches(s, path).map(_._2)
-
-  /** `table` read under `ddl` from every root in `roots`, unioned. */
-  private def readRoots(s: SparkSession, roots: Seq[String], table: String,
-      ddl: String): DataFrame =
-    roots.map(r => readOwn(s, s"$r/$table", ddl)).reduce(_ unionByName _)
-
   /** Persist the frozen cell codebook as one (cell, centroid) row per
     * cell; [[CodebookDdl]] is the layout [[readCodebook]] reads. */
   private def writeCodebook(s: SparkSession, root: String, cent: Array[Double]): Unit = {
@@ -800,7 +783,7 @@ object Ann {
     * and checked by [[placeModelRows]]. */
   private[graft] def readCodebook(s: SparkSession, path: String): Array[Double] = {
     val artifact = s"$path/codebook.parquet"
-    placeModelRows(artifact, readOwn(s, artifact, CodebookDdl).collect(),
+    placeModelRows(artifact, Publish.readOwn(s, artifact, CodebookDdl).collect(),
         "cell", "centroid", IvfCells)
       .flatMap { r =>
         val v = r.getSeq[Any](r.fieldIndex("centroid"))
@@ -847,7 +830,7 @@ object Ann {
     // resident build + streamed batches, pruned to the probed cells.
     // One batch per micro-batch since the last rebuild, which retires
     // them: a planner-side listing, not a data cost.
-    val index = readRoots(s, indexRoots(s, path), "index.parquet", FloatRowsDdl)
+    val index = Publish.readRoots(s, Publish.roots(s, path), "index.parquet", FloatRowsDdl)
       .filter(cellFilter)
     val scored = index.join(broadcast(probed), Seq("cell"))
       .filter(col("vec_id") =!= col("query_id"))
@@ -971,7 +954,7 @@ object Ann {
     // the probe-list is Q×tables×probes rows — driver-safe by construction
     val probedKeys = probed.select("bkey").distinct().collect().map(_.getInt(0))
     val keyFilter = col("bkey").isin(probedKeys.map(Integer.valueOf): _*)
-    val index = readRoots(s, indexRoots(s, path), "index.parquet", LshRowsDdl)
+    val index = Publish.readRoots(s, Publish.roots(s, path), "index.parquet", LshRowsDdl)
       .filter(keyFilter)
     val scored = index.join(broadcast(probed), Seq("bkey"))
       .filter(col("vec_id") =!= col("query_id"))
@@ -1058,7 +1041,7 @@ object Ann {
     * entries, so a deleted last row is caught too. */
   private[graft] def readPqCodebook(s: SparkSession, path: String): Array[Double] = {
     val artifact = s"$path/pq_codebook.parquet"
-    val rows = readOwn(s, artifact, PqCodebookDdl).collect()
+    val rows = Publish.readOwn(s, artifact, PqCodebookDdl).collect()
     require(rows.nonEmpty && rows.length % (PqM * PqDsub) == 0,
       s"model table $artifact has ${rows.length} rows, not a positive multiple of ${PqM * PqDsub}")
     placeModelRows(artifact, rows, "pos", "v", rows.length)
@@ -1103,7 +1086,7 @@ object Ann {
     ivfAssign(rows, cent)
       .select(col("vec_id"), col("embedding"), col("nrm"), col("cell"))
       .write.partitionBy("cell").parquet(s"$root/rerank.parquet")
-    pqCode(readOwn(s, s"$root/rerank.parquet", FloatRowsDdl), pqCb, cent)
+    pqCode(Publish.readOwn(s, s"$root/rerank.parquet", FloatRowsDdl), pqCb, cent)
       .select(col("vec_id"), col("codes"), col("rn"), col("cell"))
       .write.partitionBy("cell").parquet(s"$root/index.parquet")
   }
@@ -1154,8 +1137,8 @@ object Ann {
     // stage 1: ADC table-lookup scoring over the probed cells' codes
     // only ([[PqM]] adds per candidate) — resident build + committed
     // streamed batches, each under the same partition pruning
-    val roots = indexRoots(s, path)
-    val cand = readRoots(s, roots, "index.parquet", CodesDdl).filter(cellFilter)
+    val roots = Publish.roots(s, path)
+    val cand = Publish.readRoots(s, roots, "index.parquet", CodesDdl).filter(cellFilter)
       .join(broadcast(probedQ), Seq("cell"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
@@ -1170,7 +1153,7 @@ object Ann {
     val candIds = candPairs.map(_._2).distinct
     // stage 2: float rerank of exactly the candidate ids (partition
     // pruning on cell + pushed IN on vec_id — a point lookup)
-    val rer = readRoots(s, roots, "rerank.parquet", FloatRowsDdl)
+    val rer = Publish.readRoots(s, roots, "rerank.parquet", FloatRowsDdl)
       .filter(cellFilter)
       .filter(col("vec_id").isin(candIds.map(java.lang.Long.valueOf): _*))
       .select(col("vec_id"), col("embedding"), col("nrm"))

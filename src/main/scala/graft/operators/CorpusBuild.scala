@@ -292,13 +292,12 @@ object CorpusBuild {
     * the publish swap — compaction is also the orphan collector.
     *
     * The staged dir carries a fresh manifest, lane-cursor table, and
-    * serve index (one signature pass over rows the rewrite is already
-    * moving — at any scale a fraction of the unavoidable shard
-    * rewrite; carrying the old index by filesystem move would save
-    * that pass but split the commit into two rename points, and would
-    * preserve any orphan signatures a pre-r16 unfiltered bootstrap
-    * indexed — rebuilding heals them). ONE [[Publish]] swap commits
-    * everything; a crash before it leaves the live corpus untouched.
+    * serve index covering every committed row (one signature pass over
+    * rows the rewrite is already moving — at any scale a fraction of
+    * the unavoidable shard rewrite; carrying the old index by
+    * filesystem move would save that pass but split the commit into
+    * two rename points). ONE [[Publish]] swap commits everything; a
+    * crash before it leaves the live corpus untouched.
     *
     * @return the published (compacted) manifest
     */
@@ -319,22 +318,32 @@ object CorpusBuild {
     Publish(s, path) { tmp =>
       writeShardsAndManifest(rows, tmp)
       lanesOf(rows).write.parquet(s"$tmp/lanes.parquet")
-      Dedup.buildDedupIndexFrom(rows.select(col("doc_id"), col("text")), s"$tmp/index")
-      // the staged index covers every committed row — stage the matching
-      // high-water mark so the [[corpusUpsert]] staleness tripwire stays
-      // aligned across the whole-dir swap
-      indexMetaOf(s, rows.agg(max(col("rk"))).collect()(0).getLong(0))
-        .write.parquet(s"$tmp/index-meta.parquet")
+      stageIndex(rows, rows.agg(max(col("rk"))).head.getLong(0), s"$tmp/index")
     }
     s.read.parquet(s"$path/manifest.parquet")
   }
 
-  /** One-row (max_rk) marker of the highest manifest-tier rank whose
-    * signatures the serve index CONTAINS — the manifest↔index
-    * staleness tripwire's persisted half (see [[corpusUpsert]]). */
-  private def indexMetaOf(s: SparkSession, maxRk: Long): DataFrame = {
-    import s.implicits._
-    Seq(maxRk).toDF("max_rk").coalesce(1)
+  /** Stage the serve index of corpus `rows` into `dst` (an index root
+    * or batch being published): the [[Dedup.buildDedupIndexFrom]]
+    * tables plus the one-row `max_rk` table, the highest manifest-tier
+    * rank whose signatures the index holds once `dst` commits. */
+  private def stageIndex(rows: DataFrame, maxRk: Long, dst: String): Unit = {
+    import rows.sparkSession.implicits._
+    Dedup.buildDedupIndexFrom(rows.select(col("doc_id"), col("text")), dst)
+    Seq(maxRk).toDF("max_rk").coalesce(1).write.parquet(s"$dst/max_rk")
+  }
+
+  /** The largest `max_rk` over the serve index root and its batches
+    * ([[stageIndex]]): the manifest-tier rank the index covers. None
+    * when nothing carries one — no index yet, or an index written
+    * before coverage rows existed. */
+  private[graft] def indexCoverage(s: SparkSession, idx: String): Option[Long] = {
+    val fs = new org.apache.hadoop.fs.Path(idx).getFileSystem(s.sparkContext.hadoopConfiguration)
+    val covered = Publish.roots(s, idx)
+      .filter(r => fs.exists(new org.apache.hadoop.fs.Path(s"$r/max_rk")))
+    if (covered.isEmpty) None
+    else Some(Publish.readRoots(s, covered, "max_rk", "max_rk BIGINT")
+      .agg(max(col("max_rk"))).head.getLong(0))
   }
 
   /** Shard files (one per shard, rows by doc_id) plus their manifest,
@@ -371,9 +380,10 @@ object CorpusBuild {
         expr("bit_xor(xxhash64(doc_id, text))").as("content_sig"))
 
   /** Recover every published target of a corpus: the root first, then
-    * the tables [[corpusUpsert]] swaps inside it. */
+    * the tables [[corpusUpsert]] swaps inside it (the serve index and
+    * its batches recover when read). */
   private def recoverCorpus(s: SparkSession, path: String): Unit =
-    (path +: Seq("manifest", "lanes", "index-meta").map(t => s"$path/$t.parquet"))
+    (path +: Seq("manifest", "lanes").map(t => s"$path/$t.parquet"))
       .foreach(Publish.recover(s, _))
 
   /** Auto-compaction threshold (VERDICT r16 #5): once the committed
@@ -433,7 +443,7 @@ object CorpusBuild {
       .agg(min(col("doc_id")).as("keep_id"))
     val aliveExact = ruleAlive.join(firstWins, "content_md5")
       .filter(col("doc_id") === col("keep_id")).drop("keep_id")
-      .join(gate(s.read.parquet(s"$idx/md5")).select(col("content_md5")),
+      .join(gate(Dedup.readDedupIndex(s, idx, "md5")).select(col("content_md5")),
         Seq("content_md5"), "left_anti")
     // near tier: within-increment keep-first + the index serve
     val incDrops = Dedup.nearPairsFrom(aliveExact.select(col("doc_id"), col("text")))
@@ -489,29 +499,22 @@ object CorpusBuild {
     *
     * Durability: new shard partitions land FIRST (invisible to
     * manifest-driven readers), then the manifest swap COMMITS the
-    * increment (metadata-commit-last — the visibility point), then the
-    * serve index and lane cursors append. A crash before the manifest
-    * swap leaves orphaned shard dirs that the next upsert skips past
-    * (new ids are allocated past both the manifest and any dirs on
-    * disk, and every bootstrap read is filtered to manifest-LISTED
-    * shards, so orphan text is never indexed — ADVICE r15); a crash
-    * INSIDE the index append (some of the three tables written, not
-    * all) is detected at the next upsert by the footer-count
-    * invariant ([[graft.operators.Dedup.dedupIndexConsistent]]) and
-    * auto-healed by a rebuild from the committed corpus (r17); a
-    * crash ANYWHERE between the manifest swap and the end of the
-    * serve-structure tail (index append → lane-cursor swap →
-    * high-water marker) leaves index and/or cursors consistent but
-    * STALE by one increment — detected at the next upsert by the
-    * `index-meta.parquet` marker (highest manifest-tier rank the
-    * serve tail has committed, written LAST) and healed by appending
-    * exactly the missing rows' signatures plus recomputing the lane
-    * cursors from the committed corpus (r18; streaming-tier index
-    * entries survive because the heal appends rather than rebuilds;
-    * re-appended duplicate signatures are harmless — the probe
-    * distincts candidates and the count invariant scales all three
-    * tables together). [[corpusCompact]] removes the orphan dirs
-    * themselves.
+    * increment, then the serve tail follows: the lane cursors swap,
+    * then the increment's signatures publish as one index batch whose
+    * `max_rk` row records the manifest rank the index now covers, so
+    * that batch commits the tail. A crash before the manifest swap
+    * leaves orphaned shard dirs that the next upsert skips past (new
+    * ids are allocated past both the manifest and any dirs on disk,
+    * and every bootstrap read is filtered to manifest-LISTED shards, so
+    * orphan text is never indexed). At the start of every upsert the
+    * index coverage (largest `max_rk` over the index root and its
+    * batches) is compared with the committed manifest: below it means
+    * a crash inside the tail, healed by recomputing the lane cursors
+    * and appending the missing rows' signatures as one batch (a
+    * replay of that batch is another publish of it). No coverage (no
+    * index yet, or one written before coverage rows) or coverage above
+    * the manifest rebuilds the index root from the committed corpus.
+    * [[corpusCompact]] removes the orphan dirs themselves.
     *
     * First call against a corpus published by [[corpusWrite]]
     * bootstraps the serve index and lane cursors from the shards (one
@@ -537,13 +540,11 @@ object CorpusBuild {
     val curManifest = s.read.parquet(s"$path/manifest.parquet").materialized
 
     // bootstrap the serve structures from the COMMITTED corpus — the
-    // shard scan is filtered to manifest-listed shard ids (ADVICE
-    // r15): a crash before a manifest swap leaves orphaned
-    // uncommitted shard dirs on disk, and an unfiltered bootstrap
-    // (including the scaladoc's crash remedy of deleting
-    // index/lanes.parquet) would index orphan text — later legitimate
-    // arrivals matching it silently dropped — and inflate lane
-    // cursors past the committed state. The id list is
+    // shard scan is filtered to manifest-listed shard ids: a crash
+    // before a manifest swap leaves orphaned uncommitted shard dirs on
+    // disk, and an unfiltered bootstrap would index orphan text —
+    // later legitimate arrivals matching it silently dropped — and
+    // inflate lane cursors past the committed state. The id list is
     // manifest-sized metadata, pushed as a static partition filter so
     // the scan never opens an orphan dir.
     def committedShards(): DataFrame = {
@@ -552,89 +553,27 @@ object CorpusBuild {
       s.read.parquet(s"$path/shards.parquet")
         .filter(col("shard").isin(ids.map(Integer.valueOf): _*))
     }
-    // tear detection + self-heal: a crash inside a build or
-    // commit-last append leaves the three index tables with mismatched
-    // counts — detected by footer-count metadata and healed by a rebuild from
-    // the committed corpus, so a torn index can never silently lose
-    // dedup recall. A consistent index is kept as-is (the normal
-    // bootstrap-once path).
-    // committed manifest high-water mark (tiny metadata agg) — the
-    // reference side of the staleness tripwire below, and reused for
-    // id allocation further down
+    // committed manifest high-water mark (tiny metadata agg): the
+    // rank the serve tail must cover, reused for id allocation below
     val committedMaxRk = curManifest.agg(max(col("max_rk"))).collect()(0).getLong(0)
-    def writeIndexMeta(maxRk: Long): Unit =
-      Publish(s, s"$path/index-meta.parquet")(indexMetaOf(s, maxRk).write.parquet)
-    def rebuildIndex(): Unit = {
-      fs.delete(new org.apache.hadoop.fs.Path(idx), true)
-      Dedup.buildDedupIndexFrom(committedShards().select(col("doc_id"), col("text")), idx)
-    }
-    if (!Dedup.dedupIndexConsistent(s, idx)) {
-      rebuildIndex()
-      writeIndexMeta(committedMaxRk) // fresh rebuild covers every committed row
-    }
-    // manifest↔index STALENESS tripwire (the r17 "last unguarded
-    // window"): a crash BETWEEN the manifest swap and the index append
-    // leaves the index count-CONSISTENT but missing the committed
-    // increment's signatures — undetectable by the footer-count
-    // invariant. index-meta.parquet records the highest manifest-tier
-    // rank the index contains (written commit-last after every append,
-    // staged into compaction swaps); a committed manifest ahead of it
-    // means exactly that crash, and the heal APPENDS the missing rows'
-    // signatures (`rk > marker` — increment-sized, generation-local
-    // ranks untouched since the crash) instead of rebuilding, so
-    // streaming-tier signatures ([[graft.streaming.Streams
-    // .corpusIncrements]] appends entries for docs the manifest never
-    // lists) survive the heal. A crash between the index append and
-    // the meta swap re-appends one increment's signatures on the next
-    // upsert — duplicate index rows are harmless (the probe distincts
-    // candidates; the count invariant scales all three tables
-    // together). A meta file that is AHEAD of the manifest can only
-    // mean corruption — full rebuild. Missing meta (legacy layout /
-    // fresh bootstrap above) aligns to the committed manifest.
     def recomputeLanes(): Unit =
       Publish(s, s"$path/lanes.parquet")(lanesOf(committedShards()).write.parquet)
-    val metaPath = new org.apache.hadoop.fs.Path(s"$path/index-meta.parquet")
-    if (!fs.exists(metaPath)) {
-      // legacy/pre-marker layout: before BLESSING the index as covering
-      // the committed manifest, cross-check MEMBERSHIP, not cardinality
-      // (ADVICE r19 closing the r18 gap): a bare row-count compare can
-      // be satisfied vacuously — streaming-tier appends or re-appended
-      // duplicate signatures inflate the sig count past the committed
-      // row count while a whole increment's docs are MISSING, and the
-      // marker write below would bless that recall loss permanently.
-      // One broadcast-able anti-join of committed doc_ids against the
-      // sig table's doc_ids names any absent doc; with no marker to say
-      // which rows are missing, the heal is a full rebuild from the
-      // committed corpus. (The index legitimately holds EXTRA ids —
-      // streaming-tier entries the manifest never lists — which
-      // membership, unlike a count delta, is immune to.)
-      val missingFromIdx = committedShards().select(col("doc_id"))
-        .join(s.read.parquet(s"$idx/sig").select(col("doc_id")),
-          Seq("doc_id"), "left_anti")
-      if (!missingFromIdx.isEmpty) {
-        rebuildIndex()
-        recomputeLanes()
-      }
-      writeIndexMeta(committedMaxRk)
-    }
-    else {
-      val idxMaxRk = s.read.parquet(metaPath.toString).collect()(0).getLong(0)
-      if (idxMaxRk < committedMaxRk) {
-        Dedup.appendDedupIndex(
-          committedShards().filter(col("rk") > idxMaxRk)
-            .select(col("doc_id"), col("text")), idx)
-        // the lane cursors live in the same guarded tail (they swap
-        // before the marker), and they are a pure function of the
-        // committed corpus — recompute, don't guess
-        recomputeLanes()
-        writeIndexMeta(committedMaxRk)
-      } else if (idxMaxRk > committedMaxRk) {
-        rebuildIndex()
-        recomputeLanes()
-        writeIndexMeta(committedMaxRk)
+    // serve index rows of `rows`, covering manifest rank `maxRk`, as
+    // the batch named by their smallest doc_id
+    def appendIndex(rows: DataFrame, minId: Long, maxRk: Long): Unit =
+      Publish(s, Publish.batchOf(idx, minId))(stageIndex(rows, maxRk, _))
+    // bootstrap or heal the serve tail (see Durability above)
+    val coverage = indexCoverage(s, idx)
+    if (!coverage.contains(committedMaxRk)) {
+      recomputeLanes()
+      coverage.filter(_ < committedMaxRk) match {
+        case Some(c) =>
+          val missing = committedShards().filter(col("rk") > c)
+          appendIndex(missing, missing.agg(min(col("doc_id"))).head.getLong(0), committedMaxRk)
+        case None =>
+          Publish(s, idx)(stageIndex(committedShards(), committedMaxRk, _))
       }
     }
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/lanes.parquet"))) recomputeLanes()
 
     // funnel verdicts + both dedup tiers — the shared increment chain
     // ([[incrementVerdicts]], also the streaming tier's per-batch step)
@@ -643,7 +582,8 @@ object CorpusBuild {
       .select(col("content_md5"), col("doc_id"), col("source"), col("lang"),
         col("text"), col("toks"))
       .materialized
-    val nInc = survivors.count()
+    val inc = survivors.agg(count(lit(1)), min(col("doc_id"))).head
+    val nInc = inc.getLong(0)
     if (nInc == 0) return curManifest
 
     // id allocation: past the manifest AND any orphaned dirs on disk
@@ -687,17 +627,13 @@ object CorpusBuild {
     Publish(s, s"$path/manifest.parquet")(
       curManifest.unionByName(manifestOf(rows)).coalesce(1).write.parquet)
 
-    // serve-structure appends: index, then lane cursors, then the
-    // high-water marker LAST — the marker commits the whole tail, so
-    // a crash anywhere inside it is detected (marker < manifest) and
-    // healed by the staleness tripwire above on the next upsert
-    Dedup.appendDedupIndex(rows.select(col("doc_id"), col("text")), idx)
+    // the serve tail: lane cursors, then the index batch that commits it
     Publish(s, s"$path/lanes.parquet")(
       lanes.unionByName(lanesOf(rows))
         .groupBy(col("lang"), col("lane"))
         .agg(sum(col("lane_toks")).as("lane_toks"))
         .coalesce(1).write.parquet)
-    writeIndexMeta(maxRk + nInc)
+    appendIndex(rows, inc.getLong(1), maxRk + nInc)
 
     // auto-compaction: fold generation shards once the layout is past
     // the policy bound (compactAfter manifest rows)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.plans.Materialize._
+import graft.plans.Publish
 import graft.sources.Ingest
 
 /** Deduplication operators for the LLM-training-data pipeline
@@ -895,69 +896,50 @@ object Dedup {
     * is blind, so exact identity gets its own unconditional probe).
     * Zero shuffles in the build; the tables are re-read by every
     * increment, so the signature cost is paid ONCE per corpus doc,
-    * ever.
+    * ever. The root is published through [[Publish]], so the three
+    * tables change together and a rebuild retires every appended
+    * batch.
     */
   private[graft] def buildDedupIndex(s: SparkSession, dir: String, path: String): Unit =
-    buildDedupIndexFrom(docs(s, dir), path)
+    Publish(s, path)(buildDedupIndexFrom(docs(s, dir), _))
 
-  /** [[buildDedupIndex]] over an arbitrary (doc_id, text) frame — the
-    * corpus-materialization caller ([[CorpusBuild.corpusUpsert]]'s
-    * bootstrap) indexes the PUBLISHED shards, not a source table.
+  /** Write the three index tables of an arbitrary (doc_id, text) frame
+    * into `dst`, the staging directory of a publish of an index root
+    * or batch ([[buildDedupIndex]], [[appendDedupIndex]], and
+    * [[CorpusBuild]], which indexes the PUBLISHED shards).
     */
-  private[graft] def buildDedupIndexFrom(
-      docsDf: DataFrame, path: String, mode: String = "overwrite"): Unit = {
+  private[graft] def buildDedupIndexFrom(docsDf: DataFrame, dst: String): Unit = {
     import graft.functions.{WordNgramMinHash, WordNgramHashes}
     val sig = docsDf.select(
       col("doc_id"),
       WordNgramMinHash.column(col("text"), IdxNgram, IdxK, IdxSeed).as("sig_arr"),
       WordNgramHashes.column(col("text"), IdxNgram).as("sh"))
-    // write order is the commit protocol: `sig` is the existence
-    // marker bootstraps check AND the table the consistency invariant
-    // ([[dedupIndexConsistent]]) counts against — it lands LAST, so a
-    // build/append that dies mid-way leaves either no marker or a
-    // countable shortfall, never a passing-but-torn index.
     sigBandRows(sig.select(col("doc_id"), col("sig_arr")), IdxBands, IdxRows)
-      .write.mode(mode).parquet(s"$path/bands")
+      .write.parquet(s"$dst/bands")
     docsDf.select(col("doc_id"), contentMd5(col("text")).as("content_md5"))
-      .write.mode(mode).parquet(s"$path/md5")
-    sig.write.mode(mode).parquet(s"$path/sig")
+      .write.parquet(s"$dst/md5")
+    sig.write.parquet(s"$dst/sig")
   }
 
-  /** Cheap consistency check of the three-table index — parquet
-    * footer counts only, no data scan: a healthy index (any number of
-    * [[buildDedupIndexFrom]] builds + [[appendDedupIndex]] appends)
-    * has exactly [[IdxBands]] band rows and one md5 row per sig row;
-    * a crash inside any build/append breaks an equality (or leaves no
-    * sig at all). Callers that own a rebuild source
-    * ([[graft.operators.CorpusBuild.corpusUpsert]]) treat `false` as
-    * "delete and rebootstrap from the committed corpus" — the torn
-    * state is self-healing instead of a silently recall-losing index.
-    */
-  private[graft] def dedupIndexConsistent(s: SparkSession, path: String): Boolean = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    def ex(t: String) = fs.exists(new org.apache.hadoop.fs.Path(s"$path/$t"))
-    // a crash INSIDE a table's write leaves the dir present but with
-    // no committed footers (only _temporary) — read.parquet then
-    // throws "unable to infer schema" rather than counting short, so
-    // an unreadable table is exactly the torn state this check exists
-    // to surface: report inconsistent, don't propagate.
-    ex("sig") && ex("bands") && ex("md5") && {
-      try {
-        val nSig = s.read.parquet(s"$path/sig").count()
-        s.read.parquet(s"$path/bands").count() == IdxBands * nSig &&
-          s.read.parquet(s"$path/md5").count() == nSig
-      } catch { case scala.util.control.NonFatal(_) => false }
-    }
-  }
+  /** Columns of the index tables [[buildDedupIndexFrom]] writes, by
+    * table name; [[readDedupIndex]] reads them under these. */
+  private val DedupIndexDdl = Map(
+    "sig" -> "doc_id BIGINT, sig_arr ARRAY<BIGINT>, sh ARRAY<BIGINT>",
+    "bands" -> "doc_id BIGINT, band INT, bucket BIGINT",
+    "md5" -> "doc_id BIGINT, content_md5 STRING")
 
-  /** Append an accepted increment's signatures to the persisted index
-    * so the NEXT increment dedups against it too — new parquet files
-    * in the three index tables, nothing rewritten (the
-    * [[graft.operators.Ann]] upsert contract).
+  /** Index `table` across the root at `path` and its committed batches. */
+  private[graft] def readDedupIndex(s: SparkSession, path: String, table: String): DataFrame =
+    Publish.readRoots(s, Publish.roots(s, path), table, DedupIndexDdl(table))
+
+  /** Publish an accepted increment's signatures as batch `id` of the
+    * index at `path`, so the NEXT increment dedups against them too.
+    * `id` is the smallest doc_id the increment indexes: under the
+    * in-order arrival contract doc ids are disjoint across increments,
+    * so a replay re-publishes the same batch instead of adding rows.
     */
-  private[graft] def appendDedupIndex(docsDf: DataFrame, path: String): Unit =
-    buildDedupIndexFrom(docsDf, path, mode = "append")
+  private[graft] def appendDedupIndex(docsDf: DataFrame, path: String, id: Long): Unit =
+    Publish(docsDf.sparkSession, Publish.batchOf(path, id))(buildDedupIndexFrom(docsDf, _))
 
   /** Rows above which [[incrementalDedup]] stops FORCING broadcast of
     * the increment-derived probe tables (session config
@@ -1017,14 +999,14 @@ object Dedup {
     def probe(df: DataFrame): DataFrame = if (forceBroadcast) broadcast(df) else df
     val nBands = sigBandRows(nsig.select(col("doc_id"), col("sig_arr")), IdxBands, IdxRows)
       .select(col("doc_id").as("id_new"), col("band"), col("bucket"))
-    val idxBandsAll = s.read.parquet(s"$path/bands")
+    val idxBandsAll = readDedupIndex(s, path, "bands")
     val idxBands = beforeId
       .map(b => idxBandsAll.filter(col("doc_id") < b)).getOrElse(idxBandsAll)
     val cand = idxBands
       .join(probe(nBands), Seq("band", "bucket"))
       .select(col("doc_id").as("id_old"), col("id_new"))
       .distinct()
-    val idxSig = s.read.parquet(s"$path/sig")
+    val idxSig = readDedupIndex(s, path, "sig")
     val verified = idxSig
       .join(probe(cand), idxSig("doc_id") === cand("id_old"))
       .join(probe(nsig.select(col("doc_id").as("id_new"), col("sh").as("sh_new"))),

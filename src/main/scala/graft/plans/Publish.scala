@@ -4,10 +4,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Whole-artifact publish: THE device every rebuild of a persisted
-  * artifact (corpus root and its manifest / lane / index-meta tables,
-  * IVF / LSH / IVF-PQ index roots, the TextOps model tables,
-  * `Ingest.compact` rewrites) goes through, so a reader never sees a
-  * half-written artifact.
+  * artifact (corpus root and its manifest / lane tables, the near-dup
+  * signature index root, IVF / LSH / IVF-PQ index roots, the TextOps
+  * model tables, `Ingest.compact` rewrites) goes through, so a reader
+  * never sees a half-written artifact.
   *
   * Protocol, for a target path `t`:
   *   1. '''recover''' `t` (below), which also deletes any stale staging;
@@ -28,14 +28,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * is idempotent, and runs at the top of every entry point that reads
   * a published artifact ([[read]] for single-table artifacts).
   *
-  * Streamed batches (the per-micro-batch increments of the IVF, LSH
-  * and IVF-PQ indexes and of the novelty hash index) are published the
-  * same way, each as its own target [[batchOf]]`(root, id)` =
-  * `<root>/stream/batch-%09d` holding the same tables as the resident
-  * root. A batch is committed iff its directory exists under its own
-  * name, and a replay is another publish of the same batch. Readers
-  * list batches through [[batches]], which recovers first. A rebuild
-  * publishes the whole root, which retires `<root>/stream` in its swap.
+  * Streamed batches (the increments of the IVF, LSH and IVF-PQ
+  * indexes, of the novelty hash index and of the near-dup signature
+  * index) are published the same way, each as its own target
+  * [[batchOf]]`(root, id)` = `<root>/stream/batch-%09d` holding the
+  * same tables as the resident root. A batch is committed iff its
+  * directory exists under its own name, and a replay is another
+  * publish of the same batch. Readers list batches through [[batches]],
+  * which recovers first, and read a table across the root and its
+  * batches through [[roots]] and [[readRoots]]. A rebuild publishes the
+  * whole root, which retires `<root>/stream` in its swap.
   * Recovery assumes no publish of the same target is in flight: run
   * beside one, it deletes the staging that publish is writing.
   *
@@ -104,6 +106,27 @@ object Publish {
     // after recovery a parked batch is back under its own name
     found.filter(_._2 != ".publish.tmp").map(_._1).distinct.sorted.map(id => id -> batchOf(root, id))
   }
+
+  /** The artifact `root`, recovered first, followed by its committed
+    * streamed batches; each holds the same tables. */
+  def roots(s: SparkSession, root: String): Seq[String] = {
+    recover(s, root)
+    root +: batches(s, root).map(_._2)
+  }
+
+  /** A table an artifact's own writer produced, read under the schema
+    * that writer declares. Spark would otherwise run a footer-reading
+    * job to infer it on every read, and throw on a directory with no
+    * data files, which reads as empty here. Columns still resolve by
+    * name. */
+  def readOwn(s: SparkSession, path: String, ddl: String): DataFrame =
+    s.read.schema(ddl).parquet(path)
+
+  /** `table` read under `ddl` from every root in `roots`, unioned; no
+    * roots read as an empty table. */
+  def readRoots(s: SparkSession, roots: Seq[String], table: String, ddl: String): DataFrame =
+    roots.map(r => readOwn(s, s"$r/$table", ddl)).reduceOption(_ unionByName _)
+      .getOrElse(s.read.schema(ddl).parquet())
 
   /** A published single-table artifact, recovered first. */
   def read(s: SparkSession, target: String): DataFrame = {

@@ -292,12 +292,13 @@ object Streams {
     * itself.
     *
     * State lives in parquet, not a state store: the seen set for
-    * batch N is `indexPath/resident.parquet` plus the committed
-    * streamed batches M < N (`plans.Publish.batches`) — batch N's OWN
-    * hashes are deliberately EXCLUDED, so a crash-replayed batch
-    * scores against exactly the same seen set and rewrites identical
-    * output. Scores OVERWRITE `outPath/batch=N`; the new hashes are
-    * published as streamed batch N of `indexPath`.
+    * batch N is the `resident.parquet` table of `indexPath` and of its
+    * committed streamed batches M < N (`plans.Publish.batches`) —
+    * batch N's OWN hashes are deliberately EXCLUDED, so a crash-replayed
+    * batch scores against exactly the same seen set and rewrites
+    * identical output. Scores OVERWRITE `outPath/batch=N`; the new
+    * hashes are published as streamed batch N of `indexPath`, in the
+    * same table.
     *
     * Streamed in ingestion order, per-doc verdicts are IDENTICAL to
     * the batch rule (a hash's corpus-first carrier precedes every
@@ -314,17 +315,18 @@ object Streams {
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val s = batch.sparkSession
         val prior = Publish.batches(s, indexPath).collect { case (id, p) if id < batchId => p }
-        val residentPath = new org.apache.hadoop.fs.Path(s"$indexPath/resident.parquet")
-        val seenPaths =
-          (if (residentPath.getFileSystem(s.sparkContext.hadoopConfiguration).exists(residentPath))
-             Seq(residentPath.toString)
-           else Seq.empty[String]) ++ prior
-        // the seen set needs only `h`; no paths read as an empty set
-        val seen = s.read.schema("h BINARY").parquet(seenPaths: _*)
+        val resident = new org.apache.hadoop.fs.Path(s"$indexPath/resident.parquet")
+        val hasResident =
+          resident.getFileSystem(s.sparkContext.hadoopConfiguration).exists(resident)
+        // the seen set needs only `h`
+        val seen = Publish.readRoots(s, (if (hasResident) Seq(indexPath) else Nil) ++ prior,
+          "resident.parquet", "h BINARY")
         val (perDoc, newHashes) =
           graft.operators.TextOps.noveltyBatch(batch.toDF(), seen)
         perDoc.write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-        Publish(s, Publish.batchOf(indexPath, batchId))(newHashes.write.parquet(_))
+        Publish(s, Publish.batchOf(indexPath, batchId)) { tmp =>
+          newHashes.write.parquet(s"$tmp/resident.parquet")
+        }
       }
       .option("checkpointLocation", checkpointDir)
       .outputMode(OutputMode.Append())
@@ -961,22 +963,22 @@ object Streams {
     * verdict). Per batch: the full funnel (rules → exact first-wins →
     * index md5 probe → within-batch near keep-first → index
     * broadcast-probe near serve), verdicts to the caller's sink, then
-    * the accepted docs' signatures APPEND to the index so the next
-    * batch dedups against them — the corpus census's near stage stops
-    * being batch-only for increment-sized arrivals.
+    * the accepted docs' signatures publish as an index batch
+    * (`Dedup.appendDedupIndex`) so the next batch dedups against them —
+    * the corpus census's near stage stops being batch-only for
+    * increment-sized arrivals.
     *
     * Contracts: in-order arrival (doc ids strictly increase across
     * batches and start above every indexed id — the pack-cursor /
-    * upsert contract verbatim); the index must exist (bootstrap with
-    * `Dedup.buildDedupIndexFrom` over the published shards, exactly
-    * what `corpusUpsert`'s first call does). foreachBatch is
-    * at-least-once on restart: verdict computation passes the batch's
-    * min id as the probe bound, so a re-delivered batch that already
-    * appended its signatures recomputes IDENTICAL verdicts (its own
-    * index entries are invisible to it) and its duplicate append rows
-    * are harmless (same md5s, candidate pairs de-duplicated by the
-    * probe's distinct). The sink receives (verdicts, batchId) —
-    * dedupe on batchId for an exactly-once downstream.
+    * upsert contract verbatim); the index must exist (a first
+    * `corpusUpsert` of the published corpus bootstraps it).
+    * foreachBatch is at-least-once on restart: verdict computation
+    * passes the batch's min id as the probe bound, so a re-delivered
+    * batch that already published its signatures recomputes IDENTICAL
+    * verdicts (its own index entries are invisible to it) and
+    * re-publishes the same index batch, named by its smallest accepted
+    * doc id. The sink receives (verdicts, batchId) — dedupe on batchId
+    * for an exactly-once downstream.
     *
     * Shape at scale: everything is increment-sized or a broadcast
     * probe of an index scan — the corpus moves zero times per batch
@@ -998,8 +1000,9 @@ object Streams {
           // append, so the probe never sees its own batch
           val accepted = verdicts.filter(col("alive_near"))
             .select(col("doc_id"), col("text"))
-          if (accepted.limit(1).collect().nonEmpty)
-            graft.operators.Dedup.appendDedupIndex(accepted, idxPath)
+          val firstId = accepted.agg(min(col("doc_id"))).head
+          if (!firstId.isNullAt(0))
+            graft.operators.Dedup.appendDedupIndex(accepted, idxPath, firstId.getLong(0))
         }
       }
       .start()

@@ -303,7 +303,7 @@ class AnalyticsSpec extends SparkSpec {
   test("q_components: moved-label census sees a too-small bound; zero certifies the fixpoint") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ccpath").toString
+    val dir = tempDir("ccpath")
     // bipartite path c0-s0-c1-s1-…-c10 (diameter 20 ≫ 3 rounds):
     // order 2k joins customer k to supplier k; order 2k+1 joins
     // customer k+1 to supplier k

@@ -125,7 +125,7 @@ class AnnSpec extends SparkSpec {
   }
 
   test("persisted IVF index: serve == train-and-serve; scan prunes to the probed cells") {
-    val path = java.nio.file.Files.createTempDirectory("graft-ivf").toString
+    val path = tempDir("ivf")
     Ann.buildIvfIndex(spark, sf0001, path)
     val served = Ann.ivfServe(spark, sf0001, path)
     // same deterministic codebook (seeded Lloyd) → identical answers
@@ -140,7 +140,7 @@ class AnnSpec extends SparkSpec {
   }
 
   test("persisted LSH index: serve == inline qAnnLsh; scan prunes to the probed buckets") {
-    val path = java.nio.file.Files.createTempDirectory("graft-lsh").toString
+    val path = tempDir("lsh")
     Ann.buildLshIndex(spark, sf0001, path)
     val served = Ann.lshServe(spark, sf0001, path)
     // seed-derived rotations → identical bucket keys → identical answers
@@ -156,8 +156,8 @@ class AnnSpec extends SparkSpec {
 
   test("lshUpsertBatch: serve-after-upsert == one-shot build; replay idempotent; no assignment shuffle") {
     import org.apache.spark.sql.functions.col
-    val full = java.nio.file.Files.createTempDirectory("graft-lsh-full").toString
-    val incr = java.nio.file.Files.createTempDirectory("graft-lsh-incr").toString
+    val full = tempDir("lsh-full")
+    val incr = tempDir("lsh-incr")
     Ann.buildLshIndex(spark, sf0001, full)
     Ann.buildLshIndex(spark, sf0001, incr, col("vec_id") % 7 =!= 0)
     val (corpus, _) = Ann.split(spark, sf0001)
@@ -184,8 +184,8 @@ class AnnSpec extends SparkSpec {
 
   test("ivfUpsertBatch: micro-batch replay is idempotent; empty batch is a no-op") {
     import org.apache.spark.sql.functions.col
-    val full = java.nio.file.Files.createTempDirectory("graft-ivfb-full").toString
-    val incr = java.nio.file.Files.createTempDirectory("graft-ivfb-incr").toString
+    val full = tempDir("ivfb-full")
+    val incr = tempDir("ivfb-incr")
     // one-shot reference index, and a partial build (the codebook still
     // trains on the full corpus) whose held-out arrivals are upserted
     Ann.buildIvfIndex(spark, sf0001, full)
@@ -219,8 +219,8 @@ class AnnSpec extends SparkSpec {
   }
 
   test("IVF-PQ index: codes compress 2×+ on disk; recall ≥ 0.9 vs float serve; both scans prune") {
-    val path = java.nio.file.Files.createTempDirectory("graft-ivfpq").toString
-    val fullIvf = java.nio.file.Files.createTempDirectory("graft-ivfpq-ref").toString
+    val path = tempDir("ivfpq")
+    val fullIvf = tempDir("ivfpq-ref")
     Ann.buildIvfPqIndex(spark, sf0001, path)
     Ann.buildIvfIndex(spark, sf0001, fullIvf)
     // compression: the scanned half stores 1-byte codes, the float
@@ -259,8 +259,8 @@ class AnnSpec extends SparkSpec {
 
   test("ivfPqUpsertBatch: replay converges; a torn batch is invisible and heals on replay") {
     import org.apache.spark.sql.functions.col
-    val full = java.nio.file.Files.createTempDirectory("graft-ivfpqb-full").toString
-    val incr = java.nio.file.Files.createTempDirectory("graft-ivfpqb-incr").toString
+    val full = tempDir("ivfpqb-full")
+    val incr = tempDir("ivfpqb-incr")
     Ann.buildIvfPqIndex(spark, sf0001, full)
     Ann.buildIvfPqIndex(spark, sf0001, incr, col("vec_id") % 7 =!= 0)
     val (corpus, _) = Ann.split(spark, sf0001)
@@ -295,7 +295,7 @@ class AnnSpec extends SparkSpec {
   }
 
   test("q_ann_ivfadc: the registered row == explicit build + ivfPqServe, and recall is monitored") {
-    val path = java.nio.file.Files.createTempDirectory("graft-ivfadc-row").toString
+    val path = tempDir("ivfadc-row")
     Ann.buildIvfPqIndex(spark, sf0001, path)
     val exp = Ann.ivfPqServe(spark, sf0001, path).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
@@ -319,7 +319,7 @@ class AnnSpec extends SparkSpec {
     // a batch is committed iff its directory is in place under its own
     // name: Hadoop's _SUCCESS markers, which depend on the writer's
     // conf, play no part in the verdict
-    val incr = java.nio.file.Files.createTempDirectory("graft-ivfpqm").toString
+    val incr = tempDir("ivfpqm")
     Ann.buildIvfPqIndex(spark, sf0001, incr, col("vec_id") % 7 =!= 0)
     val (corpus, _) = Ann.split(spark, sf0001)
     def served = serveSet(Ann.ivfPqServe(spark, sf0001, incr))
@@ -348,7 +348,7 @@ class AnnSpec extends SparkSpec {
 
   test("buildIvfPqIndex: atomic triad publish — a crashed rebuild leaves the old index serving") {
     import org.apache.spark.sql.functions.col
-    val path = java.nio.file.Files.createTempDirectory("graft-ivfpqswap").toString + "/idx"
+    val path = tempDir("ivfpqswap") + "/idx"
     Ann.buildIvfPqIndex(spark, sf0001, path)
     def serveSet() = Ann.ivfPqServe(spark, sf0001, path).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
@@ -400,7 +400,7 @@ class AnnSpec extends SparkSpec {
       ListenerBusDrain(sc)
       jobs.get
     }
-    val path = java.nio.file.Files.createTempDirectory("graft-ivfpq-jobs").toString + "/idx"
+    val path = tempDir("ivfpq-jobs") + "/idx"
     val (corpus, _) = Ann.split(s, sf0001)
     sc.addSparkListener(listener)
     try {
@@ -433,14 +433,14 @@ class AnnSpec extends SparkSpec {
   test("model reads: a shuffled multi-file codebook reads back; a missing, doubled or renamed row throws") {
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.functions.{col, rand, when}
-    val path = java.nio.file.Files.createTempDirectory("graft-ivfpq-model").toString + "/idx"
+    val path = tempDir("ivfpq-model") + "/idx"
     Ann.buildIvfPqIndex(spark, sf0001, path)
     val cent = Ann.readCodebook(spark, path)
     val pqCb = Ann.readPqCodebook(spark, path)
     val tables = Seq("codebook.parquet", "pq_codebook.parquet")
     // copy both model tables under a fresh root, each through `edit`
     def rewrite(edit: String => DataFrame => DataFrame): String = {
-      val root = java.nio.file.Files.createTempDirectory("graft-ivfpq-model-copy").toString
+      val root = tempDir("ivfpq-model-copy")
       tables.foreach(t => edit(t)(spark.read.parquet(s"$path/$t")).write.parquet(s"$root/$t"))
       root
     }
@@ -595,7 +595,7 @@ class AnnSpec extends SparkSpec {
 
   /** Tiny embeddings table on disk for the cluster-quality audit. */
   private def embDir(rows: Seq[(Long, Seq[Float], Int)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-emb").toString
+    val dir = tempDir("emb")
     val s = spark
     import s.implicits._
     rows.toDF("vec_id", "embedding", "label")

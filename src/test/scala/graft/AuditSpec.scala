@@ -59,7 +59,7 @@ class AuditSpec extends SparkSpec {
   test("q_reconcile: exact / within-1pct / mismatch / headless orders classified") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-recon").toString
+    val dir = tempDir("recon")
     // one line each, discount/tax zero -> recomputed = extendedprice
     Seq(
       (1L, 100.00, "A"),  // stored = recomputed: exact

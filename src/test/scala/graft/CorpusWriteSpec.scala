@@ -13,7 +13,7 @@ import graft.plans.Publish
 class CorpusWriteSpec extends SparkSpec {
 
   private def build(tag: String): (String, Array[org.apache.spark.sql.Row]) = {
-    val out = java.nio.file.Files.createTempDirectory(s"graft-corpus-$tag").toString + "/corpus"
+    val out = tempDir(s"corpus-$tag") + "/corpus"
     (out, CorpusBuild.corpusWrite(spark, sf0001, out).collect())
   }
 
@@ -153,49 +153,6 @@ class CorpusWriteSpec extends SparkSpec {
     assert(m2.map(_.getLong(1)).sum === docs0 + 1)
   }
 
-  test("a torn dedup-index append is detected and healed at the next upsert") {
-    import spark.implicits._
-    val (out, _) = build("tearidx")
-    val shards = spark.read.parquet(s"$out/shards.parquet")
-      .select("doc_id", "lang", "text").collect()
-    val maxId = shards.map(_.getLong(0)).max
-    val base = shards.maxBy(_.getLong(0))
-    val idx = s"$out/index"
-
-    // first upsert bootstraps the serve index (consistent by build)
-    CorpusBuild.corpusUpsert(spark, out,
-      Seq((maxId + 1001L, "src_tear", base.getString(1),
-        base.getString(2).split(" ").reverse.mkString(" ")))
-        .toDF("doc_id", "source", "lang", "text"))
-    assert(graft.operators.Dedup.dedupIndexConsistent(spark, idx),
-      "healthy build + append must satisfy the count invariant")
-
-    // tear injection: a phantom doc's rows land in the BANDS table
-    // only — the on-disk state of a crash inside the commit-last
-    // append (bands written, md5/sig not)
-    spark.read.parquet(s"$idx/bands").limit(graft.operators.Dedup.IdxBands)
-      .withColumn("doc_id", col("doc_id") + 999999L)
-      .write.mode("append").parquet(s"$idx/bands")
-    assert(!graft.operators.Dedup.dedupIndexConsistent(spark, idx),
-      "the torn append must break the count invariant")
-
-    // the next upsert heals: index rebuilt from the committed corpus,
-    // and the rebuilt index still serves — a verbatim copy of a
-    // corpus doc is dropped, the manifest does not grow
-    val mBefore = spark.read.parquet(s"$out/manifest.parquet").collect()
-    val mAfter = CorpusBuild.corpusUpsert(spark, out,
-      Seq((maxId + 2001L, "src_tear", base.getString(1), base.getString(2)))
-        .toDF("doc_id", "source", "lang", "text")).collect()
-    assert(mAfter.length === mBefore.length,
-      "a verbatim corpus copy must still be dropped by the healed index")
-    assert(graft.operators.Dedup.dedupIndexConsistent(spark, idx),
-      "the heal must restore the invariant")
-    // the phantom doc's orphaned band rows are gone (rebuild, not append)
-    assert(spark.read.parquet(s"$idx/bands")
-      .filter(col("doc_id") >= 999999L).count() === 0L,
-      "healing rebuilds from the committed corpus — the torn rows vanish")
-  }
-
   test("crash between the manifest swap and the serve-tail appends: staleness detected and healed") {
     import spark.implicits._
     val (out, _) = build("staleidx")
@@ -204,19 +161,23 @@ class CorpusWriteSpec extends SparkSpec {
     val maxId = shards0.map(_.getLong(0)).max
     val base = shards0.maxBy(_.getLong(0))
 
-    // increment 1 commits normally (bootstraps index + marker)
+    // increment 1 commits normally (bootstraps the index root, then
+    // publishes its own batch)
     CorpusBuild.corpusUpsert(spark, out,
       Seq((maxId + 1001L, "src_stale", base.getString(1),
         base.getString(2).split(" ").reverse.mkString(" ")))
         .toDF("doc_id", "source", "lang", "text"))
     val fs = new org.apache.hadoop.fs.Path(out)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$out/index-meta.parquet")),
-      "a committed upsert must leave the serve-tail high-water marker")
+    def committedMaxRk(): Long = spark.read.parquet(s"$out/manifest.parquet")
+      .agg(org.apache.spark.sql.functions.max(col("max_rk"))).collect()(0).getLong(0)
+    def coverage(): Option[Long] = CorpusBuild.indexCoverage(spark, s"$out/index")
+    assert(coverage() === Some(committedMaxRk()),
+      "a committed upsert's index batch must cover the committed manifest")
 
     // increment 2 commits, then we INJECT the crash-between-swap-and-
     // append state: manifest contains the increment, but the serve
-    // index, lane cursors and marker are rolled back to increment 1's
+    // index and lane cursors are rolled back to increment 1's
     // state (snapshot before, restore after — the exact on-disk shape
     // of a crash right after the manifest swap)
     def snap(name: String): Unit = {
@@ -232,20 +193,17 @@ class CorpusWriteSpec extends SparkSpec {
       fs.delete(dst, true)
       assert(fs.rename(src, dst))
     }
-    Seq("index", "lanes.parquet", "index-meta.parquet").foreach(snap)
+    Seq("index", "lanes.parquet").foreach(snap)
     val inc2Text = base.getString(2).split(" ").sorted.mkString(" ")
     CorpusBuild.corpusUpsert(spark, out,
       Seq((maxId + 2001L, "src_stale", base.getString(1), inc2Text))
         .toDF("doc_id", "source", "lang", "text"))
-    Seq("index", "lanes.parquet", "index-meta.parquet").foreach(restore)
-
-    // stale state is count-CONSISTENT — the r17 invariant alone cannot
-    // see it
-    assert(graft.operators.Dedup.dedupIndexConsistent(spark, s"$out/index"),
-      "the stale index passes the footer-count invariant (that is the point)")
+    Seq("index", "lanes.parquet").foreach(restore)
+    assert(coverage().exists(_ < committedMaxRk()),
+      "the injected state: index coverage behind the committed manifest")
 
     // a verbatim copy of increment 2's text must STILL be dropped: the
-    // next upsert detects marker < manifest, appends the missing
+    // next upsert detects coverage < manifest, appends the missing
     // signatures and recomputes the cursors before serving
     val mBefore = spark.read.parquet(s"$out/manifest.parquet").collect()
     val mAfter = CorpusBuild.corpusUpsert(spark, out,
@@ -255,12 +213,10 @@ class CorpusWriteSpec extends SparkSpec {
       "the healed index must dedup a verbatim copy of the stale increment's doc")
     assert(mAfter.map(_.getLong(1)).sum === mBefore.map(_.getLong(1)).sum)
 
-    // marker re-aligned to the committed manifest; lane cursors equal
+    // coverage re-aligned to the committed manifest; lane cursors equal
     // the committed corpus rollup (pure function of committed rows)
-    val mrk = spark.read.parquet(s"$out/index-meta.parquet").collect()(0).getLong(0)
-    val maxRk = spark.read.parquet(s"$out/manifest.parquet")
-      .agg(org.apache.spark.sql.functions.max(col("max_rk"))).collect()(0).getLong(0)
-    assert(mrk === maxRk, "the heal must restore the high-water marker")
+    assert(coverage() === Some(committedMaxRk()),
+      "the heal must bring the index coverage to the committed manifest")
     val ids = spark.read.parquet(s"$out/manifest.parquet")
       .select("shard").collect().map(_.getInt(0))
     val expLanes = spark.read.parquet(s"$out/shards.parquet")
@@ -272,148 +228,6 @@ class CorpusWriteSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(gotLanes === expLanes,
       "healed lane cursors must equal the committed-corpus rollup")
-  }
-
-  test("legacy layout (no index-meta) with a lost increment: cross-checked and rebuilt, not blessed") {
-    import spark.implicits._
-    // ADVICE r18: a corpus that crashed in the PRE-marker unguarded
-    // window (manifest swapped, index append lost) arrives at the
-    // marker-aware code with index-meta.parquet absent. Aligning the
-    // marker to the manifest without verifying coverage would bless the
-    // stale index permanently — the cross-check (index sig count <
-    // committed corpus rows ⇒ rebuild) catches exactly this state.
-    val (out, _) = build("legacymeta")
-    val shards0 = spark.read.parquet(s"$out/shards.parquet")
-      .select("doc_id", "lang", "text").collect()
-    val maxId = shards0.map(_.getLong(0)).max
-    val base = shards0.maxBy(_.getLong(0))
-    val fs = new org.apache.hadoop.fs.Path(out)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-    // increment 1 commits normally (bootstraps index + marker)
-    CorpusBuild.corpusUpsert(spark, out,
-      Seq((maxId + 1001L, "src_legacy", base.getString(1),
-        base.getString(2).split(" ").reverse.mkString(" ")))
-        .toDF("doc_id", "source", "lang", "text"))
-    // snapshot the index BEFORE increment 2, commit increment 2, then
-    // roll the index back and DELETE the marker: the on-disk shape of
-    // the legacy crash (manifest ahead, index short, no marker)
-    val snapP = new org.apache.hadoop.fs.Path(s"$out/.snap-index")
-    fs.delete(snapP, true)
-    org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(s"$out/index"),
-      fs, snapP, false, spark.sparkContext.hadoopConfiguration)
-    val inc2Text = base.getString(2).split(" ").sorted.mkString(" ")
-    CorpusBuild.corpusUpsert(spark, out,
-      Seq((maxId + 2001L, "src_legacy", base.getString(1), inc2Text))
-        .toDF("doc_id", "source", "lang", "text"))
-    fs.delete(new org.apache.hadoop.fs.Path(s"$out/index"), true)
-    assert(fs.rename(snapP, new org.apache.hadoop.fs.Path(s"$out/index")))
-    fs.delete(new org.apache.hadoop.fs.Path(s"$out/index-meta.parquet"), true)
-    assert(graft.operators.Dedup.dedupIndexConsistent(spark, s"$out/index"),
-      "the stale legacy index passes the footer-count invariant (that is the point)")
-
-    // a verbatim copy of increment 2's doc must STILL be dropped: the
-    // next upsert cross-checks coverage, rebuilds, then writes the marker
-    val mBefore = spark.read.parquet(s"$out/manifest.parquet").collect()
-    val mAfter = CorpusBuild.corpusUpsert(spark, out,
-      Seq((maxId + 3001L, "src_legacy", base.getString(1), inc2Text))
-        .toDF("doc_id", "source", "lang", "text")).collect()
-    assert(mAfter.length === mBefore.length,
-      "the rebuilt index must dedup a verbatim copy of the lost increment's doc")
-    val mrk = spark.read.parquet(s"$out/index-meta.parquet").collect()(0).getLong(0)
-    val maxRk = spark.read.parquet(s"$out/manifest.parquet")
-      .agg(org.apache.spark.sql.functions.max(col("max_rk"))).collect()(0).getLong(0)
-    assert(mrk === maxRk, "the cross-checked rebuild must then write the marker")
-  }
-
-  test("legacy layout: an inflated sig count cannot mask a lost increment (membership, not cardinality)") {
-    import spark.implicits._
-    // ADVICE r19: the r18 cross-check compared COUNTS, so duplicate
-    // re-appended signatures (or streaming-tier entries) could inflate
-    // the sig table past the committed row count while a whole
-    // increment's docs were missing — count says covered, recall says
-    // lost, and the marker write blesses it permanently. The check is
-    // now a membership anti-join; this fixture makes the count rule
-    // PASS vacuously and requires the rebuild anyway.
-    val (out, _) = build("legacyvac")
-    val shards0 = spark.read.parquet(s"$out/shards.parquet")
-      .select("doc_id", "lang", "text").collect()
-    val maxId = shards0.map(_.getLong(0)).max
-    val base = shards0.maxBy(_.getLong(0))
-    val fs = new org.apache.hadoop.fs.Path(out)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    CorpusBuild.corpusUpsert(spark, out,
-      Seq((maxId + 1001L, "src_vac", base.getString(1),
-        base.getString(2).split(" ").reverse.mkString(" ")))
-        .toDF("doc_id", "source", "lang", "text"))
-    val snapP = new org.apache.hadoop.fs.Path(s"$out/.snap-index-vac")
-    fs.delete(snapP, true)
-    org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(s"$out/index"),
-      fs, snapP, false, spark.sparkContext.hadoopConfiguration)
-    val inc2Text = base.getString(2).split(" ").sorted.mkString(" ")
-    CorpusBuild.corpusUpsert(spark, out,
-      Seq((maxId + 2001L, "src_vac", base.getString(1), inc2Text))
-        .toDF("doc_id", "source", "lang", "text"))
-    fs.delete(new org.apache.hadoop.fs.Path(s"$out/index"), true)
-    assert(fs.rename(snapP, new org.apache.hadoop.fs.Path(s"$out/index")))
-    fs.delete(new org.apache.hadoop.fs.Path(s"$out/index-meta.parquet"), true)
-    // inflate: re-append two docs the index ALREADY holds — duplicate
-    // signatures, ratio-consistent, sig count now committed + 1
-    val dupDocs = spark.read.parquet(s"$out/shards.parquet")
-      .select(col("doc_id"), col("text")).orderBy(col("doc_id")).limit(2)
-    graft.operators.Dedup.appendDedupIndex(dupDocs, s"$out/index")
-    val nSig = spark.read.parquet(s"$out/index/sig").count()
-    val nCommitted = spark.read.parquet(s"$out/shards.parquet").count()
-    assert(nSig > nCommitted,
-      "fixture: the count rule must read as covered while a doc is missing")
-    assert(graft.operators.Dedup.dedupIndexConsistent(spark, s"$out/index"),
-      "fixture: the inflated index still passes the footer-count invariant")
-    // the next upsert must detect the MISSING doc by membership,
-    // rebuild, and then dedup a verbatim copy of the lost increment
-    val mBefore = spark.read.parquet(s"$out/manifest.parquet").collect()
-    val mAfter = CorpusBuild.corpusUpsert(spark, out,
-      Seq((maxId + 3001L, "src_vac", base.getString(1), inc2Text))
-        .toDF("doc_id", "source", "lang", "text")).collect()
-    assert(mAfter.length === mBefore.length,
-      "membership cross-check must rebuild and drop the lost increment's copy")
-  }
-
-  test("an UNREADABLE index table (crash inside a table's write) reads as inconsistent, not a throw") {
-    import spark.implicits._
-    val (out, _) = build("tearidx2")
-    val shards = spark.read.parquet(s"$out/shards.parquet")
-      .select("doc_id", "lang", "text").collect()
-    val maxId = shards.map(_.getLong(0)).max
-    val base = shards.maxBy(_.getLong(0))
-    val idx = s"$out/index"
-    CorpusBuild.corpusUpsert(spark, out,
-      Seq((maxId + 1001L, "src_tear2", base.getString(1),
-        base.getString(2).split(" ").reverse.mkString(" ")))
-        .toDF("doc_id", "source", "lang", "text"))
-    assert(graft.operators.Dedup.dedupIndexConsistent(spark, idx))
-
-    // tear injection: a crash INSIDE the sig write leaves the dir
-    // present with only `_temporary` — no committed parquet footers.
-    // read.parquet on that dir throws "unable to infer schema"; the
-    // consistency check must swallow it and report inconsistent so
-    // the heal path still triggers.
-    val fs = new org.apache.hadoop.fs.Path(idx)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.delete(new org.apache.hadoop.fs.Path(s"$idx/sig"), true))
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$idx/sig/_temporary"))
-    assert(!graft.operators.Dedup.dedupIndexConsistent(spark, idx),
-      "a sig dir with no committed files must read as inconsistent, not propagate a read failure")
-
-    // and corpusUpsert self-heals from that state exactly as it does
-    // from a countable shortfall
-    val mBefore = spark.read.parquet(s"$out/manifest.parquet").collect()
-    val mAfter = CorpusBuild.corpusUpsert(spark, out,
-      Seq((maxId + 2001L, "src_tear2", base.getString(1), base.getString(2)))
-        .toDF("doc_id", "source", "lang", "text")).collect()
-    assert(mAfter.length === mBefore.length,
-      "a verbatim corpus copy must still be dropped by the healed index")
-    assert(graft.operators.Dedup.dedupIndexConsistent(spark, idx),
-      "the heal must restore the invariant from the unreadable-table state")
   }
 
   test("verdict chain is built once per (session, dir) and serves every consumer") {
@@ -650,8 +464,7 @@ class CorpusWriteSpec extends SparkSpec {
       (2L, "a perfectly ordinary sentence with enough words here to pass"),
       (3L, "the damn weapon sat on the table next to the door"))
     val dir = docsDir(docs)
-    val out = java.nio.file.Files
-      .createTempDirectory("graft-safe-shards").toString + "/corpus"
+    val out = tempDir("safe-shards") + "/corpus"
     CorpusBuild.corpusWrite(spark, dir, out)
     val written = spark.read.parquet(s"$out/shards.parquet").select("doc_id")
       .collect().map(_.getLong(0)).toSet

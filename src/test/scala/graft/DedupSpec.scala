@@ -232,7 +232,7 @@ class DedupSpec extends SparkSpec {
       1L -> "the quick brown fox jumps over the lazy dog near the river bank today",
       2L -> "completely different content about spark partitions and shuffle behavior",
       3L -> "a third unrelated document mentioning parquet files and column pruning"))
-    val idx = java.nio.file.Files.createTempDirectory("graft-dedup-idx").toString
+    val idx = tempDir("dedup-idx")
     Dedup.buildDedupIndex(spark, corpus, idx)
 
     val arrivals = Seq(
@@ -280,10 +280,37 @@ class DedupSpec extends SparkSpec {
     } finally spark.conf.unset("spark.graft.dedup.broadcastIncrementMaxRows")
   }
 
+  test("appendDedupIndex: a replayed append re-publishes one batch; rows and serve unchanged") {
+    val s = spark
+    import s.implicits._
+    val corpus = docsDir(Seq(
+      1L -> "the quick brown fox jumps over the lazy dog near the river bank today",
+      2L -> "completely different content about spark partitions and shuffle behavior"))
+    val idx = tempDir("dedup-replay") + "/idx"
+    Dedup.buildDedupIndex(spark, corpus, idx)
+    val increment = Seq(
+      10L -> "a third unrelated document mentioning parquet files and column pruning",
+      11L -> "entirely novel text with no overlap whatsoever in any shingle window")
+      .toDF("doc_id", "text")
+    val arrivals = Seq(
+      20L -> "a third unrelated document mentioning parquet files and column pruning again",
+      21L -> "the quick brown fox jumps over the lazy dog near the river bank tonight")
+      .toDF("doc_id", "text")
+    def state() = (graft.plans.Publish.batches(spark, idx).map(_._1),
+      Dedup.readDedupIndex(spark, idx, "sig").count(),
+      Dedup.incrementalDedup(spark, idx, arrivals).collect().map(_.toSeq).toSet)
+    Dedup.appendDedupIndex(increment, idx, 10L)
+    val once = state()
+    assert(once._1 === Seq(10L) && once._2 === 4L, "one batch of two signatures over the root")
+    // a re-delivered increment (at-least-once streaming) publishes the same batch
+    Dedup.appendDedupIndex(increment, idx, 10L)
+    assert(state() === once, "a replay must leave the index and its serve unchanged")
+  }
+
   test("embedding LSH dedup flags planted near-identical vectors") {
     val s = spark
     import s.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-emb").toString
+    val tmp = tempDir("emb")
     val rnd = new scala.util.Random(99)
     def vec(): Array[Float] = Array.fill(64)(rnd.nextGaussian().toFloat)
     val v1 = vec()
@@ -470,7 +497,7 @@ class DedupSpec extends SparkSpec {
       i -> (s"standalone document $i carrying tokens ${i * 7} ${i * 13} ${i * 17} " +
         s"plus filler vocabulary item${i}a item${i}b item${i}c item${i}d item${i}e"))
     val dir = docsDir(hotFamily ++ distinct)
-    val idx = java.nio.file.Files.createTempDirectory("graft-hot-idx").toString
+    val idx = tempDir("hot-idx")
     Dedup.buildDedupIndex(spark, dir, idx)
 
     val arrivals = Seq(
@@ -534,7 +561,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("q_lang_leak: one family under two labels counts its full doc mass") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-langleak").toString
+    val dir = tempDir("langleak")
     val s = spark
     import s.implicits._
     Seq(
@@ -554,7 +581,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("q_source_overlap: Jaccard on shared prefix families, normalization shared with dedup keys") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-srcov").toString
+    val dir = tempDir("srcov")
     val s = spark
     import s.implicits._
     Seq(

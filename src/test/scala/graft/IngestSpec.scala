@@ -12,7 +12,7 @@ import graft.sources.Ingest
 class IngestSpec extends SparkSpec {
 
   test("csvPipe: pipe delim, header, empty-string NULL, 12h AM/PM timestamps") {
-    val dir = Files.createTempDirectory("graft-csv")
+    val dir = java.nio.file.Paths.get(tempDir("csv"))
     val f = dir.resolve("staging.csv")
     Files.writeString(f,
       """id|name|reported|resolved
@@ -40,7 +40,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("jsonLines: schema-first JSON-lines read with missing fields as NULL") {
-    val dir = Files.createTempDirectory("graft-json")
+    val dir = java.nio.file.Paths.get(tempDir("json"))
     val f = dir.resolve("rows.jsonl")
     Files.writeString(f,
       """{"id": 1, "name": "a", "score": 1.5}
@@ -59,7 +59,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("writePartitioned: reader filter becomes a partition filter, not a scan filter") {
-    val dir = Files.createTempDirectory("graft-part").toString
+    val dir = tempDir("part")
     val e = Ingest.events(spark, sf0001).select("event_id", "event_type", "value")
     Ingest.writePartitioned(e, dir, Seq("event_type"))
     val back = spark.read.parquet(dir).filter(org.apache.spark.sql.functions.col("event_type") === "click")
@@ -71,7 +71,7 @@ class IngestSpec extends SparkSpec {
 
   test("zorderWrite: file-level min/max prunes point predicates on BOTH interleaved columns") {
     import org.apache.spark.sql.functions.{col, input_file_name, max, min}
-    val dir = Files.createTempDirectory("graft-zorder").toString
+    val dir = tempDir("zorder")
     val li = Ingest.table(spark, sf0001, "lineitem")
       .select("l_orderkey", "l_partkey", "l_suppkey", "l_quantity")
     Ingest.zorderWrite(li, s"$dir/zorder", Seq("l_partkey", "l_suppkey"), nFiles = 16)
@@ -111,7 +111,7 @@ class IngestSpec extends SparkSpec {
   test("zorderWrite: empty input and all-NULL cluster columns write without stats NPE") {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory("graft-zorder-edge").toString
+    val dir = tempDir("zorder-edge")
     // empty input: no min/max stats at all
     val empty = Seq.empty[(Long, Long)].toDF("a", "b")
     Ingest.zorderWrite(empty, s"$dir/empty", Seq("a", "b"), nFiles = 4)
@@ -153,7 +153,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("orc: roundtrip preserves values; filters push down to the ORC scan") {
-    val dir = Files.createTempDirectory("graft-orc").toString + "/li"
+    val dir = tempDir("orc") + "/li"
     val li = Ingest.table(spark, sf0001, "lineitem")
       .select("l_orderkey", "l_quantity", "l_shipdate")
     Ingest.writeOrc(li, dir)
@@ -168,7 +168,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("orc: partitioned write prunes partitions on read") {
-    val dir = Files.createTempDirectory("graft-orc-part").toString
+    val dir = tempDir("orc-part")
     val e = Ingest.events(spark, sf0001).select("event_id", "event_type", "value")
     Ingest.writeOrc(e, dir, Seq("event_type"))
     val back = Ingest.orc(spark, dir)
@@ -188,7 +188,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("acquire: streamed copy with size+md5, atomic into place") {
-    val dir = Files.createTempDirectory("graft-acq")
+    val dir = java.nio.file.Paths.get(tempDir("acq"))
     val src = dir.resolve("remote.csv")
     val body = "a|b\n1|2\n3|4\n"
     Files.writeString(src, body)
@@ -207,7 +207,7 @@ class IngestSpec extends SparkSpec {
   test("compact: many small files rewrite to the target count, values intact, no temp dirs") {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory("graft-compact").resolve("t.parquet").toString
+    val dir = tempDir("compact") + "/t.parquet"
     // 64 tiny files (a streaming sink's typical litter)
     (1L to 6400L).map(i => (i, s"row$i")).toDF("id", "v")
       .repartition(64).write.mode("overwrite").parquet(dir)
@@ -231,7 +231,7 @@ class IngestSpec extends SparkSpec {
   test("compact: hive-partitioned layout is preserved, not flattened") {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory("graft-compact-part").resolve("t.parquet").toString
+    val dir = tempDir("compact-part") + "/t.parquet"
     (1L to 4000L).map(i => (i, (i % 4).toInt, s"row$i")).toDF("id", "cell", "v")
       .repartition(16).write.mode("overwrite").partitionBy("cell").parquet(dir)
     val expected = spark.read.parquet(dir).collect()
@@ -255,7 +255,7 @@ class IngestSpec extends SparkSpec {
   test("parquetEvolved: added columns union across file generations, old files read NULL") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-evolve").toString
+    val dir = tempDir("evolve")
     // generation 1: (doc_id, text); generation 2 adds lang
     Seq((1L, "alpha")).toDF("doc_id", "text")
       .write.mode("append").parquet(dir)
@@ -273,7 +273,7 @@ class IngestSpec extends SparkSpec {
   test("exportReportCsv: header + quoting, refuses oversized reports") {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory("graft-report")
+    val dir = java.nio.file.Paths.get(tempDir("report"))
     val out = dir.resolve("report.csv")
     val df = Seq((1L, "plain", 2.5), (2L, "with,comma \"q\"", 3.0))
       .toDF("id", "label", "val")

@@ -316,7 +316,7 @@ class InvariantSpec extends SparkSpec {
     import s.implicits._
     // paired corpus: vec 2k and 2k+1 carry the SAME embedding+label, so
     // the parity halves are identical populations — shift must be 0
-    val dir = java.nio.file.Files.createTempDirectory("graft-emb").toString
+    val dir = tempDir("emb")
     val base = (0L until 40L).map { k =>
       (k, Array.tabulate(8)(d => ((k * 7 + d * 3) % 11).toFloat / 11f), (k % 3).toInt)
     }
@@ -459,7 +459,7 @@ class InvariantSpec extends SparkSpec {
     // ts IS NOT NULL filter must drop exactly what its inner joins drop
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-events").toString
+    val dir = tempDir("events")
     Seq((1L, Option("2021-03-04 05:06:07"), 10L), (2L, Option.empty[String], 11L))
       .toDF("event_id", "ts_s", "user_id")
       .select(col("event_id"), col("ts_s").cast("timestamp").as("ts"), col("user_id"),

@@ -50,7 +50,7 @@ class MaterializeSpec extends SparkSpec {
     // a driver collect (TakeOrdered top-k) and the main aggregate
     val expected = operators.TextOps.qVocabCoverage(spark, sf0001)
       .orderBy(col("k")).collect().toSeq
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-e2e").toString
+    val dir = tempDir("ckpt-e2e")
     spark.conf.set(Materialize.ReliableKey, "true")
     spark.conf.set(Materialize.DirKey, dir)
     try {
@@ -61,7 +61,7 @@ class MaterializeSpec extends SparkSpec {
   }
 
   test("reliable mode writes a real checkpoint under the configured dir and returns equal rows") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val dir = tempDir("ckpt")
     spark.conf.set(Materialize.ReliableKey, "true")
     spark.conf.set(Materialize.DirKey, dir)
     try {

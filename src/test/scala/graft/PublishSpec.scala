@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Ann, CorpusBuild, TextOps}
+import graft.operators.{Ann, CorpusBuild, Dedup, TextOps}
 import graft.plans.Publish
 import graft.sources.Ingest
 
@@ -26,7 +26,7 @@ class PublishSpec extends SparkSpec {
   private def conf = spark.sparkContext.hadoopConfiguration
   private def fs = new Path("/").getFileSystem(conf)
   private def fresh(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-publish-$tag").toString
+    tempDir(s"publish-$tag")
 
   /** Plain file-by-file copy of a local tree (checksum files included):
     * the LSH index alone holds thousands of bucket files. */
@@ -93,12 +93,11 @@ class PublishSpec extends SparkSpec {
   }
 
   /** What the next upsert sees: the manifest it returns plus the lane
-    * cursors and index marker it leaves. */
-  private def corpusView(root: String): Any = {
-    def rows(t: String) = spark.read.parquet(s"$root/$t.parquet").collect().map(_.toSeq).toSet
+    * cursors and index coverage it leaves. */
+  private def corpusView(root: String): Any =
     (CorpusBuild.corpusUpsert(spark, root, emptyIncrement).collect().map(_.toSeq).toSet,
-      rows("lanes"), rows("index-meta"))
-  }
+      spark.read.parquet(s"$root/lanes.parquet").collect().map(_.toSeq).toSet,
+      CorpusBuild.indexCoverage(spark, s"$root/index"))
 
   /** Committed corpus trees: written (s0), after one upsert (s1), after
     * a second upsert (s2), s1 compacted, and a different corpus. */
@@ -140,11 +139,51 @@ class PublishSpec extends SparkSpec {
     crashStates("corpus-compact", corpora("s1"), corpora("compacted"), identity, corpusView)
   }
 
-  Seq("manifest", "lanes", "index-meta").foreach { table =>
+  Seq("manifest", "lanes").foreach { table =>
     test(s"corpus $table.parquet, corpusUpsert: the next upsert serves the committed table") {
       crashStates(s"corpus-$table", corpora("s1"), corpora("s2"),
         root => s"$root/$table.parquet", corpusView)
     }
+  }
+
+  // ---- near-dup signature index: the root and an appended batch ----
+
+  private lazy val dedupTexts = Seq(
+    "the quick brown fox jumps over the lazy dog near the river bank today",
+    "completely different content about spark partitions and shuffle behavior",
+    "a third unrelated document mentioning parquet files and column pruning")
+
+  /** Verdicts `incrementalDedup` serves from the index at `p` for one
+    * near copy of each of the three texts. */
+  private def dedupServe(p: String): Set[Seq[Any]] = {
+    val s = spark
+    import s.implicits._
+    val probes = dedupTexts.zipWithIndex.map { case (t, i) => (100L + i, t + " tonight") }
+    rowSet(Dedup.incrementalDedup(spark, p, probes.toDF("doc_id", "text")))
+  }
+
+  test("dedup index root, buildDedupIndex: incrementalDedup sees the committed index") {
+    val base = fresh("dedup")
+    Dedup.buildDedupIndex(spark, docsDir(Seq(1L -> dedupTexts(0))), s"$base/prev")
+    Dedup.buildDedupIndex(spark, docsDir(Seq(1L -> dedupTexts(0), 3L -> dedupTexts(2))),
+      s"$base/next")
+    crashStates("dedup", s"$base/prev", s"$base/next", identity, dedupServe)
+  }
+
+  test("dedup index batch, appendDedupIndex: incrementalDedup sees the committed batch") {
+    val s = spark
+    import s.implicits._
+    val base = fresh("dedup-batch")
+    Dedup.buildDedupIndex(spark, docsDir(Seq(1L -> dedupTexts(0))), s"$base/resident")
+    // two committed versions of batch 10 holding different docs
+    def version(tag: String, docs: Seq[(Long, String)]): String = {
+      copy(s"$base/resident", s"$base/$tag")
+      Dedup.appendDedupIndex(docs.toDF("doc_id", "text"), s"$base/$tag", 10L)
+      s"$base/$tag"
+    }
+    val prev = version("prev", Seq(10L -> dedupTexts(1)))
+    val next = version("next", Seq(10L -> dedupTexts(1), 11L -> dedupTexts(2)))
+    crashStates("dedup-batch", prev, next, Publish.batchOf(_, 10L), dedupServe)
   }
 
   // ---- ANN index roots ----

@@ -419,7 +419,7 @@ class ScaleOpsSpec extends SparkSpec {
   test("q_kmv_overlap: planted overlaps — small pairs exact, sketched pairs within 4 sigma") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-kmv").toString
+    val dir = tempDir("kmv")
     // planted audiences: x∩y = 500 of 3500 union (sketched), s1∩s2 =
     // 21 of 80 union (below K=256 -> the exact fast path)
     val rows =

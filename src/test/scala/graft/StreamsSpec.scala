@@ -391,7 +391,7 @@ class StreamsSpec extends SparkSpec {
     import scala.jdk.CollectionConverters._
     val s = spark
     import s.implicits._
-    val root = JFiles.createTempDirectory("graft-pub").toString
+    val root = tempDir("pub")
     val (src, dest, ck) = (s"$root/src", s"$root/dest", s"$root/ck")
     JFiles.createDirectories(Paths.get(src))
     var fileNo = 0
@@ -445,7 +445,7 @@ class StreamsSpec extends SparkSpec {
     import scala.jdk.CollectionConverters._
     val s = spark
     import s.implicits._
-    val root = JFiles.createTempDirectory("graft-incr").toString
+    val root = tempDir("incr")
     val (src, dest, ck) = (s"$root/src", s"$root/dest", s"$root/ck")
     JFiles.createDirectories(Paths.get(src))
 
@@ -685,7 +685,7 @@ class StreamsSpec extends SparkSpec {
       }
     }
     // batch twin over the identical rows
-    val dir = java.nio.file.Files.createTempDirectory("graft-rate").toString
+    val dir = tempDir("rate")
     events.toDF()
       .select(col("event_id"), timestamp_millis(col("ts_ms")).as("ts"),
         col("user_id"), col("event_type"), lit(1.0).as("value"))
@@ -756,7 +756,7 @@ class StreamsSpec extends SparkSpec {
       (4L, 6L, 800L, "purchase"),                            // purchase with no view → no funnel row
       (1L, 7L, 3000L, "purchase"),                           // batch 2
       (3L, 8L, 1200L, "click"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-funnel").toString
+    val dir = tempDir("funnel")
     evRows.toDF("user_id", "event_id", "ts_ms", "event_type")
       .select(col("event_id"), col("user_id"),
         timestamp_millis(col("ts_ms")).as("ts"), col("event_type"))
@@ -853,9 +853,9 @@ class StreamsSpec extends SparkSpec {
     import s.implicits._
     implicit val ctx = s.sqlContext
     import org.apache.spark.sql.functions.col
-    val full = java.nio.file.Files.createTempDirectory("graft-sivf-full").toString
-    val incr = java.nio.file.Files.createTempDirectory("graft-sivf-incr").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-sivf-ckpt").toString
+    val full = tempDir("sivf-full")
+    val incr = tempDir("sivf-incr")
+    val ckpt = tempDir("sivf-ckpt")
     graft.operators.Ann.buildIvfIndex(s, sf0001, full)
     graft.operators.Ann.buildIvfIndex(s, sf0001, incr, col("vec_id") % 5 =!= 0)
     val (corpus, _) = graft.operators.Ann.split(s, sf0001)
@@ -881,7 +881,7 @@ class StreamsSpec extends SparkSpec {
     implicit val ctx = s.sqlContext
     // freeze the model once (the production contract: train offline,
     // encode on the wire)
-    val model = java.nio.file.Files.createTempDirectory("graft-sbpe").toString + "/merges"
+    val model = tempDir("sbpe") + "/merges"
     graft.operators.TextOps.buildBpeModel(s, sf0001, model)
     val docRows = graft.sources.Ingest.table(s, sf0001, "documents")
       .select("doc_id", "text").collect()
@@ -908,7 +908,7 @@ class StreamsSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
-    val model = java.nio.file.Files.createTempDirectory("graft-suni").toString + "/pieces"
+    val model = tempDir("suni") + "/pieces"
     graft.operators.TextOps.buildUnigramModel(s, sf0001, model)
     val docRows = graft.sources.Ingest.table(s, sf0001, "documents")
       .select("doc_id", "text").collect()
@@ -934,9 +934,9 @@ class StreamsSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
-    val idx = java.nio.file.Files.createTempDirectory("graft-nov-idx").toString
-    val out = java.nio.file.Files.createTempDirectory("graft-nov-out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-nov-ckpt").toString
+    val idx = tempDir("nov-idx")
+    val out = tempDir("nov-out")
+    val ckpt = tempDir("nov-ckpt")
     val docRows = graft.sources.Ingest.table(s, sf0001, "documents")
       .select("doc_id", "text").collect()
       .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
@@ -981,9 +981,9 @@ class StreamsSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
-    val model = java.nio.file.Files.createTempDirectory("graft-slm").toString + "/model"
-    val out = java.nio.file.Files.createTempDirectory("graft-slm-out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-slm-ckpt").toString
+    val model = tempDir("slm") + "/model"
+    val out = tempDir("slm-out")
+    val ckpt = tempDir("slm-ckpt")
     graft.operators.TextOps.buildLmModel(s, sf0001, model)
     val docRows = graft.sources.Ingest.table(s, sf0001, "documents")
       .select("doc_id", "lang", "text").collect()
@@ -1022,9 +1022,9 @@ class StreamsSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
-    val model = java.nio.file.Files.createTempDirectory("graft-sdsir").toString + "/model"
-    val out = java.nio.file.Files.createTempDirectory("graft-sdsir-out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-sdsir-ckpt").toString
+    val model = tempDir("sdsir") + "/model"
+    val out = tempDir("sdsir-out")
+    val ckpt = tempDir("sdsir-ckpt")
     graft.operators.TextOps.buildDsirModel(s, sf0001, model)
     val docRows = graft.sources.Ingest.table(s, sf0001, "documents")
       .select("doc_id", "text").collect()
@@ -1049,9 +1049,9 @@ class StreamsSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
-    val model = java.nio.file.Files.createTempDirectory("graft-sperc").toString + "/model"
-    val out = java.nio.file.Files.createTempDirectory("graft-sperc-out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-sperc-ckpt").toString
+    val model = tempDir("sperc") + "/model"
+    val out = tempDir("sperc-out")
+    val ckpt = tempDir("sperc-ckpt")
     graft.operators.TextOps.buildPerceptronModel(s, sf0001, model)
     val docRows = graft.sources.Ingest.table(s, sf0001, "documents")
       .select("doc_id", "text").collect()
@@ -1103,14 +1103,13 @@ class StreamsSpec extends SparkSpec {
     // cross-batch case where batch 2 plants a near-dup of a batch-1
     // SURVIVOR, which only dedups if the tier really appends accepted
     // signatures to the index between micro-batches.
-    import graft.operators.{CorpusBuild, Dedup}
+    import graft.operators.CorpusBuild
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
 
     def publish(tag: String): String = {
-      val out = java.nio.file.Files
-        .createTempDirectory(s"graft-stream-near-$tag").toString + "/corpus"
+      val out = tempDir(s"stream-near-$tag") + "/corpus"
       CorpusBuild.corpusWrite(spark, sf0001, out)
       out
     }
@@ -1147,11 +1146,11 @@ class StreamsSpec extends SparkSpec {
     assert(upsertAccepted === Set(maxId + 1001L, maxId + 2003L),
       "fixture sanity: exactly the two novel docs survive the batch upserts")
 
-    // stream side: bootstrap the index the way corpusUpsert does, then
+    // stream side: bootstrap the index with an empty upsert, then
     // drive the same increments as two micro-batches
     val idx = s"$outStream/index"
-    Dedup.buildDedupIndexFrom(
-      spark.read.parquet(s"$outStream/shards.parquet").select("doc_id", "text"), idx)
+    CorpusBuild.corpusUpsert(spark, outStream,
+      Seq.empty[(Long, String, String, String)].toDF("doc_id", "source", "lang", "text"))
     val perBatch = scala.collection.mutable.Map.empty[Long, Seq[(Long, Boolean, Boolean, Boolean)]]
     val ms = MemoryStream[(Long, String, String, String)]
     val docs = ms.toDF().select(col("_1").as("doc_id"), col("_2").as("source"),

@@ -177,7 +177,7 @@ class TextOpsSpec extends SparkSpec {
   test("pii scrub: emails/ssns/number runs redacted most-specific-first, counts consistent") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-events").toString
+    val dir = tempDir("events")
     Seq(
       (1L, "contact bob@example.com or 123-45-6789 now"),
       (2L, "{\"k\": 87}"),
@@ -447,7 +447,7 @@ class TextOpsSpec extends SparkSpec {
   }
 
   test("persisted BPE model: encode-from-model == train-and-encode") {
-    val path = java.nio.file.Files.createTempDirectory("graft-bpe").toString + "/merges"
+    val path = tempDir("bpe") + "/merges"
     TextOps.buildBpeModel(spark, sf0001, path)
     // the frozen model round-trips: same merges, same order, same
     // counts. buildBpeModel serves from the session cache
@@ -548,7 +548,7 @@ class TextOpsSpec extends SparkSpec {
   }
 
   test("lm model serve: persisted model scores identically to the self-contained query") {
-    val model = java.nio.file.Files.createTempDirectory("graft-lm").toString + "/model"
+    val model = tempDir("lm") + "/model"
     TextOps.buildLmModel(spark, sf0001, model)
     val shape = (r: org.apache.spark.sql.Row) =>
       (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3), r.getLong(4),
@@ -611,7 +611,7 @@ class TextOpsSpec extends SparkSpec {
   }
 
   test("dsir model serve: persisted model scores identically to the self-contained query") {
-    val model = java.nio.file.Files.createTempDirectory("graft-dsir").toString + "/model"
+    val model = tempDir("dsir") + "/model"
     TextOps.buildDsirModel(spark, sf0001, model)
     val shape = (r: org.apache.spark.sql.Row) =>
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))
@@ -680,7 +680,7 @@ class TextOpsSpec extends SparkSpec {
   test("perceptron: exact driver-side replay of the batch epochs") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-perc").toString
+    val dir = tempDir("perc")
     Seq(
       (1L, "the cat of the house", "en"),
       (2L, "a dog and a bird", "en"),
@@ -719,7 +719,7 @@ class TextOpsSpec extends SparkSpec {
 
   test("classifier_eval: confusion cells partition each source; grading matches the serve path") {
     val s = spark
-    val model = java.nio.file.Files.createTempDirectory("graft-ceval").toString + "/model"
+    val model = tempDir("ceval") + "/model"
     TextOps.buildPerceptronModel(s, sf0001, model)
     val evalRows = TextOps.qClassifierEval(s, sf0001).collect()
     val perSource = graft.sources.Ingest.table(s, sf0001, "documents")
@@ -749,7 +749,7 @@ class TextOpsSpec extends SparkSpec {
 
   test("perceptron model serve: frozen weights classify identically to the final epoch") {
     val s = spark
-    val model = java.nio.file.Files.createTempDirectory("graft-percm").toString + "/model"
+    val model = tempDir("percm") + "/model"
     TextOps.buildPerceptronModel(s, sf0001, model)
     val hist = TextOps.qPerceptron(s, sf0001).collect()
       .map(r => (r.getLong(0), r.getLong(2), r.getLong(3), r.getLong(4))).sortBy(_._1)
@@ -771,7 +771,7 @@ class TextOpsSpec extends SparkSpec {
   test("dataset_card: one-row summary with normalization-aware dup share") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-card").toString
+    val dir = tempDir("card")
     Seq(
       (1L, "a b c", "en", "s1"),
       (2L, "A  b   C", "fr", "s2"), // contentMd5-normalized dup of doc 1
@@ -1006,7 +1006,7 @@ class TextOpsSpec extends SparkSpec {
   test("lang_confusion: planted multi-language corpus recovers diagonal + known off-diagonal") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-langconf").toString
+    val dir = tempDir("langconf")
     val en = "the a of and to is"
     val es = "el la de que y en"
     val de = "der die das und ist zu"
@@ -1040,7 +1040,7 @@ class TextOpsSpec extends SparkSpec {
   test("safety_screen: planted per-category positives recover exactly; escalation + density block") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-safety").toString
+    val dir = tempDir("safety")
     val filler = (1 to 40).map(i => s"clean$i").mkString(" ") // 40 clean tokens
     val rows =
       // src_a: 3 toxicity hits (low density: 1 term in 41 → 24 pm ≥ 5 → blocked!
@@ -1084,7 +1084,7 @@ class TextOpsSpec extends SparkSpec {
   test("safety_screen: obfuscated variants (accents, case, tabs, punct, leet) are recovered") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-safetyob").toString
+    val dir = tempDir("safetyob")
     val pad = (1 to 300).map(j => s"pad$j").mkString(" ")
     val pad2 = (1 to 500).map(j => s"pad$j").mkString(" ") // 2 hits / 502 toks < 5 pm
     val rows = Seq(
@@ -1115,7 +1115,7 @@ class TextOpsSpec extends SparkSpec {
   test("dsir_weights: planted target-lookalike docs outscore off-target docs") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-dsirsep").toString
+    val dir = tempDir("dsirsep")
     // target slice = lang='en' inside the hash train split; plant
     // DISJOINT vocabularies so target likeness is decidable
     val tgtText = "alpha beta gamma delta epsilon zeta alpha beta"
@@ -1141,7 +1141,7 @@ class TextOpsSpec extends SparkSpec {
   test("unimax_mix: exact water-filling — caps honored, budget exactly spent, closed form = reference") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-unimax").toString
+    val dir = tempDir("unimax")
     // planted strata: a tiny lang (caps hard), a mid lang (caps), and a
     // huge lang (absorbs the leftover) — the shape UniMax exists for
     val rows =
