@@ -16,8 +16,16 @@ import graft.sources.Ingest
   *     the corpus (the shuffle-free baseline, O(N·Q) compute);
   *   - LSH = corpus bucketed by cross-polytope hashing, queries
   *     multi-probe their nearest polytope vertices, candidates come
-  *     from an equi-join on the (table,vertex) key — at 100 TB the
-  *     corpus scan drops to the probed buckets only.
+  *     from an equi-join on the (table,vertex) key;
+  *   - IVF = corpus assigned to its nearest k-means cell, queries
+  *     probe their nearest cells, candidates come from an equi-join
+  *     on the cell id.
+  * Each ANN step is one function that the in-session query rows and
+  * the persisted-index serves share: an assign pass ([[lshAssign]],
+  * [[ivfAssign]]), a probe step ([[lshProbes]], [[ivfProbes]]), a
+  * candidate join ([[lshCandidates]], [[ivfCandidates]]) and the
+  * cosine score ([[cosineScored]]). A query row passes the corpus
+  * assigned in memory, a serve passes the rows it reads from disk.
   * Top-k per query is a window over the query partition (k rows kept
   * per partition; Spark pushes the rank filter into the sort).
   */
@@ -25,11 +33,11 @@ object Ann {
 
   private val K = 5
 
-  /** Audit query-set size — FIXED, not a corpus fraction (VERDICT r16
-    * #1): with Q₀ constant, every exact baseline in the audit family
-    * (brute force, quantized, both recall rows, both probe curves) is
-    * O(N·Q₀) — linear in the corpus — where the r1-r16 `vec_id % 50`
-    * fraction made them O(N²/50), unrunnable at 100×. */
+  /** Audit query-set size — FIXED, not a corpus fraction: with Q₀
+    * constant, every exact baseline in the audit family (brute force,
+    * quantized, both recall rows, both probe curves) is O(N·Q₀) —
+    * linear in the corpus — where a `vec_id % 50` fraction made them
+    * O(N²/50), unrunnable at 100×. */
   private[graft] val QueryK = 128
 
   /** Corpus + query split. Queries are the [[QueryK]] vectors with the
@@ -70,6 +78,18 @@ object Ann {
        |    FROM embeddings)
        |  ORDER BY u63, vec_id LIMIT $QueryK)""".stripMargin
 
+  /** The exact cosine of a (corpus row, query) pair: `embedding` and
+    * `nrm` against `q_emb` and `q_nrm`. */
+  private def cosine: Column =
+    (Dedup.dotExpr("embedding", "q_emb") / (col("nrm") * col("q_nrm"))).as("cosine")
+
+  /** The score step of every float candidate set: drop each query's
+    * self-pair and project (query_id, neighbor_id, cosine), then the
+    * `carry` columns. */
+  private def cosineScored(pairs: DataFrame, carry: String*): DataFrame =
+    pairs.filter(col("vec_id") =!= col("query_id"))
+      .select(Seq(col("query_id"), col("vec_id").as("neighbor_id"), cosine) ++ carry.map(col): _*)
+
   private def topK(scored: DataFrame): DataFrame =
     scored
       .withColumn("rnk", row_number().over(
@@ -83,13 +103,7 @@ object Ann {
   // ------------------------------------------------------------------
   def qAnnBruteforce(s: SparkSession, dir: String): DataFrame = {
     val (corpus, queries) = split(s, dir)
-    val scored = corpus.crossJoin(broadcast(queries))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(
-        col("query_id"),
-        col("vec_id").as("neighbor_id"),
-        (Dedup.dotExpr("embedding", "q_emb") / (col("nrm") * col("q_nrm"))).as("cosine"))
-    topK(scored)
+    topK(cosineScored(corpus.crossJoin(broadcast(queries))))
   }
 
   /** Oracle for [[qAnnBruteforce]] — fully hash-checked: DuckDB's
@@ -133,8 +147,8 @@ object Ann {
   // nearest polytope vertices per table; the corpus indexes under its
   // single nearest). Cross-polytope (Andoni et al. 2015) replaced r3's
   // sign-random-projection. Why: (a) asymptotically optimal ρ for
-  // angular distance; (b) the query explodes to nTables×probes = 48
-  // probe rows instead of sign-LSH's nTables×(1+bits+C(bits,2)) ≈
+  // angular distance; (b) the query explodes to tables×probes = 48
+  // probe rows instead of sign-LSH's tables×(1+bits+C(bits,2)) ≈
   // 1264 at equivalent recall — a 26× smaller broadcast; (c)
   // table+vertex encode into a single int so the candidate step is
   // one equi-join on one key — shuffle-partitionable, never a scan.
@@ -161,35 +175,47 @@ object Ann {
   private[operators] val LshSeed = 0x5EEDA117L
   private[operators] val Dim = 64
 
-  /** Candidate (query, neighbor, cosine) rows for a given config —
-    * the tunable core of [[qAnnLsh]], exposed so the spec can measure
-    * the recall/candidate-fraction trade explicitly.
+  /** Map-only bucket assignment: one (vec_id, embedding, nrm, bkey)
+    * row per vector per table, keyed by its nearest polytope vertex.
+    * No join, no shuffle: the rotations derive from the seed inside
+    * the expression. The in-memory index of [[lshScored]] and
+    * [[qLshProbeCurve]], and the rows [[buildLshIndex]] and
+    * [[lshUpsertBatch]] persist.
     */
-  private[graft] def lshScored(
-      s: SparkSession, dir: String, nTables: Int, probes: Int): DataFrame = {
+  private[graft] def lshAssign(df: DataFrame): DataFrame =
+    df.select(col("vec_id"), col("embedding"), col("nrm"),
+      explode(graft.functions.VectorFunctions
+        .xpolyKeys(col("embedding"), LshSeed, LshTables, Dim, probes = 1)).as("bkey"))
+
+  /** Each query's probe keys: its `probes` nearest polytope vertices
+    * in every table, one (query_id, q_emb, q_nrm, bkey) row per key. */
+  private def lshProbes(queries: DataFrame, probes: Int): DataFrame =
+    queries.select(col("query_id"), col("q_emb"), col("q_nrm"),
+      explode(graft.functions.VectorFunctions
+        .xpolyKeys(col("q_emb"), LshSeed, LshTables, Dim, probes)).as("bkey"))
+
+  /** LSH candidates: the `index` rows ([[lshAssign]]'s shape) that
+    * share a bucket key with a `probed` row, cosine-scored once per
+    * (query, neighbor) pair, since a pair may collide in several
+    * tables and probes. */
+  private def lshCandidates(index: DataFrame, probed: DataFrame): DataFrame =
+    cosineScored(index.join(broadcast(probed), Seq("bkey"))).distinct()
+
+  /** Candidate (query, neighbor, cosine) rows at `probes` probed
+    * vertices per table over the corpus assigned in memory — the core
+    * of [[qAnnLsh]], exposed so the spec can measure the
+    * recall/candidate-fraction trade. [[lshServe]] runs the same
+    * candidate step over a persisted index.
+    */
+  private[graft] def lshScored(s: SparkSession, dir: String, probes: Int): DataFrame = {
     val (corpus, queries) = split(s, dir)
-    val bucketed = corpus
-      .select(col("vec_id"), col("embedding"), col("nrm"),
-        explode(graft.functions.VectorFunctions
-          .xpolyKeys(col("embedding"), LshSeed, nTables, Dim, probes = 1)).as("bkey"))
-    val probed = queries
-      .select(col("query_id"), col("q_emb"), col("q_nrm"),
-        explode(graft.functions.VectorFunctions
-          .xpolyKeys(col("q_emb"), LshSeed, nTables, Dim, probes)).as("bkey"))
-    bucketed.join(broadcast(probed), Seq("bkey"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(
-        col("query_id"),
-        col("vec_id").as("neighbor_id"),
-        (Dedup.dotExpr("embedding", "q_emb") / (col("nrm") * col("q_nrm"))).as("cosine"))
-      .distinct() // a pair may collide in several tables/probes
+    lshCandidates(lshAssign(corpus), lshProbes(queries, probes))
   }
 
   def qAnnLsh(s: SparkSession, dir: String): DataFrame =
-    topK(lshScored(s, dir, LshTables, LshProbes))
+    topK(lshScored(s, dir, LshProbes))
 
-  /** Oracle for [[qAnnLsh]] — fully hash-checked (VERDICT r9 #3,
-    * promoted from rows-only). The cross-polytope "model state" is 16
+  /** Oracle for [[qAnnLsh]] — fully hash-checked. The cross-polytope "model state" is 16
     * seeded 64×64 gaussian rotations, but the stream is the SAME
     * `scala.util.Random(seed + t).nextGaussian` fill
     * [[graft.functions.CrossPolytopeKeys]] materializes, and
@@ -358,8 +384,8 @@ object Ann {
   private[graft] def trainCodebook(corpus: DataFrame, iters: Int): Array[Double] = {
     // hash-spread seed pick. md5 (not xxhash64): same spread quality,
     // but a STANDARD hash both engines implement identically, so the
-    // whole training loop is SQL-emulable (see qAnnIvfSql's oracle —
-    // VERDICT r9 #4 promoted q_ann_ivf from rows-only to hash-checked)
+    // whole training loop is SQL-emulable (see qAnnIvfSql's oracle,
+    // which hash-checks q_ann_ivf)
     val seeds = corpus
       .withColumn("h", md5(col("vec_id").cast("string")))
       .orderBy(col("h"), col("vec_id")).limit(IvfCells) // TakeOrdered over k tiny rows
@@ -373,8 +399,8 @@ object Ann {
       // quantized to round(v·2^20) and summed as LONG — integer
       // addition is associative+commutative, so the refined centroids
       // are bit-identical regardless of partition count or partial-agg
-      // merge order — boundary vectors can't drift cells between runs
-      // (ADVICE r6). The 2^-21 quantization error is noise against the
+      // merge order — boundary vectors can't drift cells between runs.
+      // The 2^-21 quantization error is noise against the
       // float32 inputs; unlike a decimal(38,20) sum this stays inside
       // whole-stage codegen (the decimal path measured ~5× slower at
       // sf0.1). Headroom: |v| < 2^7 ⇒ |q| < 2^27, safe to ~2^35 rows
@@ -404,7 +430,7 @@ object Ann {
     cent
   }
 
-  /** Session-scoped trained-codebook cache (VERDICT r12 #1): the
+  /** Session-scoped trained-codebook cache: the
     * `q_ann_ivf` query row used to re-run the Lloyd loop on every
     * invocation — ~2.9 s of the ~4 s bench entry was model-build tax
     * that a deployment amortizes via [[buildIvfIndex]]. Same device as
@@ -441,20 +467,28 @@ object Ann {
     pqIndexCache.clear()
   }
 
-  private[graft] def ivfScored(s: SparkSession, dir: String, probes: Int): DataFrame = {
-    import s.implicits._
-    val (corpus, queries) = split(s, dir)
-    val cent = sessionCodebook(s, dir, corpus)
-    // serving index: ONE map-only pass, no join, no shuffle
-    val index = corpus.withColumn("cell",
+  /** Map-only cell assignment against a frozen codebook: `df` plus
+    * its nearest `cell`. No join, no shuffle: the codebook ships
+    * inside the expression. The in-memory index of [[ivfScored]], the
+    * residual input of the PQ passes, and the rows [[buildIvfIndex]],
+    * [[ivfUpsertBatch]] and the IVF-PQ halves persist.
+    */
+  private[graft] def ivfAssign(df: DataFrame, cent: Array[Double]): DataFrame =
+    df.withColumn("cell",
       graft.functions.VectorFunctions.nearestCell(col("embedding"), cent.toSeq, Dim))
-    // probe list: rank the k cells per query (queries are the small
-    // side; float centroid copies only affect probe ORDER, assignment
-    // above stays double)
+
+  /** Each query's top-`probes` cells by float cosine to the frozen
+    * centroids, as (query_id, q_emb, q_nrm, cell, prk) rows, `prk`
+    * being the cell's probe rank. Queries are the small side; the
+    * float centroid copies only affect probe ORDER, assignment stays
+    * double. */
+  private def ivfProbes(s: SparkSession, queries: DataFrame, cent: Array[Double],
+      probes: Int): DataFrame = {
+    import s.implicits._
     val centDf = (0 until IvfCells)
-      .map(t => (t, cent.slice(t * Dim, (t + 1) * Dim).map(_.toFloat)))
+      .map(c => (c, cent.slice(c * Dim, (c + 1) * Dim).map(_.toFloat)))
       .toDF("cell", "centroid")
-    val probed = queries
+    queries
       .crossJoin(broadcast(centDf.withColumn("cnrm", Dedup.norm("centroid"))))
       .withColumn("cos",
         Dedup.dotExpr("q_emb", "centroid") / (col("q_nrm") * col("cnrm")))
@@ -462,21 +496,26 @@ object Ann {
         Window.partitionBy("query_id").orderBy(col("cos").desc, col("cell"))))
       .filter(col("prk") <= probes)
       .select(col("query_id"), col("q_emb"), col("q_nrm"), col("cell"), col("prk"))
-    index.join(broadcast(probed), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(
-        col("query_id"),
-        col("vec_id").as("neighbor_id"),
-        (Dedup.dotExpr("embedding", "q_emb") / (col("nrm") * col("q_nrm"))).as("cosine"),
-        col("prk"))
+  }
+
+  /** IVF candidates: the `index` rows ([[ivfAssign]]'s shape) in each
+    * query's probed cells, cosine-scored and tagged with the probe
+    * rank `prk` of the cell that recruited them. */
+  private def ivfCandidates(index: DataFrame, probed: DataFrame): DataFrame =
+    cosineScored(index.join(broadcast(probed), Seq("cell")), "prk")
+
+  private[graft] def ivfScored(s: SparkSession, dir: String, probes: Int): DataFrame = {
+    val (corpus, queries) = split(s, dir)
+    val cent = sessionCodebook(s, dir, corpus)
+    ivfCandidates(ivfAssign(corpus, cent), ivfProbes(s, queries, cent, probes))
   }
 
   def qAnnIvf(s: SparkSession, dir: String): DataFrame =
     topK(ivfScored(s, dir, IvfProbes))
 
-  /** Oracle for [[qAnnIvf]] — fully hash-checked (VERDICT r9 #4,
-    * promoted from rows-only). Unlike the LSH rotations (code
-    * constants → literal interpolation), the codebook is DATA-derived,
+  /** Oracle for [[qAnnIvf]] — fully hash-checked. Unlike the LSH
+    * rotations (code constants → literal interpolation), the codebook
+    * is DATA-derived,
     * so a literal-codebook SQL would pin one scale factor; instead the
     * oracle RE-TRAINS inside DuckDB, which works because every
     * training step was already built deterministic:
@@ -676,14 +715,6 @@ object Ann {
        |ORDER BY n_probes""".stripMargin
   }
 
-  /** Map-only cell assignment against a frozen codebook — the pass
-    * [[buildIvfIndex]] and [[ivfUpsertBatch]] share. No join, no
-    * shuffle: the codebook ships inside the expression.
-    */
-  private[graft] def ivfAssign(df: DataFrame, cent: Array[Double]): DataFrame =
-    df.withColumn("cell",
-      graft.functions.VectorFunctions.nearestCell(col("embedding"), cent.toSeq, Dim))
-
   /** Columns of the float rows [[ivfAssign]] writes: the IVF
     * `index.parquet` and the IVF-PQ `rerank.parquet`, `cell` being the
     * partition column. */
@@ -794,70 +825,36 @@ object Ann {
       }
   }
 
-  /** Per-query probe list of the IVF serves: each query's top-`probes`
-    * cells by float cosine to the frozen centroids, plus the probed
-    * cells as a partition filter for the index scans. The list is
-    * queries × probes rows, so collecting its cells is driver-safe by
-    * construction. */
-  private def probeList(s: SparkSession, queries: DataFrame, cent: Array[Double],
-      probes: Int): (DataFrame, Column) = {
-    import s.implicits._
-    val centDf = (0 until IvfCells)
-      .map(c => (c, cent.slice(c * Dim, (c + 1) * Dim).map(_.toFloat)))
-      .toDF("cell", "centroid")
-    val probed = queries
-      .crossJoin(broadcast(centDf.withColumn("cnrm", Dedup.norm("centroid"))))
-      .withColumn("cos",
-        Dedup.dotExpr("q_emb", "centroid") / (col("q_nrm") * col("cnrm")))
-      .withColumn("prk", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("cos").desc, col("cell"))))
-      .filter(col("prk") <= probes)
-      .select(col("query_id"), col("q_emb"), col("q_nrm"), col("cell"))
-    val probedCells = probed.select("cell").distinct().collect().map(_.getInt(0))
-    (probed, col("cell").isin(probedCells.map(Integer.valueOf): _*))
-  }
+  /** The cells of an [[ivfProbes]] list as a static `isin` on the
+    * `cell` partition column of a persisted index, so its scan never
+    * opens an unprobed cell directory. The list is queries × probes
+    * rows, so collecting its cells is driver-safe by construction. */
+  private def probedCells(probed: DataFrame): Column =
+    col("cell").isin(
+      probed.select("cell").distinct().collect().map(r => Integer.valueOf(r.getInt(0))): _*)
 
-  /** Serve top-k from a prebuilt [[buildIvfIndex]] index. The probed
-    * cell set is computed from the (tiny) query side and pushed as a
-    * STATIC `isin` on the partition column — the scan never opens an
-    * unprobed cell directory.
+  /** Serve top-k from a prebuilt [[buildIvfIndex]] index: [[ivfScored]]'s
+    * candidate step over the persisted rows, the scan pruned to the
+    * probed cells.
     */
   private[graft] def ivfServe(s: SparkSession, dir: String, path: String,
       probes: Int = IvfProbes): DataFrame = {
     Publish.recover(s, path)
     val (_, queries) = split(s, dir)
-    val (probed, cellFilter) = probeList(s, queries, readCodebook(s, path), probes)
+    val probed = ivfProbes(s, queries, readCodebook(s, path), probes)
     // resident build + streamed batches, pruned to the probed cells.
     // One batch per micro-batch since the last rebuild, which retires
     // them: a planner-side listing, not a data cost.
     val index = Publish.readRoots(s, Publish.roots(s, path), "index.parquet", FloatRowsDdl)
-      .filter(cellFilter)
-    val scored = index.join(broadcast(probed), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(
-        col("query_id"),
-        col("vec_id").as("neighbor_id"),
-        (Dedup.dotExpr("embedding", "q_emb") / (col("nrm") * col("q_nrm"))).as("cosine"))
-    topK(scored)
+      .filter(probedCells(probed))
+    topK(ivfCandidates(index, probed))
   }
 
   // ------------------------------------------------------------------
-  // Row 49: int8-quantized brute force — the memory/bandwidth scale
-  // path. Per-vector symmetric quantization (scale = max|x|/127)
-  // compresses float32 embeddings 4×: 4× more corpus per executor-GB,
-  // and the scoring loop is an integer MAC over byte arrays
-  // ([[graft.functions.Dot8]]). Cosine in quantized space needs no
-  // dequantization — the scales cancel:
-  //   cos8 = dot8(a,b) / sqrt(dot8(a,a)·dot8(b,b)).
-  // The ONLY approximation is the rounding in the codes; AnnSpec pins
-  // the recall cost vs the exact float path. Composes with IVF/LSH
-  // (quantize the bucketed candidates) — kept standalone here so the
-  // quantization error is measured in isolation.
-  // ------------------------------------------------------------------
-  // Persisted LSH index (VERDICT r14 #4) — the [[buildIvfIndex]] triad
-  // for the data-OBLIVIOUS family. Layout:
+  // Persisted LSH index — the [[buildIvfIndex]] triad for the
+  // data-OBLIVIOUS family. Layout:
   //   <path>/meta.parquet                 (lsh_seed, n_tables, dim)
-  //   <path>/index.parquet/bkey=N/        (vec_id, embedding, nrm)
+  //   <path>/index.parquet                (vec_id, embedding, nrm, bkey)
   //   <path>/stream/batch-…/index.parquet (streamed batches, same layout)
   // The "model" is the seed: the 16 cross-polytope rotations derive
   // deterministically from it inside [[graft.functions.CrossPolytopeKeys]],
@@ -868,16 +865,24 @@ object Ann {
   // a deliberate 16× storage-for-recall trade (the standard LSH
   // memory bill; a postings-only layout with a vec_id join back would
   // store once but pay a corpus shuffle per serve, the wrong side of
-  // the trade for a read-mostly index). Bucket directories are bounded
-  // by construction: ≤ tables × 2·dim = 2048 partition values at ANY
-  // corpus size, so the layout scales by bucket CONTENT, not count.
+  // the trade for a read-mostly index).
+  //
+  // `index.parquet` is NOT partitioned by bucket, unlike the IVF
+  // cells. The bucket space is small (tables × 2·dim = 2,048 keys at
+  // any corpus size) and a serve probes [[QueryK]] × [[LshProbes]] =
+  // 384 keys in each table's 128, so the probed buckets hold ~96% of
+  // the index rows (95.7–96.4% at sf0.001–sf0.1). Bucket pruning
+  // would skip at most ~4% of the scan, at the price of a driver
+  // collect per serve and one directory per bucket per write. A root
+  // with `bkey=N` directories still reads under [[LshRowsDdl]]:
+  // partition discovery supplies `bkey`.
   // ------------------------------------------------------------------
 
   /** Recover the index root, then check its meta against the session
     * constants — the first step of every LSH entry point. */
   private def lshMetaOk(s: SparkSession, path: String): Unit = {
     Publish.recover(s, path)
-    // fields read BY NAME (ADVICE r15): validation must not depend on
+    // fields read BY NAME: validation must not depend on
     // the writer's column order — an ordinal read of a reordered meta
     // file would misattribute seed/tables/dim and either spuriously
     // reject a good index or accept a mismatched one.
@@ -889,18 +894,8 @@ object Ann {
         s"dim=$dim) — session expects ($LshSeed, $LshTables, $Dim); rebuild the index")
   }
 
-  /** Columns of the LSH `index.parquet`, `bkey` being the partition
-    * column. */
+  /** Columns of the LSH `index.parquet` ([[lshAssign]]'s rows). */
   private val LshRowsDdl = "vec_id BIGINT, embedding ARRAY<FLOAT>, nrm DOUBLE, bkey INT"
-
-  /** Map-only bucket assignment — the pass [[buildLshIndex]] and
-    * [[lshUpsertBatch]] share. No join, no shuffle: the rotations
-    * derive from the seed inside the expression.
-    */
-  private[graft] def lshAssign(df: DataFrame): DataFrame =
-    df.select(col("vec_id"), col("embedding"), col("nrm"),
-      explode(graft.functions.VectorFunctions
-        .xpolyKeys(col("embedding"), LshSeed, LshTables, Dim, probes = 1)).as("bkey"))
 
   /** @param indexFilter bounds the initially-indexed subset (AnnSpec
     *   builds a partial index and upserts the remainder to prove
@@ -910,13 +905,12 @@ object Ann {
       indexFilter: Column = lit(true)): Unit = {
     import s.implicits._
     val (corpus, _) = split(s, dir)
-    // one swap of the root: meta and buckets change together, and a
+    // one swap of the root: meta and rows change together, and a
     // rebuild retires the streamed batches
     Publish(s, path) { tmp =>
       Seq((LshSeed, LshTables, Dim)).toDF("lsh_seed", "n_tables", "dim")
         .write.parquet(s"$tmp/meta.parquet")
-      lshAssign(corpus.filter(indexFilter))
-        .write.partitionBy("bkey").parquet(s"$tmp/index.parquet")
+      lshAssign(corpus.filter(indexFilter)).write.parquet(s"$tmp/index.parquet")
     }
   }
 
@@ -930,49 +924,31 @@ object Ann {
     if (!arrivals.isEmpty) {
       lshMetaOk(s, path)
       Publish(s, Publish.batchOf(path, batchId)) { tmp =>
-        lshAssign(arrivals).write.partitionBy("bkey").parquet(s"$tmp/index.parquet")
+        lshAssign(arrivals).write.parquet(s"$tmp/index.parquet")
       }
     }
 
-  /** Serve top-k from a prebuilt [[buildLshIndex]] index. The probed
-    * bucket set (≤ queries × tables × probes keys) is computed on the
-    * tiny query side and pushed as a static `isin` on the partition
-    * column — the scan never opens an unprobed bucket directory, the
-    * exact storage-layout discount [[ivfServe]] gets from cells.
-    * Candidate scoring and the cross-table `distinct` replay
-    * [[lshScored]] on identical rows, so serve ≡ inline by
-    * construction (AnnSpec pins it).
+  /** Serve top-k from a prebuilt [[buildLshIndex]] index:
+    * [[lshScored]]'s candidate step over the persisted rows (the
+    * resident build and its streamed batches) instead of the corpus
+    * assigned in memory. Same rows, same step, so serve ≡ inline by
+    * construction (AnnSpec pins it). The whole index is scanned; see
+    * the layout note above for why there is no bucket pruning.
     */
   private[graft] def lshServe(s: SparkSession, dir: String, path: String,
       probes: Int = LshProbes): DataFrame = {
     lshMetaOk(s, path)
     val (_, queries) = split(s, dir)
-    val probed = queries
-      .select(col("query_id"), col("q_emb"), col("q_nrm"),
-        explode(graft.functions.VectorFunctions
-          .xpolyKeys(col("q_emb"), LshSeed, LshTables, Dim, probes)).as("bkey"))
-    // the probe-list is Q×tables×probes rows — driver-safe by construction
-    val probedKeys = probed.select("bkey").distinct().collect().map(_.getInt(0))
-    val keyFilter = col("bkey").isin(probedKeys.map(Integer.valueOf): _*)
     val index = Publish.readRoots(s, Publish.roots(s, path), "index.parquet", LshRowsDdl)
-      .filter(keyFilter)
-    val scored = index.join(broadcast(probed), Seq("bkey"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(
-        col("query_id"),
-        col("vec_id").as("neighbor_id"),
-        (Dedup.dotExpr("embedding", "q_emb") / (col("nrm") * col("q_nrm"))).as("cosine"))
-      .distinct() // a pair may collide in several tables/probes
-    topK(scored)
+    topK(lshCandidates(index, lshProbes(queries, probes)))
   }
 
   // ------------------------------------------------------------------
-  // IVF-PQ: PRODUCT-QUANTIZED codes inside the persisted IVF index
-  // (VERDICT r16 #2, upgraded r18 from per-vector int8 to true
-  // multi-subspace PQ) — the full IVFADC layout of Jégou et al. 2011:
-  // the SCANNED half of the index stores [[PqM]] one-byte codes plus
-  // one reconstruction norm (16× more corpus per executor-GB than
-  // float32, where the r17 int8 codes gave 4×), scored via per-query
+  // IVF-PQ: PRODUCT-QUANTIZED codes inside the persisted IVF index —
+  // the full IVFADC layout of Jégou et al. 2011: the SCANNED half of
+  // the index stores [[PqM]] one-byte codes plus one reconstruction
+  // norm (16× more corpus per executor-GB than float32, where
+  // per-vector int8 codes give 4×), scored via per-query
   // ADC lookup tables; the full-precision floats live in a rerank
   // half that is read only for the top-c candidate ids per query.
   // [[buildIvfIndex]] keeps floats in the scanned rows; this triad is
@@ -1123,7 +1099,8 @@ object Ann {
     val vf = graft.functions.VectorFunctions
     val (_, queries) = split(s, dir)
     val centArr = readCodebook(s, path)
-    val (probed, cellFilter) = probeList(s, queries, centArr, probes)
+    val probed = ivfProbes(s, queries, centArr, probes)
+    val cellFilter = probedCells(probed)
     // ADC query side (the queries×probes broadcast, plus the per-query
     // m·ks lookup table built once against the frozen sub-codebooks;
     // residual coding adds the per-(query, cell) coarse dot
@@ -1160,10 +1137,23 @@ object Ann {
     val scored = rer
       .join(broadcast(candPairs.toSeq.toDF("query_id", "vec_id")), Seq("vec_id"))
       .join(broadcast(queries), Seq("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        (Dedup.dotExpr("embedding", "q_emb") / (col("nrm") * col("q_nrm"))).as("cosine"))
+      .select(col("query_id"), col("vec_id").as("neighbor_id"), cosine)
     topK(scored)
   }
+
+  // ------------------------------------------------------------------
+  // Row 49: int8-quantized brute force — the memory/bandwidth scale
+  // path. Per-vector symmetric quantization (scale = max|x|/127)
+  // compresses float32 embeddings 4×: 4× more corpus per executor-GB,
+  // and the scoring loop is an integer MAC over byte arrays
+  // ([[graft.functions.Dot8]]). Cosine in quantized space needs no
+  // dequantization — the scales cancel:
+  //   cos8 = dot8(a,b) / sqrt(dot8(a,a)·dot8(b,b)).
+  // The ONLY approximation is the rounding in the codes; AnnSpec pins
+  // the recall cost vs the exact float path. Composes with IVF/LSH
+  // (quantize the bucketed candidates) — kept standalone here so the
+  // quantization error is measured in isolation.
+  // ------------------------------------------------------------------
 
   def qAnnQuantized(s: SparkSession, dir: String): DataFrame = {
     val vf = graft.functions.VectorFunctions
@@ -1370,10 +1360,7 @@ object Ann {
     */
   private[graft] def trainPqCodebooks(s: SparkSession, corpus: DataFrame,
       cent: Array[Double]): Array[Double] = {
-    val rcorpus = withResidual(
-        corpus.withColumn("cell", graft.functions.VectorFunctions
-          .nearestCell(col("embedding"), cent.toSeq, Dim)),
-        cent)
+    val rcorpus = withResidual(ivfAssign(corpus, cent), cent)
       .select(col("vec_id"), col("remb").as("embedding"))
     val seeds = rcorpus
       .withColumn("h", md5(col("vec_id").cast("string")))
@@ -1451,10 +1438,7 @@ object Ann {
     val (corpus, queries) = split(s, dir)
     val cent = sessionCodebook(s, dir, corpus)
     val cb = sessionPqCodebooks(s, dir, corpus)
-    val coded = pqCode(
-        corpus.withColumn("cell",
-          vf.nearestCell(col("embedding"), cent.toSeq, Dim)),
-        cb, cent)
+    val coded = pqCode(ivfAssign(corpus, cent), cb, cent)
       .select(col("vec_id"), col("cell"), col("codes"), col("rn"))
     // query side: the residual-codebook dot LUT plus the 16-entry
     // cell-dot array (q·c_cell — pqLut with ONE subspace of width Dim
@@ -1500,8 +1484,7 @@ object Ann {
       .select(col("vec_id").as("neighbor_id"), col("embedding"), col("nrm"))
       .join(broadcast(shortlist), Seq("neighbor_id"))
       .join(broadcast(queries), Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        (Dedup.dotExpr("embedding", "q_emb") / (col("nrm") * col("q_nrm"))).as("cosine"))
+      .select(col("query_id"), col("neighbor_id"), cosine)
     topK(rer)
   }
 
@@ -1748,8 +1731,8 @@ object Ann {
        |ORDER BY query_id""".stripMargin
 
   // ------------------------------------------------------------------
-  // q_ann_ivfadc — the PERSISTED IVFADC serve as an oracle-checked row
-  // (VERDICT r18 #1): cell probe (nProbe = IvfProbes) → ADC over the
+  // q_ann_ivfadc — the PERSISTED IVFADC serve as an oracle-checked row:
+  // cell probe (nProbe = IvfProbes) → ADC over the
   // probed cells' codes only → float point-rerank, i.e. [[ivfPqServe]]
   // registered as a `queries` entry against a session-built
   // [[buildIvfPqIndex]] index.
@@ -1762,15 +1745,15 @@ object Ann {
     * models inside it come from the session caches, so the indexed
     * codes equal what any inline PQ row computes; a deployment builds
     * the index offline and amortizes further (the [[buildIvfIndex]]
-    * note). [[clearModelCache]] drops the pointer (the dir itself is
-    * temp garbage).
+    * note). [[clearModelCache]] drops the pointer; Spark deletes the
+    * directory at JVM shutdown.
     */
   private val pqIndexCache = new graft.plans.SessionCache[String]
 
   private def sessionPqIndex(s: SparkSession, dir: String): String =
     pqIndexCache.getOrElseUpdate(s, dir) {
-      val path = java.nio.file.Files
-        .createTempDirectory("graft-ivfadc-session").toString + "/idx"
+      val path = org.apache.spark.sql.GraftBridge
+        .createTempDir("graft-ivfadc-session").toString + "/idx"
       buildIvfPqIndex(s, dir, path)
       path
     }
@@ -2403,20 +2386,13 @@ object Ann {
     // instead of its own corpus-bucketing join + distinct + window.
     val maxP = LshProbeCurve.max
     val (corpus, queries) = split(s, dir)
-    val bucketed = corpus
-      .select(col("vec_id"), col("embedding"), col("nrm"),
-        explode(graft.functions.VectorFunctions
-          .xpolyKeys(col("embedding"), LshSeed, LshTables, Dim, probes = 1)).as("bkey"))
     val probed = queries
       .select(col("query_id"), col("q_emb"), col("q_nrm"),
         posexplode(graft.functions.VectorFunctions
           .xpolyKeys(col("q_emb"), LshSeed, LshTables, Dim, maxP)).as(Seq("pidx", "bkey")))
       .select(col("query_id"), col("q_emb"), col("q_nrm"), col("bkey"),
         (col("pidx") % maxP + 1).as("prank"))
-    val pairs = bucketed.join(broadcast(probed), Seq("bkey"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("prank"),
-        (Dedup.dotExpr("embedding", "q_emb") / (col("nrm") * col("q_nrm"))).as("cosine"))
+    val pairs = cosineScored(lshAssign(corpus).join(broadcast(probed), Seq("bkey")), "prank")
       .groupBy(col("query_id"), col("neighbor_id"))
       .agg(min(col("prank")).as("mpr"), max(col("cosine")).as("cosine"))
       .materialized

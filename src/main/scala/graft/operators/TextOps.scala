@@ -3623,12 +3623,16 @@ object TextOps {
 
   /** Persist the window-hash first-seen index — the frozen-state half
     * of continuous novelty monitoring (`Streams.noveltyMaintenance`
-    * scores arrivals against it and appends their new hashes).
+    * scores arrivals against it and publishes their new hashes as
+    * streamed batches). The root is published through [[Publish]], so
+    * a rebuild retires those batches.
     */
   private[graft] def buildNoveltyIndex(s: SparkSession, dir: String, path: String): Unit =
-    windowHashes(docs(s, dir)).filter(col("h").isNotNull)
-      .groupBy(col("h")).agg(min(col("doc_id")).as("first_doc"))
-      .write.mode("overwrite").parquet(s"$path/resident.parquet")
+    Publish(s, path) { tmp =>
+      windowHashes(docs(s, dir)).filter(col("h").isNotNull)
+        .groupBy(col("h")).agg(min(col("doc_id")).as("first_doc"))
+        .write.parquet(s"$tmp/resident.parquet")
+    }
 
   /** Score one batch of (doc_id, text) docs for window novelty against
     * a seen-hash table, and emit the batch's OWN new hashes for index

@@ -292,7 +292,8 @@ object Streams {
     * itself.
     *
     * State lives in parquet, not a state store: the seen set for
-    * batch N is the `resident.parquet` table of `indexPath` and of its
+    * batch N is the `resident.parquet` table of `indexPath` (recovered
+    * first: `TextOps.buildNoveltyIndex` publishes the root) and of its
     * committed streamed batches M < N (`plans.Publish.batches`) —
     * batch N's OWN hashes are deliberately EXCLUDED, so a crash-replayed
     * batch scores against exactly the same seen set and rewrites
@@ -314,6 +315,7 @@ object Streams {
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val s = batch.sparkSession
+        Publish.recover(s, indexPath)
         val prior = Publish.batches(s, indexPath).collect { case (id, p) if id < batchId => p }
         val resident = new org.apache.hadoop.fs.Path(s"$indexPath/resident.parquet")
         val hasResident =

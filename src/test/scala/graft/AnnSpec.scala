@@ -69,7 +69,7 @@ class AnnSpec extends SparkSpec {
     */
   test("LSH ANN recall@5 ≥ 0.7 with bounded, reported candidate fraction") {
     val brute = topSets(Ann.qAnnBruteforce(spark, sf0001).collect())
-    val scored = Ann.lshScored(spark, sf0001, Ann.LshTables, Ann.LshProbes).cache()
+    val scored = Ann.lshScored(spark, sf0001, Ann.LshProbes).cache()
     try {
       val corpusN = graft.sources.Ingest.table(spark, sf0001, "embeddings").count()
       val candFrac = scored.count().toDouble / brute.size / corpusN
@@ -139,19 +139,21 @@ class AnnSpec extends SparkSpec {
       s"the probed-cell isin must prune index partitions at the scan:\n$p")
   }
 
-  test("persisted LSH index: serve == inline qAnnLsh; scan prunes to the probed buckets") {
+  test("persisted LSH index: serve == inline qAnnLsh; no bkey= directories") {
+    import org.apache.spark.sql.functions.col
     val path = tempDir("lsh")
     Ann.buildLshIndex(spark, sf0001, path)
-    val served = Ann.lshServe(spark, sf0001, path)
     // seed-derived rotations → identical bucket keys → identical answers
-    val inline = Ann.qAnnLsh(spark, sf0001).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val fromIndex = served.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(fromIndex === inline)
-    val p = served.queryExecution.executedPlan.toString
-    assert(p.contains("PartitionFilters") && p.contains("bkey"),
-      s"the probed-bucket isin must prune index partitions at the scan:\n$p")
+    assert(serveSet(Ann.lshServe(spark, sf0001, path)) === serveSet(Ann.qAnnLsh(spark, sf0001)))
+    // a serve probes nearly every bucket, so the index table of the
+    // root and of each batch is not partitioned by bucket
+    val (corpus, _) = Ann.split(spark, sf0001)
+    Ann.lshUpsertBatch(spark, path, corpus.filter(col("vec_id") % 7 === 0), 1L)
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(path))
+    val bucketDirs = try walk.filter(_.getFileName.toString.startsWith("bkey=")).count()
+      finally walk.close()
+    assert(exists(s"${Publish.batchOf(path, 1L)}/index.parquet"))
+    assert(bucketDirs === 0L, "a build and an upsert batch must write no bkey= directory")
   }
 
   test("lshUpsertBatch: serve-after-upsert == one-shot build; replay idempotent; no assignment shuffle") {

@@ -28,8 +28,8 @@ class PublishSpec extends SparkSpec {
   private def fresh(tag: String): String =
     tempDir(s"publish-$tag")
 
-  /** Plain file-by-file copy of a local tree (checksum files included):
-    * the LSH index alone holds thousands of bucket files. */
+  /** Plain file-by-file copy of a local tree (checksum files included),
+    * so each crash state starts from its own private copy. */
   private def copy(src: String, dst: String): Unit = {
     import java.nio.file.{Files, Paths}
     val (from, to) = (Paths.get(src), Paths.get(dst))
@@ -277,6 +277,27 @@ class PublishSpec extends SparkSpec {
   test("perceptron model, buildPerceptronModel: perceptronScoreWith sees the committed model") {
     modelCase("perceptron", TextOps.buildPerceptronModel(spark, _, _),
       p => rowSet(TextOps.perceptronScoreWith(spark, sf0001, p)))
+  }
+
+  // ---- novelty window-hash index root ----
+
+  test("novelty index root, buildNoveltyIndex: noveltyMaintenance sees the committed index") {
+    val s = spark
+    import s.implicits._
+    implicit val ctx = s.sqlContext
+    // two 24-word texts, so each carries novelty windows of its own
+    val Seq(a, b) = Seq("alpha", "beta").map(w => (1 to 24).map(i => s"$w$i").mkString(" "))
+    val base = fresh("novelty")
+    TextOps.buildNoveltyIndex(spark, docsDir(Seq(1L -> a)), s"$base/prev")
+    TextOps.buildNoveltyIndex(spark, docsDir(Seq(1L -> a, 2L -> b)), s"$base/next")
+    crashStates("novelty", s"$base/prev", s"$base/next", identity, { p =>
+      val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
+      ms.addData(Seq(10L -> a, 11L -> b))
+      val out = fresh("novelty-out")
+      graft.streaming.Streams.noveltyMaintenance(ms.toDF().toDF("doc_id", "text"), p, out,
+        fresh("novelty-ckpt"))
+      rowSet(spark.read.parquet(out))
+    })
   }
 
   // ---- Ingest.compact ----

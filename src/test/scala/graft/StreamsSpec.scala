@@ -967,6 +967,21 @@ class StreamsSpec extends SparkSpec {
     val rolled = got.groupBy(_._1 / bw)
       .map { case (b, rs) => b -> (rs.map(_._2).sum, rs.map(_._3).sum) }
     assert(rolled === curve, "streamed per-doc scores must roll up to q_novelty_curve")
+    // resident branch: an index built over the first half, then the
+    // second half streamed as one batch, scores exactly as batch 1 did
+    val seededIdx = tempDir("nov-seeded-idx")
+    val seededOut = tempDir("nov-seeded-out")
+    graft.operators.TextOps.buildNoveltyIndex(s, docsDir(h1.toSeq), seededIdx)
+    val ms2 = MemoryStream[(Long, String)]
+    ms2.addData(h2.toSeq)
+    Streams.noveltyMaintenance(ms2.toDF().toDF("doc_id", "text"), seededIdx, seededOut,
+      tempDir("nov-seeded-ckpt"))
+    val batch1 = s.read.parquet(s"$out/batch=1").collect().map(shape).sortBy(_._1).toSeq
+    val (alone, _) = graft.operators.TextOps.noveltyBatch(h2.toSeq.toDF("doc_id", "text"), emptySeen)
+    assert(alone.collect().map(shape).sortBy(_._1).toSeq !== batch1,
+      "the second half must repeat windows of the first, or the seen set goes untested")
+    assert(s.read.parquet(seededOut).collect().map(shape).sortBy(_._1).toSeq === batch1,
+      "a resident index over the first half must score the second half as batch 1 did")
     // replay convergence: batch 0 rescored against the same seen set
     // (its own index dir excluded) rewrites identical rows
     val before = s.read.parquet(s"$out/batch=0").collect().map(shape).sortBy(_._1).toSeq
