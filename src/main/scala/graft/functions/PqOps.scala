@@ -110,7 +110,7 @@ object PqKernels {
 
 /** PQ code assignment: array of m byte codes, one per subspace. A
   * model-parameter expression like [[NearestCell]] — the flattened
-  * sub-codebooks ship as a codegen reference object, so coding is
+  * sub-codebooks ship inside the expression, so coding is
   * map-only, no join, no shuffle.
   */
 case class PqCodes(child: Expression, codebooks: Seq[Double], m: Int, dsub: Int)
@@ -123,14 +123,14 @@ case class PqCodes(child: Expression, codebooks: Seq[Double], m: Int, dsub: Int)
   override def dataType: DataType = ArrayType(ByteType, containsNull = false)
   override def prettyName: String = "graft_pq_codes"
 
-  @transient private lazy val cbFlat: Array[Double] = codebooks.toArray
+  @transient lazy val cbFlat: Array[Double] = codebooks.toArray
 
   override protected def nullSafeEval(input: Any): Any =
     new GenericArrayData(
       PqKernels.pqCodes(input.asInstanceOf[ArrayData], cbFlat, m, dsub))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cb = ctx.addReferenceObj("pqCb", cbFlat, "double[]")
+    val cb = VectorOps.modelField(ctx, this, "cbFlat", "double[]")
     nullSafeCodeGen(ctx, ev, c =>
       s"""${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
          |  graft.functions.PqKernels.pqCodes($c, $cb, $m, $dsub));""".stripMargin)
@@ -152,13 +152,13 @@ case class PqLut(child: Expression, codebooks: Seq[Double], m: Int, dsub: Int)
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def prettyName: String = "graft_pq_lut"
 
-  @transient private lazy val cbFlat: Array[Double] = codebooks.toArray
+  @transient lazy val cbFlat: Array[Double] = codebooks.toArray
 
   override protected def nullSafeEval(input: Any): Any =
     PqKernels.pqLut(input.asInstanceOf[ArrayData], cbFlat, m, dsub)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cb = ctx.addReferenceObj("pqCb", cbFlat, "double[]")
+    val cb = VectorOps.modelField(ctx, this, "cbFlat", "double[]")
     nullSafeCodeGen(ctx, ev, c =>
       s"${ev.value} = graft.functions.PqKernels.pqLut($c, $cb, $m, $dsub);")
   }

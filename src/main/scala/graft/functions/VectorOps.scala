@@ -82,8 +82,9 @@ case class SignBuckets(child: Expression, seed: Long, nTables: Int, nBits: Int, 
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "graft_sign_buckets"
 
-  /** planes(t)(b) flattened row-major: slot (t*nBits + b)*dim + i. */
-  @transient private lazy val planesFlat: Array[Double] = {
+  /** planes(t)(b) flattened row-major: slot (t*nBits + b)*dim + i.
+    * Derived from `seed` where the task runs ([[VectorOps.modelField]]). */
+  @transient lazy val planesFlat: Array[Double] = {
     val flat = new Array[Double](nTables * nBits * dim)
     var t = 0
     while (t < nTables) {
@@ -100,7 +101,7 @@ case class SignBuckets(child: Expression, seed: Long, nTables: Int, nBits: Int, 
       VectorOps.signBuckets(input.asInstanceOf[ArrayData], planesFlat, nTables, nBits, dim))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val planes = ctx.addReferenceObj("planesFlat", planesFlat, "double[]")
+    val planes = VectorOps.modelField(ctx, this, "planesFlat", "double[]")
     nullSafeCodeGen(ctx, ev, c =>
       s"""${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
          |  graft.functions.VectorOps.signBuckets($c, $planes, $nTables, $nBits, $dim));
@@ -145,8 +146,10 @@ case class CrossPolytopeKeys(child: Expression, seed: Long, nTables: Int, dim: I
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "graft_xpolytope_keys"
 
-  /** R_t flattened row-major: R_t[j][i] at (t*dim + j)*dim + i. */
-  @transient private lazy val planesFlat: Array[Double] = {
+  /** R_t flattened row-major: R_t[j][i] at (t*dim + j)*dim + i.
+    * Derived from `seed` where the task runs ([[VectorOps.modelField]]),
+    * so a task ships the expression, not nTables·dim² doubles. */
+  @transient lazy val planesFlat: Array[Double] = {
     val flat = new Array[Double](nTables * dim * dim)
     var t = 0
     while (t < nTables) {
@@ -163,7 +166,7 @@ case class CrossPolytopeKeys(child: Expression, seed: Long, nTables: Int, dim: I
       VectorOps.xpolyKeys(input.asInstanceOf[ArrayData], planesFlat, nTables, dim, probes))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val planes = ctx.addReferenceObj("planesFlat", planesFlat, "double[]")
+    val planes = VectorOps.modelField(ctx, this, "planesFlat", "double[]")
     nullSafeCodeGen(ctx, ev, c =>
       s"""${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
          |  graft.functions.VectorOps.xpolyKeys($c, $planes, $nTables, $dim, $probes));
@@ -199,8 +202,8 @@ case class SlotAgreement(left: Expression, right: Expression) extends BinaryExpr
 /** Cosine-nearest centroid id of a float vector against a FIXED
   * codebook — the IVF coarse-quantizer assignment as a pure map
   * expression. The codebook is a model parameter (k·dim doubles,
-  * bounded by config, never by data size) shipped like the seeded
-  * LSH plane matrices — via a codegen reference object — so cell
+  * bounded by config, never by data size) shipped inside the
+  * expression ([[VectorOps.modelField]]) — so cell
   * assignment needs NO join and NO shuffle: the alternative
   * broadcast-crossjoin + per-vector argmax aggregate re-shuffles the
   * whole corpus (embeddings included) once per use, which is exactly
@@ -222,9 +225,9 @@ case class NearestCell(child: Expression, centroids: Seq[Double], dim: Int)
   override def dataType: DataType = IntegerType
   override def prettyName: String = "graft_nearest_cell"
 
-  @transient private lazy val centFlat: Array[Double] = centroids.toArray
+  @transient lazy val centFlat: Array[Double] = centroids.toArray
 
-  @transient private lazy val invNorms: Array[Double] = {
+  @transient lazy val invNorms: Array[Double] = {
     val k = centFlat.length / dim
     val out = new Array[Double](k)
     var t = 0
@@ -242,8 +245,8 @@ case class NearestCell(child: Expression, centroids: Seq[Double], dim: Int)
     VectorOps.nearestCell(input.asInstanceOf[ArrayData], centFlat, invNorms, dim)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cent = ctx.addReferenceObj("centFlat", centFlat, "double[]")
-    val inv = ctx.addReferenceObj("invNorms", invNorms, "double[]")
+    val cent = VectorOps.modelField(ctx, this, "centFlat", "double[]")
+    val inv = VectorOps.modelField(ctx, this, "invNorms", "double[]")
     nullSafeCodeGen(ctx, ev, c =>
       s"${ev.value} = graft.functions.VectorOps.nearestCell($c, $cent, $inv, $dim);")
   }
@@ -256,8 +259,9 @@ case class NearestCell(child: Expression, centroids: Seq[Double], dim: Int)
   * as array<double>: a per-cell model row (a centroid, a norm² LUT)
   * looked up inside the expression, where a join would have to
   * broadcast the k-row table in every query that uses it. The table
-  * ships like [[NearestCell]]'s codebook — a codegen reference object,
-  * here one prebuilt array per cell, so a lookup allocates nothing.
+  * ships like [[NearestCell]]'s codebook, inside the expression, and
+  * is split into one array per cell where the task runs, so a lookup
+  * allocates nothing.
   * A cell outside [0, k) throws; a null cell yields null.
   */
 case class CellRow(child: Expression, table: Seq[Double], width: Int)
@@ -270,14 +274,14 @@ case class CellRow(child: Expression, table: Seq[Double], width: Int)
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def prettyName: String = "graft_cell_row"
 
-  @transient private lazy val rows: Array[ArrayData] =
+  @transient lazy val rows: Array[ArrayData] =
     table.toArray.grouped(width).map(r => UnsafeArrayData.fromPrimitiveArray(r): ArrayData).toArray
 
   override protected def nullSafeEval(input: Any): Any =
     VectorOps.cellRow(rows, input.asInstanceOf[Int])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val rs = ctx.addReferenceObj("cellRows", rows,
+    val rs = VectorOps.modelField(ctx, this, "rows",
       "org.apache.spark.sql.catalyst.util.ArrayData[]")
     nullSafeCodeGen(ctx, ev, c => s"${ev.value} = graft.functions.VectorOps.cellRow($rs, $c);")
   }
@@ -357,6 +361,17 @@ case class Dot8(left: Expression, right: Expression) extends BinaryExpression {
   * generated paths (same single implementation → no eval/codegen drift).
   */
 object VectorOps {
+
+  /** Generated-code access to a model array that expression `e`
+    * derives from its own fields, its `@transient lazy val field`: the
+    * generated class references `e` and reads the field once when it
+    * is initialized, where the task runs. A task thus ships `e` alone;
+    * handing the array itself to `addReferenceObj` would ship a second
+    * copy of it with every task. Returns the field's variable name. */
+  def modelField(ctx: CodegenContext, e: Expression, field: String, javaType: String): String = {
+    val owner = ctx.addReferenceObj(s"${field}Owner", e)
+    ctx.addMutableState(javaType, field, v => s"$v = $owner.$field();", forceInline = true)
+  }
 
   /** Length mismatch THROWS, never truncates: the replaced zip_with
     * lambda nulled out mismatched rows (excluding them downstream); a

@@ -961,13 +961,16 @@ object Ann {
   //   <path>/rerank.parquet/cell=N/ (vec_id, embedding, nrm)   — floats, point-read
   //   <path>/stream/batch-…/        (index.parquet, rerank.parquet) — streamed batches
   //
-  // Serve cost shape: the scoring scan reads nProbe/k of the CODES
+  // Serve cost shape: the serve is [[qAnnPq]]'s three steps over the
+  // persisted halves. The query side is one row per query (its LUTs
+  // and probed cells), broadcast once: [[QueryK]] rows, not one per
+  // probed (query, cell). The ADC scan reads nProbe/k of the CODES
   // (~1/11 the bytes of the float index) and spends [[PqM]] table
-  // adds per candidate; the float half is touched only through (a)
-  // the same probed-cell partition pruning and (b) a pushed
-  // `vec_id IN (…)` filter over the queries×c candidate ids — a
-  // bounded point-lookup, never a probed-cell float scan. Both
-  // prunings are AnnSpec-asserted on the executed plan.
+  // adds per candidate. The float half is touched only through the
+  // same probed-cell partition pruning plus a pushed `vec_id IN (…)`
+  // filter over the queries×c shortlist ids: a bounded point lookup,
+  // never a probed-cell float scan. AnnSpec asserts both prunings on
+  // the executed plan and the size of the query-side broadcast.
   // ------------------------------------------------------------------
 
   /** Candidates reranked in float per query (c = 4·K): the standard
@@ -1081,64 +1084,42 @@ object Ann {
       Publish(s, Publish.batchOf(path, batchId))(writePqHalves(s, _, arrivals, cent, pqCb))
     }
 
-  /** Serve top-k from a prebuilt [[buildIvfPqIndex]] index: quantized
-    * scoring over the probed cells' CODES → per-query top-`rerankC`
-    * candidates → float rerank of exactly those ids → top-[[K]].
+  /** Serve top-k from a prebuilt [[buildIvfPqIndex]] index: the
+    * [[qAnnPq]] steps over the persisted halves. [[pqQueryRows]] gives
+    * each query its probed cells (one aggregate over the
+    * [[ivfProbes]] rows), [[pqShortlist]] ADC-scores the codes of
+    * those cells down to the top-`rerankC` per query, and
+    * [[pqRerank]] float-reranks exactly those ids to the top [[K]].
     *
     * Two bounded driver collects, both constant-sized by construction
-    * (the [[ivfServe]] probed-cells precedent): the probe list
-    * (queries × probes cells) and the candidate pairs (queries ×
-    * rerankC ids) — the latter is what lets the float half be read
-    * under a pushed `vec_id IN` point filter instead of a probed-cell
-    * float scan, the IVFADC read shape.
+    * (the [[ivfServe]] probed-cells precedent): the probed cells
+    * (queries × probes) and the shortlist pairs (queries × rerankC).
+    * The second lets the float half be read under a pushed
+    * `vec_id IN` point filter instead of a probed-cell float scan,
+    * the IVFADC read shape.
     */
   private[graft] def ivfPqServe(s: SparkSession, dir: String, path: String,
       probes: Int = IvfProbes, rerankC: Int = PqRerankC): DataFrame = {
     import s.implicits._
     Publish.recover(s, path)
-    val vf = graft.functions.VectorFunctions
     val (_, queries) = split(s, dir)
-    val centArr = readCodebook(s, path)
-    val probed = ivfProbes(s, queries, centArr, probes)
+    val cent = readCodebook(s, path)
+    val probed = ivfProbes(s, queries, cent, probes)
     val cellFilter = probedCells(probed)
-    // ADC query side (the queries×probes broadcast, plus the per-query
-    // m·ks lookup table built once against the frozen sub-codebooks;
-    // residual coding adds the per-(query, cell) coarse dot
-    // qc = q·c_cell — the estimated dot is qc + Σ_m lut[code_m])
-    val pqCb = readPqCodebook(s, path)
-    val probedQ = probed
-      .withColumn("lut", vf.pqLut(col("q_emb"), pqCb.toSeq, PqM, PqDsub))
-      .withColumn("qc",
-        element_at(vf.pqLut(col("q_emb"), centArr.toSeq, 1, Dim), col("cell") + 1))
-      .select(col("query_id"), col("lut"), col("qc"), col("q_nrm"), col("cell"))
-    // stage 1: ADC table-lookup scoring over the probed cells' codes
-    // only ([[PqM]] adds per candidate) — resident build + committed
-    // streamed batches, each under the same partition pruning
+    val qrows = pqQueryRows(
+      probed.groupBy("query_id", "q_emb", "q_nrm").agg(collect_list("cell").as("cells")),
+      readPqCodebook(s, path), cent)
+    // the resident build and the committed streamed batches, each
+    // pruned to the probed cells at the scan
     val roots = Publish.roots(s, path)
-    val cand = Publish.readRoots(s, roots, "index.parquet", CodesDdl).filter(cellFilter)
-      .join(broadcast(probedQ), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        ((col("qc") + vf.adcLookup(col("lut"), col("codes"))) / (col("rn") * col("q_nrm")))
-          .as("adc_cos"))
-      .withColumn("crk", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("adc_cos").desc, col("vec_id"))))
-      .filter(col("crk") <= rerankC)
-      .select(col("query_id"), col("vec_id"))
-    // queries × rerankC rows — driver-safe by construction
-    val candPairs = cand.collect().map(r => (r.getLong(0), r.getLong(1)))
-    val candIds = candPairs.map(_._2).distinct
-    // stage 2: float rerank of exactly the candidate ids (partition
-    // pruning on cell + pushed IN on vec_id — a point lookup)
-    val rer = Publish.readRoots(s, roots, "rerank.parquet", FloatRowsDdl)
+    val codes = Publish.readRoots(s, roots, "index.parquet", CodesDdl).filter(cellFilter)
+    val shortlist = pqShortlist(codes, qrows, rerankC).select("query_id", "neighbor_id")
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    val ids = shortlist.map(p => java.lang.Long.valueOf(p._2)).distinct
+    val floats = Publish.readRoots(s, roots, "rerank.parquet", FloatRowsDdl)
       .filter(cellFilter)
-      .filter(col("vec_id").isin(candIds.map(java.lang.Long.valueOf): _*))
-      .select(col("vec_id"), col("embedding"), col("nrm"))
-    val scored = rer
-      .join(broadcast(candPairs.toSeq.toDF("query_id", "vec_id")), Seq("vec_id"))
-      .join(broadcast(queries), Seq("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), cosine)
-    topK(scored)
+      .filter(col("vec_id").isin(ids: _*))
+    pqRerank(floats, shortlist.toSeq.toDF("query_id", "neighbor_id"), queries)
   }
 
   // ------------------------------------------------------------------
@@ -1345,7 +1326,7 @@ object Ann {
     * per round — the corpus never shuffles (the [[trainCodebook]]
     * shape, m-for-free).
     *
-    * r19: trains on CELL RESIDUALS (x − c_cell under the frozen
+    * Trains on CELL RESIDUALS (x − c_cell under the frozen
     * [[sessionCodebook]] assignment — [[withResidual]]), the IVFADC
     * coding of Jégou et al. 2011 §IV: residual magnitudes are a
     * fraction of raw components, so the same 16×256 codebook budget
@@ -1423,95 +1404,108 @@ object Ann {
     pqCodebookCache.getOrElseUpdate(s, dir)(
       trainPqCodebooks(s, corpus, sessionCodebook(s, dir, corpus)))
 
-  /** The ADC stage shared by [[qAnnPq]] and [[qPqRecall]]: corpus
-    * coded to m bytes (map-only), queries build their m·ks dot LUT
-    * (map-only over [[QueryK]] rows), every candidate scores with m
-    * table adds instead of [[Dim]] multiply-adds, and the per-query
-    * ADC rank is cut at `c`. Estimated cosine = ADC-dot /
-    * (recon_norm · q_nrm) with recon_norm from the codebook norm²
-    * LUT. At 100 TB this stage reads 16 code bytes per candidate
-    * where the float scan reads 256 — the scan that decides the
-    * serve cost.
+  /** The ADC query side: one row per query of `queries` (query_id,
+    * q_emb, q_nrm, cells) as (query_id, lut, qc_arr, q_nrm, cells).
+    * `lut` is the m·ks dot table against the residual sub-codebooks
+    * `cb`; `qc_arr` holds the [[IvfCells]] coarse dots q·c_cell
+    * (pqLut with one subspace of width [[Dim]] over the cell codebook,
+    * the oracle's `pq_qc` fold), so the estimated dot of a code row
+    * is `qc_arr[cell] + Σ_m lut[code_m]`. `cells` lists the cells the
+    * query scores: every cell in memory, the probed ones when serving.
+    * Built once per query, never per (query, cell).
     */
-  private def pqAdcRanked(s: SparkSession, dir: String, c: Int): DataFrame = {
+  private def pqQueryRows(queries: DataFrame, cb: Array[Double],
+      cent: Array[Double]): DataFrame = {
     val vf = graft.functions.VectorFunctions
-    val (corpus, queries) = split(s, dir)
-    val cent = sessionCodebook(s, dir, corpus)
-    val cb = sessionPqCodebooks(s, dir, corpus)
-    val coded = pqCode(ivfAssign(corpus, cent), cb, cent)
-      .select(col("vec_id"), col("cell"), col("codes"), col("rn"))
-    // query side: the residual-codebook dot LUT plus the 16-entry
-    // cell-dot array (q·c_cell — pqLut with ONE subspace of width Dim
-    // over the cell codebook; same fold as the oracle's ivfDDot), so
-    // the estimated dot q·x̂ = qc[cell] + Σ_m lut[code_m]
-    val qlut = queries
-      .select(col("query_id"), vf.pqLut(col("q_emb"), cb.toSeq, PqM, PqDsub).as("lut"),
-        vf.pqLut(col("q_emb"), cent.toSeq, 1, Dim).as("qc_arr"),
-        col("q_nrm"))
-    coded.crossJoin(broadcast(qlut))
-      .filter(col("vec_id") =!= col("query_id"))
+    queries.select(col("query_id"),
+      vf.pqLut(col("q_emb"), cb.toSeq, PqM, PqDsub).as("lut"),
+      vf.pqLut(col("q_emb"), cent.toSeq, 1, Dim).as("qc_arr"),
+      col("q_nrm"), col("cells"))
+  }
+
+  /** The ADC shortlist: the code rows (vec_id, cell, codes, rn)
+    * against the broadcast [[pqQueryRows]], each query scoring only
+    * the rows of its `cells` with m table adds instead of [[Dim]]
+    * multiply-adds. Estimated cosine = ADC dot / (rn · q_nrm), rn the
+    * reconstruction norm [[pqCode]] stored. Drops the self-pair and
+    * keeps each query's top `c` by (adc_cos desc, neighbor_id), ranked
+    * `ark`, as (query_id, neighbor_id, adc_cos, ark).
+    */
+  private def pqShortlist(codes: DataFrame, qrows: DataFrame, c: Int): DataFrame =
+    codes.crossJoin(broadcast(qrows))
+      .filter(array_contains(col("cells"), col("cell")) && col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         ((element_at(col("qc_arr"), col("cell") + 1) +
-          vf.adcLookup(col("lut"), col("codes"))) / (col("rn") * col("q_nrm")))
-          .as("adc_cos"))
+          graft.functions.VectorFunctions.adcLookup(col("lut"), col("codes"))) /
+          (col("rn") * col("q_nrm"))).as("adc_cos"))
       .withColumn("ark", row_number().over(
         Window.partitionBy("query_id").orderBy(col("adc_cos").desc, col("neighbor_id")))
         .cast("long"))
       .filter(col("ark") <= c)
-  }
 
-  /** PQ-ADC top-k, IVFADC read shape (Jégou et al. 2011): ADC
-    * shortlist of [[PqShortC]] candidates per query over the 16-byte
-    * codes, then an exact float rerank of exactly those
-    * queries×[[PqShortC]] pairs — a broadcast-probed point lookup,
-    * never a float corpus scan — and the final top-[[K]] cut. The
-    * rerank restores exact order inside the shortlist, so final
-    * recall equals the shortlist's hit rate (the [[PqShortC]] note).
-    * [[qPqRecall]] is the continuous quality audit.
+  /** The exact float rerank of a shortlist (query_id, neighbor_id):
+    * the float rows (vec_id, embedding, nrm) joined to the broadcast
+    * shortlist and queries, cosine-scored and cut to the top [[K]].
+    * Reads only what the shortlist names, never a float corpus scan.
     */
-  def qAnnPq(s: SparkSession, dir: String): DataFrame =
-    annPqFromShortlist(s, dir, pqAdcRanked(s, dir, PqShortC).select("query_id", "neighbor_id"))
-
-  /** The exact float rerank over a given ADC shortlist — split out
-    * (r21) so [[qPqRecall]] can feed BOTH its raw-ADC column and the
-    * reranked serve from ONE ADC ranking pass instead of deriving the
-    * corpus×query ADC scan twice.
-    */
-  private def annPqFromShortlist(s: SparkSession, dir: String,
-      shortlist: DataFrame): DataFrame = {
-    val (corpus, queries) = split(s, dir)
-    val rer = corpus
+  private def pqRerank(floats: DataFrame, shortlist: DataFrame, queries: DataFrame): DataFrame =
+    topK(floats
       .select(col("vec_id").as("neighbor_id"), col("embedding"), col("nrm"))
       .join(broadcast(shortlist), Seq("neighbor_id"))
       .join(broadcast(queries), Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"), cosine)
-    topK(rer)
+      .select(col("query_id"), col("neighbor_id"), cosine))
+
+  /** The in-memory ADC shortlist of [[qAnnPq]] and [[qPqRecall]]: the
+    * corpus coded under the session codebooks and every query scoring
+    * every cell. At 100 TB this reads 16 code bytes per candidate where
+    * the float scan reads 256, the scan that decides the serve cost.
+    */
+  private def pqAdcRanked(s: SparkSession, dir: String, c: Int): DataFrame = {
+    val (corpus, queries) = split(s, dir)
+    val cent = sessionCodebook(s, dir, corpus)
+    val cb = sessionPqCodebooks(s, dir, corpus)
+    val allCells = queries.withColumn("cells", typedLit((0 until IvfCells).toArray))
+    pqShortlist(pqCode(ivfAssign(corpus, cent), cb, cent), pqQueryRows(allCells, cb, cent), c)
   }
 
-  /** PQ quality monitor — [[qQuantRecall]]'s shape over the PQ path,
-    * split into the two quantities a PQ deployment tunes on: per
-    * query, recall@[[K]] of the RERANKED serve (what users see — the
-    * shortlist hit rate) and recall@[[K]] of the raw ADC rank (what
+  /** PQ-ADC top-k, IVFADC read shape (Jégou et al. 2011): the
+    * [[PqShortC]] shortlist per query over the 16-byte codes of the
+    * whole corpus, then [[pqRerank]] of exactly those pairs. The
+    * rerank restores exact order inside the shortlist, so final
+    * recall equals the shortlist's hit rate (the [[PqShortC]] note).
+    * [[ivfPqServe]] runs the same three steps over a persisted index
+    * and only the probed cells; [[qPqRecall]] is the quality audit.
+    */
+  def qAnnPq(s: SparkSession, dir: String): DataFrame = {
+    val (corpus, queries) = split(s, dir)
+    pqRerank(corpus, pqAdcRanked(s, dir, PqShortC).select("query_id", "neighbor_id"), queries)
+  }
+
+  /** PQ quality monitor — [[qQuantRecall]]'s shape over the PQ path:
+    * per query, recall@[[K]] of the reranked [[qAnnPq]] serve (what
+    * users see — the shortlist hit rate), of the raw ADC rank (what
     * the 16-byte codes alone can do — the quantization honesty
-    * number). Fully hash-checked: training, coding, LUT and fold
+    * number), and of the cell-pruned [[qAnnIvfadc]] serve. One
+    * in-memory ADC shortlist feeds both the rerank and the raw-ADC
+    * column. Fully hash-checked: training, coding, LUT and fold
     * orders all replay in the oracle.
     */
   def qPqRecall(s: SparkSession, dir: String): DataFrame = {
     import graft.plans.Materialize.MaterializeOps
     val bf = qAnnBruteforce(s, dir)
       .select(col("query_id"), col("neighbor_id"), col("cosine"))
-    // r21: the ADC ranking pass (corpus×query scan + per-query window)
-    // runs ONCE and is checkpointed (queries×PqShortC rows — tiny);
-    // the reranked serve and the raw-ADC column both read it. The old
-    // shape derived the identical pqAdcRanked subtree twice (once here,
-    // once inside qAnnPq) — two full ADC corpus scans per run.
+    // the ADC ranking pass (corpus×query scan + per-query window)
+    // runs once and is checkpointed (queries×PqShortC rows, tiny);
+    // the reranked serve and the raw-ADC column both read it, so the
+    // ADC corpus scan is not derived twice
+    val (corpus, queries) = split(s, dir)
     val adc = pqAdcRanked(s, dir, PqShortC)
       .select(col("query_id"), col("neighbor_id"), col("ark")).materialized
-    val fin = annPqFromShortlist(s, dir, adc.select("query_id", "neighbor_id"))
+    val fin = pqRerank(corpus, adc.select("query_id", "neighbor_id"), queries)
       .select(col("query_id"), col("neighbor_id"), lit(1).as("hit_f"))
     val adcK = adc.filter(col("ark") <= K)
       .select(col("query_id"), col("neighbor_id"), lit(1).as("hit_a"))
-    // the third column (r19): what the PRODUCTION read — cell-pruned
+    // the third column: what the PRODUCTION read — cell-pruned
     // ADC over nProbe/k of the index ([[qAnnIvfadc]]) — costs in
     // recall beside the full-scan shortlist's two numbers
     val ivfadcK = qAnnIvfadc(s, dir)
@@ -1586,7 +1580,7 @@ object Ann {
     * (left-to-right) and every cross-subspace sum is an m-ORDERED
     * list fold — SUM() over doubles would be merge-order-dependent.
     *
-    * r19: the program quantizes CELL RESIDUALS (x − c_cell), so it
+    * The program quantizes CELL RESIDUALS (x − c_cell), so it
     * REQUIRES [[ivfTrainCtes]] in the same WITH (for `base`, `idx`
     * and `cent2` — the retrained cell codebook); every consumer
     * ([[qAnnPqSql]], [[qPqRecallSql]], [[qAnnIvfadcSql]]) composes

@@ -541,23 +541,11 @@ object Multimodal {
       posexplode(expr(
         "flatten(transform(bands, wd -> transform(sequence(0, 3), n -> shiftright(wd, n * 4) & 15)))"))
         .as(Seq("band", "bucket")))
-    val salted = sides
-      .withColumn("bsize", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy("band", "bucket")))
-      .withColumn("salt",
-        pmod(xxhash64(col("doc_id"), col("band"), col("bucket")),
-          ceil(col("bsize") / lit(1000)).cast("int")).cast("int"))
-      .drop("bsize")
     val xw = (0 until PhashBands).map(i => s"(a.w$i ^ b.w$i)")
     val firstMatch = (0 until 16).map(j => s"(((${xw(j / 4)} >> ${(j % 4) * 4}) & 15) = 0)")
       .zipWithIndex.map { case (c, j) => s"WHEN $c THEN $j" }
       .mkString("CASE ", " ", " ELSE 16 END")
-    val flagged = salted.alias("a")
-      .join(salted.alias("b"),
-        col("a.band") === col("b.band") &&
-        col("a.bucket") === col("b.bucket") &&
-        col("a.salt") === col("b.salt") &&
-        col("a.doc_id") < col("b.doc_id"))
+    val flagged = Dedup.saltedBandJoin(sides)
       .filter(expr(s"a.band = ($firstMatch)"))
       .select((0 until PhashBands).map(i => expr(xw(i)).as(s"x$i")): _*)
       .select(

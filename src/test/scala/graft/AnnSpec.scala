@@ -378,10 +378,12 @@ class AnnSpec extends SparkSpec {
   test("IVF-PQ lifecycle: per-entry-point job budget; the coding pass broadcasts no local table") {
     import org.apache.spark.ListenerBusDrain
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import org.apache.spark.sql.execution.LocalTableScanExec
+    import org.apache.spark.sql.execution.{LocalTableScanExec, QueryExecution}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
     import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.util.QueryExecutionListener
+    object plans extends AdaptiveSparkPlanHelper
     // a fresh session: no model cached yet, so the build's count
     // includes training and does not depend on which test ran first
     val s = spark.newSession()
@@ -404,11 +406,23 @@ class AnnSpec extends SparkSpec {
     }
     val path = tempDir("ivfpq-jobs") + "/idx"
     val (corpus, _) = Ann.split(s, sf0001)
+    // (rows, bytes) of every broadcast carrying the ADC lookup tables
+    val lutBroadcasts = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]
+    val lutListener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.collect(qe.executedPlan) {
+          case b: BroadcastExchangeExec if b.output.exists(_.name == "lut") =>
+            (b.metrics("numOutputRows").value, b.metrics("dataSize").value)
+        }.foreach(lutBroadcasts.add)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
     sc.addSparkListener(listener)
     try {
       val build = jobsOf(Ann.buildIvfPqIndex(s, sf0001, path, col("vec_id") % 7 =!= 0))
       val upsert = jobsOf(Ann.ivfPqUpsertBatch(s, path, corpus.filter(col("vec_id") % 7 === 0), 1L))
-      val serve = jobsOf(Ann.ivfPqServe(s, sf0001, path).collect())
+      s.listenerManager.register(lutListener)
+      val serve = try jobsOf(Ann.ivfPqServe(s, sf0001, path).collect())
+        finally s.listenerManager.unregister(lutListener)
       info(s"jobs: build $build, upsert batch $upsert, serve $serve")
       // graft's own tables are read with their declared schema (no
       // footer-inference job), the PQ codebook without a sort, and the
@@ -418,12 +432,18 @@ class AnnSpec extends SparkSpec {
       assert(build <= 15, s"buildIvfPqIndex launched $build jobs")
       assert(upsert <= 5, s"ivfPqUpsertBatch launched $upsert jobs")
       assert(serve <= 13, s"ivfPqServe launched $serve jobs")
+      // the query side is one row per query, not one per probed
+      // (query, cell): a 16 × 256-double table each
+      val luts = lutBroadcasts.toArray.map(_.asInstanceOf[(Long, Long)]).toSeq
+      info(s"LUT broadcasts (rows, bytes): ${luts.mkString(", ")}")
+      assert(luts.nonEmpty, "ivfPqServe must broadcast its query-side LUT rows")
+      assert(luts.forall(_._1 <= Ann.QueryK),
+        s"the LUT broadcast must carry at most ${Ann.QueryK} rows, got ${luts.mkString(", ")}")
     } finally sc.removeSparkListener(listener)
 
     val cent = Ann.readCodebook(s, path)
     val coded = Ann.pqCode(Ann.ivfAssign(corpus, cent), Ann.readPqCodebook(s, path), cent)
     assert(coded.count() == corpus.count())
-    object plans extends AdaptiveSparkPlanHelper
     val p = coded.queryExecution.executedPlan
     val localBroadcasts = plans.collect(p) {
       case b: BroadcastExchangeExec if b.exists(_.isInstanceOf[LocalTableScanExec]) => b

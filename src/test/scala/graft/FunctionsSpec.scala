@@ -50,6 +50,40 @@ class FunctionsSpec extends SparkSpec {
     assert(top(1).getSeq[org.apache.spark.sql.Row](1).map(_.getLong(1)) === Seq(4L))
   }
 
+  test("cross-polytope keys: generated code references the expression, not its rotation tables") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression,
+      InterpretedUnsafeProjection, Literal}
+    import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, GenerateUnsafeProjection}
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types.{ArrayType, FloatType}
+    val vec = BoundReference(0, ArrayType(FloatType, containsNull = false), nullable = true)
+    val keys = graft.functions.CrossPolytopeKeys(vec, seed = 7L, nTables = 16, dim = 64, probes = 2)
+    // whole-stage codegen ships ctx.references with every task; the
+    // 16 × 64 × 64 rotation doubles alone serialize to over 512 KiB
+    val ctx = new CodegenContext
+    keys.genCode(ctx)
+    val bytes = new java.io.ByteArrayOutputStream
+    val out = new java.io.ObjectOutputStream(bytes)
+    out.writeObject(ctx.references.toArray)
+    out.close()
+    assert(bytes.size < 16 * 1024,
+      s"codegen references serialize to ${bytes.size} B; the rotation tables must not ride along")
+    // generated code reads each model field the interpreter uses
+    val rnd = new scala.util.Random(11)
+    val model = Seq.fill(4 * 64)(rnd.nextGaussian())
+    val row = InternalRow(new GenericArrayData(Array.fill[Any](64)(rnd.nextGaussian().toFloat)))
+    def same(e: Expression): Unit =
+      assert(GenerateUnsafeProjection.generate(Seq(e)).apply(row) ===
+        InterpretedUnsafeProjection.createProjection(Seq(e)).apply(row), e.prettyName)
+    same(keys)
+    same(graft.functions.SignBuckets(vec, seed = 7L, nTables = 2, nBits = 8, dim = 64))
+    same(graft.functions.NearestCell(vec, model, 64))
+    same(graft.functions.CellRow(Literal(2), model, 64))
+    same(graft.functions.PqCodes(vec, model, 16, 4))
+    same(graft.functions.PqLut(vec, model, 16, 4))
+  }
+
   test("char-ngram minhash: identical texts → identical signatures; near-dups agree on most slots") {
     val s = spark
     import s.implicits._
