@@ -19,8 +19,20 @@ import org.apache.spark.sql.SparkSession
   *     Spark 4; read as raw int64 nanos instead). Current snapshots use
   *     TIMESTAMP(MICROS) NTZ — both encodings are normalized in
   *     [[graft.sources.Ingest.events]].
+  *   - `file://` paths go through [[graft.io.GraftLocalFileSystem]] and,
+  *     for `FileContext` users such as streaming checkpoints,
+  *     [[graft.io.GraftLocalFs]]: Hadoop's checksummed local file
+  *     systems, minus the `chmod` process Hadoop starts per created file
+  *     and directory when libhadoop is absent and the `readlink` process
+  *     at each end of a `FileContext` rename. Other schemes are
+  *     untouched.
+  *   - the UI is off, and the job, stage, task and SQL-execution state
+  *     Spark keeps for it in the driver heap is capped to a few entries:
+  *     nothing in graft reads the status store.
   */
 object GraftSession {
+
+  private val RetainedUiEntries = 10
 
   def tune(b: SparkSession.Builder, shufflePartitions: Int = 32): SparkSession.Builder = b
     .withExtensions(new graft.functions.GraftExtensions)
@@ -33,6 +45,12 @@ object GraftSession {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.ui.enabled", "false")
+    .config("spark.ui.retainedJobs", RetainedUiEntries.toString)
+    .config("spark.ui.retainedStages", RetainedUiEntries.toString)
+    .config("spark.ui.retainedTasks", RetainedUiEntries.toString)
+    .config("spark.sql.ui.retainedExecutions", RetainedUiEntries.toString)
+    .config("spark.hadoop.fs.file.impl", classOf[graft.io.GraftLocalFileSystem].getName)
+    .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.io.GraftLocalFs].getName)
 
   /** Local session for tests / ad-hoc runs. */
   def local(cores: Int = 4): SparkSession = {

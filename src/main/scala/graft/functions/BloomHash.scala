@@ -106,14 +106,14 @@ case class BloomPositions(child: Expression, salts: Seq[Long], m: Int)
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "graft_bloom_positions"
 
-  @transient private lazy val saltArr: Array[Long] = salts.toArray
+  @transient lazy val saltArr: Array[Long] = salts.toArray
 
   override protected def nullSafeEval(input: Any): Any =
     new GenericArrayData(
       BloomHashing.positions(input.asInstanceOf[Long], saltArr, m))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val s = ctx.addReferenceObj("salts", saltArr, "long[]")
+    val s = VectorOps.modelField(ctx, this, "saltArr", "long[]")
     nullSafeCodeGen(ctx, ev, c =>
       s"${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
         s"graft.functions.BloomHashing.positions($c, $s, $m));")
@@ -124,8 +124,8 @@ case class BloomPositions(child: Expression, salts: Seq[Long], m: Int)
 }
 
 /** Boolean membership probe of a BIGINT key against a BAKED-IN packed
-  * bitmap (m/64 longs — a config-bounded model parameter shipped via a
-  * codegen reference object, the [[NearestCell]] codebook pattern). The
+  * bitmap (m/64 longs — a config-bounded model parameter shipped inside
+  * the expression, the [[NearestCell]] codebook pattern). The
   * probe side therefore stays map-only inside whole-stage codegen: no
   * join, no shuffle, no broadcast exchange — the m/8-byte filter (1 KB
   * at the default m=8192 bits) rides the serialized expression itself.
@@ -139,15 +139,15 @@ case class BloomContains(child: Expression, salts: Seq[Long], m: Int, words: Seq
   override def dataType: DataType = BooleanType
   override def prettyName: String = "graft_bloom_contains"
 
-  @transient private lazy val saltArr: Array[Long] = salts.toArray
-  @transient private lazy val wordArr: Array[Long] = words.toArray
+  @transient lazy val saltArr: Array[Long] = salts.toArray
+  @transient lazy val wordArr: Array[Long] = words.toArray
 
   override protected def nullSafeEval(input: Any): Any =
     BloomHashing.contains(input.asInstanceOf[Long], saltArr, m, wordArr)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val s = ctx.addReferenceObj("salts", saltArr, "long[]")
-    val w = ctx.addReferenceObj("words", wordArr, "long[]")
+    val s = VectorOps.modelField(ctx, this, "saltArr", "long[]")
+    val w = VectorOps.modelField(ctx, this, "wordArr", "long[]")
     nullSafeCodeGen(ctx, ev, c =>
       s"${ev.value} = graft.functions.BloomHashing.contains($c, $s, $m, $w);")
   }

@@ -47,7 +47,11 @@ case class CharNgramMinHash(child: Expression, n: Int, k: Int, seed: Long)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "graft_char_minhash"
 
-  @transient private lazy val (aArr, bArr) = CharNgramMinHash.coeffs(seed, k)
+  /** The universal-hash coefficients, derived from `seed` where the
+    * task runs ([[VectorOps.modelField]]). */
+  @transient lazy val coeffs: (Array[Long], Array[Long]) = CharNgramMinHash.coeffs(seed, k)
+  @transient lazy val aArr: Array[Long] = coeffs._1
+  @transient lazy val bArr: Array[Long] = coeffs._2
 
   override protected def nullSafeEval(input: Any): Any = {
     val s = input.asInstanceOf[UTF8String].toString
@@ -68,8 +72,8 @@ case class CharNgramMinHash(child: Expression, n: Int, k: Int, seed: Long)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val aRef = ctx.addReferenceObj("aArr", aArr, "long[]")
-    val bRef = ctx.addReferenceObj("bArr", bArr, "long[]")
+    val aRef = VectorOps.modelField(ctx, this, "aArr", "long[]")
+    val bRef = VectorOps.modelField(ctx, this, "bArr", "long[]")
     nullSafeCodeGen(ctx, ev, c => {
       val s = ctx.freshName("s")
       val sig = ctx.freshName("sig")

@@ -2,10 +2,13 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftBridge
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, IntegerType, LongType}
 
 /** Native codegen vector arithmetic for the embedding operators
@@ -255,6 +258,72 @@ case class NearestCell(child: Expression, centroids: Seq[Double], dim: Int)
     copy(child = newChild)
 }
 
+/** The IVF probe list of a query: the `probes` cells of a FIXED
+  * codebook whose float centroid copies are most cosine-similar to the
+  * query, best first, as array<int> (`min(probes, k)` cells, never
+  * null). The centroids ship like [[NearestCell]]'s codebook, inside
+  * the expression, so ranking a query's cells needs no join, no
+  * broadcast of a centroid table and no window.
+  *
+  * The order is exactly that of a cross join of the queries with the
+  * (cell, float centroid) rows ranked by `row_number` over
+  * `(cos DESC, cell)`:
+  *   - `cos = dot(q, c) / (qNrm · ‖c‖)` with [[VectorOps.dot]] over the
+  *     `Double.toFloat` centroid copies, under Spark's division: null
+  *     when an operand is null, and on a zero divisor null, or an
+  *     error when `ansi` is set (the session's ANSI mode, as
+  *     `Divide` takes it);
+  *   - Spark's double ordering, descending: NaN first, `0.0 = -0.0`,
+  *     nulls last; ties keep the lower cell.
+  */
+case class NearestCells(query: Expression, qNrm: Expression, centroids: Seq[Double],
+    dim: Int, probes: Int, ansi: Boolean = SQLConf.get.ansiEnabled)
+    extends BinaryExpression {
+
+  require(dim >= 1 && probes >= 1, s"dim and probes must be positive, got $dim/$probes")
+  require(centroids.nonEmpty && centroids.length % dim == 0,
+    s"codebook length ${centroids.length} must be a positive multiple of dim $dim")
+
+  override def left: Expression = query
+  override def right: Expression = qNrm
+  override def nullable: Boolean = false
+  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+  override def prettyName: String = "graft_nearest_cells"
+
+  /** The float centroid copies, one array per cell. */
+  @transient lazy val centRows: Array[ArrayData] = centroids.grouped(dim)
+    .map(c => UnsafeArrayData.fromPrimitiveArray(c.map(_.toFloat).toArray): ArrayData).toArray
+
+  /** ‖c‖ of each float copy, as [[VectorNorm]] computes it. */
+  @transient lazy val centNorms: Array[Double] =
+    centRows.map(c => java.lang.Math.sqrt(VectorOps.dot(c, c)))
+
+  override def eval(input: InternalRow): Any = {
+    val n = qNrm.eval(input)
+    VectorOps.nearestCells(query.eval(input).asInstanceOf[ArrayData], n == null,
+      if (n == null) 0.0 else n.asInstanceOf[Double], centRows, centNorms, probes, ansi)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cents = VectorOps.modelField(ctx, this, "centRows",
+      "org.apache.spark.sql.catalyst.util.ArrayData[]")
+    val norms = VectorOps.modelField(ctx, this, "centNorms", "double[]")
+    val q = query.genCode(ctx)
+    val n = qNrm.genCode(ctx)
+    ev.copy(code = code"""
+      |${q.code}
+      |${n.code}
+      |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
+      |  graft.functions.VectorOps.nearestCells(${q.isNull} ? null : ${q.value},
+      |    ${n.isNull}, ${n.value}, $cents, $norms, $probes, $ansi);""".stripMargin,
+      isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): NearestCells =
+    copy(query = newLeft, qNrm = newRight)
+}
+
 /** Row `cell` of a FIXED cell-major table (k rows of `width` doubles)
   * as array<double>: a per-cell model row (a centroid, a norm² LUT)
   * looked up inside the expression, where a join would have to
@@ -468,6 +537,55 @@ object VectorOps {
     best
   }
 
+  /** The [[NearestCells]] kernel. `q` is null for a null query, and
+    * `qNrm` is read only when `qNrmNull` is false. Each cell's cosine
+    * is evaluated as Spark evaluates `Divide`: the divisor first, the
+    * dot only when the divisor is non-null. */
+  def nearestCells(q: ArrayData, qNrmNull: Boolean, qNrm: Double, cents: Array[ArrayData],
+      cnrms: Array[Double], probes: Int, ansi: Boolean): ArrayData = {
+    val k = cents.length
+    val cos = new Array[Double](k)
+    val isNull = new Array[Boolean](k)
+    var t = 0
+    while (t < k) {
+      val d = qNrm * cnrms(t)
+      if (qNrmNull || q == null) isNull(t) = true
+      else if (d == 0.0) {
+        if (ansi) {
+          // ANSI `Divide` evaluates the dividend before it fails on the divisor
+          dot(q, cents(t))
+          throw new ArithmeticException(
+            "[DIVIDE_BY_ZERO] Division by zero in an IVF probe cosine (zero-norm query or centroid)")
+        }
+        isNull(t) = true
+      } else cos(t) = dot(q, cents(t)) / d
+      t += 1
+    }
+    // (cos DESC NULLS LAST, cell ASC): scanning cells in ascending
+    // order and taking only a strictly better one keeps ties in cell order
+    val out = new Array[Int](java.lang.Math.min(probes, k))
+    val taken = new Array[Boolean](k)
+    var p = 0
+    while (p < out.length) {
+      var best = -1
+      t = 0
+      while (t < k) {
+        if (!taken(t) && (best < 0 || !isNull(t) &&
+            (isNull(best) || compareDoubles(cos(t), cos(best)) > 0))) best = t
+        t += 1
+      }
+      taken(best) = true
+      out(p) = best
+      p += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
+
+  /** Spark's SQL double ordering: NaN above every other value, and
+    * `0.0 = -0.0`. */
+  private def compareDoubles(x: Double, y: Double): Int =
+    if (x == y) 0 else java.lang.Double.compare(x, y)
+
   /** The [[CellRow]] lookup: row `cell` of the prebuilt per-cell arrays. */
   def cellRow(rows: Array[ArrayData], cell: Int): ArrayData = {
     if (cell < 0 || cell >= rows.length)
@@ -578,6 +696,11 @@ object VectorFunctions {
 
   def nearestCell(c: Column, centroids: Seq[Double], dim: Int): Column =
     GraftBridge.column(NearestCell(GraftBridge.expression(c), centroids, dim))
+
+  def nearestCells(query: Column, qNrm: Column, centroids: Seq[Double], dim: Int,
+      probes: Int): Column =
+    GraftBridge.column(NearestCells(GraftBridge.expression(query),
+      GraftBridge.expression(qNrm), centroids, dim, probes))
 
   def cellRow(cell: Column, table: Seq[Double], width: Int): Column =
     GraftBridge.column(CellRow(GraftBridge.expression(cell), table, width))

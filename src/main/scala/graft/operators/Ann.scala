@@ -40,6 +40,11 @@ object Ann {
     * O(N²/50), unrunnable at 100×. */
   private[graft] val QueryK = 128
 
+  /** Columns [[split]] reads from `embeddings`. Declared, so a read
+    * runs no footer-inference job; [[graft.functions.VectorOps.dot]]
+    * requires the float elements anyway. */
+  private val EmbeddingsDdl = "vec_id BIGINT, embedding ARRAY<FLOAT>"
+
   /** Corpus + query split. Queries are the [[QueryK]] vectors with the
     * smallest `splitmix64(vec_id) >>> 1` — a deterministic fixed-SIZE
     * uniform sample (the `q_weighted_sample`/`q_sample_uniform` rank
@@ -53,7 +58,7 @@ object Ann {
     */
   private[graft] def split(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.GraftBridge
-    val base = Ingest.table(s, dir, "embeddings")
+    val base = Publish.readOwn(s, s"$dir/embeddings.parquet", EmbeddingsDdl)
       .select(col("vec_id"), col("embedding"), Dedup.norm("embedding").as("nrm"))
     val mixed = GraftBridge.column(graft.functions.SplitMix64(
       GraftBridge.expression(col("vec_id"))))
@@ -477,37 +482,30 @@ object Ann {
     df.withColumn("cell",
       graft.functions.VectorFunctions.nearestCell(col("embedding"), cent.toSeq, Dim))
 
-  /** Each query's top-`probes` cells by float cosine to the frozen
-    * centroids, as (query_id, q_emb, q_nrm, cell, prk) rows, `prk`
-    * being the cell's probe rank. Queries are the small side; the
-    * float centroid copies only affect probe ORDER, assignment stays
-    * double. */
-  private def ivfProbes(s: SparkSession, queries: DataFrame, cent: Array[Double],
-      probes: Int): DataFrame = {
-    import s.implicits._
-    val centDf = (0 until IvfCells)
-      .map(c => (c, cent.slice(c * Dim, (c + 1) * Dim).map(_.toFloat)))
-      .toDF("cell", "centroid")
-    queries
-      .crossJoin(broadcast(centDf.withColumn("cnrm", Dedup.norm("centroid"))))
-      .withColumn("cos",
-        Dedup.dotExpr("q_emb", "centroid") / (col("q_nrm") * col("cnrm")))
-      .withColumn("prk", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("cos").desc, col("cell"))))
-      .filter(col("prk") <= probes)
-      .select(col("query_id"), col("q_emb"), col("q_nrm"), col("cell"), col("prk"))
-  }
+  /** The queries plus `cells`, each query's top-`probes` cells by
+    * float cosine to the frozen centroids, best first: one
+    * [[graft.functions.NearestCells]] expression per query row, the
+    * centroids inside it. The float centroid copies only affect probe
+    * ORDER, assignment stays double. */
+  private def ivfProbes(queries: DataFrame, cent: Array[Double], probes: Int): DataFrame =
+    queries.withColumn("cells",
+      graft.functions.VectorFunctions.nearestCells(col("q_emb"), col("q_nrm"), cent.toSeq, Dim, probes))
 
   /** IVF candidates: the `index` rows ([[ivfAssign]]'s shape) in each
     * query's probed cells, cosine-scored and tagged with the probe
-    * rank `prk` of the cell that recruited them. */
-  private def ivfCandidates(index: DataFrame, probed: DataFrame): DataFrame =
-    cosineScored(index.join(broadcast(probed), Seq("cell")), "prk")
+    * rank `prk` (1 = best) of the cell that recruited them. */
+  private def ivfCandidates(index: DataFrame, probed: DataFrame): DataFrame = {
+    val probeRows = probed
+      .select(col("query_id"), col("q_emb"), col("q_nrm"),
+        posexplode(col("cells")).as(Seq("pos", "cell")))
+      .withColumn("prk", col("pos") + 1)
+    cosineScored(index.join(broadcast(probeRows), Seq("cell")), "prk")
+  }
 
   private[graft] def ivfScored(s: SparkSession, dir: String, probes: Int): DataFrame = {
     val (corpus, queries) = split(s, dir)
     val cent = sessionCodebook(s, dir, corpus)
-    ivfCandidates(ivfAssign(corpus, cent), ivfProbes(s, queries, cent, probes))
+    ivfCandidates(ivfAssign(corpus, cent), ivfProbes(queries, cent, probes))
   }
 
   def qAnnIvf(s: SparkSession, dir: String): DataFrame =
@@ -825,13 +823,14 @@ object Ann {
       }
   }
 
-  /** The cells of an [[ivfProbes]] list as a static `isin` on the
+  /** The cells of the [[ivfProbes]] rows as a static `isin` on the
     * `cell` partition column of a persisted index, so its scan never
-    * opens an unprobed cell directory. The list is queries × probes
-    * rows, so collecting its cells is driver-safe by construction. */
+    * opens an unprobed cell directory. The rows are one per query, each
+    * with `probes` cells, so collecting them is driver-safe by
+    * construction; the distinct runs on the driver. */
   private def probedCells(probed: DataFrame): Column =
-    col("cell").isin(
-      probed.select("cell").distinct().collect().map(r => Integer.valueOf(r.getInt(0))): _*)
+    col("cell").isin(probed.select("cells").collect()
+      .flatMap(_.getSeq[Int](0)).distinct.sorted.map(Integer.valueOf): _*)
 
   /** Serve top-k from a prebuilt [[buildIvfIndex]] index: [[ivfScored]]'s
     * candidate step over the persisted rows, the scan pruned to the
@@ -841,7 +840,7 @@ object Ann {
       probes: Int = IvfProbes): DataFrame = {
     Publish.recover(s, path)
     val (_, queries) = split(s, dir)
-    val probed = ivfProbes(s, queries, readCodebook(s, path), probes)
+    val probed = ivfProbes(queries, readCodebook(s, path), probes)
     // resident build + streamed batches, pruned to the probed cells.
     // One batch per micro-batch since the last rebuild, which retires
     // them: a planner-side listing, not a data cost.
@@ -1085,30 +1084,28 @@ object Ann {
     }
 
   /** Serve top-k from a prebuilt [[buildIvfPqIndex]] index: the
-    * [[qAnnPq]] steps over the persisted halves. [[pqQueryRows]] gives
-    * each query its probed cells (one aggregate over the
-    * [[ivfProbes]] rows), [[pqShortlist]] ADC-scores the codes of
+    * [[qAnnPq]] steps over the persisted halves. [[pqQueryRows]] takes
+    * the [[ivfProbes]] rows as they are, each query carrying its probed
+    * `cells`, [[pqShortlist]] ADC-scores the codes of
     * those cells down to the top-`rerankC` per query, and
     * [[pqRerank]] float-reranks exactly those ids to the top [[K]].
     *
     * Two bounded driver collects, both constant-sized by construction
     * (the [[ivfServe]] probed-cells precedent): the probed cells
-    * (queries × probes) and the shortlist pairs (queries × rerankC).
+    * (from the same query rows) and the shortlist pairs
+    * (queries × rerankC).
     * The second lets the float half be read under a pushed
     * `vec_id IN` point filter instead of a probed-cell float scan,
     * the IVFADC read shape.
     */
   private[graft] def ivfPqServe(s: SparkSession, dir: String, path: String,
       probes: Int = IvfProbes, rerankC: Int = PqRerankC): DataFrame = {
-    import s.implicits._
     Publish.recover(s, path)
     val (_, queries) = split(s, dir)
     val cent = readCodebook(s, path)
-    val probed = ivfProbes(s, queries, cent, probes)
+    val probed = ivfProbes(queries, cent, probes)
     val cellFilter = probedCells(probed)
-    val qrows = pqQueryRows(
-      probed.groupBy("query_id", "q_emb", "q_nrm").agg(collect_list("cell").as("cells")),
-      readPqCodebook(s, path), cent)
+    val qrows = pqQueryRows(probed, readPqCodebook(s, path), cent)
     // the resident build and the committed streamed batches, each
     // pruned to the probed cells at the scan
     val roots = Publish.roots(s, path)
@@ -1116,10 +1113,16 @@ object Ann {
     val shortlist = pqShortlist(codes, qrows, rerankC).select("query_id", "neighbor_id")
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val ids = shortlist.map(p => java.lang.Long.valueOf(p._2)).distinct
-    val floats = Publish.readRoots(s, roots, "rerank.parquet", FloatRowsDdl)
+    // each shortlisted id names the queries that shortlisted it in a
+    // literal map the float scan explodes, so the pairs never become a
+    // driver-local table that a broadcast job ships back
+    val queriesOf = shortlist.groupBy(_._2).map { case (n, ps) => n -> ps.map(_._1).toSeq }
+    val pairs = Publish.readRoots(s, roots, "rerank.parquet", FloatRowsDdl)
       .filter(cellFilter)
       .filter(col("vec_id").isin(ids: _*))
-    pqRerank(floats, shortlist.toSeq.toDF("query_id", "neighbor_id"), queries)
+      .select(col("vec_id").as("neighbor_id"), col("embedding"), col("nrm"),
+        explode(element_at(typedLit(queriesOf), col("vec_id"))).as("query_id"))
+    pqRerank(pairs, queries)
   }
 
   // ------------------------------------------------------------------
@@ -1443,17 +1446,22 @@ object Ann {
         .cast("long"))
       .filter(col("ark") <= c)
 
-  /** The exact float rerank of a shortlist (query_id, neighbor_id):
-    * the float rows (vec_id, embedding, nrm) joined to the broadcast
-    * shortlist and queries, cosine-scored and cut to the top [[K]].
-    * Reads only what the shortlist names, never a float corpus scan.
+  /** The exact float rerank of shortlisted pairs (query_id,
+    * neighbor_id, embedding, nrm): joined to the broadcast queries,
+    * cosine-scored and cut to the top [[K]]. Reads only what the
+    * shortlist names, never a float corpus scan.
     */
-  private def pqRerank(floats: DataFrame, shortlist: DataFrame, queries: DataFrame): DataFrame =
-    topK(floats
-      .select(col("vec_id").as("neighbor_id"), col("embedding"), col("nrm"))
-      .join(broadcast(shortlist), Seq("neighbor_id"))
+  private def pqRerank(pairs: DataFrame, queries: DataFrame): DataFrame =
+    topK(pairs
       .join(broadcast(queries), Seq("query_id"))
       .select(col("query_id"), col("neighbor_id"), cosine))
+
+  /** The [[pqRerank]] pairs of an in-memory shortlist (query_id,
+    * neighbor_id): the float rows (vec_id, embedding, nrm) joined to
+    * the broadcast shortlist. */
+  private def shortlisted(floats: DataFrame, shortlist: DataFrame): DataFrame =
+    floats.select(col("vec_id").as("neighbor_id"), col("embedding"), col("nrm"))
+      .join(broadcast(shortlist), Seq("neighbor_id"))
 
   /** The in-memory ADC shortlist of [[qAnnPq]] and [[qPqRecall]]: the
     * corpus coded under the session codebooks and every query scoring
@@ -1478,7 +1486,8 @@ object Ann {
     */
   def qAnnPq(s: SparkSession, dir: String): DataFrame = {
     val (corpus, queries) = split(s, dir)
-    pqRerank(corpus, pqAdcRanked(s, dir, PqShortC).select("query_id", "neighbor_id"), queries)
+    pqRerank(shortlisted(corpus, pqAdcRanked(s, dir, PqShortC).select("query_id", "neighbor_id")),
+      queries)
   }
 
   /** PQ quality monitor — [[qQuantRecall]]'s shape over the PQ path:
@@ -1501,7 +1510,7 @@ object Ann {
     val (corpus, queries) = split(s, dir)
     val adc = pqAdcRanked(s, dir, PqShortC)
       .select(col("query_id"), col("neighbor_id"), col("ark")).materialized
-    val fin = pqRerank(corpus, adc.select("query_id", "neighbor_id"), queries)
+    val fin = pqRerank(shortlisted(corpus, adc.select("query_id", "neighbor_id")), queries)
       .select(col("query_id"), col("neighbor_id"), lit(1).as("hit_f"))
     val adcK = adc.filter(col("ark") <= K)
       .select(col("query_id"), col("neighbor_id"), lit(1).as("hit_a"))

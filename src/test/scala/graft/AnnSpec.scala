@@ -406,32 +406,44 @@ class AnnSpec extends SparkSpec {
     }
     val path = tempDir("ivfpq-jobs") + "/idx"
     val (corpus, _) = Ann.split(s, sf0001)
-    // (rows, bytes) of every broadcast carrying the ADC lookup tables
+    // (rows, bytes) of every broadcast carrying the ADC lookup tables,
+    // and every broadcast of a driver-local table (the centroid rows a
+    // probe step would join), over the executed plans of a serve
     val lutBroadcasts = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]
-    val lutListener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        plans.collect(qe.executedPlan) {
+    val localBroadcastPlans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val serveListener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        val p = qe.executedPlan
+        plans.collect(p) {
           case b: BroadcastExchangeExec if b.output.exists(_.name == "lut") =>
             (b.metrics("numOutputRows").value, b.metrics("dataSize").value)
         }.foreach(lutBroadcasts.add)
+        if (plans.collect(p) {
+          case b: BroadcastExchangeExec if b.exists(_.isInstanceOf[LocalTableScanExec]) => b
+        }.nonEmpty) localBroadcastPlans.add(p.toString)
+      }
       override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     sc.addSparkListener(listener)
     try {
       val build = jobsOf(Ann.buildIvfPqIndex(s, sf0001, path, col("vec_id") % 7 =!= 0))
       val upsert = jobsOf(Ann.ivfPqUpsertBatch(s, path, corpus.filter(col("vec_id") % 7 === 0), 1L))
-      s.listenerManager.register(lutListener)
+      s.listenerManager.register(serveListener)
       val serve = try jobsOf(Ann.ivfPqServe(s, sf0001, path).collect())
-        finally s.listenerManager.unregister(lutListener)
+        finally s.listenerManager.unregister(serveListener)
       info(s"jobs: build $build, upsert batch $upsert, serve $serve")
       // graft's own tables are read with their declared schema (no
       // footer-inference job), the PQ codebook without a sort, and the
       // per-cell model rows ride in the coding expression (no broadcast
-      // job). Reading with schema inference, sorting and broadcasting
-      // cost 21 / 12 / 21 jobs here.
-      assert(build <= 15, s"buildIvfPqIndex launched $build jobs")
+      // job), and each query ranks its probed cells inside one
+      // expression (no centroid-table broadcast job, no window). Reading
+      // with schema inference, sorting and broadcasting cost 21 / 12 / 21
+      // jobs here; the probe cross join, the footer-inferred
+      // `embeddings` read and a local broadcast of the shortlist pairs
+      // 15 / 5 / 13.
+      assert(build <= 14, s"buildIvfPqIndex launched $build jobs")
       assert(upsert <= 5, s"ivfPqUpsertBatch launched $upsert jobs")
-      assert(serve <= 13, s"ivfPqServe launched $serve jobs")
+      assert(serve <= 9, s"ivfPqServe launched $serve jobs")
       // the query side is one row per query, not one per probed
       // (query, cell): a 16 × 256-double table each
       val luts = lutBroadcasts.toArray.map(_.asInstanceOf[(Long, Long)]).toSeq
@@ -439,6 +451,14 @@ class AnnSpec extends SparkSpec {
       assert(luts.nonEmpty, "ivfPqServe must broadcast its query-side LUT rows")
       assert(luts.forall(_._1 <= Ann.QueryK),
         s"the LUT broadcast must carry at most ${Ann.QueryK} rows, got ${luts.mkString(", ")}")
+      // the float IVF serve probes the same way
+      val ivfPath = tempDir("ivf-jobs") + "/idx"
+      Ann.buildIvfIndex(s, sf0001, ivfPath)
+      s.listenerManager.register(serveListener)
+      try { Ann.ivfServe(s, sf0001, ivfPath).collect(); ListenerBusDrain(sc) }
+      finally s.listenerManager.unregister(serveListener)
+      assert(localBroadcastPlans.isEmpty,
+        s"a serve broadcast a driver-local table:\n${localBroadcastPlans.toArray.mkString("\n")}")
     } finally sc.removeSparkListener(listener)
 
     val cent = Ann.readCodebook(s, path)

@@ -84,6 +84,149 @@ class FunctionsSpec extends SparkSpec {
     same(graft.functions.PqLut(vec, model, 16, 4))
   }
 
+  /** Bytes a codegen'd `e` adds to a task beyond the expression itself:
+    * `e` and its `ctx.references` serialized in one stream (where a
+    * reference to `e` is a back-reference), minus `e` alone. */
+  private def referenceBytesBeyond(e: org.apache.spark.sql.catalyst.expressions.Expression): Int = {
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
+    def size(objs: AnyRef*): Int = {
+      val bytes = new java.io.ByteArrayOutputStream
+      val out = new java.io.ObjectOutputStream(bytes)
+      objs.foreach(out.writeObject)
+      out.close()
+      bytes.size
+    }
+    val ctx = new CodegenContext
+    e.genCode(ctx)
+    size(e, ctx.references.toArray) - size(e)
+  }
+
+  test("bloom and char-minhash expressions: generated code ships no second copy of their arrays") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression,
+      InterpretedUnsafeProjection}
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.types.{LongType, StringType}
+    import org.apache.spark.unsafe.types.UTF8String
+    import graft.functions.{BloomContains, BloomHashing, BloomPositions, CharNgramMinHash}
+    val key = BoundReference(0, LongType, nullable = true)
+    val text = BoundReference(1, StringType, nullable = true)
+    // 4,096-slot coefficient arrays and a 2^20-bit filter: 64 KiB and
+    // 128 KiB of longs a second copy would add
+    val salts = BloomHashing.salts(7, 11L).toSeq
+    val m = 1 << 20
+    val words = BloomHashing.pack(m, (0 until 5000).map(i => (i * 7919) % m)).toSeq
+    val exprs: Seq[Expression] = Seq(
+      CharNgramMinHash(text, 5, 4096, 3L),
+      BloomPositions(key, salts, m),
+      BloomContains(key, salts, m, words))
+    exprs.foreach { e =>
+      val extra = referenceBytesBeyond(e)
+      assert(extra < 2 * 1024, s"${e.prettyName}: codegen references add $extra B beyond the expression")
+    }
+    val rows = Seq(InternalRow(42L, UTF8String.fromString("the quick brown fox")),
+      InternalRow(7919L, UTF8String.fromString("abc")), InternalRow(null, null))
+    exprs.foreach { e =>
+      val gen = GenerateUnsafeProjection.generate(Seq(e))
+      val interp = InterpretedUnsafeProjection.createProjection(Seq(e))
+      rows.foreach(r => assert(gen.apply(r).copy() === interp.apply(r).copy(), e.prettyName))
+    }
+  }
+
+  /** The cross-join + `row_number` ranking [[graft.functions.NearestCells]]
+    * replaced: each query's cells by (cos DESC, cell), cut at `probes`. */
+  private def crossJoinProbes(queries: org.apache.spark.sql.DataFrame, cent: Seq[Double],
+      dim: Int, probes: Int): Map[Long, Seq[Int]] = {
+    import org.apache.spark.sql.expressions.Window
+    import graft.functions.VectorFunctions.{vectorDot, vectorNorm}
+    val s = spark
+    import s.implicits._
+    val centDf = cent.grouped(dim).zipWithIndex.map { case (c, i) => (i, c.map(_.toFloat)) }
+      .toSeq.toDF("cell", "centroid")
+    queries.crossJoin(broadcast(centDf.withColumn("cnrm", vectorNorm(col("centroid")))))
+      .withColumn("cos", vectorDot(col("q_emb"), col("centroid")) / (col("q_nrm") * col("cnrm")))
+      .withColumn("prk", row_number().over(
+        Window.partitionBy("query_id").orderBy(col("cos").desc, col("cell"))))
+      .filter(col("prk") <= probes)
+      .select("query_id", "prk", "cell").collect()
+      .groupBy(_.getLong(0))
+      .map { case (q, rs) => q -> rs.sortBy(_.getInt(1)).map(_.getInt(2)).toSeq }
+  }
+
+  test("nearest cells == the cross-join + row_number probe ranking (ties, nulls, zero norm, NaN)") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, InterpretedUnsafeProjection}
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
+    import graft.functions.{NearestCells, VectorFunctions}
+    val s = spark
+    import s.implicits._
+    val dim = 4
+    // cells 0 and 1 are equal (tied cosines), 4 is cell 0 reversed,
+    // 6 has zero norm
+    val cent = Seq(
+      Seq(1.0, 0.0, 0.0, 0.0), Seq(1.0, 0.0, 0.0, 0.0), Seq(0.0, 1.0, 0.0, 0.0),
+      Seq(0.0, 0.0, 1.0, 0.0), Seq(-1.0, 0.0, 0.0, 0.0), Seq(0.3, 0.3, 0.0, -0.1),
+      Seq(0.0, 0.0, 0.0, 0.0), Seq(0.1, 0.2, 0.3, 0.4)).flatten
+    val rnd = new scala.util.Random(5)
+    def norm(v: Seq[Float]): Double = math.sqrt(v.map(x => x.toDouble * x.toDouble).sum)
+    val finite: Seq[(Long, Option[Seq[Float]], Option[Double])] = Seq(
+      (1L, Some(Seq(1f, 0f, 0f, 0f)), Some(1.0)),           // ties cells 0 and 1
+      (2L, Some(Seq(0f, 0f, 0f, 1f)), Some(1.0)),           // orthogonal to most cells: 0.0s
+      (3L, Some(Seq(0f, 0f, 0f, 1f)), Some(-1.0)),          // -0.0 cosines
+      (4L, None, None),                                     // null q_emb
+      (5L, None, Some(1.0)),                                // null q_emb, non-null norm
+      (6L, Some(Seq(Float.NaN, 0f, 0f, 1f)), Some(Double.NaN)),   // NaN component
+      (7L, Some(Seq(Float.PositiveInfinity, 0f, 0f, 0f)), Some(1.0))) ++ // NaN, ±Inf and null cosines
+      (8L to 12L).map { id =>
+        val v = Seq.fill(dim)(rnd.nextGaussian().toFloat)
+        (id, Some(v), Some(norm(v)))
+      }
+    val zeroNorm = (13L, Some(Seq(0f, 0f, 0f, 0f)), Some(0.0))
+    def frame(rows: Seq[(Long, Option[Seq[Float]], Option[Double])]) =
+      rows.toDF("query_id", "q_emb", "q_nrm")
+    def probesOf(q: org.apache.spark.sql.DataFrame, c: Seq[Double], probes: Int): Map[Long, Seq[Int]] =
+      q.select(col("query_id"),
+          VectorFunctions.nearestCells(col("q_emb"), col("q_nrm"), c, dim, probes))
+        .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
+    val ansi = "spark.sql.ansi.enabled"
+    val was = spark.conf.get(ansi)
+    try {
+      // without ANSI a zero divisor (zero-norm query or cell) divides to null
+      spark.conf.set(ansi, "false")
+      for (probes <- Seq(1, 3, 8, 20)) {
+        val q = frame(finite :+ zeroNorm)
+        assert(probesOf(q, cent, probes) === crossJoinProbes(q, cent, dim, probes), s"probes=$probes")
+      }
+      // with ANSI a zero divisor fails the division (checked on the
+      // expression below); without the zero-norm cell and query the rest agree
+      spark.conf.set(ansi, "true")
+      val nonZeroCent = cent.take(6 * dim) ++ cent.drop(7 * dim)
+      for (probes <- Seq(3, 20)) {
+        val q = frame(finite)
+        assert(probesOf(q, nonZeroCent, probes) === crossJoinProbes(q, nonZeroCent, dim, probes),
+          s"probes=$probes")
+      }
+    } finally spark.conf.set(ansi, was)
+
+    val qv = BoundReference(0, ArrayType(FloatType, containsNull = true), nullable = true)
+    val qn = BoundReference(1, DoubleType, nullable = true)
+    val e = NearestCells(qv, qn, cent, dim, 3, ansi = false)
+    assert(referenceBytesBeyond(e) < 2 * 1024)
+    val gen = GenerateUnsafeProjection.generate(Seq(e))
+    val interp = InterpretedUnsafeProjection.createProjection(Seq(e))
+    def row(v: Option[Seq[Float]], n: Option[Double]) =
+      InternalRow(v.map(x => new GenericArrayData(x.toArray[Any])).orNull, n.map(Double.box).orNull)
+    (finite :+ zeroNorm).foreach { case (_, v, n) =>
+      assert(gen.apply(row(v, n)).copy() === interp.apply(row(v, n)).copy(), s"$v / $n")
+    }
+    val ansiE = e.copy(ansi = true)
+    val zr = row(zeroNorm._2, zeroNorm._3)
+    intercept[ArithmeticException](GenerateUnsafeProjection.generate(Seq(ansiE)).apply(zr))
+    intercept[ArithmeticException](InterpretedUnsafeProjection.createProjection(Seq(ansiE)).apply(zr))
+  }
+
   test("char-ngram minhash: identical texts → identical signatures; near-dups agree on most slots") {
     val s = spark
     import s.implicits._

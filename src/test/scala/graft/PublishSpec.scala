@@ -313,4 +313,33 @@ class PublishSpec extends SparkSpec {
       (before, after, spark.read.parquet(p).agg(count(lit(1)), sum("id")).head.toSeq)
     })
   }
+
+  // ---- the local file system under every publish ----
+
+  test("file:// goes through graft's local file systems; a published index keeps modes and .crc files") {
+    import java.nio.file.{Files, Paths}
+    import java.nio.file.attribute.PosixFilePermissions
+    import org.apache.hadoop.fs.AbstractFileSystem
+    import org.apache.hadoop.fs.permission.FsPermission
+    assert(fs.getClass === classOf[graft.io.GraftLocalFileSystem])
+    assert(AbstractFileSystem.get(new java.net.URI("file:///"), conf).getClass ===
+      classOf[graft.io.GraftLocalFs])
+    val root = fresh("modes") + "/idx"
+    Ann.buildIvfIndex(spark, sf0001, root)
+    def mode(p: java.nio.file.Path) = PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
+    val walk = Files.walk(Paths.get(root))
+    val all = try walk.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path]) finally walk.close()
+    val (dirs, files) = all.partition(Files.isDirectory(_))
+    val data = files.filterNot(_.getFileName.toString.endsWith(".crc"))
+    assert(dirs.size > 2 && data.exists(_.toString.endsWith(".parquet")))
+    dirs.foreach(d => assert(mode(d) === "rwxr-xr-x", d))
+    files.foreach(f => assert(mode(f) === "rw-r--r--", f))
+    data.foreach { f =>
+      assert(Files.exists(f.resolveSibling(s".${f.getFileName}.crc")), s"$f has no .crc sibling")
+    }
+    // a mode set through the file system lands in-process, bit for bit
+    val f = new Path(data.head.toString)
+    fs.setPermission(f, new FsPermission(Integer.parseInt("640", 8).toShort))
+    assert(mode(data.head) === "rw-r-----")
+  }
 }

@@ -11,7 +11,7 @@ SPARK_DRIVER_MEM="${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)
 SPARK_HOME="${SPARK_HOME:-$(dirname "$(dirname "$(readlink -f "$(command -v spark-submit)")")")}"
 GRAFT_CP="target/scala-2.13/classes:$SPARK_HOME/jars/*"
 # Log through the tests' log4j2 profile, so the runners drop the same
-# two known-benign WARNs the suite does (one file; see its header).
+# known-benign WARNs the suite does (one file; see its header).
 GRAFT_JVM="-Xmx$SPARK_DRIVER_MEM -XX:+UseParallelGC -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC"
 GRAFT_JVM="$GRAFT_JVM -Dlog4j2.configurationFile=$PWD/src/test/resources/log4j2-test.properties"
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
