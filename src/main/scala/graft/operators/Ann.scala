@@ -716,7 +716,7 @@ object Ann {
   /** Columns of the float rows [[ivfAssign]] writes: the IVF
     * `index.parquet` and the IVF-PQ `rerank.parquet`, `cell` being the
     * partition column. */
-  private val FloatRowsDdl = "vec_id BIGINT, embedding ARRAY<FLOAT>, nrm DOUBLE, cell INT"
+  private[graft] val FloatRowsDdl = "vec_id BIGINT, embedding ARRAY<FLOAT>, nrm DOUBLE, cell INT"
 
   /** Build the IVF index ONCE — the production shape (the `q_ann_ivf`
     * bench row trains once per session via [[sessionCodebook]]; a

@@ -1,6 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, GraftBridge}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
@@ -33,8 +35,10 @@ import org.apache.spark.sql.types.LongType
   * once on the driver — and the DAGScheduler serves both jobs from
   * the one materialized shuffle stage. Counts always describe exactly
   * the partitions the ids are assigned in, under any config. The
-  * price — one Row hop out of Tungsten for the final projection — is
-  * the right trade for a key-assignment step that must never be wrong.
+  * numbering zips the plan's own Catalyst rows (`queryExecution.toRdd`)
+  * and appends the id with a [[JoinedRow]], so no row is converted to
+  * an external `Row` and back; the result re-enters Catalyst through
+  * [[GraftBridge.internalCreateDataFrame]].
   *
   * Determinism: the in-partition sort is total (callers pass a unique
   * ordering key), so shuffle-fetch order cannot perturb row order,
@@ -61,8 +65,12 @@ object Surrogate {
       .repartitionByRange(orderCols.map(col): _*)
       .sortWithinPartitions(orderCols.map(col): _*)
     val schema = sorted.schema.add(name, LongType, nullable = false)
-    val rdd = sorted.rdd.zipWithIndex.map { case (r, i) => Row.fromSeq(r.toSeq :+ (i + 1L)) }
-    df.sparkSession.createDataFrame(rdd, schema)
+    val rows = sorted.queryExecution.toRdd.zipWithIndex.mapPartitions[InternalRow] { it =>
+      val id = new GenericInternalRow(1)
+      val joined = new JoinedRow
+      it.map { case (r, i) => id.setLong(0, i + 1L); joined(r, id) }
+    }
+    GraftBridge.internalCreateDataFrame(df.sparkSession, rows, schema)
       .select(df.columns.map(col) :+ col(name): _*)
   }
 }

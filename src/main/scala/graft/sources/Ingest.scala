@@ -205,7 +205,10 @@ object Ingest {
     * micro-batch turn scans into open/footer-read storms and kill
     * split planning at 100 TB). File count is derived from the
     * dataset's ACTUAL on-disk bytes (sum of leaf file sizes, not row
-    * estimates). Unpartitioned datasets rewrite via one
+    * estimates), so `targetBytes` counts compressed bytes: with the
+    * zstd codec [[graft.GraftSession]] sets, the same dataset is
+    * smaller on disk than under snappy and the same target gives
+    * fewer files. Unpartitioned datasets rewrite via one
     * `repartition(n)` round-robin shuffle — no key assumed,
     * size-balanced output. Hive-partitioned layouts (`key=value`
     * subdirectories, e.g. an IVF index from [[graft.operators.Ann]])

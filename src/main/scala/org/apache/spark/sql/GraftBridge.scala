@@ -1,11 +1,15 @@
 package org.apache.spark.sql
 
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.types.StructType
 
 /** Bridge into the `private[sql]` Column↔Expression converters — the
   * standard shim any external Spark extension library needs to expose
-  * a native Catalyst expression as a user-facing [[Column]] — and into
-  * Spark's shutdown-deleted temp directories.
+  * a native Catalyst expression as a user-facing [[Column]] — into
+  * Spark's shutdown-deleted temp directories, and from Catalyst rows
+  * back to a DataFrame.
   */
 object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -23,4 +27,11 @@ object GraftBridge {
   def ofRows(spark: SparkSession,
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** A DataFrame over an RDD of Catalyst rows of `schema`, with no
+    * `Row` conversion on either side. The rows may be reused objects:
+    * the scan projects each one to an `UnsafeRow` as it reads it. */
+  def internalCreateDataFrame(spark: SparkSession, rows: RDD[InternalRow],
+                              schema: StructType): DataFrame =
+    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
 }

@@ -12,6 +12,9 @@ For each query dumped by graft.Verify:
     sort columns by name, compare row-by-row with EXACT equality
     (mirrors the driver's hash match).
   - without: rows-only check (rows > 0).
+A dump DuckDB cannot read (no parquet files, a corrupt footer) marks
+that query fail with DuckDB's error and the sweep goes on; the exit
+code is 1 if any query failed.
 """
 import sys, os, json, glob
 import duckdb
@@ -57,8 +60,15 @@ for name in sorted(result_dirs | set(oracle)):
         mark(name, "fail", 0, "no Verify output")
         fails += 1
         continue
+    # an empty or unreadable dump fails its own query, not the sweep
     gq = duckdb.connect()
-    got_cols, got, got_types = fetch_sorted_cols(gq.sql(f"SELECT * FROM '{outdir}/{name}/*.parquet'"))
+    try:
+        got_cols, got, got_types = fetch_sorted_cols(gq.sql(f"SELECT * FROM '{outdir}/{name}/*.parquet'"))
+    except Exception as e:
+        print(f"FAIL {name}: Verify output unreadable: {e}")
+        mark(name, "fail", 0, f"Verify output unreadable: {e}")
+        fails += 1
+        continue
     if name not in oracle:
         if len(got) > 0:
             print(f"pass {name}: rows-only ({len(got)} rows)")
