@@ -13,7 +13,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * deletion-neighborhood signature set, in one generated-Java pass.
   * Deletion units are Unicode code points, matching the code-point
   * Levenshtein that verifies candidates, so the pigeonhole recall
-  * guarantee holds for non-BMP input too (ADVICE r12).
+  * guarantee holds for non-BMP input too.
   *
   * Replaces a `transform(array_distinct(concat(array(s), transform(...,
   * delete-1), flatten(transform(..., delete-2)))), v -> xxhash64(v))`
@@ -71,7 +71,7 @@ object DeletionHashes {
 
   /** Callable from generated code (static forwarder on the object). */
   def hashes(s: String, maxDel: Int): ArrayData = {
-    // Deletion units are CODE POINTS, not UTF-16 chars (ADVICE r12):
+    // Deletion units are CODE POINTS, not UTF-16 chars:
     // the verifying Levenshtein counts code points, so the pigeonhole
     // guarantee (every lev ≤ maxDel pair shares a signature) must
     // treat a surrogate pair as ONE deletable unit — char-indexed

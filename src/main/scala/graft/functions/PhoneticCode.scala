@@ -7,8 +7,8 @@ import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Alphanumeric Soundex-class phonetic blocking code as a native
-  * Catalyst expression (VERDICT r18 #7 — the third entity-resolution
-  * blocking pass's key). Classic Soundex (Russell 1918) keys letters
+  * Catalyst expression (the key of the third entity-resolution
+  * blocking pass). Classic Soundex (Russell 1918) keys letters
   * to six sound classes; this house variant extends it to the
   * register-id shape real MDM names carry ("Customer#000000123"):
   *

@@ -60,7 +60,7 @@ object QualityStats {
     */
   val StopWords: Seq[String] = Seq("the", "a", "of", "and", "to", "is")
   // ASCII lexicon compared byte-wise against the raw UTF-8 buffer —
-  // the hot path never materializes a java.lang.String (ADVICE r18)
+  // the hot path never materializes a java.lang.String
   private val StopBytes: Array[Array[Byte]] =
     StopWords.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toArray
 
@@ -87,9 +87,9 @@ object QualityStats {
   }
 
   /** Callable from generated code (static forwarder on the object).
-    * Walks the raw UTF-8 bytes — no per-row String copy/decode
-    * (ADVICE r18): a code point is one non-continuation byte; every
-    * multi-byte sequence is outside `[A-Za-z0-9 ]` by construction
+    * Walks the raw UTF-8 bytes — no per-row String copy/decode: a
+    * code point is one non-continuation byte; every multi-byte
+    * sequence is outside `[A-Za-z0-9 ]` by construction
     * (punct-class), and a 4-byte sequence is exactly the astral case
     * the former UTF-16 walk counted once via its surrogate pair.
     */
@@ -178,7 +178,7 @@ object CharDiversityStats {
 
   /** Callable from generated code (static forwarder on the object).
     * Decodes code points straight off the UTF-8 buffer — no per-row
-    * String materialization (ADVICE r18).
+    * String materialization.
     */
   def stats(u: UTF8String): InternalRow = {
     val nb = u.numBytes

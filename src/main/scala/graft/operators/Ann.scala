@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -356,10 +357,10 @@ object Ann {
   // Scale shape: the codebook is a k·dim model parameter carried
   // inside a native [[graft.functions.NearestCell]] expression, so
   // cell assignment is a pure MAP — no join, no shuffle, ever. Each
-  // Lloyd training round is one such map pass plus one aggregate
-  // whose shuffle carries k·dim partial means per map partition;
-  // nothing ever pairs corpus rows with each other. Serving is an
-  // equi-join on cell id against the broadcast probe list: the
+  // Lloyd training round is one such map pass folded into k·dim
+  // partial sums per partition ([[lloydRound]]), one job with no
+  // shuffle; nothing ever pairs corpus rows with each other. Serving
+  // is an equi-join on cell id against the broadcast probe list: the
   // corpus scan drops to nProbe/k of the index, the IVF promise.
   // ------------------------------------------------------------------
 
@@ -369,6 +370,60 @@ object Ann {
   // fixed-point scale for deterministic centroid sums (2^20)
   private val FpScale = 1048576L
 
+  /** One Lloyd round's refined centroids, laid out like `prev`. Each
+    * row of `rows` carries a `slot` column (the cell, or the PQ codes)
+    * and its `embedding`; component `pos` of a row belongs to centroid
+    * entry `slotOf(row, pos)`. The refined entry is the mean of the
+    * components that landed there; an entry no row reached keeps its
+    * previous value (standard Lloyd handling).
+    *
+    * The means are exact FIXED-POINT sums, not avg(double): each
+    * component is quantized to round(v·2^20) by the SQL expression the
+    * oracle replays (FpScale = 2^20 is a power of two, so the scaling
+    * multiply is IEEE-exact in any float width — no engine drift) and
+    * summed as LONG. Integer addition is associative and commutative,
+    * so the centroids are bit-identical regardless of partition count
+    * or merge order, and boundary vectors can't drift between runs.
+    * The 2^-21 quantization error is noise against the float32
+    * inputs. Headroom: |v| < 2^7 ⇒ |q| < 2^27, safe to ~2^35 rows per
+    * entry — audit before raising FpScale. A null component counts
+    * toward its entry's mean but adds nothing to its sum, as `count(1)`
+    * and `sum` do in the oracle's replay.
+    *
+    * Shape: ONE job. `treeAggregate` folds each partition's Catalyst
+    * rows into two `prev.length` long arrays (a model-sized bound, never
+    * data-sized) and merges them without a shuffle at this size; over
+    * many partitions its tree levels merge on the executors before the
+    * driver sees the last few. The corpus never shuffles.
+    */
+  private def lloydRound(rows: DataFrame, prev: Array[Double])(
+      slotOf: (InternalRow, Int) => Int): Array[Double] = {
+    val n = prev.length
+    val quantized = rows.select(col("slot"),
+      expr(s"transform(embedding, v -> CAST(round(v * $FpScale) AS BIGINT))"))
+    val (sums, counts) = quantized.queryExecution.toRdd
+      .treeAggregate((new Array[Long](n), new Array[Long](n)))(
+        { case (acc @ (s1, c1), r) =>
+          if (!r.isNullAt(0) && !r.isNullAt(1)) {
+            val q = r.getArray(1)
+            var pos = 0
+            while (pos < q.numElements) {
+              val at = slotOf(r, pos)
+              c1(at) += 1
+              if (!q.isNullAt(pos)) s1(at) += q.getLong(pos)
+              pos += 1
+            }
+          }
+          acc
+        },
+        { case (acc @ (s1, c1), (s2, c2)) =>
+          var i = 0
+          while (i < n) { s1(i) += s2(i); c1(i) += c2(i); i += 1 }
+          acc
+        })
+    Array.tabulate(n)(i => if (counts(i) == 0) prev(i) else sums(i).toDouble / FpScale / counts(i))
+  }
+
   /** Train the codebook: `IvfCells` centroids (flattened row-major
     * k×dim doubles), hash-spread deterministic seed vectors refined by
     * `iters` Lloyd rounds under cosine — the search metric — so cells
@@ -376,13 +431,12 @@ object Ann {
     *
     * The codebook is a MODEL PARAMETER: k·dim doubles, bounded by
     * config, never by data size. It lives on the driver between
-    * rounds (the collect here is k rows / k·dim partial means — the
-    * corpus itself never leaves the cluster) and ships to executors
-    * inside the [[graft.functions.NearestCell]] expression, exactly
-    * like the seeded LSH plane matrices. Each Lloyd round is
-    * therefore ONE map-only assignment pass plus ONE aggregate whose
-    * shuffle carries k·dim partial sums per map partition — no
-    * corpus-wide re-shuffle anywhere in the build (the obvious
+    * rounds and ships to executors inside the
+    * [[graft.functions.NearestCell]] expression, exactly like the
+    * seeded LSH plane matrices. Each Lloyd round is therefore ONE job
+    * ([[lloydRound]]): a map-only assignment pass folded into k·dim
+    * partial sums per partition, tree-merged on the executors at
+    * scale — no corpus-wide shuffle anywhere in the build (the obvious
     * broadcast-crossjoin + per-vector argmax-aggregate formulation
     * re-shuffles every embedding once per round).
     */
@@ -400,37 +454,10 @@ object Ann {
       s"corpus has fewer than $IvfCells vectors — IVF needs at least one per cell")
     var cent: Array[Double] = seeds.flatMap(_.getSeq[Double](0)).toArray
     for (_ <- 1 to iters) {
-      // Exact FIXED-POINT sums, not avg(double): each component is
-      // quantized to round(v·2^20) and summed as LONG — integer
-      // addition is associative+commutative, so the refined centroids
-      // are bit-identical regardless of partition count or partial-agg
-      // merge order — boundary vectors can't drift cells between runs.
-      // The 2^-21 quantization error is noise against the
-      // float32 inputs; unlike a decimal(38,20) sum this stays inside
-      // whole-stage codegen (the decimal path measured ~5× slower at
-      // sf0.1). Headroom: |v| < 2^7 ⇒ |q| < 2^27, safe to ~2^35 rows
-      // per (cell, dim) — audit before raising FpScale.
-      // cell assignment projected BELOW the explode (the trainPqCodebooks
-      // ExtractGenerator lesson: a generator's sibling expressions land
-      // ABOVE the Generate and re-evaluate per exploded row — a Dim×
-      // amplification of the k·Dim assignment kernel)
-      val means = corpus
-        .select(
-          graft.functions.VectorFunctions
-            .nearestCell(col("embedding"), cent.toSeq, Dim).as("cell"),
-          col("embedding"))
-        .select(col("cell"), posexplode(col("embedding")).as(Seq("pos", "v")))
-        .groupBy(col("cell"), col("pos"))
-        .agg(sum(expr(s"CAST(round(v * $FpScale) AS BIGINT)")).as("s"),
-          count(lit(1)).as("c"))
-        .collect()
-      // empty cells keep their previous centroid (standard Lloyd handling)
-      val next = cent.clone()
-      means.foreach { r =>
-        next(r.getInt(0) * Dim + r.getInt(1)) =
-          r.getLong(2).toDouble / FpScale / r.getLong(3)
-      }
-      cent = next
+      val assigned = corpus.select(
+        graft.functions.VectorFunctions.nearestCell(col("embedding"), cent.toSeq, Dim).as("slot"),
+        col("embedding"))
+      cent = lloydRound(assigned, cent)((r, pos) => r.getInt(0) * Dim + pos)
     }
     cent
   }
@@ -809,11 +836,16 @@ object Ann {
 
   /** The frozen codebook as the flat cell-major array
     * [[trainCodebook]] produces, one collect with every cell placed
-    * and checked by [[placeModelRows]]. */
+    * and checked by [[placeCodebook]]. */
   private[graft] def readCodebook(s: SparkSession, path: String): Array[Double] = {
     val artifact = s"$path/codebook.parquet"
-    placeModelRows(artifact, Publish.readOwn(s, artifact, CodebookDdl).collect(),
-        "cell", "centroid", IvfCells)
+    placeCodebook(artifact, Publish.readOwn(s, artifact, CodebookDdl).collect())
+  }
+
+  /** The collected rows of `artifact`, a [[CodebookDdl]] table, placed
+    * by [[placeModelRows]] into the flat cell-major codebook. */
+  private def placeCodebook(artifact: String, rows: Array[Row]): Array[Double] =
+    placeModelRows(artifact, rows, "cell", "centroid", IvfCells)
       .flatMap { r =>
         val v = r.getSeq[Any](r.fieldIndex("centroid"))
         require(v.length == Dim && !v.contains(null),
@@ -821,7 +853,6 @@ object Ann {
             s"needs $Dim non-null components")
         v.map(_.asInstanceOf[Double])
       }
-  }
 
   /** The cells of the [[ivfProbes]] rows as a static `isin` on the
     * `cell` partition column of a persisted index, so its scan never
@@ -878,20 +909,21 @@ object Ann {
   // ------------------------------------------------------------------
 
   /** Recover the index root, then check its meta against the session
-    * constants — the first step of every LSH entry point. */
+    * constants — the first step of every LSH entry point. The meta is
+    * read under [[LshMetaDdl]], by name, so a reordered file still
+    * validates; a missing or renamed column reads as null and rejects
+    * the index like a mismatched value does. */
   private def lshMetaOk(s: SparkSession, path: String): Unit = {
     Publish.recover(s, path)
-    // fields read BY NAME: validation must not depend on
-    // the writer's column order — an ordinal read of a reordered meta
-    // file would misattribute seed/tables/dim and either spuriously
-    // reject a good index or accept a mismatched one.
-    val m = s.read.parquet(s"$path/meta.parquet").collect().head
-    val (seed, tables, dim) =
-      (m.getAs[Long]("lsh_seed"), m.getAs[Int]("n_tables"), m.getAs[Int]("dim"))
-    require(seed == LshSeed && tables == LshTables && dim == Dim,
-      s"LSH index at $path was built with (seed=$seed, tables=$tables, " +
-        s"dim=$dim) — session expects ($LshSeed, $LshTables, $Dim); rebuild the index")
+    val meta = Publish.readOwn(s, s"$path/meta.parquet", LshMetaDdl).collect()
+    require(meta.sameElements(Seq(Row(LshSeed, LshTables, Dim))),
+      s"LSH index at $path was built with " +
+        meta.map(m => s"(seed=${m.get(0)}, tables=${m.get(1)}, dim=${m.get(2)})").mkString(", ") +
+        s" — session expects ($LshSeed, $LshTables, $Dim); rebuild the index")
   }
+
+  /** Columns of the LSH `meta.parquet`, one row. */
+  private val LshMetaDdl = "lsh_seed BIGINT, n_tables INT, dim INT"
 
   /** Columns of the LSH `index.parquet` ([[lshAssign]]'s rows). */
   private val LshRowsDdl = "vec_id BIGINT, embedding ARRAY<FLOAT>, nrm DOUBLE, bkey INT"
@@ -1001,9 +1033,8 @@ object Ann {
   /** Columns of the codes half [[pqCode]] feeds into `index.parquet`. */
   private val CodesDdl = "vec_id BIGINT, codes ARRAY<TINYINT>, rn DOUBLE, cell INT"
 
-  /** Persist / read the PQ sub-codebooks as a flat (pos, v) model
-    * table — the [[readCodebook]] device for the second frozen model
-    * of the triad. */
+  /** Persist the PQ sub-codebooks as a flat (pos, v) model table, the
+    * second frozen model of the triad; [[readPqModels]] reads it back. */
   private def writePqCodebook(s: SparkSession, path: String, cb: Array[Double]): Unit = {
     import s.implicits._
     cb.toSeq.zipWithIndex.map { case (v, p) => (p, v) }
@@ -1013,17 +1044,29 @@ object Ann {
 
   private val PqCodebookDdl = "pos INT, v DOUBLE"
 
-  /** One collect of the (pos, v) rows, each value placed at `pos` on
-    * the driver ([[placeModelRows]] checks every position is present
-    * once). The length must be a whole number of m × dsub codebook
-    * entries, so a deleted last row is caught too. */
-  private[graft] def readPqCodebook(s: SparkSession, path: String): Array[Double] = {
-    val artifact = s"$path/pq_codebook.parquet"
-    val rows = Publish.readOwn(s, artifact, PqCodebookDdl).collect()
+  /** The collected (pos, v) rows of `artifact`, each value placed at
+    * `pos` on the driver ([[placeModelRows]] checks every position is
+    * present once). The length must be a whole number of m × dsub
+    * codebook entries, so a deleted last row is caught too. */
+  private def placePqCodebook(artifact: String, rows: Array[Row]): Array[Double] = {
     require(rows.nonEmpty && rows.length % (PqM * PqDsub) == 0,
       s"model table $artifact has ${rows.length} rows, not a positive multiple of ${PqM * PqDsub}")
     placeModelRows(artifact, rows, "pos", "v", rows.length)
       .map(r => r.getDouble(r.fieldIndex("v")))
+  }
+
+  /** Both frozen models of an IVF-PQ root, (cell codebook, PQ
+    * sub-codebooks), in ONE collect: the union of the two tables, each
+    * read under its declared DDL and tagged by `model`. Each half is
+    * placed and checked on its own, so an error names its own
+    * artifact. */
+  private[graft] def readPqModels(s: SparkSession, path: String): (Array[Double], Array[Double]) = {
+    val (cbArtifact, pqArtifact) = (s"$path/codebook.parquet", s"$path/pq_codebook.parquet")
+    val (cb, pq) = Publish.readOwn(s, cbArtifact, CodebookDdl).withColumn("model", lit(0))
+      .unionByName(Publish.readOwn(s, pqArtifact, PqCodebookDdl).withColumn("model", lit(1)),
+        allowMissingColumns = true)
+      .collect().partition(r => r.getInt(r.fieldIndex("model")) == 0)
+    (placeCodebook(cbArtifact, cb), placePqCodebook(pqArtifact, pq))
   }
 
   /** Build the IVF-PQ index. One corpus pass writes the float rerank
@@ -1078,8 +1121,7 @@ object Ann {
       arrivals: DataFrame, batchId: Long): Unit =
     if (!arrivals.isEmpty) {
       Publish.recover(s, path)
-      val cent = readCodebook(s, path)
-      val pqCb = readPqCodebook(s, path)
+      val (cent, pqCb) = readPqModels(s, path)
       Publish(s, Publish.batchOf(path, batchId))(writePqHalves(s, _, arrivals, cent, pqCb))
     }
 
@@ -1102,10 +1144,10 @@ object Ann {
       probes: Int = IvfProbes, rerankC: Int = PqRerankC): DataFrame = {
     Publish.recover(s, path)
     val (_, queries) = split(s, dir)
-    val cent = readCodebook(s, path)
+    val (cent, pqCb) = readPqModels(s, path)
     val probed = ivfProbes(queries, cent, probes)
     val cellFilter = probedCells(probed)
-    val qrows = pqQueryRows(probed, readPqCodebook(s, path), cent)
+    val qrows = pqQueryRows(probed, pqCb, cent)
     // the resident build and the committed streamed batches, each
     // pruned to the probed cells at the scan
     val roots = Publish.roots(s, path)
@@ -1285,7 +1327,7 @@ object Ann {
     * expression. Rows without a cell (a null embedding) have no
     * residual and are dropped.
     */
-  private def withResidual(df: DataFrame, cent: Array[Double]): DataFrame =
+  private[graft] def withResidual(df: DataFrame, cent: Array[Double]): DataFrame =
     df.filter(col("cell").isNotNull)
       .withColumn("cvec", graft.functions.VectorFunctions.cellRow(col("cell"), cent.toSeq, Dim))
       .withColumn("remb",
@@ -1322,12 +1364,13 @@ object Ann {
 
   /** Train the m sub-codebooks: [[PqKs]] seed rows picked by the IVF
     * device (TakeOrdered on (md5(vec_id), vec_id) — SQL-replayable),
-    * sliced per subspace, refined by [[PqTrainIters]] Lloyd rounds
+    * sliced per subspace, refined by `iters` Lloyd rounds
     * under subspace L2 (the PQ metric: minimal reconstruction error →
     * tight ADC dot estimates). ALL subspaces train in the same passes:
-    * one map-only coding + one (m·ks·dsub)-row fixed-point aggregate
-    * per round — the corpus never shuffles (the [[trainCodebook]]
-    * shape, m-for-free).
+    * each round is ONE job ([[lloydRound]]), a map-only coding pass
+    * folded into m·ks·dsub fixed-point partial sums per partition and
+    * tree-merged on the executors at scale — the corpus never shuffles
+    * (the [[trainCodebook]] shape, m-for-free).
     *
     * Trains on CELL RESIDUALS (x − c_cell under the frozen
     * [[sessionCodebook]] assignment — [[withResidual]]), the IVFADC
@@ -1343,7 +1386,7 @@ object Ann {
     * layout).
     */
   private[graft] def trainPqCodebooks(s: SparkSession, corpus: DataFrame,
-      cent: Array[Double]): Array[Double] = {
+      cent: Array[Double], iters: Int = PqTrainIters): Array[Double] = {
     val rcorpus = withResidual(ivfAssign(corpus, cent), cent)
       .select(col("vec_id"), col("remb").as("embedding"))
     val seeds = rcorpus
@@ -1360,39 +1403,16 @@ object Ann {
     var cb = new Array[Double](PqM * ks * PqDsub)
     for (t <- 0 until ks; m <- 0 until PqM; i <- 0 until PqDsub)
       cb((m * ks + t) * PqDsub + i) = seeds(t).getSeq[Double](0)(m * PqDsub + i)
-    for (_ <- 1 to PqTrainIters) {
-      // same exact-BIGINT fixed-point means as [[trainCodebook]]
-      // (FpScale = 2^20 is a power of two, so the scaling multiply is
-      // IEEE-exact in any float width — no engine drift)
-      // the coding expression MUST be projected in its own step BELOW
-      // the explode: a combined select(pqCodes(...), posexplode(...))
-      // puts the generator's sibling expressions ABOVE the Generate
-      // (ExtractGenerator), re-evaluating the 16·ks·dsub-op coding
-      // kernel once per EXPLODED row — a 64× amplification measured
-      // at 170 s/iteration on the 100× replica (vs seconds this way)
-      val means = rcorpus
-        .select(
-          graft.functions.VectorFunctions
-            .pqCodes(col("embedding"), cb.toSeq, PqM, PqDsub).as("codes"),
-          col("embedding"))
-        .select(col("codes"), posexplode(col("embedding")).as(Seq("pos", "v")))
-        .select(
-          expr(s"CAST(pos DIV $PqDsub AS INT)").as("m"),
-          // & 255: the byte code is SIGNED in SQL — with ks > 128 a
-          // code of e.g. 200 reads as -56 without the mask
-          expr(s"CAST(element_at(codes, CAST(pos DIV $PqDsub AS INT) + 1) AS INT) & 255").as("code"),
-          col("pos"), col("v"))
-        .groupBy(col("m"), col("code"), col("pos"))
-        .agg(sum(expr(s"CAST(round(v * $FpScale) AS BIGINT)")).as("s"),
-          count(lit(1)).as("c"))
-        .collect()
-      val next = cb.clone() // empty codes keep their previous centroid
-      means.foreach { r =>
-        val m = r.getInt(0)
-        next((m * ks + r.getInt(1)) * PqDsub + (r.getInt(2) - m * PqDsub)) =
-          r.getLong(3).toDouble / FpScale / r.getLong(4)
+    for (_ <- 1 to iters) {
+      val coded = rcorpus.select(
+        graft.functions.VectorFunctions.pqCodes(col("embedding"), cb.toSeq, PqM, PqDsub).as("slot"),
+        col("embedding"))
+      // component pos lies in subspace m = pos / dsub, whose code picks
+      // the entry; & 0xFF reads the signed byte code as 0..255
+      cb = lloydRound(coded, cb) { (r, pos) =>
+        val m = pos / PqDsub
+        (m * ks + (r.getArray(0).getByte(m) & 0xFF)) * PqDsub + pos % PqDsub
       }
-      cb = next
     }
     cb
   }

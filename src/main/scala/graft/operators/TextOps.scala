@@ -1253,9 +1253,10 @@ object TextOps {
     * frequency, and the pair aggregate's key space is bounded by
     * |alphabet|², shuffling a few KB regardless of corpus size.
     * Iterating BPE further means re-running this statistic over a
-    * re-segmented vocabulary (a driver loop over a vocab-sized table,
-    * like [[Ann.trainCodebook]]'s Lloyd rounds — the corpus is never
-    * touched again).
+    * re-segmented vocabulary (a driver loop over a vocab-sized table;
+    * each of [[Ann.trainCodebook]]'s Lloyd rounds is likewise one
+    * bounded fold per round, tree-merged on the executors at scale —
+    * the corpus is never touched again).
     */
   def qBpePairs(s: SparkSession, dir: String): DataFrame =
     docs(s, dir)
@@ -1303,7 +1304,8 @@ object TextOps {
     * [[qVocabTopk]]); every round after that runs on the VOCABULARY
     * table — one pair-explode + bounded-key aggregate, a 1-ROW collect
     * (the chosen merge — the same driver-side bounded-model contract
-    * as `Ann.trainCodebook`'s Lloyd rounds), and one map-only greedy
+    * as `Ann.trainCodebook`'s Lloyd rounds, each one job whose k·dim
+    * partial sums tree-merge on the executors), and one map-only greedy
     * re-segmentation fold. The corpus is never touched again, and each
     * round's vocab is checkpointed so lineage stays R-shallow.
     *

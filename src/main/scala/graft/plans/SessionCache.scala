@@ -10,16 +10,14 @@ import org.apache.spark.sql.SparkSession
   * build-once-serve-many materialization in the engine (co-purchase
   * graph, corpus verdict table, BPE merges, LM/DSIR/perceptron
   * models, IVF codebook). One definition so the eight sites cannot
-  * drift on lifecycle semantics (ADVICE r15; lifecycle redesign r17,
-  * ADVICE r16):
+  * drift on lifecycle semantics:
   *
-  *   - '''No session pinning — for real this time.''' The r16 form
-  *     keyed a [[java.util.WeakHashMap]] by the session, but cached
-  *     values (DataFrames) and the by-name build closures strongly
-  *     reference their session, and a WeakHashMap whose VALUE
-  *     references its KEY never evicts — the documented release
-  *     property was false. Now the value table is keyed by a neutral
-  *     identity TOKEN the session and the cached values cannot reach:
+  *   - '''No session pinning.''' A [[java.util.WeakHashMap]] keyed
+  *     by the session does not release it: cached values (DataFrames)
+  *     and the by-name build closures strongly reference their
+  *     session, and a WeakHashMap whose VALUE references its KEY never
+  *     evicts. So the value table is keyed by a neutral identity TOKEN
+  *     the session and the cached values cannot reach:
   *     a weak session→token map hands out tokens (the token object
   *     holds only a [[WeakReference]] to the session), entries live in
   *     a strong token-keyed map, and a [[ReferenceQueue]] drains dead
@@ -41,7 +39,7 @@ import org.apache.spark.sql.SparkSession
   *   - '''Failed builds un-install themselves.''' A thunk whose build
   *     throws removes itself from the slot (if it still owns it), so
   *     the NEXT caller's build — not the original closure — is the one
-  *     retried (ADVICE r16: getOrElseUpdate is otherwise
+  *     retried (getOrElseUpdate is otherwise
   *     first-build-wins, which is the contract for the engine's
   *     one-build-per-key sites but a trap on retry). A caller still
   *     holding the failed thunk re-runs the original build — callers

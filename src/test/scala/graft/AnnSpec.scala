@@ -156,6 +156,30 @@ class AnnSpec extends SparkSpec {
     assert(bucketDirs === 0L, "a build and an upsert batch must write no bkey= directory")
   }
 
+  test("LSH meta: read by name under its schema; a renamed or mismatched field asks for a rebuild") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{col, lit}
+    val path = tempDir("lsh-meta")
+    Ann.buildLshIndex(spark, sf0001, path)
+    val meta = s"$path/meta.parquet"
+    val original = tempDir("lsh-meta-copy") + "/meta.parquet"
+    spark.read.parquet(meta).write.parquet(original)
+    def serveWith(edit: DataFrame => DataFrame): Unit = {
+      assert(fs.delete(new Path(meta), true))
+      edit(spark.read.parquet(original)).write.parquet(meta)
+      Ann.lshServe(spark, sf0001, path)
+    }
+    serveWith(_.select("dim", "n_tables", "lsh_seed")) // column order is not read
+    def rejected(edit: DataFrame => DataFrame): Unit = {
+      val e = intercept[IllegalArgumentException](serveWith(edit))
+      assert(e.getMessage.contains("rebuild the index"), e.getMessage)
+    }
+    rejected(_.withColumnRenamed("n_tables", "tables"))
+    rejected(_.withColumn("n_tables", lit(8)))
+    rejected(_.withColumn("lsh_seed", col("lsh_seed") + 1))
+    rejected(df => df.union(df))
+  }
+
   test("lshUpsertBatch: serve-after-upsert == one-shot build; replay idempotent; no assignment shuffle") {
     import org.apache.spark.sql.functions.col
     val full = tempDir("lsh-full")
@@ -432,18 +456,28 @@ class AnnSpec extends SparkSpec {
       val serve = try jobsOf(Ann.ivfPqServe(s, sf0001, path).collect())
         finally s.listenerManager.unregister(serveListener)
       info(s"jobs: build $build, upsert batch $upsert, serve $serve")
+      // What each entry point pays:
+      //   build 10: one seed pick and one job per Lloyd round for each
+      //     of the two codebooks (2 + 2 rounds), then the writes;
+      //   upsert 4: the empty-batch check, one read of both frozen
+      //     models, the two halves' writes;
+      //   serve 8: one read of both frozen models, the probed cells,
+      //     the ADC shortlist, the reranked top-k, and the scans and
+      //     broadcasts under them.
       // graft's own tables are read with their declared schema (no
-      // footer-inference job), the PQ codebook without a sort, and the
+      // footer-inference job), the PQ codebook without a sort, the
       // per-cell model rows ride in the coding expression (no broadcast
       // job), and each query ranks its probed cells inside one
-      // expression (no centroid-table broadcast job, no window). Reading
-      // with schema inference, sorting and broadcasting cost 21 / 12 / 21
-      // jobs here; the probe cross join, the footer-inferred
-      // `embeddings` read and a local broadcast of the shortlist pairs
-      // 15 / 5 / 13.
-      assert(build <= 14, s"buildIvfPqIndex launched $build jobs")
-      assert(upsert <= 5, s"ivfPqUpsertBatch launched $upsert jobs")
-      assert(serve <= 9, s"ivfPqServe launched $serve jobs")
+      // expression (no centroid-table broadcast job, no window).
+      // A Lloyd round as a grouped aggregate runs a map job and a result
+      // job, and reading the two models in two collects one job more:
+      // 14 / 5 / 9 jobs. Reading with schema inference, sorting and
+      // broadcasting cost 21 / 12 / 21; the probe cross join, the
+      // footer-inferred `embeddings` read and a local broadcast of the
+      // shortlist pairs 15 / 5 / 13.
+      assert(build <= 10, s"buildIvfPqIndex launched $build jobs")
+      assert(upsert <= 4, s"ivfPqUpsertBatch launched $upsert jobs")
+      assert(serve <= 8, s"ivfPqServe launched $serve jobs")
       // the query side is one row per query, not one per probed
       // (query, cell): a 16 × 256-double table each
       val luts = lutBroadcasts.toArray.map(_.asInstanceOf[(Long, Long)]).toSeq
@@ -461,8 +495,8 @@ class AnnSpec extends SparkSpec {
         s"a serve broadcast a driver-local table:\n${localBroadcastPlans.toArray.mkString("\n")}")
     } finally sc.removeSparkListener(listener)
 
-    val cent = Ann.readCodebook(s, path)
-    val coded = Ann.pqCode(Ann.ivfAssign(corpus, cent), Ann.readPqCodebook(s, path), cent)
+    val (cent, pqCb) = Ann.readPqModels(s, path)
+    val coded = Ann.pqCode(Ann.ivfAssign(corpus, cent), pqCb, cent)
     assert(coded.count() == corpus.count())
     val p = coded.queryExecution.executedPlan
     val localBroadcasts = plans.collect(p) {
@@ -478,7 +512,8 @@ class AnnSpec extends SparkSpec {
     val path = tempDir("ivfpq-model") + "/idx"
     Ann.buildIvfPqIndex(spark, sf0001, path)
     val cent = Ann.readCodebook(spark, path)
-    val pqCb = Ann.readPqCodebook(spark, path)
+    val (cent2, pqCb) = Ann.readPqModels(spark, path)
+    assert(java.util.Arrays.equals(cent2, cent), "both readers must place the same cell codebook")
     val tables = Seq("codebook.parquet", "pq_codebook.parquet")
     // copy both model tables under a fresh root, each through `edit`
     def rewrite(edit: String => DataFrame => DataFrame): String = {
@@ -493,25 +528,108 @@ class AnnSpec extends SparkSpec {
       new java.io.File(s"$shuffled/$t").list().count(_.endsWith(".parquet")) > 1,
       s"fixture: $t must be written as several files")
     assert(Ann.readCodebook(spark, shuffled).sameElements(cent))
-    assert(Ann.readPqCodebook(spark, shuffled).sameElements(pqCb))
+    val (shuffledCent, shuffledPq) = Ann.readPqModels(spark, shuffled)
+    assert(shuffledCent.sameElements(cent) && shuffledPq.sameElements(pqCb))
 
-    def rejected(table: String, read: String => Array[Double])(edit: DataFrame => DataFrame): Unit = {
+    // each edit of `table` must be rejected by every reader of it, the
+    // error naming that table and not its sibling
+    val pqModels: String => Any = Ann.readPqModels(spark, _)
+    def rejected(table: String, reads: Seq[String => Any])(edit: DataFrame => DataFrame): Unit = {
       val root = rewrite(t => if (t == table) edit.andThen(shuffle) else shuffle)
-      val e = intercept[IllegalArgumentException](read(root))
-      assert(e.getMessage.contains(s"$root/$table"), s"the error must name the artifact: ${e.getMessage}")
+      for (read <- reads) {
+        val e = intercept[IllegalArgumentException](read(root))
+        assert(e.getMessage.contains(s"$root/$table"), s"the error must name the artifact: ${e.getMessage}")
+      }
     }
     val last = pqCb.length - 1
     val pq = "pq_codebook.parquet"
-    rejected(pq, Ann.readPqCodebook(spark, _))(_.filter(col("pos") =!= 100))
-    rejected(pq, Ann.readPqCodebook(spark, _))(_.filter(col("pos") =!= last))
-    rejected(pq, Ann.readPqCodebook(spark, _))(
+    rejected(pq, Seq(pqModels))(_.filter(col("pos") =!= 100))
+    rejected(pq, Seq(pqModels))(_.filter(col("pos") =!= last))
+    rejected(pq, Seq(pqModels))(
       _.withColumn("pos", when(col("pos") === 101, 100).otherwise(col("pos"))))
-    rejected(pq, Ann.readPqCodebook(spark, _))(_.withColumnRenamed("v", "value"))
+    rejected(pq, Seq(pqModels))(_.withColumnRenamed("v", "value"))
     val cb = "codebook.parquet"
-    rejected(cb, Ann.readCodebook(spark, _))(_.filter(col("cell") =!= 5))
-    rejected(cb, Ann.readCodebook(spark, _))(
+    val cbReads = Seq(Ann.readCodebook(spark, _: String), pqModels)
+    rejected(cb, cbReads)(_.filter(col("cell") =!= 5))
+    rejected(cb, cbReads)(
       _.withColumn("cell", when(col("cell") === 6, 5).otherwise(col("cell"))))
-    rejected(cb, Ann.readCodebook(spark, _))(_.withColumnRenamed("centroid", "center"))
+    rejected(cb, cbReads)(_.withColumnRenamed("centroid", "center"))
+  }
+
+  test("Lloyd rounds: both codebooks bit-equal to the posexplode-groupBy form, at any partitioning") {
+    import org.apache.spark.sql.{Column, DataFrame, Row}
+    import org.apache.spark.sql.functions._
+    import graft.functions.VectorFunctions
+    // The reference is the round as a grouped aggregate: explode every
+    // component, sum its fixed-point value and count it per (slot,
+    // component), collect, place; an entry no row reached keeps its
+    // previous value.
+    val fp = 1048576
+    def groupedRound(prev: Array[Double], slotted: DataFrame, slotCols: Seq[Column])(
+        at: Row => Int): Array[Double] = {
+      val next = prev.clone()
+      slotted.groupBy(slotCols: _*)
+        .agg(sum(expr(s"CAST(round(v * $fp) AS BIGINT)")), count(lit(1)))
+        .collect()
+        .foreach { r =>
+          val n = r.length
+          next(at(r)) = r.getLong(n - 2).toDouble / fp / r.getLong(n - 1)
+        }
+      next
+    }
+    def refCodebook(corpus: DataFrame): Array[Double] = {
+      var cent = Ann.trainCodebook(corpus, 0)
+      val dim = cent.length / Ann.IvfCells
+      for (_ <- 1 to Ann.IvfIters) {
+        val exploded = corpus
+          .select(VectorFunctions.nearestCell(col("embedding"), cent.toSeq, dim).as("cell"),
+            col("embedding"))
+          .select(col("cell"), posexplode(col("embedding")).as(Seq("pos", "v")))
+        cent = groupedRound(cent, exploded, Seq(col("cell"), col("pos")))(r => r.getInt(0) * dim + r.getInt(1))
+      }
+      cent
+    }
+    def refPqCodebooks(corpus: DataFrame, cent: Array[Double]): Array[Double] = {
+      val dsub = Ann.PqDsub
+      var cb = Ann.trainPqCodebooks(spark, corpus, cent, 0)
+      val ks = cb.length / (Ann.PqM * dsub)
+      val residuals = Ann.withResidual(Ann.ivfAssign(corpus, cent), cent)
+        .select(col("remb").as("embedding"))
+      for (_ <- 1 to Ann.PqTrainIters) {
+        val exploded = residuals
+          .select(VectorFunctions.pqCodes(col("embedding"), cb.toSeq, Ann.PqM, dsub).as("codes"),
+            col("embedding"))
+          .select(col("codes"), posexplode(col("embedding")).as(Seq("pos", "v")))
+          .select(expr(s"CAST(pos DIV $dsub AS INT)").as("m"),
+            expr(s"CAST(element_at(codes, CAST(pos DIV $dsub AS INT) + 1) AS INT) & 255").as("code"),
+            col("pos"), col("v"))
+        cb = groupedRound(cb, exploded, Seq(col("m"), col("code"), col("pos"))) { r =>
+          val m = r.getInt(0)
+          (m * ks + r.getInt(1)) * dsub + r.getInt(2) - m * dsub
+        }
+      }
+      cb
+    }
+    val (corpus, _) = Ann.split(spark, sf001)
+    // the same corpus hashed on three keys into 7 partitions: at least
+    // four of them are empty, and seven partial sums are enough for the
+    // fold to merge them in a tree level on the executors
+    val sevenWay = corpus.repartition(7, col("vec_id") % 3)
+    val sizes = sevenWay.rdd.mapPartitions(it => Iterator(it.size)).collect()
+    assert(sizes.length == 7 && sizes.contains(0), s"fixture: partition sizes ${sizes.mkString(", ")}")
+    // 48 rows over three distinct vectors: most cells and codes draw no
+    // row and keep their previous centroid
+    val three = corpus.select("embedding").limit(3).collect().map(_.getSeq[Float](0)).toSeq
+    val repeated = corpus.orderBy("vec_id").limit(48)
+      .withColumn("embedding", element_at(typedLit(three), (col("vec_id") % 3 + 1).cast("int")))
+    for ((name, c, ref) <- Seq(("as read", corpus, corpus), ("7 partitions", sevenWay, corpus),
+        ("3 distinct vectors", repeated, repeated))) {
+      val cent = refCodebook(ref)
+      val trained = Ann.trainCodebook(c, Ann.IvfIters)
+      assert(java.util.Arrays.equals(trained, cent), s"$name: the IVF codebook differs from the reference")
+      assert(java.util.Arrays.equals(Ann.trainPqCodebooks(spark, c, trained), refPqCodebooks(ref, cent)),
+        s"$name: the PQ codebooks differ from the reference")
+    }
   }
 
   /** Int8 quantization costs 4× less memory; this pins what it costs
