@@ -811,29 +811,6 @@ object Ann {
 
   private val CodebookDdl = "cell INT, centroid ARRAY<DOUBLE>"
 
-  /** Place each collected row of a frozen model table at its key:
-    * every key must be non-null, in [0, n) and present exactly once,
-    * and every value non-null, or the read throws naming `artifact`.
-    * A missing row would otherwise leave a hole (or shift every later
-    * component), and a renamed column reads back as nulls under a
-    * declared schema. Returns the value column's rows in key order. */
-  private def placeModelRows(artifact: String, rows: Array[Row],
-      key: String, value: String, n: Int): Array[Row] = {
-    require(rows.length == n,
-      s"model table $artifact has ${rows.length} rows, expected $n")
-    val placed = new Array[Row](n)
-    rows.foreach { r =>
-      val (k, v) = (r.fieldIndex(key), r.fieldIndex(value))
-      require(!r.isNullAt(k) && !r.isNullAt(v),
-        s"model table $artifact has a null $key or $value: $r")
-      val at = r.getInt(k)
-      require(at >= 0 && at < n, s"model table $artifact: $key $at outside [0, $n)")
-      require(placed(at) == null, s"model table $artifact: $key $at appears twice")
-      placed(at) = r
-    }
-    placed
-  }
-
   /** The frozen codebook as the flat cell-major array
     * [[trainCodebook]] produces, one collect with every cell placed
     * and checked by [[placeCodebook]]. */
@@ -843,9 +820,9 @@ object Ann {
   }
 
   /** The collected rows of `artifact`, a [[CodebookDdl]] table, placed
-    * by [[placeModelRows]] into the flat cell-major codebook. */
+    * by [[Publish.placeModelRows]] into the flat cell-major codebook. */
   private def placeCodebook(artifact: String, rows: Array[Row]): Array[Double] =
-    placeModelRows(artifact, rows, "cell", "centroid", IvfCells)
+    Publish.placeModelRows(artifact, rows, "cell", 0, IvfCells, "centroid")
       .flatMap { r =>
         val v = r.getSeq[Any](r.fieldIndex("centroid"))
         require(v.length == Dim && !v.contains(null),
@@ -1045,13 +1022,13 @@ object Ann {
   private val PqCodebookDdl = "pos INT, v DOUBLE"
 
   /** The collected (pos, v) rows of `artifact`, each value placed at
-    * `pos` on the driver ([[placeModelRows]] checks every position is
-    * present once). The length must be a whole number of m × dsub
-    * codebook entries, so a deleted last row is caught too. */
+    * `pos` on the driver ([[Publish.placeModelRows]] checks every
+    * position is present once). The length must be a whole number of
+    * m × dsub codebook entries, so a deleted last row is caught too. */
   private def placePqCodebook(artifact: String, rows: Array[Row]): Array[Double] = {
     require(rows.nonEmpty && rows.length % (PqM * PqDsub) == 0,
       s"model table $artifact has ${rows.length} rows, not a positive multiple of ${PqM * PqDsub}")
-    placeModelRows(artifact, rows, "pos", "v", rows.length)
+    Publish.placeModelRows(artifact, rows, "pos", 0, rows.length, "v")
       .map(r => r.getDouble(r.fieldIndex("v")))
   }
 

@@ -223,9 +223,9 @@ object TextOps {
 
   /** Order-free oracle body — composers (qFilterPipelineSql,
     * Ann.qHybridSearchSql, CorpusBuild) embed THIS as a CTE; the
-    * standalone oracle appends the presentation ORDER BY (ADVICE r14:
-    * no `.replace("ORDER BY …", "")` string surgery, which silently
-    * no-ops if the tail clause is ever renamed).
+    * standalone oracle appends the presentation ORDER BY (no
+    * `.replace("ORDER BY …", "")` string surgery, which silently no-ops
+    * if the tail clause is ever renamed).
     */
   private[graft] val qQualityScoreBody: String =
     s"""SELECT doc_id,
@@ -343,8 +343,8 @@ object TextOps {
   /** blocklist tokens per 1000 whitespace tokens at which a doc is
     * BLOCKED outright (vs merely flagged). */
   private[graft] val SafetyDensityPm = 5L
-  /** Leet-digit/symbol fold applied per token before lexicon matching
-    * (VERDICT r18 #5): each FROM char is the canonical substitution
+  /** Leet-digit/symbol fold applied per token before lexicon matching:
+    * each FROM char is the canonical substitution
     * for its TO letter (0→o 1→i 3→e 4→a 5→s 7→t @→a $→s), so
     * `5tup1d`/`b0mb`/`n$fw` match their lexicon words. The fold only
     * rewrites digits/symbols — clean prose tokens are untouched, so
@@ -356,10 +356,10 @@ object TextOps {
     * stripped as punctuation before it can read as its letter). */
   private[graft] val TokenEdgePunct = "^[^a-z0-9]+|[^a-z0-9]+$"
 
-  /** Either-form lexicon membership (ADVICE r19): a normalized token
+  /** Either-form lexicon membership: a normalized token
     * hits when its LEET-FOLDED edge-stripped form OR its PLAIN
     * edge-stripped (unfolded) form is a member. Fold-only matching
-    * (r18) let `$`/`@` used as genuine trailing punctuation defeat the
+    * would let `$`/`@` used as genuine trailing punctuation defeat the
     * match (`bomb$` folded to `bombs`, never read as `bomb`) and
     * rewrote every digit-bearing token before membership; matching
     * both forms recovers the leet routes AND the plain-word-with-
@@ -396,7 +396,7 @@ object TextOps {
   }
 
   /** The safety BLOCK rule as a pure function of the text column —
-    * the corpus-build funnel's stage gate (VERDICT r19 #2), SHARED by
+    * the corpus-build funnel's stage gate, SHARED by
     * the batch composition ([[graft.operators.CorpusBuild]]), the
     * increment chain and the streaming twin (the [[qualityKeep]] /
     * [[repetitive]] contract: agreement by construction, not
@@ -427,14 +427,13 @@ object TextOps {
     * TextOpsSpec asserts exact recovery of the planted structure —
     * the `--plant-langs` lesson applied to safety.
     *
-    * OBFUSCATION HARDENING (VERDICT r18 #5): the r18 screen matched
-    * raw lowercased single-space tokens, so accented (`dämn`),
-    * tab-separated, punctuation-wrapped (`damn!`) and leet (`5tup1d`)
-    * variants all passed. Tokens now route through the
-    * [[graft.functions.NormalizeText]] device first (accent strip +
+    * OBFUSCATION HARDENING: a screen over raw lowercased single-space
+    * tokens lets accented (`dämn`), tab-separated, punctuation-wrapped
+    * (`damn!`) and leet (`5tup1d`) variants pass. Tokens route through
+    * the [[graft.functions.NormalizeText]] device first (accent strip +
     * Unicode lowercase + whitespace collapse — the same
     * canonicalization dedup keys on), then membership under the
-    * EITHER-FORM rule ([[lexHit]], ADVICE r19): leet-folded
+    * EITHER-FORM rule ([[lexHit]]): leet-folded
     * ([[LeetFrom]]→[[LeetTo]]) + edge-stripped, OR plain edge-stripped
     * ([[TokenEdgePunct]]) — so `5tup1d` (fold route) and `bomb$`
     * (punctuation route) both hit. The oracle replays the same chain
@@ -1018,7 +1017,7 @@ object TextOps {
   private[graft] val FuzzyBands = 32
   private[graft] val FuzzyRows = 2
 
-  /** Fuzzy (near-match) benchmark decontamination (VERDICT r19 #3) —
+  /** Fuzzy (near-match) benchmark decontamination —
     * the MinHash tier beside [[qContamination]]'s exact word-5-gram
     * overlap: paraphrased or reformatted benchmark leakage breaks
     * every exact 5-gram yet keeps high word-3-gram Jaccard, which is
@@ -1363,7 +1362,7 @@ object TextOps {
     merges.toSeq
   }
 
-  /** Session-scoped trained-merges cache (VERDICT r12 #1, the
+  /** Session-scoped trained-merges cache (the
     * [[graft.operators.Ann.sessionCodebook]] device applied to the
     * tokenizer): `q_bpe_train` and `q_bpe_encode` share one training
     * run per (session, dir) instead of each paying the
@@ -1403,53 +1402,39 @@ object TextOps {
       .orderBy("round")
   }
 
-  /** Corpus tokenization with the trained tokenizer — the APPLY half
-    * of [[qBpeTrain]] and the step every training-data pipeline runs
-    * over 100 TB once the tokenizer is frozen: encode each document
-    * with the learned merges, report per-document word/token counts
-    * and the fixed-point tokens-per-word fertility (the number
-    * tokenizer evaluations compare).
-    *
-    * Shape at scale: the merges apply to the DISTINCT-WORD table
-    * (vocab-sized, [[BpeRounds]] map-only greedy folds — the corpus
-    * is NOT re-segmented row by row), and the corpus pays exactly one
-    * explode + one equi-join against the encoded vocabulary (AQE
-    * broadcasts it while it fits; at web scale it hash-joins — either
-    * way the corpus moves once) + one doc_id rollup. Training runs
-    * once per session ([[sessionBpeMerges]] — vocab-sized, bounded
-    * rounds) so the row stays self-contained without paying the loop
-    * per invocation; a production pipeline feeds a persisted merge
-    * table instead ([[bpeEncodeWith]]).
-    */
   /** Persist the trained merge table — build once, encode many (the
     * [[graft.operators.Dedup.buildDedupIndex]] /
     * [[graft.operators.Ann.buildIvfIndex]] contract applied to the
     * tokenizer: a production pipeline trains offline and every encode
-    * job reads the frozen model instead of retraining).
+    * job reads the frozen model instead of retraining). The layout is
+    * [[BpeModelDdl]].
     */
   private[graft] def buildBpeModel(s: SparkSession, dir: String, path: String): Unit = {
     import s.implicits._
     Publish(s, path)(sessionBpeMerges(s, dir).toDF("round", "sym_a", "sym_b", "n").write.parquet)
   }
 
+  private val BpeModelDdl = "round INT, sym_a STRING, sym_b STRING, n BIGINT"
+
+  /** The persisted [[buildBpeModel]] merge table in round order — a
+    * driver-sized frozen model, rounds 1 to [[BpeRounds]] each present
+    * once ([[Publish.placeModelRows]]). */
+  private[graft] def readBpeModel(s: SparkSession,
+      modelPath: String): Seq[(Int, String, String, Long)] =
+    Publish.placeModelRows(modelPath, Publish.read(s, modelPath, BpeModelDdl).collect(),
+      "round", 1, BpeRounds, "sym_a", "sym_b", "n")
+      .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
+
   /** Encode the corpus against a persisted [[buildBpeModel]] merge
     * table: the frozen merges (a driver-sized model, R rows) apply to
     * the distinct-word vocabulary exactly as in [[qBpeEncode]] — the
     * training loop never runs.
     */
-  /** The persisted [[buildBpeModel]] merge table, round order — a
-    * driver-sized frozen model (R rows). */
-  private[graft] def readBpeModel(s: SparkSession,
-      modelPath: String): Seq[(Int, String, String, Long)] =
-    Publish.read(s, modelPath)
-      .orderBy("round").collect()
-      .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
-
   private[graft] def bpeEncodeWith(s: SparkSession, dir: String, modelPath: String): DataFrame =
     encodeCorpus(s, dir, readBpeModel(s, modelPath))
 
   /** MAP-ONLY per-document encode against a frozen merge table — the
-    * streaming-compatible twin of [[encodeCorpus]] (VERDICT r12 #6).
+    * streaming-compatible twin of [[encodeCorpus]].
     * The batch path encodes each DISTINCT word once and joins the
     * corpus to that vocabulary — the right amortization for a bounded
     * corpus, but a join + rollup is stateful on a stream. Here the
@@ -1485,6 +1470,24 @@ object TextOps {
       .withColumn("tokens_per_word_bp", expr("(n_tokens * 10000) DIV n_words"))
   }
 
+  /** Corpus tokenization with the trained tokenizer — the APPLY half
+    * of [[qBpeTrain]] and the step every training-data pipeline runs
+    * over 100 TB once the tokenizer is frozen: encode each document
+    * with the learned merges, report per-document word/token counts
+    * and the fixed-point tokens-per-word fertility (the number
+    * tokenizer evaluations compare).
+    *
+    * Shape at scale: the merges apply to the DISTINCT-WORD table
+    * (vocab-sized, [[BpeRounds]] map-only greedy folds — the corpus
+    * is NOT re-segmented row by row), and the corpus pays exactly one
+    * explode + one equi-join against the encoded vocabulary (AQE
+    * broadcasts it while it fits; at web scale it hash-joins — either
+    * way the corpus moves once) + one doc_id rollup. Training runs
+    * once per session ([[sessionBpeMerges]] — vocab-sized, bounded
+    * rounds) so the row stays self-contained without paying the loop
+    * per invocation; a production pipeline feeds a persisted merge
+    * table instead ([[bpeEncodeWith]]).
+    */
   def qBpeEncode(s: SparkSession, dir: String): DataFrame =
     encodeCorpus(s, dir, sessionBpeMerges(s, dir))
 
@@ -1511,7 +1514,7 @@ object TextOps {
   }
 
   // ------------------------------------------------------------------
-  // Unigram-LM (SentencePiece-class) tokenizer (VERDICT r19 #7) — the
+  // Unigram-LM (SentencePiece-class) tokenizer — the
   // tokenizer shelf's second member beside BPE. Kudo 2018 trains a
   // piece vocabulary by EM over segmentation likelihood and PRUNES a
   // large seed vocabulary down to target size; this is that loop in
@@ -1666,7 +1669,8 @@ object TextOps {
   }
 
   /** Persist the trained piece table (the [[buildBpeModel]] contract:
-    * train offline once, every encode job reads the frozen model). */
+    * train offline once, every encode job reads the frozen model). The
+    * layout is [[UnigramModelDdl]]. */
   private[graft] def buildUnigramModel(s: SparkSession, dir: String, path: String): Unit = {
     import s.implicits._
     val (_, report) = sessionUnigramModel(s, dir)
@@ -1674,13 +1678,17 @@ object TextOps {
       .toDF("rk", "piece", "n_uses").write.parquet)
   }
 
-  /** The persisted [[buildUnigramModel]] pieces (multi-char — the
-    * segmenter's match lists; single chars are the implicit
-    * fallback). Driver-sized frozen model. */
-  private[graft] def readUnigramModel(s: SparkSession, modelPath: String): Seq[String] =
-    Publish.read(s, modelPath)
-      .filter(length(col("piece")) >= 2)
-      .orderBy("rk").collect().map(_.getString(1)).toSeq
+  private val UnigramModelDdl = "rk BIGINT, piece STRING, n_uses BIGINT"
+
+  /** The persisted [[buildUnigramModel]] pieces in rank order,
+    * multi-char only (the segmenter's match lists; single chars are
+    * the implicit fallback). Driver-sized frozen model, every rank from
+    * 1 present once ([[Publish.placeModelRows]]). */
+  private[graft] def readUnigramModel(s: SparkSession, modelPath: String): Seq[String] = {
+    val rows = Publish.read(s, modelPath, UnigramModelDdl).collect()
+    Publish.placeModelRows(modelPath, rows, "rk", 1, rows.length, "piece", "n_uses")
+      .map(_.getString(1)).filter(p => p.codePointCount(0, p.length) >= 2).toSeq
+  }
 
   /** MAP-ONLY per-document unigram encode against frozen pieces — the
     * [[bpeEncodeMapOnly]] twin: one stateless projection (model as
@@ -1960,7 +1968,7 @@ object TextOps {
 
   /** Substring-level (repeated-span) dedup — the RefinedWeb /
     * exact-substring family that [[qDedupSegment]]'s FIXED windows
-    * can't express (VERDICT r9 #9): a repeated span at an arbitrary
+    * can't express: a repeated span at an arbitrary
     * offset straddles segment boundaries and hides from segment
     * hashing; here every STRIDE-1 [[spanW]]-word window is hashed, a
     * window duplicated corpus-wide marks its token range, and
@@ -2332,8 +2340,8 @@ object TextOps {
 
   /** THE packing token unit — one expression shared by
     * [[qPackSequences]], [[qPackWaste]] and
-    * [[graft.operators.CorpusBuild.qCorpusBuild]] (ADVICE r14: the
-    * composition must not drift from the standalone packing row on
+    * [[graft.operators.CorpusBuild.qCorpusBuild]] (the composition
+    * must not drift from the standalone packing row on
     * texts with consecutive/leading/trailing spaces), with its DuckDB
     * twin kept adjacent so the pair can never diverge silently.
     */
@@ -3424,7 +3432,7 @@ object TextOps {
     * [[clearModelCache]] after an in-place rewrite). The MODEL is
     * cached, never the scored result: every invocation of the query
     * row still pays the honest corpus score pass (the q_ann_ivf
-    * codebook-cache precedent, VERDICT r12 #1) — only training stops
+    * codebook-cache precedent) — only training stops
     * being re-paid, by this row and by [[qPplSourceMix]].
     */
   private val lmModelCache = new graft.plans.SessionCache[DataFrame]
@@ -3442,6 +3450,16 @@ object TextOps {
   private[graft] def buildLmModel(s: SparkSession, dir: String, path: String): Unit =
     Publish(s, path)(lmTrainModel(s, dir).write.parquet)
 
+  /** Layout of a [[buildLmModel]] table; the scorer needs every column
+    * (a null `bits` would score as a back-off, a null key as OOV). */
+  private val LmModelDdl =
+    "lang STRING NOT NULL, w1 STRING NOT NULL, w2 STRING NOT NULL, bits BIGINT NOT NULL"
+
+  /** The persisted [[buildLmModel]] table, an executor-side model read
+    * by [[lmScoreWith]] and `Streams.lmScore`. */
+  private[graft] def readLmModel(s: SparkSession, modelPath: String): DataFrame =
+    Publish.read(s, modelPath, LmModelDdl)
+
   /** Score arbitrary documents (doc_id, lang, text) against a frozen
     * LM model table — ONE left equi-join on (lang, w1, w2) + the
     * per-doc rollup; unseen pairs charge [[LmBackoffBits]]. Identical
@@ -3458,7 +3476,7 @@ object TextOps {
 
   /** Batch serve against a persisted [[buildLmModel]] table. */
   private[graft] def lmScoreWith(s: SparkSession, dir: String, modelPath: String): DataFrame =
-    lmScoreDocs(docs(s, dir), Publish.read(s, modelPath))
+    lmScoreDocs(docs(s, dir), readLmModel(s, modelPath))
 
   /** Order-free oracle body — see [[qQualityScoreBody]]. */
   private[graft] val qLmPerplexityBody: String =
@@ -3817,12 +3835,12 @@ object TextOps {
     * the scored result — every invocation of the query row pays the
     * honest corpus score pass.
     */
-  private val dsirModelCache = new graft.plans.SessionCache[(DataFrame, DataFrame)]
+  private val dsirModelCache = new graft.plans.SessionCache[(DataFrame, Long)]
 
-  private def dsirSessionModel(s: SparkSession, dir: String): (DataFrame, DataFrame) =
+  private def dsirSessionModel(s: SparkSession, dir: String): (DataFrame, Long) =
     dsirModelCache.getOrElseUpdate(s, dir) {
       val (m, d) = dsirTrainModel(s, dir)
-      (m.materialized, d.materialized)
+      (m.materialized, d.head().getLong(0))
     }
 
   /** Persist the trained DSIR model (bucket table + 1-row default as
@@ -3836,10 +3854,24 @@ object TextOps {
         col("default_bits").as("ratio_bits"))).write.parquet)
   }
 
+  private val DsirModelDdl = "f STRING, ratio_bits BIGINT NOT NULL"
+
+  /** The persisted [[buildDsirModel]] table as (bucket table, default
+    * ratio), read by [[dsirScoreWith]] and `Streams.dsirScore`. The
+    * default is its one `f IS NULL` row, collected and checked on the
+    * driver: a renamed `f` would make every row a default row. */
+  private[graft] def readDsirModel(s: SparkSession, modelPath: String): (DataFrame, Long) = {
+    val m = Publish.read(s, modelPath, DsirModelDdl)
+    val dflt = Publish.modelRow(s"$modelPath (f IS NULL)",
+      m.filter(col("f").isNull).select("ratio_bits").collect())
+    (m.filter(col("f").isNotNull), dflt.getLong(0))
+  }
+
   /** Score arbitrary documents against a trained DSIR model: one
-    * Generate + one broadcast left join (the model is ≤4096 + 1 rows)
-    * + a per-doc partial-aggregated rollup — map-side-combine-only at
-    * any corpus size. `sum_bits` is the doc's summed log importance
+    * Generate + one broadcast left join (the model is ≤4096 rows) + a
+    * per-doc partial-aggregated rollup — map-side-combine-only at any
+    * corpus size. A feature outside `model` scores `dflt`, the
+    * unseen-feature ratio. `sum_bits` is the doc's summed log importance
     * ratio (positive = target-like); `slr_ppm` the
     * [[DsirShiftBits]]-shifted fixed-point per-feature average;
     * `dsir_band` the [[DsirBandPpm]] band the selection policy keys
@@ -3847,13 +3879,10 @@ object TextOps {
     * carries the signal — floor-log2 rounding shifts all scores by a
     * model-wide constant).
     */
-  private[graft] def dsirScoreDocs(docsDf: DataFrame, model: DataFrame,
-      dflt: DataFrame): DataFrame =
+  private[graft] def dsirScoreDocs(docsDf: DataFrame, model: DataFrame, dflt: Long): DataFrame =
     dsirFeats(docsDf, Nil)
       .join(broadcast(model), Seq("f"), "left")
-      .crossJoin(broadcast(dflt))
-      .select(col("doc_id"),
-        coalesce(col("ratio_bits"), col("default_bits")).as("r"))
+      .select(col("doc_id"), coalesce(col("ratio_bits"), lit(dflt)).as("r"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_feats"), sum(col("r")).as("sum_bits"))
       .withColumn("slr_ppm",
@@ -3862,10 +3891,8 @@ object TextOps {
 
   /** Batch serve against a persisted [[buildDsirModel]] table. */
   private[graft] def dsirScoreWith(s: SparkSession, dir: String, modelPath: String): DataFrame = {
-    val m = Publish.read(s, modelPath)
-    dsirScoreDocs(docs(s, dir),
-      m.filter(col("f").isNotNull),
-      m.filter(col("f").isNull).select(col("ratio_bits").as("default_bits")))
+    val (model, dflt) = readDsirModel(s, modelPath)
+    dsirScoreDocs(docs(s, dir), model, dflt)
   }
 
   /** DSIR importance weights (Data Selection via Importance
@@ -4375,6 +4402,12 @@ object TextOps {
       .withColumn("x1", stopCount(enStops))
       .withColumn("x2", expr("CAST(regexp_count(text, '[^\\\\x00-\\\\x7f]') AS BIGINT)"))
 
+  /** The margin wb·b + w1·x1 + w2·x2 of [[withPerceptronFeats]]' row
+    * under weights `w` = (wb, w1, w2), inlined as literals: the one
+    * linear form the trainer, the eval and both serves score. */
+  private def perceptronMargin(w: (Long, Long, Long)): Column =
+    lit(w._1) * col("b") + lit(w._2) * col("x1") + lit(w._3) * col("x2")
+
   /** Run the [[PerceptronEpochs]] batch epochs; returns the per-epoch
     * history (epoch, n_err, wb, w1, w2). Model state between epochs
     * is three BIGINTs on the driver — the Lloyd pattern. */
@@ -4386,7 +4419,7 @@ object TextOps {
     var (wb, w1, w2) = (0L, 0L, 0L)
     val hist = Seq.newBuilder[(Long, Long, Long, Long, Long)]
     for (epoch <- 1 to PerceptronEpochs) {
-      val mis = col("y") * (lit(wb) * col("b") + lit(w1) * col("x1") + lit(w2) * col("x2")) <= 0
+      val mis = col("y") * perceptronMargin((wb, w1, w2)) <= 0
       val r = f.agg(
         sum(when(mis, col("y") * col("b")).otherwise(0L)).as("db"),
         sum(when(mis, col("y") * col("x1")).otherwise(0L)).as("d1"),
@@ -4416,22 +4449,28 @@ object TextOps {
       .toDF("w_bias", "w_stop", "w_nonascii").write.parquet)
   }
 
-  /** Score arbitrary docs (doc_id, text) against a frozen weight
-    * table: one broadcast of the 1-row model + map-only margin and
-    * label — stateless, the shape both the batch and streaming serve
-    * paths share. */
-  private[graft] def perceptronScoreDocs(docsDf: DataFrame, model: DataFrame): DataFrame =
+  private val PerceptronModelDdl = "w_bias BIGINT, w_stop BIGINT, w_nonascii BIGINT"
+
+  /** The persisted [[buildPerceptronModel]] weights (wb, w1, w2), its
+    * one row collected ([[Publish.modelRow]]). */
+  private[graft] def readPerceptronModel(s: SparkSession, modelPath: String): (Long, Long, Long) = {
+    val r = Publish.modelRow(modelPath, Publish.read(s, modelPath, PerceptronModelDdl).collect(),
+      "w_bias", "w_stop", "w_nonascii")
+    (r.getLong(0), r.getLong(1), r.getLong(2))
+  }
+
+  /** Score arbitrary docs (doc_id, text) under frozen weights `w`:
+    * map-only margin and label with the weights as literals (no model
+    * table in the plan) — stateless, the shape both the batch and
+    * streaming serve paths share. */
+  private[graft] def perceptronScoreDocs(docsDf: DataFrame, w: (Long, Long, Long)): DataFrame =
     withPerceptronFeats(docsDf)
-      .crossJoin(broadcast(model))
-      .select(col("doc_id"),
-        (col("w_bias") * col("b") + col("w_stop") * col("x1")
-          + col("w_nonascii") * col("x2")).as("margin"),
-        (col("w_bias") * col("b") + col("w_stop") * col("x1")
-          + col("w_nonascii") * col("x2") > 0).as("pred_en"))
+      .select(col("doc_id"), perceptronMargin(w).as("margin"))
+      .withColumn("pred_en", col("margin") > 0)
 
   /** Batch serve against a persisted [[buildPerceptronModel]] table. */
   private[graft] def perceptronScoreWith(s: SparkSession, dir: String, modelPath: String): DataFrame =
-    perceptronScoreDocs(docs(s, dir), Publish.read(s, modelPath))
+    perceptronScoreDocs(docs(s, dir), readPerceptronModel(s, modelPath))
 
   /** Classifier evaluation: the trained [[qPerceptron]] separator
     * scored back over the corpus and graded against the `lang` label,
@@ -4451,7 +4490,7 @@ object TextOps {
     val (_, _, wb, w1, w2) = trainPerceptron(s, dir).last
     withPerceptronFeats(docs(s, dir))
       .select(col("source"), (col("lang") === "en").as("actual"),
-        (lit(wb) * col("b") + lit(w1) * col("x1") + lit(w2) * col("x2") > 0).as("pred"))
+        (perceptronMargin((wb, w1, w2)) > 0).as("pred"))
       .groupBy(col("source"))
       .agg(
         sum(when(col("pred") && col("actual"), 1L).otherwise(0L)).as("tp"),
@@ -4542,7 +4581,7 @@ object TextOps {
        |ORDER BY epoch""".stripMargin
   }
 
-  // Hashed-feature classifier (VERDICT r13 #4): the [[qPerceptron]]
+  // Hashed-feature classifier: the [[qPerceptron]]
   // integer-perceptron idea run over the DSIR 4096-bucket hashed
   // n-gram space; the model is a bucket-indexed weight TABLE instead
   // of driver-held scalars. Three departures from the naive batch
@@ -4660,8 +4699,8 @@ object TextOps {
   }
 
   /** Session cache for the trained hashed-classifier weight table —
-    * the [[dsirSessionModel]]/[[lmSessionModel]] precedent (VERDICT
-    * r12 #1: self-contained model rows stop re-paying training per
+    * the [[dsirSessionModel]]/[[lmSessionModel]] precedent
+    * (self-contained model rows stop re-paying training per
     * invocation; the MODEL is cached, never scored results, and data
     * dirs are immutable snapshots within a session). 16 epochs of
     * table-state training cost ~18 s at sf0.1 — without the cache the

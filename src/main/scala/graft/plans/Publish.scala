@@ -1,7 +1,9 @@
 package graft.plans
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{col, lit, raise_error, when}
+import org.apache.spark.sql.types.StructType
 
 /** Whole-artifact publish: THE device every rebuild of a persisted
   * artifact (corpus root and its manifest / lane tables, the near-dup
@@ -26,7 +28,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * A leftover `tmpOf(t)` is garbage in every state and is deleted.
   * Recovery needs only the target (the staging names derive from it),
   * is idempotent, and runs at the top of every entry point that reads
-  * a published artifact ([[read]] for single-table artifacts).
+  * a published artifact ([[read]] for frozen models).
   *
   * Streamed batches (the increments of the IVF, LSH and IVF-PQ
   * indexes, of the novelty hash index and of the near-dup signature
@@ -47,6 +49,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * a level of indirection (a catalog entry, a manifest or a pointer
   * flip), which at scale is a table format's commit protocol; this is
   * the rewrite step under one.
+  *
+  * Frozen models (the TextOps model tables, the IVF and PQ codebooks)
+  * are read back under the DDL their writer declares beside them,
+  * never a schema inferred from the footers: [[read]] for a model that
+  * is its own target, [[readOwn]] for one inside an index root, and
+  * [[placeModelRows]] to check a model collected to the driver.
   */
 object Publish {
 
@@ -128,9 +136,57 @@ object Publish {
     roots.map(r => readOwn(s, s"$r/$table", ddl)).reduceOption(_ unionByName _)
       .getOrElse(s.read.schema(ddl).parquet())
 
-  /** A published single-table artifact, recovered first. */
-  def read(s: SparkSession, target: String): DataFrame = {
+  /** The declared model read: the frozen model at `target`, recovered
+    * first and read under `ddl`, the layout its writer declares. Under
+    * a declared schema a column the files lack reads as nulls, so a
+    * null in a column `ddl` marks NOT NULL fails the task that reads
+    * it, with an error naming `target` and the column: a model scored
+    * on the executors cannot fall back to a default in silence. A model
+    * collected to the driver is checked there instead
+    * ([[placeModelRows]], [[modelRow]]). No job runs until the result
+    * is used. */
+  def read(s: SparkSession, target: String, ddl: String): DataFrame = {
     recover(s, target)
-    s.read.parquet(target)
+    val declared = StructType.fromDDL(ddl)
+    readOwn(s, target, ddl).select(declared.fields.toSeq.map { f =>
+      if (f.nullable) col(f.name)
+      else when(col(f.name).isNull, raise_error(lit(s"model table $target has a null ${f.name}")))
+        .otherwise(col(f.name)).as(f.name)
+    }: _*)
   }
+
+  /** Place each collected row of a frozen model table at its key:
+    * every key must be non-null, in [first, first + n) and present
+    * exactly once (keys start at 0 for array positions, at 1 for ranks
+    * and rounds), and every `values` column non-null, or the read
+    * throws naming `artifact`. A missing row would otherwise leave a
+    * hole (or shift every later component), and a renamed column reads
+    * back as nulls under a declared schema. Returns the rows in key
+    * order. */
+  def placeModelRows(artifact: String, rows: Array[Row], key: String, first: Int, n: Int,
+      values: String*): Array[Row] = {
+    require(rows.length == n, s"model table $artifact has ${rows.length} rows, expected $n")
+    val placed = new Array[Row](n)
+    rows.foreach { r =>
+      requireValues(artifact, r, key +: values)
+      val at = r.getAs[Number](key).longValue - first
+      require(at >= 0 && at < n,
+        s"model table $artifact: $key ${at + first} outside [$first, ${first + n})")
+      require(placed(at.toInt) == null, s"model table $artifact: $key ${at + first} appears twice")
+      placed(at.toInt) = r
+    }
+    placed
+  }
+
+  /** The one row of a single-row frozen model table, its `values`
+    * columns non-null; anything else throws naming `artifact`. */
+  def modelRow(artifact: String, rows: Array[Row], values: String*): Row = {
+    require(rows.length == 1, s"model table $artifact has ${rows.length} rows, expected 1")
+    requireValues(artifact, rows.head, values)
+    rows.head
+  }
+
+  private def requireValues(artifact: String, r: Row, columns: Seq[String]): Unit =
+    columns.foreach(c =>
+      require(!r.isNullAt(r.fieldIndex(c)), s"model table $artifact has a null $c: $r"))
 }

@@ -8,9 +8,10 @@ import org.apache.spark.sql.SparkSession
 
 /** Session-scoped build-once cache — THE device behind every
   * build-once-serve-many materialization in the engine (co-purchase
-  * graph, corpus verdict table, BPE merges, LM/DSIR/perceptron
-  * models, IVF codebook). One definition so the eight sites cannot
-  * drift on lifecycle semantics:
+  * graph, part co-occurrence edges, corpus verdict table, BPE merges,
+  * unigram pieces, LM and DSIR models, hashed-classifier weights, IVF
+  * codebook, PQ sub-codebooks, the session IVF-PQ index). One
+  * definition so the sites cannot drift on lifecycle semantics:
   *
   *   - '''No session pinning.''' A [[java.util.WeakHashMap]] keyed
   *     by the session does not release it: cached values (DataFrames)

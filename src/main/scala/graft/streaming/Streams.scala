@@ -1,10 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
+import graft.operators.TextOps
 import graft.plans.Publish
 
 /** Structured Streaming twins of the batch event-time operators
@@ -99,8 +100,8 @@ object Streams {
         col("event_type"), col("n_users_est"))
 
   /** Watermarked TRAILING-7-DAY distinct-user reach — the streaming
-    * face of `ScaleOps.qSlidingReach`'s production contract (VERDICT
-    * r9 #7): each event fans out to the ≤7 one-day-slide windows it
+    * face of `ScaleOps.qSlidingReach`'s production contract: each
+    * event fans out to the ≤7 one-day-slide windows it
     * serves (a bounded Expand BEFORE the partial aggregate — the
     * `window(size=7d, slide=1d)` assignment, never a range join) and
     * per-(window, type) HLL++ sketch state merges the fan-out, ~KB
@@ -133,22 +134,38 @@ object Streams {
     * windows, not window history; the watermark bounds both the state
     * and how far back a partition can still be rewritten.
     */
-  def publishWindows(events: DataFrame, destDir: String, checkpointDir: String): Unit = {
-    val q = tumblingCounts(events)
-      .writeStream
-      .outputMode(OutputMode.Update())
+  def publishWindows(events: DataFrame, destDir: String, checkpointDir: String): Unit =
+    runAvailable(tumblingCounts(events), checkpointDir, OutputMode.Update()) { (df, _) =>
+      df.withColumn("wpart", col("window_start_ms"))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("wpart")
+        .parquet(destDir)
+    }
+
+  /** Run `stream` over everything available now (`Trigger.AvailableNow`)
+    * under `checkpointDir`, handing each micro-batch and its id to
+    * `each`, and return when it has drained. */
+  private def runAvailable(stream: DataFrame, checkpointDir: String,
+      mode: OutputMode = OutputMode.Append())(each: (DataFrame, Long) => Unit): Unit =
+    stream.writeStream
+      .outputMode(mode)
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        df.withColumn("wpart", col("window_start_ms"))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("wpart")
-          .parquet(destDir)
-      }
+      .foreachBatch((batch: Dataset[Row], id: Long) => each(batch, id))
       .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination()
-  }
+      .awaitTermination()
+
+  /** The sink of the streamed model scorers: micro-batch N of
+    * `arrivals`, scored by `score`, OVERWRITES `outPath/batch=N`. The
+    * directory derives from the batch id alone, so a crash-replayed
+    * micro-batch rewrites it and the output converges to exactly-once
+    * contents. */
+  private def scoreBatches(arrivals: DataFrame, outPath: String, checkpointDir: String)(
+      score: DataFrame => DataFrame): Unit =
+    runAvailable(arrivals, checkpointDir) { (batch, id) =>
+      score(batch).write.mode("overwrite").parquet(s"$outPath/batch=$id")
+    }
 
   /** Streaming exact dedup — the continuous twin of the batch
     * `Dedup.qDedupExact`: documents arriving on a stream are deduped
@@ -238,21 +255,13 @@ object Streams {
       spark: SparkSession,
       arrivals: DataFrame,
       indexPath: String,
-      checkpointDir: String): Unit = {
-    val q = arrivals
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Ann.ivfUpsertBatch(batch.sparkSession, indexPath, batch.toDF(), batchId)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      checkpointDir: String): Unit =
+    runAvailable(arrivals, checkpointDir) { (batch, batchId) =>
+      graft.operators.Ann.ivfUpsertBatch(batch.sparkSession, indexPath, batch, batchId)
+    }
 
   /** Streaming tokenizer encode — the streaming twin of
-    * `TextOps.bpeEncodeWith` (VERDICT r12 #6): documents arriving on
+    * `TextOps.bpeEncodeWith`: documents arriving on
     * the wire are encoded against a persisted `buildBpeModel` merge
     * table. The frozen model (R merge rows, read once on the driver)
     * ships as literals inside the fold expressions
@@ -267,11 +276,10 @@ object Streams {
     * tokenizer-versioning event, not a hot swap).
     */
   def bpeEncode(docs: DataFrame, modelPath: String): DataFrame =
-    graft.operators.TextOps.bpeEncodeMapOnly(docs,
-      graft.operators.TextOps.readBpeModel(docs.sparkSession, modelPath))
+    TextOps.bpeEncodeMapOnly(docs, TextOps.readBpeModel(docs.sparkSession, modelPath))
 
   /** Streaming unigram-tokenizer encode — [[bpeEncode]]'s twin for the
-    * shelf's second tokenizer (VERDICT r19 #7): arrivals encode
+    * shelf's second tokenizer: arrivals encode
     * against a persisted `TextOps.buildUnigramModel` piece table, the
     * frozen pieces shipped as literals inside the greedy-match fold
     * (`TextOps.uniEncodeMapOnly`) — one STATELESS projection per
@@ -280,8 +288,7 @@ object Streams {
     * StreamsSpec pins row-for-row parity with the batch encode.
     */
   def unigramEncode(docs: DataFrame, modelPath: String): DataFrame =
-    graft.operators.TextOps.uniEncodeMapOnly(docs,
-      graft.operators.TextOps.readUnigramModel(docs.sparkSession, modelPath))
+    TextOps.uniEncodeMapOnly(docs, TextOps.readUnigramModel(docs.sparkSession, modelPath))
 
   /** Continuous novelty monitoring — the streaming twin of
     * `TextOps.qNoveltyCurve`: arriving documents are scored for the
@@ -310,32 +317,23 @@ object Streams {
       arrivals: DataFrame,
       indexPath: String,
       outPath: String,
-      checkpointDir: String): Unit = {
-    val q = arrivals
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val s = batch.sparkSession
-        Publish.recover(s, indexPath)
-        val prior = Publish.batches(s, indexPath).collect { case (id, p) if id < batchId => p }
-        val resident = new org.apache.hadoop.fs.Path(s"$indexPath/resident.parquet")
-        val hasResident =
-          resident.getFileSystem(s.sparkContext.hadoopConfiguration).exists(resident)
-        // the seen set needs only `h`
-        val seen = Publish.readRoots(s, (if (hasResident) Seq(indexPath) else Nil) ++ prior,
-          "resident.parquet", "h BINARY")
-        val (perDoc, newHashes) =
-          graft.operators.TextOps.noveltyBatch(batch.toDF(), seen)
-        perDoc.write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-        Publish(s, Publish.batchOf(indexPath, batchId)) { tmp =>
-          newHashes.write.parquet(s"$tmp/resident.parquet")
-        }
+      checkpointDir: String): Unit =
+    runAvailable(arrivals, checkpointDir) { (batch, batchId) =>
+      val s = batch.sparkSession
+      Publish.recover(s, indexPath)
+      val prior = Publish.batches(s, indexPath).collect { case (id, p) if id < batchId => p }
+      val resident = new org.apache.hadoop.fs.Path(s"$indexPath/resident.parquet")
+      val hasResident =
+        resident.getFileSystem(s.sparkContext.hadoopConfiguration).exists(resident)
+      // the seen set needs only `h`
+      val seen = Publish.readRoots(s, (if (hasResident) Seq(indexPath) else Nil) ++ prior,
+        "resident.parquet", "h BINARY")
+      val (perDoc, newHashes) = TextOps.noveltyBatch(batch, seen)
+      perDoc.write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+      Publish(s, Publish.batchOf(indexPath, batchId)) { tmp =>
+        newHashes.write.parquet(s"$tmp/resident.parquet")
       }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+    }
 
   /** Streaming perplexity scoring — the streaming twin of
     * `TextOps.lmScoreWith`: documents arriving on the wire are scored
@@ -345,92 +343,56 @@ object Streams {
     * stream-static left join + a batch-local per-doc rollup, valid
     * because a document arrives WHOLE in one row: its bigrams never
     * span micro-batches, so no state store and no watermark are
-    * needed. Scores land under a DETERMINISTIC batchId-derived
-    * directory with OVERWRITE semantics: a crash-replayed micro-batch
-    * rewrites the same directory and the output converges to
-    * exactly-once contents. Re-training ships a new model path; the
-    * scoring job restarts on it (mid-stream model swaps are a
-    * versioning event).
+    * needed. Each micro-batch reads the model afresh under its
+    * declared layout (`TextOps.readLmModel`: no footer job), and its
+    * scores land in [[scoreBatches]]' replay-safe `batch=N` directory.
+    * Re-training ships a new model path; the scoring job restarts on it
+    * (mid-stream model swaps are a versioning event).
     */
   def lmScore(
       arrivals: DataFrame,
       modelPath: String,
       outPath: String,
-      checkpointDir: String): Unit = {
-    val q = arrivals
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val s = batch.sparkSession
-        graft.operators.TextOps.lmScoreDocs(batch.toDF(), Publish.read(s, modelPath))
-          .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-      }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      checkpointDir: String): Unit =
+    scoreBatches(arrivals, outPath, checkpointDir) { batch =>
+      TextOps.lmScoreDocs(batch, TextOps.readLmModel(batch.sparkSession, modelPath))
+    }
 
   /** Streaming classifier scoring — the twin of
     * `TextOps.perceptronScoreWith`: arriving docs (doc_id, text)
     * score against a frozen `buildPerceptronModel` 1-row weight
-    * table. Per batch: one broadcast of three BIGINTs + map-only
-    * integer margins — stateless, the `lmScore` pattern, same
-    * deterministic batchId-dir OVERWRITE replay contract.
+    * table, read once when the stream is defined. Per batch: map-only
+    * integer margins with the three weights as literals — stateless,
+    * no model job, the [[scoreBatches]] replay contract.
     */
   def perceptronScore(
       arrivals: DataFrame,
       modelPath: String,
       outPath: String,
       checkpointDir: String): Unit = {
-    val q = arrivals
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val s = batch.sparkSession
-        graft.operators.TextOps.perceptronScoreDocs(batch.toDF(),
-          Publish.read(s, modelPath))
-          .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-      }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val w = TextOps.readPerceptronModel(arrivals.sparkSession, modelPath)
+    scoreBatches(arrivals, outPath, checkpointDir)(TextOps.perceptronScoreDocs(_, w))
   }
 
   /** Streaming DSIR importance scoring — the twin of
     * `TextOps.dsirScoreWith`: arriving docs (doc_id, text) score
     * against a frozen `buildDsirModel` table (≤4097 rows — the
-    * bucket table plus the `f IS NULL` default row). Per batch this
-    * is one Generate + a broadcast model join + a map-side-combined
-    * per-doc rollup — stateless between batches (the model carries
-    * all the state), so the stage scales with the stream alone, the
-    * `lmScore` pattern. Scores land under a deterministic
-    * batchId-derived directory with OVERWRITE, so a crash-replayed
-    * micro-batch rewrites identical rows (at-least-once → effectively
-    * idempotent output, same contract as `lmScore`).
+    * bucket table plus the `f IS NULL` default row), read per batch
+    * by `TextOps.readDsirModel`. Per batch this is one Generate + a
+    * broadcast model join + a map-side-combined per-doc rollup —
+    * stateless between batches (the model carries all the state), so
+    * the stage scales with the stream alone, the `lmScore` pattern and
+    * its [[scoreBatches]] replay contract.
     */
   def dsirScore(
       arrivals: DataFrame,
       modelPath: String,
       outPath: String,
-      checkpointDir: String): Unit = {
-    val q = arrivals
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val s = batch.sparkSession
-        val m = Publish.read(s, modelPath)
-        graft.operators.TextOps.dsirScoreDocs(batch.toDF(),
-          m.filter(col("f").isNotNull),
-          m.filter(col("f").isNull).select(col("ratio_bits").as("default_bits")))
-          .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-      }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      checkpointDir: String): Unit =
+    scoreBatches(arrivals, outPath, checkpointDir) { batch =>
+      val (model, dflt) = TextOps.readDsirModel(batch.sparkSession, modelPath)
+      TextOps.dsirScoreDocs(batch, model, dflt)
+    }
 
   /** Stream-static fact enrichment — the streaming twin of the batch
     * fact build (`StarSchema.qFactBuild`): events on the wire get
@@ -490,11 +452,11 @@ object Streams {
     * passes sessionEnd + gap (event-time timeout).
     *
     * Semantics match the batch `Temporal.qSessionize`: session ids
-    * count up per user from 1 — ACROSS timeout flushes (ADVICE r3: a
-    * timeout used to remove state entirely, restarting the next
-    * session at 1 and duplicating (user_id, session_id) keys
-    * downstream). A flushed session therefore leaves a small marker
-    * (nEvents = 0, carrying the counter) in the state store. State
+    * count up per user from 1 — ACROSS timeout flushes (removing the
+    * state on timeout would restart the next session at 1 and
+    * duplicate (user_id, session_id) keys downstream). A flushed
+    * session therefore leaves a small marker (nEvents = 0, carrying
+    * the counter) in the state store. State
     * cost: open sessions are bounded by the watermark as before;
     * markers add one ~40-byte record per user ever seen — the
     * unavoidable price of durable per-user numbering, sharded across
@@ -552,7 +514,7 @@ object Streams {
                        first_click_ms: Option[Long], first_purchase_ms: Option[Long],
                        stage: Long)
 
-  /** Streaming twin of `Analytics.qFunnel` (VERDICT r13 #7): ordered
+  /** Streaming twin of `Analytics.qFunnel`: ordered
     * view → click → purchase progression per user, click counted only
     * strictly after the first view and purchase only strictly after
     * the first click — the batch query's exact stage rule, folded
@@ -696,7 +658,7 @@ object Streams {
     * evaluated map-side before any state. Duplicate marking is keyed
     * state on the normalized content hash: the first-BATCH arrival
     * per hash survives (the stored survivor across batches; the MIN
-    * doc_id within the batch that first sees the hash — ADVICE r15:
+    * doc_id within the batch that first sees the hash, because
     * post-exchange iterator order is arbitrary on a multi-partition
     * feed, so "first iterator element" was nondeterministic there);
     * everything later is 'duplicate'. Fed the corpus in batch-id
@@ -726,8 +688,8 @@ object Streams {
       .select(
         col("doc_id").cast("long").as("doc_id"),
         graft.operators.Dedup.contentMd5(col("text")).as("content_md5"),
-        graft.operators.TextOps.qualityKeep(col("text")).as("is_keep"),
-        graft.operators.TextOps.repetitive(col("text")).as("is_repetitive"))
+        TextOps.qualityKeep(col("text")).as("is_keep"),
+        TextOps.repetitive(col("text")).as("is_repetitive"))
       .as[DocIn]
       .groupByKey(_.content_md5)
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
@@ -739,7 +701,7 @@ object Streams {
             // per-group memory, so a hot content hash dominating a
             // micro-batch in steady state costs nothing. Only a
             // FIRST-appearance hash buffers its batch to take the MIN
-            // doc_id (ADVICE r15: within-group iterator order after
+            // doc_id (within-group iterator order after
             // the groupByKey exchange is arbitrary on a
             // multi-partition feed, so "first element" could crown a
             // non-min survivor within a micro-batch — the
@@ -884,13 +846,13 @@ object Streams {
         col("doc_id").cast("long").as("doc_id"),
         col("lang"), col("source"),
         graft.operators.Dedup.contentMd5(col("text")).as("content_md5"),
-        graft.operators.TextOps.packToks.as("toks"),
+        TextOps.packToks.as("toks"),
         (md5(graft.functions.NormalizeText.column(col("text")).cast("binary")) =!=
           md5(col("text").cast("binary"))).as("changed"),
-        (graft.operators.TextOps.langPred === "en").as("lang_en"),
-        graft.operators.TextOps.qualityKeep(col("text")).as("is_keep"),
-        graft.operators.TextOps.safetyBlocked(col("text")).as("is_blocked"),
-        graft.operators.TextOps.repetitive(col("text")).as("is_repetitive"))
+        (TextOps.langPred === "en").as("lang_en"),
+        TextOps.qualityKeep(col("text")).as("is_keep"),
+        TextOps.safetyBlocked(col("text")).as("is_blocked"),
+        TextOps.repetitive(col("text")).as("is_repetitive"))
       .as[CorpusDocIn]
       .groupByKey(_.content_md5)
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
@@ -898,8 +860,8 @@ object Streams {
           if (!it.hasNext) Iterator.empty
           else {
             // min-by doc_id within the batch when no prior state
-            // (ADVICE r15 — the corpusFilter rule, which see for the
-            // one-pass/buffer trade): post-exchange iterator order is
+            // (the corpusFilter rule, which see for the one-pass/buffer
+            // trade): post-exchange iterator order is
             // arbitrary on a multi-partition feed.
             val (survivor, rows) = st.getOption.map(_.survivorId) match {
               case Some(surv) => (surv, it)
@@ -920,7 +882,7 @@ object Streams {
         })
   }
 
-  /** Streaming corpus-build census (VERDICT r14 #7) — the incremental
+  /** Streaming corpus-build census — the incremental
     * face of `q_corpus_build`: [[corpusVerdicts]] rolled into ONE
     * cumulative census row (docs + token mass surviving each stage,
     * ingest → exact dedup), updated every micro-batch. Run with
@@ -955,7 +917,7 @@ object Streams {
         aliveD("alive_exact").as("d4"), aliveT("alive_exact").as("t4"))
   }
 
-  /** Streaming NEAR-dedup serve tier (VERDICT r16 #3) — the
+  /** Streaming NEAR-dedup serve tier — the
     * increment-sized alternative to the impossible stream×corpus band
     * join: each micro-batch is an increment probed against the
     * PERSISTED signature index (the
@@ -1068,8 +1030,8 @@ object Streams {
     */
   def packCounters(survivors: Dataset[CorpusVerdict]): Dataset[LaneCensus] = {
     import survivors.sparkSession.implicits._
-    val budget = graft.operators.TextOps.packBudget
-    val lanes = graft.operators.TextOps.packLanes
+    val budget = TextOps.packBudget
+    val lanes = TextOps.packLanes
     survivors
       .filter(_.alive_exact)
       .groupByKey(v => (v.lang, v.doc_id % lanes))
@@ -1097,8 +1059,8 @@ object Streams {
           if (!it.hasNext) Iterator.empty
           else {
             // min-by doc_id within the batch when no prior state
-            // (ADVICE r15 — the corpusFilter rule, which see for the
-            // one-pass/buffer trade)
+            // (the corpusFilter rule, which see for the one-pass/buffer
+            // trade)
             val (survivor, rows) = st.getOption.map(_.survivorId) match {
               case Some(surv) => (surv, it)
               case None =>

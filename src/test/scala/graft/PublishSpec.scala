@@ -279,6 +279,55 @@ class PublishSpec extends SparkSpec {
       p => rowSet(TextOps.perceptronScoreWith(spark, sf0001, p)))
   }
 
+  test("TextOps model reads: a renamed column throws for every model; a missing or doubled row for the collected ones") {
+    // per model: its writer, a read that uses every column its scorer
+    // needs, and the columns the writer declares
+    val models = Seq[(String, String => Unit, String => Any, Seq[String])](
+      ("bpe", TextOps.buildBpeModel(spark, sf0001, _), TextOps.readBpeModel(spark, _),
+        Seq("round", "sym_a", "sym_b", "n")),
+      ("unigram", TextOps.buildUnigramModel(spark, sf0001, _), TextOps.readUnigramModel(spark, _),
+        Seq("rk", "piece", "n_uses")),
+      ("perceptron", TextOps.buildPerceptronModel(spark, sf0001, _),
+        TextOps.readPerceptronModel(spark, _), Seq("w_bias", "w_stop", "w_nonascii")),
+      ("lm", TextOps.buildLmModel(spark, sf0001, _),
+        p => rowSet(TextOps.lmScoreWith(spark, sf0001, p)), Seq("lang", "w1", "w2", "bits")),
+      ("dsir", TextOps.buildDsirModel(spark, sf0001, _),
+        p => rowSet(TextOps.dsirScoreWith(spark, sf0001, p)), Seq("f", "ratio_bits")))
+    // the messages of `e` and of every cause under it
+    def messages(e: Throwable): String =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString("\n")
+    for ((tag, build, read, columns) <- models) {
+      val model = fresh(s"model-$tag") + "/m"
+      build(model)
+      // a copy of the model through `edit`, several files in shuffled order
+      def edited(edit: DataFrame => DataFrame): String = {
+        val copy = fresh(s"model-$tag-edit") + "/m"
+        edit(spark.read.parquet(model)).orderBy(rand(7)).repartition(3).write.parquet(copy)
+        copy
+      }
+      assert(read(edited(identity)) == read(model), s"$tag: a shuffled copy must read the same")
+      def rejected(what: String, mentions: String)(edit: DataFrame => DataFrame): Unit = {
+        val copy = edited(edit)
+        val e = intercept[Exception](read(copy))
+        val m = messages(e)
+        assert(m.contains(copy) && m.contains(mentions),
+          s"$tag, $what: the error must name the model and $mentions: $m")
+      }
+      for (c <- columns) rejected(s"renamed $c", c)(_.withColumnRenamed(c, s"${c}_renamed"))
+      // a fixed row count shows in the count, a data-sized one in the keys
+      tag match {
+        case "perceptron" =>
+          rejected("missing row", "0 rows, expected 1")(_.filter(lit(false)))
+          rejected("doubled row", "2 rows, expected 1")(df => df.union(df))
+        case "bpe" | "unigram" =>
+          val (key, mention) = (columns.head, if (tag == "bpe") "rows, expected" else "rk ")
+          rejected("missing row", mention)(_.filter(col(key) =!= 2))
+          rejected("doubled row", mention)(df => df.union(df.filter(col(key) === 2)))
+        case _ =>
+      }
+    }
+  }
+
   // ---- novelty window-hash index root ----
 
   test("novelty index root, buildNoveltyIndex: noveltyMaintenance sees the committed index") {
