@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 /** Per-round benchmark: every SparkEntry query against
   * SPARK_GRAFT_SF_DIR, one JSON line on stdout.
   *
-  * Methodology (VERDICT r1 #4, VERDICT r3 #6):
+  * Methodology:
   *   - a full warmup pass first, so JVM/codegen/parquet-footer warmup
   *     isn't billed to whichever query runs first;
   *   - fixed (sorted) query order, so rounds are comparable;
@@ -16,7 +16,7 @@ import org.apache.spark.sql.SparkSession
   *     own plan cost for running first) doesn't pollute the round
   *     comparison;
   *   - per-query shuffle/spill/input BYTES via [[BenchMetricsListener]]
-  *     (VERDICT r12 #3) recorded into the JSON next to the wall
+  *     recorded into the JSON next to the wall
   *     numbers, plus a shuffle-amplification tripwire — bytes are
   *     machine-independent plan facts, so a wall-clock delta with
   *     unchanged bytes is environment noise, not a plan regression.
@@ -43,12 +43,12 @@ object Bench {
         println(s"===== $n =====")
         SparkEntry.queries(n)(spark, sfDir).explain("formatted")
       }
-    // First failure reason per query, logged ONCE to stderr (VERDICT r11
-    // #4: 39 crashes shipped as bare -1s with no recorded error). The -1
+    // First failure reason per query, logged ONCE to stderr (39 crashes
+    // once shipped as bare -1s with no recorded error). The -1
     // sentinel semantics are unchanged; this only makes the cause visible
     // in the round log.
     val reported = scala.collection.mutable.Set.empty[String]
-    // per-query byte accounting (VERDICT r12 #3) — attribution by job
+    // per-query byte accounting — attribution by job
     // group, drained via a marker job before totals are read
     val metrics = new BenchMetricsListener
     spark.sparkContext.addSparkListener(metrics)
@@ -100,7 +100,7 @@ object Bench {
           metrics.byGroup(s"$n#$p")
       }
     }.toMap
-    // Shuffle-amplification tripwire (VERDICT r12 #3): a query whose
+    // Shuffle-amplification tripwire: a query whose
     // shuffle write exceeds 4× its input scan bytes (and is big enough
     // to matter, >64 MB) is moving more data than it reads — either an
     // intentional explode (document it) or a plan regression (fix it).
@@ -121,7 +121,7 @@ object Bench {
     }.mkString("{", ",", "}")
     val ampJson = ampFlags.map("\"" + _ + "\"").mkString("[", ",", "]")
 
-    // Regression tripwire vs the COMMITTED baseline (VERDICT r13 #3):
+    // Regression tripwire vs the COMMITTED baseline:
     // read the previous artifact at benchOut BEFORE overwriting it and
     // compare per query. Bytes are machine-independent plan facts, wall
     // is not — so the two signals adjudicate each other:
@@ -185,14 +185,14 @@ object Bench {
     // with no recorded byte metrics falls back to 0 on both sides, the
     // ratio degenerates to 1, and a real regression would be waved
     // through — so absent bytes get their own unadjudicated label
-    // instead (ADVICE r14 #1). The WallFloor gate applies ONLY here
+    // instead. The WallFloor gate applies ONLY here
     // (sub-0.2 s walls are below machine variance); the BYTES compare
     // below runs for every query, fast or slow — a plan that moves
     // 1.25× the data regressed no matter how quick the baseline was.
     val wallDriftCandidates = compared.collect {
       case (n, wr, br, _) if baseline(n).wall >= WallFloor && wr > WallDrift &&
         bytesFor(n).isDefined && br >= 1 - BytesBand && br <= 1 + BytesBand => n }
-    // Byte-flat wall movers are adjudicated LAST (VERDICT r16 #6):
+    // Byte-flat wall movers are adjudicated LAST:
     // wall clock is the least trustworthy signal — the r15 driver
     // round carried 13 WALL-DRIFT warns, every one byte-flat machine
     // noise by the tripwire's own rule — so before a byte-flat mover
@@ -204,7 +204,7 @@ object Bench {
     // instead of flagged. Queries that never drifted keep their
     // median-of-3 (5 passes × 208 queries would triple the round's
     // bench wall for nothing).
-    // BYTE METRICS ARE FROZEN PRE-RE-MEASURE BY DESIGN (ADVICE r16):
+    // BYTE METRICS ARE FROZEN PRE-RE-MEASURE BY DESIGN:
     // `compared` ratios and wallDriftNoBytes keep the 3-pass state,
     // and the runOne(n, 4)/runOne(n, 5) passes below execute after
     // the listener-bus drain, so their byte metrics are never drained
@@ -248,7 +248,7 @@ object Bench {
     // The driver keeps only the LAST ~2000 chars of stdout and sbt
     // appends its own "[success]" line after ours, so the ~4 KB
     // per-query line can never arrive whole (BENCH_r09 parsed:null,
-    // truncated at 84/149 queries). Split the output (VERDICT r9 #1):
+    // truncated at 84/149 queries). Split the output:
     //   1. full per-query JSON first (tail may clip it — that's fine);
     //   2. the same full JSON persisted to BENCH_LOCAL.json in the
     //      repo for committing/diffing;
@@ -258,7 +258,7 @@ object Bench {
     // Anchor the artifact to the repo (SPARK_GRAFT_BENCH_OUT overrides;
     // falls back to CWD) so runs launched elsewhere don't scatter it —
     // and swallow only NonFatal with a visible warning: an OOM or
-    // interrupt must propagate, not vanish (ADVICE r10 #2).
+    // interrupt must propagate, not vanish.
     try java.nio.file.Files.write(
       java.nio.file.Paths.get(benchOut),
       (full + "\n").getBytes("UTF-8"))
@@ -266,7 +266,7 @@ object Bench {
       Console.err.println(s"[bench] WARN: could not write $benchOut: $e")
     } // bench results still on stdout
     // stop BEFORE the summary so no shutdown logging can follow it;
-    // a failed stop must not eat the results (ADVICE r9 #4).
+    // a failed stop must not eat the results.
     try spark.stop()
     catch { case scala.util.control.NonFatal(e) =>
       Console.err.println(s"[bench] WARN: spark.stop() failed: $e")

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 
-/** Per-query byte accounting for [[Bench]] (VERDICT r12 #3): wall
+/** Per-query byte accounting for [[Bench]]: wall
   * clock at one scale factor can't distinguish a plan that got leaner
   * from a machine that got quieter (the r12 134-vs-163 s ambiguity) —
   * shuffle read/write, spill and input bytes are machine-independent

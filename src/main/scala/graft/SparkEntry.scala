@@ -8,7 +8,7 @@ import graft.operators._
 /** Driver contract — see /root/repo/SURVEY.md §2 for the inventory.
   * Each operator module contributes a `queries` map (Spark plan) and an
   * `oracle` map (equivalent DuckDB SQL); this object is the union, plus
-  * the presentation layer (VERDICT r1 #5: production plans must not
+  * the presentation layer (production plans must not
   * carry the oracle's global ORDER BY — a total sort of a per-row
   * output is pure harness overhead at 100 TB).
   */

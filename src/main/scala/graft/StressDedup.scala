@@ -4,8 +4,8 @@ import org.apache.spark.sql.functions._
 
 import graft.plans.Materialize._
 
-/** Adversarial hot-key stress runner for the dedup serve path
-  * (VERDICT r12 #7): one content hash covering ~1% of the corpus is
+/** Adversarial hot-key stress runner for the dedup serve path: one
+  * content hash covering ~1% of the corpus is
   * the worst case for content-hash bucketing — a degenerate LSH
   * bucket in the persisted index, a degenerate window-hash family in
   * the span dedup, and a degenerate exact-dup family.
@@ -162,7 +162,7 @@ object StressDedup {
       Dedup.qBandingCurve(s, dir).collect()
         .map(r => (r.getLong(0), r.getLong(2), r.getLong(3), r.getLong(4)))
     }
-    // 6. Planted MEGA-BASKET (VERDICT r17 #2-watch): one crawler-scale
+    // 6. Planted MEGA-BASKET: one crawler-scale
     // customer buying from EVERY supplier in the corpus — the
     // quadratic pair-generation key the basket cap bounds. The corpus
     // copy plants one extra order whose lineitems span all suppliers;

@@ -73,14 +73,20 @@ final class TopKHeap(val k: Int) {
 /** Per-group top-k as a CUSTOM AGGREGATE (Spark's
   * `TypedImperativeAggregate`): `graft_topk(struct(ord, id), k)` keeps
   * a k-bounded heap per group, merged map-side like any other partial
-  * aggregate. The standard window formulation
-  * (`row_number() OVER (PARTITION BY g ORDER BY ord DESC)` + filter)
-  * must SHUFFLE AND SORT every row of every group before it can rank;
-  * this aggregate ships at most k pairs per (group, map partition) —
-  * the difference between a full-corpus shuffle and a k·G one at
-  * 100 TB. Output is `array<struct<ord double, id bigint>>` in rank
-  * order; tie-break is (ord DESC, id ASC), matching the ranked
-  * operators' convention.
+  * aggregate, and ships at most k pairs per (group, map partition).
+  * The window formulation ([[graft.plans.TopK]], `row_number() OVER
+  * (PARTITION BY g ORDER BY ord DESC) <= k`) ships the same k rows per
+  * group: Spark 4.1 plans it with a `WindowGroupLimit … Partial` before
+  * the group's hash exchange (`q_window_rank` shows
+  * `WindowGroupLimit [p_brand] … 3, Partial` under
+  * `Exchange hashpartitioning(p_brand)`). What still differs is the
+  * map-side work: this aggregate keeps a k-bounded heap per group in a
+  * hash aggregate, where the partial limit first sorts every row of its
+  * map partition by (g, ord); and the heap bounds any k, where Spark
+  * plans no partial limit above
+  * `spark.sql.optimizer.windowGroupLimitThreshold` (1000). Output is
+  * `array<struct<ord double, id bigint>>` in rank order; tie-break is
+  * (ord DESC, id ASC), matching the ranked operators' convention.
   */
 case class TopKPairs(
     child: Expression,

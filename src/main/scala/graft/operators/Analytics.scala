@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.plans.Materialize._
+import graft.plans.TopK
 import graft.sources.Ingest
 
 /** Behavioral / graph analytics (SURVEY.md §2 rows 64-67): iterative
@@ -59,7 +60,7 @@ object Analytics {
     * production analog is a checkpointed graph table refreshed per
     * load, not per dashboard query.
     *
-    * STALENESS CONTRACT (shared with [[partEdgeCache]], ADVICE r10):
+    * STALENESS CONTRACT (shared with [[partEdgeCache]]):
     * a cache entry reflects the source tables AS OF the first graph
     * query of the session against that dir. Entries are never
     * invalidated by data changes under the dir — the engine's data
@@ -364,7 +365,7 @@ object Analytics {
   }
 
   /** Order-free oracle body — composers embed THIS as a CTE; the
-    * standalone oracle appends the presentation ORDER BY (ADVICE r14).
+    * standalone oracle appends the presentation ORDER BY.
     */
   private[graft] val qFunnelBody: String =
     """WITH e AS (SELECT user_id, event_type, epoch_ms(ts) AS ts_ms FROM events),
@@ -611,8 +612,8 @@ object Analytics {
   /** Per-customer basket width cap for the pair-generating self-joins
     * ([[qBasketPairs]] / [[qLinkPredict]]): a single crawler-scale
     * basket of width W contributes W²/2 pairs — the one quadratic key
-    * the dedup shelves' salt-cap device had no analogue for (VERDICT
-    * r17 weak-perf watch). Baskets over the cap keep the [[BasketCap]]
+    * the dedup shelves' salt-cap device had no analogue for. Baskets
+    * over the cap keep the [[BasketCap]]
     * suppliers ranked by (md5(cust~supp), supp) — a deterministic
     * uniform sample, SQL-replayable like every md5 device — so
     * per-key pair work is bounded by cap² while normal baskets pass
@@ -631,11 +632,8 @@ object Analytics {
     * Catalyst reuses one exchange — the guard costs a rank, not a
     * shuffle. */
   private[graft] def cappedBaskets(cs: DataFrame, cap: Int = BasketCap): DataFrame =
-    cs.withColumn("srk", row_number().over(
-        Window.partitionBy("cust")
-          .orderBy(md5(concat_ws("~", col("cust"), col("supp"))), col("supp"))))
-      .filter(col("srk") <= cap)
-      .drop("srk")
+    TopK(cs, Seq("cust"), Seq(md5(concat_ws("~", col("cust"), col("supp"))), col("supp")),
+      cap, "srk").drop("srk")
 
   /** SQL twin of [[cappedBaskets]] for the oracle programs. */
   private def cappedBasketsSql(cap: Int = BasketCap): String =
@@ -689,7 +687,7 @@ object Analytics {
     * (|suppliers|²-bounded key space); side totals join in from the
     * node-sized degree table (AQE broadcasts while it fits).
     *
-    * An a-priori degree pre-filter (VERDICT r12 #2 — semi-join the
+    * An a-priori degree pre-filter (semi-join the
     * basket rows against suppliers with n_side ≥ MinSupport, valid by
     * anti-monotonicity) was implemented and then REMOVED on
     * measurement: on every tested SF the minimum supplier degree is
@@ -765,6 +763,43 @@ object Analytics {
        |CROSS JOIN n
        |ORDER BY supp_a, supp_b""".stripMargin
 
+  /** One LPA vote over (node, label) pairs: each node's most frequent
+    * label as (node, label, n), ties to the smaller label. */
+  private def labelVote(pairs: DataFrame, node: String, label: String): DataFrame =
+    TopK(pairs.groupBy(col(node), col(label)).agg(count(lit(1)).as("n")),
+      Seq(node), Seq(col("n").desc, col(label)), 1, "r")
+
+  /** The distinct cust-supp pairs `cs`, materialized (the rounds and
+    * every downstream pass re-consume it), and round 1's vote: each
+    * customer's seed nation, exposed un-checkpointed so PlanSpec can
+    * pin its shape. */
+  private[graft] def lpaRound1(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val (eb, _) = copurchaseGraph(s, dir)
+    val cs = eb.filter(col("src") % 2 === 0)
+      .select(expr("src DIV 2").as("cust"), expr("dst DIV 2").as("supp"))
+      .materialized
+    (cs, labelVote(cs.join(supplierSeed(s, dir), "supp"), "cust", "lbl"))
+  }
+
+  private def supplierSeed(s: SparkSession, dir: String): DataFrame =
+    Ingest.table(s, dir, "supplier")
+      .select(col("s_suppkey").as("supp"), col("s_nationkey").cast("long").as("lbl"))
+
+  /** The seed table + two LPA rounds shared by [[qLabelProp]] and
+    * [[qGraphModularity]]: returns (cs, customer labels after round 1,
+    * supplier argmax rows (supp, clbl, n) after round 2).
+    */
+  private def lpaRounds(s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) = {
+    val (cs, round1) = lpaRound1(s, dir)
+    // node-sized and consumed by round 2 AND (in modularity) by the
+    // within-edge pass + degree attach — checkpoint once here so no
+    // caller's lineage re-runs the round-1 window
+    val custLbl = round1.select(col("cust"), col("lbl").as("clbl")).materialized
+    val suppRank = labelVote(cs.join(custLbl, "cust"), "supp", "clbl")
+      .select(col("supp"), col("clbl"), col("n"))
+    (cs, custLbl, suppRank)
+  }
+
   /** Two-round synchronous label propagation over the co-purchase
     * graph (the LPA community primitive, Raghavan et al. 2007):
     * suppliers seed with their nation, round 1 gives every customer
@@ -783,44 +818,10 @@ object Analytics {
     * node-keyed count table (labels-per-node rows, bounded by
     * |nations|). Fixed 2 rounds, shallow lineage, no driver loop.
     */
-  /** The seed table + two LPA rounds shared by [[qLabelProp]] and
-    * [[qGraphModularity]]: returns (cs distinct cust-supp pairs,
-    * customer labels after round 1, supplier argmax rows (supp, clbl,
-    * n) after round 2). cs is materialized — the rounds and every
-    * downstream pass re-consume it.
-    */
-  private def lpaRounds(s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) = {
-    val (eb, _) = copurchaseGraph(s, dir)
-    val cs = eb.filter(col("src") % 2 === 0)
-      .select(expr("src DIV 2").as("cust"), expr("dst DIV 2").as("supp"))
-      .materialized
-    val seed = Ingest.table(s, dir, "supplier")
-      .select(col("s_suppkey").as("supp"), col("s_nationkey").cast("long").as("lbl"))
-    val byCust = Window.partitionBy("cust").orderBy(col("n").desc, col("lbl"))
-    // node-sized and consumed by round 2 AND (in modularity) by the
-    // within-edge pass + degree attach — checkpoint once here so no
-    // caller's lineage re-runs the round-1 window
-    val custLbl = cs.join(seed, "supp")
-      .groupBy(col("cust"), col("lbl")).agg(count(lit(1)).as("n"))
-      .withColumn("r", row_number().over(byCust))
-      .filter(col("r") === 1)
-      .select(col("cust"), col("lbl").as("clbl"))
-      .materialized
-    val bySupp = Window.partitionBy("supp").orderBy(col("n").desc, col("clbl"))
-    val suppRank = cs.join(custLbl, "cust")
-      .groupBy(col("supp"), col("clbl")).agg(count(lit(1)).as("n"))
-      .withColumn("r", row_number().over(bySupp))
-      .filter(col("r") === 1)
-      .select(col("supp"), col("clbl"), col("n"))
-    (cs, custLbl, suppRank)
-  }
-
   def qLabelProp(s: SparkSession, dir: String): DataFrame = {
     val (_, _, suppRank) = lpaRounds(s, dir)
-    val seed = Ingest.table(s, dir, "supplier")
-      .select(col("s_suppkey").as("supp"), col("s_nationkey").cast("long").as("lbl"))
     suppRank
-      .join(seed, "supp")
+      .join(supplierSeed(s, dir), "supp")
       .select(col("supp").as("s_suppkey"), col("lbl").as("seed_nation"),
         col("clbl").as("prop_label"), col("n").as("votes"),
         when(col("clbl") =!= col("lbl"), 1L).otherwise(0L).as("flipped"))
@@ -1093,12 +1094,9 @@ object Analytics {
     * TakeOrdered, not a global sort.
     */
   def qSessionPath(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("user_id").orderBy("ts_ms", "event_id")
-    Ingest.events(s, dir)
+    val ev = Ingest.events(s, dir)
       .select(col("user_id"), col("ts_ms"), col("event_id"), col("event_type"))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= PathSteps)
+    TopK(ev, Seq("user_id"), Seq(col("ts_ms"), col("event_id")), PathSteps, "rk")
       .groupBy(col("user_id"))
       .agg(array_join(
         transform(array_sort(collect_list(struct(col("rk"), col("event_type")))),

@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.plans.Materialize._
-import graft.plans.Publish
+import graft.plans.{Publish, TopK}
 import graft.sources.Ingest
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
@@ -97,11 +97,7 @@ object Ann {
       .select(Seq(col("query_id"), col("vec_id").as("neighbor_id"), cosine) ++ carry.map(col): _*)
 
   private def topK(scored: DataFrame): DataFrame =
-    scored
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id")))
-        .cast("long"))
-      .filter(col("rnk") <= K)
+    TopK(scored, Seq("query_id"), Seq(col("cosine").desc, col("neighbor_id")), K, "rnk")
       .select("query_id", "neighbor_id", "rnk", "cosine")
 
   // ------------------------------------------------------------------
@@ -1432,16 +1428,13 @@ object Ann {
     * `ark`, as (query_id, neighbor_id, adc_cos, ark).
     */
   private def pqShortlist(codes: DataFrame, qrows: DataFrame, c: Int): DataFrame =
-    codes.crossJoin(broadcast(qrows))
+    TopK(codes.crossJoin(broadcast(qrows))
       .filter(array_contains(col("cells"), col("cell")) && col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         ((element_at(col("qc_arr"), col("cell") + 1) +
           graft.functions.VectorFunctions.adcLookup(col("lut"), col("codes"))) /
-          (col("rn") * col("q_nrm"))).as("adc_cos"))
-      .withColumn("ark", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("adc_cos").desc, col("neighbor_id")))
-        .cast("long"))
-      .filter(col("ark") <= c)
+          (col("rn") * col("q_nrm"))).as("adc_cos")),
+      Seq("query_id"), Seq(col("adc_cos").desc, col("neighbor_id")), c, "ark")
 
   /** The exact float rerank of shortlisted pairs (query_id,
     * neighbor_id, embedding, nrm): joined to the broadcast queries,
@@ -1894,14 +1887,10 @@ object Ann {
     * on labels-per-vec rows. The corpus shuffles once (the explode
     * rollup), never all-pairs.
     */
-  /** (vec_id, label, assigned cluster, exact integer dist2) — the
-    * fixed-point nearest-centroid assignment shared by
-    * [[qCentroidAssign]] (adds the confusion column) and [[qSemdedup]]
-    * (uses the cluster as its pairwise-dedup cell).
-    */
-  /** (vec_id, label, clabel, dist2, r) with r the (dist2, clabel)
-    * centroid rank per vec — r=1 is the assignment,
-    * r=2 the runner-up [[qClusterQuality]]'s margin needs. */
+  /** (vec_id, label, clabel, dist2, r) for each vec's two nearest
+    * centroids, r their (dist2, clabel) rank: r=1 is the fixed-point
+    * nearest-centroid assignment with its exact integer dist2, r=2 the
+    * runner-up [[qClusterQuality]]'s margin needs. */
   private def centroidRanked(s: SparkSession, dir: String): DataFrame = {
     val fp = Ingest.table(s, dir, "embeddings")
       .select(col("vec_id"), col("label"), posexplode(col("embedding")).as(Seq("pos", "v")))
@@ -1912,11 +1901,13 @@ object Ann {
     val d2 = fp.join(broadcast(cent), "dim")
       .groupBy(col("vec_id"), col("label"), col("clabel"))
       .agg(sum((col("f") - col("c")) * (col("f") - col("c"))).as("dist2"))
-    import org.apache.spark.sql.expressions.Window
-    d2.withColumn("r", row_number().over(
-        Window.partitionBy("vec_id").orderBy(col("dist2"), col("clabel"))))
+    TopK(d2, Seq("vec_id"), Seq(col("dist2"), col("clabel")), 2, "r")
   }
 
+  /** (vec_id, label, assigned cluster, exact integer dist2): the
+    * assignment shared by [[qCentroidAssign]] (adds the confusion
+    * column) and [[qSemdedup]] (uses the cluster as its pairwise-dedup
+    * cell). */
   private def centroidAssignments(s: SparkSession, dir: String): DataFrame =
     centroidRanked(s, dir)
       .filter(col("r") === 1)
@@ -1985,7 +1976,6 @@ object Ann {
     */
   def qClusterQuality(s: SparkSession, dir: String): DataFrame =
     centroidRanked(s, dir)
-      .filter(col("r") <= 2)
       .groupBy(col("vec_id"), col("label"))
       .agg(
         max(when(col("r") === 1, col("clabel"))).as("cl"),
@@ -2135,14 +2125,11 @@ object Ann {
   def qClusterKeywords(s: SparkSession, dir: String): DataFrame = {
     val tf = clusterTermCounts(s, dir).materialized
     val df = tf.groupBy(col("w")).agg(count(lit(1)).as("cdf"))
-    tf.join(df, "w")
+    val scored = tf.join(df, "w")
       .select(col("cluster"), col("w").as("term"), col("tf_c"), col("cdf"),
         expr(s"(tf_c * $ClusterKwFp) DIV cdf").as("score_fp"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("cluster").orderBy(col("score_fp").desc, col("term"))))
-      .filter(col("rk") <= ClusterKwK)
-      .select(col("cluster"), col("rk").cast("long").as("rk"), col("term"),
-        col("tf_c"), col("cdf"), col("score_fp"))
+    TopK(scored, Seq("cluster"), Seq(col("score_fp").desc, col("term")), ClusterKwK, "rk")
+      .select(col("cluster"), col("rk"), col("term"), col("tf_c"), col("cdf"), col("score_fp"))
   }
 
   val qClusterKeywordsSql: String =
@@ -2338,16 +2325,12 @@ object Ann {
     * a window over ≤k rows per query.
     */
   def qHybridSearch(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val hits = qAnnLsh(s, dir)
     val quality = graft.operators.TextOps.qQualityScore(s, dir)
       .select(col("doc_id").as("neighbor_id"), col("is_keep"), col("n_words"))
-    hits.join(quality, Seq("neighbor_id"), "left")
-      .filter(col("is_keep") === true)
-      .withColumn("rnk_kept", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))))
-      .filter(col("rnk_kept") <= 3)
-      .select(col("query_id"), col("rnk_kept"), col("neighbor_id"),
+    val kept = hits.join(quality, Seq("neighbor_id"), "left").filter(col("is_keep") === true)
+    TopK(kept, Seq("query_id"), Seq(col("cosine").desc, col("neighbor_id")), 3, "rnk_kept")
+      .select(col("query_id"), col("rnk_kept").cast("int").as("rnk_kept"), col("neighbor_id"),
         col("cosine"), col("n_words"))
   }
 
@@ -2397,10 +2380,7 @@ object Ann {
       .agg(min(col("prank")).as("mpr"), max(col("cosine")).as("cosine"))
       .materialized
     LshProbeCurve.map { p =>
-      pairs.filter(col("mpr") <= p)
-        .withColumn("rnk", row_number().over(
-          Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))))
-        .filter(col("rnk") <= K)
+      topK(pairs.filter(col("mpr") <= p))
         .select(col("query_id"), col("neighbor_id"))
         .join(bfk, Seq("query_id", "neighbor_id"))
         .agg(count(lit(1)).as("n_hits"))
@@ -2501,16 +2481,15 @@ object Ann {
       .withColumn("cosine", col("dot") / col("nn"))
     val wCos = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))
     val wDot = Window.partitionBy("query_id").orderBy(col("dot").desc, col("neighbor_id"))
-    val wFused = Window.partitionBy("query_id").orderBy(col("rrf_fp").desc, col("neighbor_id"))
-    scored
+    // either list's top K: an OR of two ranks, which no partial limit serves
+    val fused = scored
       .withColumn("ra", row_number().over(wCos).cast("long"))
       .withColumn("rb", row_number().over(wDot).cast("long"))
       .filter(col("ra") <= K || col("rb") <= K)
       .withColumn("rrf_fp",
         when(col("ra") <= K, expr(s"$RrfScale DIV (${RrfK0}L + ra)")).otherwise(0L)
           + when(col("rb") <= K, expr(s"$RrfScale DIV (${RrfK0}L + rb)")).otherwise(0L))
-      .withColumn("fused_rnk", row_number().over(wFused).cast("long"))
-      .filter(col("fused_rnk") <= K)
+    TopK(fused, Seq("query_id"), Seq(col("rrf_fp").desc, col("neighbor_id")), K, "fused_rnk")
       .select(col("query_id"), col("fused_rnk"), col("neighbor_id"), col("rrf_fp"))
   }
 

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** THE exact-dup canonicalization device (VERDICT r16 #5 — one
+/** THE exact-dup canonicalization device (one
   * definition of the collapse→compute→expand shape the banded-dedup
   * shelves share, so the sites cannot drift).
   *

@@ -8,8 +8,8 @@ import graft.plans.Materialize._
 import graft.plans.Publish
 import graft.sources.Ingest
 
-/** SURVEY §2 — the end-to-end corpus-build composition (VERDICT r13
-  * #8): ingest → normalize → lang-ID → quality → safety → repetition
+/** SURVEY §2 — the end-to-end corpus-build composition:
+  * ingest → normalize → lang-ID → quality → safety → repetition
   * → exact dedup → near dedup → pack → shard → dataset card,
   * registered as ONE program whose output is the per-stage census
   * (docs in, tokens in, stage-specific units) — the funnel table a
@@ -18,12 +18,11 @@ import graft.sources.Ingest
   * Every stage verdict comes from the ALREADY-VERIFIED standalone
   * operator (qLangId / qQualityScore / qRepetition / qDedupExact /
   * qDedupMinhash / qNormalizeText) or shared column rule
-  * ([[TextOps.safetyBlocked]] — VERDICT r19 #2: the safety screen's
+  * ([[TextOps.safetyBlocked]]: the safety screen's
   * BLOCK verdict now gates the funnel between quality and repetition,
   * so a corpus built through the composition can no longer ship
   * safety-blocked documents), composed doc-keyed; this row
-  * proves they compose without semantic drift. HASH-CHECKED (VERDICT
-  * r14 #1, the r14 q_ann_recall/q_hybrid_search promotion device):
+  * proves they compose without semantic drift. HASH-CHECKED:
   * the oracle composes the constituents' order-free CTE bodies
   * doc-keyed, replays the keep-first near-drop rule, the pack
   * running sums, the shard rank modulo and the 11-row census — so
@@ -35,7 +34,7 @@ import graft.sources.Ingest
   * Token unit: the census token masses and the pack stage both use
   * [[TextOps.packToks]] — ONE shared expression, so the composition
   * cannot drift from the standalone `q_pack_sequences` row on texts
-  * with consecutive/leading/trailing spaces (ADVICE r14).
+  * with consecutive/leading/trailing spaces.
   *
   * Stage rules (the order real builds apply):
   *   - normalize drops nothing; its `n_units` counts docs whose
@@ -218,7 +217,7 @@ object CorpusBuild {
         max(col("rk")).as("max_rk"))
   }
 
-  /** Materialize the corpus (VERDICT r14 #2) — the WRITE half of the
+  /** Materialize the corpus — the WRITE half of the
     * build: the [[survivorVerdicts]] survivors land as training-ready
     * parquet shards plus a manifest, atomically published. Layout:
     *
@@ -272,7 +271,7 @@ object CorpusBuild {
     s.read.parquet(s"$path/manifest.parquet")
   }
 
-  /** Manifest-aware corpus compaction (VERDICT r16 #4): fold the
+  /** Manifest-aware corpus compaction: fold the
     * generation-local shard layout N [[corpusUpsert]] increments
     * accumulate (one small shard per increment, ranks local to each
     * generation) back into the canonical [[corpusWrite]] layout — the
@@ -386,7 +385,7 @@ object CorpusBuild {
     (path +: Seq("manifest", "lanes").map(t => s"$path/$t.parquet"))
       .foreach(Publish.recover(s, _))
 
-  /** Auto-compaction threshold (VERDICT r16 #5): once the committed
+  /** Auto-compaction threshold: once the committed
     * manifest carries more than this many shard rows — the canonical
     * [[TextOps.nShards]] plus accumulated [[corpusUpsert]] generations
     * (each appends up to nShards small generation-local shards) — the
@@ -521,7 +520,7 @@ object CorpusBuild {
     * corpus-sized map pass, paid once, amortized over every later
     * increment).
     *
-    * Auto-compaction (VERDICT r16 #5): after the commit, if the
+    * Auto-compaction: after the commit, if the
     * manifest has grown past `compactAfter` shard rows the increment
     * layout folds back to canonical via [[corpusCompact]] — the
     * policy that actually TRIGGERS the compactor (nothing did in r16).
@@ -646,8 +645,7 @@ object CorpusBuild {
     "q_corpus_build" -> qCorpusBuild _,
     "q_corpus_manifest" -> qCorpusManifest _)
 
-  /** Oracle for [[qCorpusBuild]] — fully hash-checked (VERDICT r14
-    * #1): the six constituents' order-free CTE bodies composed
+  /** Oracle for [[qCorpusBuild]] — fully hash-checked: the six constituents' order-free CTE bodies composed
     * doc-keyed, the keep-first near-drop replay, the pack running-sum
     * window, the shard rank modulo, and the 11-row census expansion.
     */

@@ -60,7 +60,7 @@ object Dedup {
 
   /** Order-free oracle body — composers ([[graft.operators.TextOps]]'s
     * pipeline/corpus oracles) embed THIS as a CTE; the standalone
-    * oracle appends the presentation ORDER BY (ADVICE r14).
+    * oracle appends the presentation ORDER BY.
     */
   private[graft] val qDedupExactBody: String =
     """SELECT doc_id,
@@ -261,7 +261,7 @@ object Dedup {
     * span the full 64-bit domain (~n/2^63), the char-ngram hashes live
     * mod P=2^31-1 (~n/2^31) — both negligible at ~1.4k-element sets.
     *
-    * MinHash pre-filter (VERDICT r3 #4, `sigDf` = Some): before the
+    * MinHash pre-filter (`sigDf` = Some): before the
     * full shingle sets ship through the two verify joins, candidate
     * pairs join the k-slot signatures (64 longs — for char 6-grams
     * ~20× narrower than the set arrays) and pairs whose slot-agreement
@@ -307,7 +307,7 @@ object Dedup {
   // ≈ 0.5. The VERIFY threshold sits ABOVE the midpoint (0.6, where
   // banding recall is 1-(1-0.6^4)^16 ≈ 0.89, vs only ~0.64 at 0.5):
   // reporting pairs at the midpoint would present ~64% recall as
-  // exhaustive (ADVICE r3). Recall at the reported threshold rises
+  // exhaustive. Recall at the reported threshold rises
   // steeply: ≈0.99 at J=0.7, ≈1.0 at J≥0.8.
   // Signature and shingle-set come from the one-pass native
   // expressions ([[graft.functions.WordNgramMinHash]]) — map-only
@@ -467,7 +467,7 @@ object Dedup {
   // ------------------------------------------------------------------
 
   /** Dot product of two float-array columns — native codegen
-    * ([[graft.functions.VectorDot]]; VERDICT r3 #3: the interpreted
+    * ([[graft.functions.VectorDot]]; the interpreted
     * `aggregate(zip_with(...))` lambda paid a per-element dispatch on
     * every vector and candidate pair). Double accumulation,
     * left-to-right — same values as the lambda. Divide by norms for
@@ -1534,7 +1534,7 @@ object Dedup {
     */
   val EntityMaxDist = 2
 
-  /** The second blocking pass's distance tier (VERDICT r16 #4):
+  /** The second blocking pass's distance tier:
     * sorted-neighborhood pairs at exactly this edit distance also
     * count as links — typos past the SymSpell deletion radius
     * (e.g. three substitutions) that production MDM stacks catch
@@ -1550,7 +1550,7 @@ object Dedup {
     * characters sorts away and is out of rule). */
   val EntitySnmWindow = 8
 
-  /** The third blocking pass's distance tier (VERDICT r18 #7): pairs
+  /** The third blocking pass's distance tier: pairs
     * whose names share an alphanumeric Soundex-class code
     * ([[graft.functions.PhoneticCode]]) count as links at exactly this
     * edit distance — phonetic respellings (`Catherine`/`Kathryn`, ed 4
@@ -1587,7 +1587,7 @@ object Dedup {
     * codegen'd `levenshtein`, the same classic DP DuckDB runs, so the
     * match SET is hash-checked, not a similarity estimate.
     *
-    * MATCH RULE (extended r17, VERDICT r16 #4): a pair links iff
+    * MATCH RULE: a pair links iff
     * ed ≤ [[EntityMaxDist]] (SymSpell pass — pigeonhole-complete), OR
     * ed = [[EntitySndDist]] AND the two distinct names sort within
     * [[EntitySnmWindow]] group ranks (the sorted-neighborhood second
@@ -1595,7 +1595,7 @@ object Dedup {
     * over one canonicalize→block→verify→expand pipeline. Both passes
     * are deterministic, so the oracle replays the full rule.
     *
-    * Shape at scale (VERDICT r10/r11: the previous pure
+    * Shape at scale (an earlier pure
     * (nation × mktsegment) blocking had FIXED cardinality 125, so
     * candidates grew O(N²/125) — quadratic at 100× data): the block
     * key now contains the name-derived signature, whose cardinality
@@ -1730,11 +1730,11 @@ object Dedup {
         // levenshtein compares).
         levenshtein(col("name_a"), col("name_b"), EntityMaxDist).as("ed"))
       .filter(col("ed") >= 0 && col("ed") <= EntityMaxDist)
-      // r17 (VERDICT r16 #4): the second blocking pass. Disjoint by
+      // the second blocking pass. Disjoint by
       // construction (pass 1 keeps ed ≤ 2, pass 2 keeps ed = 3), so
       // plain union — no pair ever verifies twice into the output.
       .unionByName(entitySnmGroupPairs(grp))
-      // r19 (VERDICT r18 #7): the third blocking pass — phonetic,
+      // the third blocking pass — phonetic,
       // ed = 4 exactly; disjoint from both passes above, plain union.
       .unionByName(entityPhoneticGroupPairs(grp))
   }
@@ -1836,7 +1836,7 @@ object Dedup {
     * backreferences) → first 18 classes → BIGINT.
     */
   private def phonCodeSql(x: String): String = {
-    // strip BEFORE lowercasing (ADVICE r19): DuckDB's lower() is
+    // strip BEFORE lowercasing: DuckDB's lower() is
     // Unicode-aware, so characters whose lowercase maps into a-z
     // (Kelvin sign U+212A → 'k', dotted capital I U+0130 → 'i'+dot)
     // would survive a lower-then-strip chain and get classed, while
@@ -1925,7 +1925,7 @@ object Dedup {
        |SELECT nationkey, mktsegment, cust_a, cust_b, edit_dist FROM phonrec
        |ORDER BY nationkey, mktsegment, cust_a, cust_b""".stripMargin
 
-  /** Production-shaped entity resolution (VERDICT r14 #5): the TOP-1
+  /** Production-shaped entity resolution: the TOP-1
     * best match per record — min edit distance, ties to the smaller
     * mate key — plus the verified-mate count. [[qEntityMatch]] emits
     * the full within-family pair set, which is the ANSWER's size on a

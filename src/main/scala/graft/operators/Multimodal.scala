@@ -136,8 +136,8 @@ object Multimodal {
     * per-modality stride (images decode to 1 frame; audio "frames"
     * are samples, so the stride is sample-rate-sized — output
     * cardinality stays plannable per the [[frameSample]] contract),
-    * then roll the frame corpus up per media type. Fully hash-checked
-    * (VERDICT r9 #5): the stub codec is deterministic byte arithmetic,
+    * then roll the frame corpus up per media type. Fully hash-checked:
+    * the stub codec is deterministic byte arithmetic,
     * so [[qMediaPipelineSql]] mirrors it — the typed mapPartitions
     * path stays the real plumbing under test, the oracle replays its
     * arithmetic. Per-stage semantics are additionally spec-tested in
@@ -213,7 +213,7 @@ object Multimodal {
   }
 
   // ------------------------------------------------------------------
-  // Perceptual-hash media dedup (VERDICT r13 #5): an average-hash
+  // Perceptual-hash media dedup: an average-hash
   // (aHash) fingerprint over the stub-decoded payload, then the
   // Dedup.scala banded-LSH candidate machinery reused verbatim.
   // 4 bands × 16 bits: any pair with hamming ≤ 3 shares ≥1 clean band
@@ -384,7 +384,7 @@ object Multimodal {
     * — the banded-minhash precondition), and the best-mate pick
     * replays the min(struct) tie-break as a window.
     *
-    * ASCII corpus contract (ADVICE r14, same as
+    * ASCII corpus contract (same as
     * [[OracleEmul.wordHashes]]): the 48-bit seed folds
     * `unicode(c)::HUGEINT` per CHARACTER while the Spark side
     * ([[StubCodec.baseHash]]) folds UTF-8 BYTES — equal only while
@@ -476,7 +476,7 @@ object Multimodal {
   private[graft] val PhashBandingConfigs = Seq(2, 4, 8, 16)
 
   /** Banding recall/candidate-volume frontier of the phash shelf
-    * (VERDICT r19 #6 — the media twin of `q_banding_curve`): per band
+    * (the media twin of `q_banding_curve`): per band
     * count b ∈ [[PhashBandingConfigs]], re-slice the SAME 64-bit aHash
     * fingerprint into b equal bands, surface candidates through the
     * salted band join, and score against hamming truth at ≤

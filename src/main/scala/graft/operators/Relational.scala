@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.plans.Materialize._
+import graft.plans.TopK
 import graft.sources.Ingest
 
 /** Core relational/analytic operators (SURVEY.md §2 rows 8-15, 18).
@@ -196,9 +197,7 @@ object Relational {
       .groupBy(col("p_brand"), col("p_partkey"))
       .agg(sum(money(col("l_extendedprice")) * (lit(1).cast("decimal(4,2)") - rate(col("l_discount"))))
         .cast("double").as("revenue"))
-    val w = Window.partitionBy(col("p_brand")).orderBy(col("revenue").desc, col("p_partkey"))
-    rev.withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= 3)
+    TopK(rev, Seq("p_brand"), Seq(col("revenue").desc, col("p_partkey")), 3, "rk")
       .select(col("p_brand").as("brand"), col("p_partkey").as("partkey"), col("revenue"), col("rk"))
   }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.plans.Materialize._
+import graft.plans.TopK
 import graft.sources.Ingest
 
 /** Scale-pattern operators (SURVEY.md §2 rows 41-44): the aggregation
@@ -32,7 +33,7 @@ object ScaleOps {
     * one-phase SQL the oracle runs. SQL `COUNT(DISTINCT user_id)`
     * ignores NULLs, so the pair count must not tally the NULL-user
     * group (this testdata has none, but the operator must not depend
-    * on that — ADVICE r6).
+    * on that).
     */
   def qSkewAgg(s: SparkSession, dir: String): DataFrame = {
     val e = Ingest.events(s, dir)
@@ -642,8 +643,8 @@ object ScaleOps {
     * Oracle contract as [[qHllUnion]]: the row carries the exact
     * trailing distinct and a boolean asserting the merged estimate
     * landed within 5% (lgConfigK=14 → σ ≈ 0.8%); the exact branch here
-    * is the audit, not the production path — and it is CONFIG-GATED
-    * (VERDICT r9 #8): `spark.graft.reach.exact` defaults true (oracle
+    * is the audit, not the production path — and it is CONFIG-GATED:
+    * `spark.graft.reach.exact` defaults true (oracle
     * runs audit the sketch), false drops the exact distinct entirely
     * and serves `(event_type, day, est)` from the sketch table alone.
     * The production plan touches raw events exactly ONCE (the daily
@@ -1022,17 +1023,13 @@ object ScaleOps {
     */
   def qKmvOverlap(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.GraftBridge
-    import org.apache.spark.sql.expressions.Window
     val ut = Ingest.events(s, dir)
       .select(col("user_id"), col("event_type")).distinct()
       .materialized // feeds the sketch build AND the exact audit join
     val mixed = GraftBridge.column(graft.functions.SplitMix64(
       GraftBridge.expression(col("user_id"))))
-    val sk = ut
-      .withColumn("u63", shiftrightunsigned(mixed, 1))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("event_type").orderBy(col("u63"), col("user_id"))))
-      .filter(col("rk") <= KmvK)
+    val sk = TopK(ut.withColumn("u63", shiftrightunsigned(mixed, 1)),
+        Seq("event_type"), Seq(col("u63"), col("user_id")), KmvK, "rk")
       .groupBy(col("event_type"))
       .agg(sort_array(collect_list(col("u63"))).as("sk"))
     val exact = ut.as("a").join(ut.as("b"),

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.plans.Materialize._
-import graft.plans.Surrogate
+import graft.plans.{Surrogate, TopK}
 import graft.sources.Ingest
 
 /** Customer-segmentation / distribution analytics (SURVEY.md §2 rows
@@ -326,6 +326,15 @@ object Segments {
 
   private val RepeatGapCapWeeks = 8L
 
+  /** Each customer's first two orders (o_custkey, o_orderkey, day, rn)
+    * by (day, o_orderkey): [[qRepeatPurchase]]'s rank, exposed
+    * un-checkpointed so PlanSpec can pin its shape. */
+  private[graft] def firstTwoOrders(s: SparkSession, dir: String): DataFrame =
+    TopK(Ingest.table(s, dir, "orders")
+      .select(col("o_custkey"), col("o_orderkey"),
+        expr("unix_millis(CAST(o_orderdate AS TIMESTAMP)) DIV 86400000").as("day")),
+      Seq("o_custkey"), Seq(col("day"), col("o_orderkey")), 2, "rn")
+
   /** Repeat-purchase latency: per customer, the gap between the first
     * and second order, bucketed into weeks (capped at
     * [[RepeatGapCapWeeks]], with -1 = never repeated) and shared
@@ -346,12 +355,7 @@ object Segments {
     * corpus twice). The total rides in broadcast.
     */
   def qRepeatPurchase(s: SparkSession, dir: String): DataFrame = {
-    val o = Ingest.table(s, dir, "orders")
-      .select(col("o_custkey"), col("o_orderkey"),
-        expr("unix_millis(CAST(o_orderdate AS TIMESTAMP)) DIV 86400000").as("day"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("o_custkey").orderBy(col("day"), col("o_orderkey"))))
-      .filter(col("rn") <= 2)
+    val o = firstTwoOrders(s, dir)
       .groupBy(col("o_custkey"))
       .agg(
         min(when(col("rn") === 1, col("day"))).as("d1"),

@@ -36,7 +36,7 @@ object Temporal {
   }
 
   /** Order-free oracle body — composers embed THIS as a CTE; the
-    * standalone oracle appends the presentation ORDER BY (ADVICE r14).
+    * standalone oracle appends the presentation ORDER BY.
     */
   private[graft] val qSessionizeBody: String =
     """WITH flagged AS (
@@ -62,7 +62,7 @@ object Temporal {
   val qSessionizeSql: String = qSessionizeBody + "\nORDER BY user_id, session_id"
 
   /** Event-time session windows via Spark's NATIVE `session_window`
-    * (VERDICT r14 #8) — the built-in face of [[qSessionize]], which
+    * — the built-in face of [[qSessionize]], which
     * implements the same semantics manually with lag + running-sum
     * windows. One standard-API difference is kept honest rather than
     * papered over: `session_window` merges two events when their gap

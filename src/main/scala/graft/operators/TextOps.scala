@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.plans.Materialize._
-import graft.plans.Publish
+import graft.plans.{Publish, TopK}
 import graft.sources.Ingest
 
 /** Text-analysis operators for the LLM-training-data pipeline
@@ -2785,12 +2785,8 @@ object TextOps {
     val scored = tf.join(df, "w")
       .select(col("doc_id"), col("w").as("term"), col("tf"), col("df"),
         expr(s"(tf * $TfidfFp) DIV df").as("score_fp"))
-    scored
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("doc_id").orderBy(col("score_fp").desc, col("term"))))
-      .filter(col("rk") <= TfidfK)
-      .select(col("doc_id"), col("rk").cast("long").as("rk"),
-        col("term"), col("tf"), col("df"), col("score_fp"))
+    TopK(scored, Seq("doc_id"), Seq(col("score_fp").desc, col("term")), TfidfK, "rk")
+      .select(col("doc_id"), col("rk"), col("term"), col("tf"), col("df"), col("score_fp"))
   }
 
   val qTfidfKeywordsSql: String =
@@ -3220,11 +3216,8 @@ object TextOps {
           "(a, b) -> concat(a, ' ', b))")).as("bigram"))
       .groupBy(col("lang"), col("bigram"))
       .agg(count(lit(1)).as("n"))
-    bi
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("lang").orderBy(col("n").desc, col("bigram"))))
-      .filter(col("rk") <= BigramTopK)
-      .select(col("lang"), col("rk").cast("long").as("rk"), col("bigram"), col("n"))
+    TopK(bi, Seq("lang"), Seq(col("n").desc, col("bigram")), BigramTopK, "rk")
+      .select(col("lang"), col("rk"), col("bigram"), col("n"))
   }
 
   val qBigramTopkSql: String =
@@ -3300,12 +3293,8 @@ object TextOps {
         expr("(ub * 1000000) DIV t_tokens").as("pb_ppm"))
       .withColumn("lift_ppm",
         expr("(pab_ppm * 1000000) DIV greatest((pa_ppm * pb_ppm) DIV 1000000, 1)"))
-    lifted
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("lang").orderBy(col("lift_ppm").desc, col("bigram"))))
-      .filter(col("rk") <= CollocTopK)
-      .select(col("lang"), col("rk").cast("long").as("rk"), col("bigram"),
-        col("n"), col("lift_ppm"))
+    TopK(lifted, Seq("lang"), Seq(col("lift_ppm").desc, col("bigram")), CollocTopK, "rk")
+      .select(col("lang"), col("rk"), col("bigram"), col("n"), col("lift_ppm"))
   }
 
   val qCollocLiftSql: String =

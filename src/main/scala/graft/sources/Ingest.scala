@@ -125,7 +125,7 @@ object Ingest {
   }
 
   /** Z-order clustered parquet writer — the APPLY half of the
-    * `q_zorder_layout` planning statistic (VERDICT r9 #6): normalize
+    * `q_zorder_layout` planning statistic: normalize
     * each column to an 8-bit bucket rank, interleave the ranks into a
     * Morton key, range-partition the rows on that key (each output
     * file owns a contiguous curve range) and sort within partitions —
@@ -169,7 +169,7 @@ object Ingest {
       // empty input or an all-NULL column has no min/max: every row
       // ranks 0 on that dimension (clusters at the curve origin, the
       // same rule NULL values already follow) instead of NPEing on the
-      // null stats row (ADVICE r10)
+      // null stats row
       if (stats.isNullAt(2 * j) || stats.isNullAt(2 * j + 1)) "0"
       else {
         val (lo, hi) = (stats.getDouble(2 * j), stats.getDouble(2 * j + 1))

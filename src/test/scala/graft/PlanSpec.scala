@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+
 /** Physical-plan tripwires for the headline scale claims. Correctness
   * is the oracle's job; these assert the PLAN SHAPE stays the one
   * designed for 100 TB — a regression here can pass every value check
@@ -105,6 +107,70 @@ class PlanSpec extends SparkSpec {
       l.contains("Join") && l.contains("doc_id"))
     assert(genIdx >= 0 && docJoinIdx > genIdx,
       s"token explode must sit ABOVE the doc_id join in the plan tree:\n$tfp")
+  }
+
+  test("plans.TopK: every per-group cut plans a partial limit under its partition key's exchange") {
+    def key(name: String) = () => SparkEntry.plans(name)(spark, sf0001)
+    // (frame, partition column, k) of every cut plans.TopK serves. Each
+    // must plan `WindowGroupLimit … Partial` as the direct child of the
+    // hash exchange on its partition column: a map task ships at most k
+    // rows per group. Ranks under a checkpoint are judged on the frame
+    // the device returns (q_repeat_purchase: firstTwoOrders; lpaRounds'
+    // round 1: lpaRound1). q_embed_outlier and q_semdedup reach
+    // centroidRanked, and q_graph_modularity lpaRounds, only under a
+    // checkpoint; the same cuts are judged here through
+    // q_centroid_assign, q_cluster_quality, q_label_prop and lpaRound1.
+    // q_basket_pairs and q_link_predict (cappedBaskets) are exempt: their
+    // k = BasketCap = 1024 is above
+    // spark.sql.optimizer.windowGroupLimitThreshold (1000), so Spark
+    // plans no partial limit there.
+    val partial: Seq[(String, () => DataFrame, String, Int)] = Seq(
+      "q_ann_bruteforce", "q_ann_lsh", "q_ann_ivf", "q_ann_quantized", "q_ann_ivfadc",
+      "q_ann_recall", "q_pq_recall", "q_quant_recall", "q_ann_probe_curve",
+      "q_lsh_probe_curve", "q_hybrid_search"
+    ).map(n => (n, key(n), "query_id", 5)) ++ Seq(
+      ("q_ann_pq", key("q_ann_pq"), "query_id", 5),
+      ("q_ann_pq", key("q_ann_pq"), "query_id", 20),
+      ("q_cluster_keywords", key("q_cluster_keywords"), "cluster", 10),
+      ("q_centroid_assign", key("q_centroid_assign"), "vec_id", 1),
+      ("q_cluster_quality", key("q_cluster_quality"), "vec_id", 2),
+      ("q_tfidf_keywords", key("q_tfidf_keywords"), "doc_id", 3),
+      ("q_bigram_topk", key("q_bigram_topk"), "lang", 20),
+      ("q_colloc_lift", key("q_colloc_lift"), "lang", 20),
+      ("q_label_prop", key("q_label_prop"), "supp", 1),
+      ("lpaRound1", () => operators.Analytics.lpaRound1(spark, sf0001)._2, "cust", 1),
+      ("q_session_path", key("q_session_path"), "user_id", 5),
+      ("q_kmv_overlap", key("q_kmv_overlap"), "event_type", 256),
+      ("firstTwoOrders", () => operators.Segments.firstTwoOrders(spark, sf0001), "o_custkey", 2),
+      ("q_window_rank", key("q_window_rank"), "p_brand", 3))
+    // Cuts whose input the window below already clusters on query_id:
+    // Spark needs no exchange and plans the limit Final-only, in the
+    // same stage as that window.
+    val inPlace = Seq(("q_hybrid_search", "query_id", 3), ("q_rrf_fusion", "query_id", 5))
+    val plans = scala.collection.mutable.Map.empty[String, Vector[String]]
+    def linesOf(name: String, df: () => DataFrame): Vector[String] =
+      plans.getOrElseUpdate(name, df().queryExecution.executedPlan.toString
+        .split("== Initial Plan ==").head.linesIterator.toVector)
+    def depth(l: String): Int = l.indexWhere(_.isLetter)
+    def limitAt(lines: Vector[String], part: String, k: Int, mode: String): Int =
+      lines.indexWhere(_.matches(
+        s".*WindowGroupLimit \\[$part#\\d+L?\\], .*, row_number\\(\\), $k, $mode"))
+    val bad = partial.flatMap { case (name, df, part, k) =>
+      val lines = linesOf(name, df)
+      val i = limitAt(lines, part, k, "Partial")
+      val parent = lines.take(i).lastIndexWhere(l => i >= 0 && depth(l) < depth(lines(i)))
+      if (parent >= 0 && lines(parent).matches(s".*Exchange hashpartitioning\\($part#\\d+L?, \\d+\\).*")) None
+      else Some(s"$name: no partial top-$k on $part under its exchange:\n${lines.mkString("\n")}")
+    } ++ inPlace.flatMap { case (name, part, k) =>
+      val lines = linesOf(name, key(name))
+      val i = limitAt(lines, part, k, "Final")
+      // the first exchange or window below the limit must be a window
+      val below = lines.drop(i + 1).takeWhile(l => i >= 0 && depth(l) > depth(lines(i)))
+        .find(l => l.contains("Exchange") || l.contains("Window ["))
+      if (below.exists(_.contains("Window ["))) None
+      else Some(s"$name: no in-stage top-$k on $part:\n${lines.mkString("\n")}")
+    }
+    assert(bad.isEmpty, bad.mkString("\n\n"))
   }
 
   test("q_ann_lsh: probe side broadcasts; corpus side carries no pre-join exchange") {
