@@ -314,7 +314,6 @@ object Analytics {
     * accumulation order is engine-private).
     */
   def qMovingAvg(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val daily = Ingest.table(s, dir, "orders")
       .groupBy(col("o_orderdate").cast("date").as("d"))
       .agg(count(lit(1)).as("n_orders"), sum(money(col("o_totalprice"))).as("tot"))
@@ -480,7 +479,6 @@ object Analytics {
     * bounded by calendar time, never by data volume).
     */
   def qRetention(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     Ingest.events(s, dir)
       .select(col("user_id"), expr("ts_ms DIV 86400000").as("day"))
       .withColumn("cohort_day",
@@ -555,7 +553,6 @@ object Analytics {
     * already-tiny matrix. 100 TB of events moves once.
     */
   def qTransitionMatrix(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("user_id").orderBy("ts_ms", "event_id")
     val steps = Ingest.events(s, dir)
       .select(col("user_id"), col("event_id"), col("ts_ms"), col("event_type"))
@@ -1153,7 +1150,6 @@ object Analytics {
     * series.
     */
   def qAutocorr(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val w = Window.orderBy("day")
     val pairs = dailySeries(s, dir)
       .withColumn("y", lead(col("x"), 1).over(w))
@@ -1213,7 +1209,6 @@ object Analytics {
     * on that bounded input.
     */
   def qChangepoint(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
     val ser = dailySeries(s, dir)
       .withColumn("k", count(lit(1)).over(
@@ -1360,7 +1355,6 @@ object Analytics {
     * sums OVER THAT TINY TABLE (model-sized — no second corpus pass).
     */
   def qSeasonality(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     Ingest.events(s, dir)
       .select(col("event_type"),
         dayofweek(timestamp_millis(col("ts_ms"))).cast("long").as("dow"))

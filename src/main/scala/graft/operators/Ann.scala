@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.plans.Materialize._
-import graft.plans.{Publish, TopK}
+import graft.plans.{Publish, SlotFold, TopK}
 import graft.sources.Ingest
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
@@ -354,10 +354,11 @@ object Ann {
   // inside a native [[graft.functions.NearestCell]] expression, so
   // cell assignment is a pure MAP — no join, no shuffle, ever. Each
   // Lloyd training round is one such map pass folded into k·dim
-  // partial sums per partition ([[lloydRound]]), one job with no
-  // shuffle; nothing ever pairs corpus rows with each other. Serving
-  // is an equi-join on cell id against the broadcast probe list: the
-  // corpus scan drops to nProbe/k of the index, the IVF promise.
+  // partial sums per partition by the [[graft.plans.SlotFold]] device
+  // ([[lloydRound]]), one job with no shuffle; nothing ever pairs
+  // corpus rows with each other. Serving is an equi-join on cell id
+  // against the broadcast probe list: the corpus scan drops to
+  // nProbe/k of the index, the IVF promise.
   // ------------------------------------------------------------------
 
   private[graft] val IvfCells = 16
@@ -382,42 +383,33 @@ object Ann {
     * or merge order, and boundary vectors can't drift between runs.
     * The 2^-21 quantization error is noise against the float32
     * inputs. Headroom: |v| < 2^7 ⇒ |q| < 2^27, safe to ~2^35 rows per
-    * entry — audit before raising FpScale. A null component counts
+    * entry; past that the round throws `ArithmeticException` instead of
+    * wrapping — audit before raising FpScale. A null component counts
     * toward its entry's mean but adds nothing to its sum, as `count(1)`
     * and `sum` do in the oracle's replay.
     *
-    * Shape: ONE job. `treeAggregate` folds each partition's Catalyst
-    * rows into two `prev.length` long arrays (a model-sized bound, never
-    * data-sized) and merges them without a shuffle at this size; over
-    * many partitions its tree levels merge on the executors before the
-    * driver sees the last few. The corpus never shuffles.
+    * Shape: ONE [[graft.plans.SlotFold]] job over a `2·prev.length`
+    * long array, sums at `[0, n)` and counts at `[n, 2n)`: a
+    * model-sized bound, never data-sized. The corpus never shuffles.
     */
   private def lloydRound(rows: DataFrame, prev: Array[Double])(
       slotOf: (InternalRow, Int) => Int): Array[Double] = {
     val n = prev.length
     val quantized = rows.select(col("slot"),
       expr(s"transform(embedding, v -> CAST(round(v * $FpScale) AS BIGINT))"))
-    val (sums, counts) = quantized.queryExecution.toRdd
-      .treeAggregate((new Array[Long](n), new Array[Long](n)))(
-        { case (acc @ (s1, c1), r) =>
-          if (!r.isNullAt(0) && !r.isNullAt(1)) {
-            val q = r.getArray(1)
-            var pos = 0
-            while (pos < q.numElements) {
-              val at = slotOf(r, pos)
-              c1(at) += 1
-              if (!q.isNullAt(pos)) s1(at) += q.getLong(pos)
-              pos += 1
-            }
-          }
-          acc
-        },
-        { case (acc @ (s1, c1), (s2, c2)) =>
-          var i = 0
-          while (i < n) { s1(i) += s2(i); c1(i) += c2(i); i += 1 }
-          acc
-        })
-    Array.tabulate(n)(i => if (counts(i) == 0) prev(i) else sums(i).toDouble / FpScale / counts(i))
+    val sums = SlotFold(quantized, 2 * n) { (r, acc) =>
+      if (!r.isNullAt(0) && !r.isNullAt(1)) {
+        val q = r.getArray(1)
+        var pos = 0
+        while (pos < q.numElements) {
+          val at = slotOf(r, pos)
+          SlotFold.add(acc, n + at, 1L)
+          if (!q.isNullAt(pos)) SlotFold.add(acc, at, q.getLong(pos))
+          pos += 1
+        }
+      }
+    }
+    Array.tabulate(n)(i => if (sums(n + i) == 0) prev(i) else sums(i).toDouble / FpScale / sums(n + i))
   }
 
   /** Train the codebook: `IvfCells` centroids (flattened row-major

@@ -694,7 +694,6 @@ object Relational {
     * on l_partkey; each partition sorts only its parts' history.
     */
   def qRunningBalance(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("l_partkey")
       .orderBy("ship_day", "l_orderkey", "l_linenumber", "qty")
       .rowsBetween(Window.unboundedPreceding, 0)

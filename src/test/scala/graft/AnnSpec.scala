@@ -400,8 +400,7 @@ class AnnSpec extends SparkSpec {
   }
 
   test("IVF-PQ lifecycle: per-entry-point job budget; the coding pass broadcasts no local table") {
-    import org.apache.spark.ListenerBusDrain
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.JobsOf
     import org.apache.spark.sql.execution.{LocalTableScanExec, QueryExecution}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
@@ -412,22 +411,7 @@ class AnnSpec extends SparkSpec {
     // includes training and does not depend on which test ran first
     val s = spark.newSession()
     val sc = s.sparkContext
-    // jobs are attributed through a thread-local property, which the
-    // broadcast and subquery threads inherit from the calling thread
-    val tag = "graft.annspec.jobBudget"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty(tag) != null) jobs.incrementAndGet()
-    }
-    def jobsOf(body: => Unit): Int = {
-      ListenerBusDrain(sc)
-      jobs.set(0)
-      sc.setLocalProperty(tag, "1")
-      try body finally sc.setLocalProperty(tag, null)
-      ListenerBusDrain(sc)
-      jobs.get
-    }
+    def jobsOf(body: => Unit): Int = JobsOf(sc)(body).size
     val path = tempDir("ivfpq-jobs") + "/idx"
     val (corpus, _) = Ann.split(s, sf0001)
     // (rows, bytes) of every broadcast carrying the ADC lookup tables,
@@ -448,52 +432,50 @@ class AnnSpec extends SparkSpec {
       }
       override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    sc.addSparkListener(listener)
-    try {
-      val build = jobsOf(Ann.buildIvfPqIndex(s, sf0001, path, col("vec_id") % 7 =!= 0))
-      val upsert = jobsOf(Ann.ivfPqUpsertBatch(s, path, corpus.filter(col("vec_id") % 7 === 0), 1L))
-      s.listenerManager.register(serveListener)
-      val serve = try jobsOf(Ann.ivfPqServe(s, sf0001, path).collect())
-        finally s.listenerManager.unregister(serveListener)
-      info(s"jobs: build $build, upsert batch $upsert, serve $serve")
-      // What each entry point pays:
-      //   build 10: one seed pick and one job per Lloyd round for each
-      //     of the two codebooks (2 + 2 rounds), then the writes;
-      //   upsert 4: the empty-batch check, one read of both frozen
-      //     models, the two halves' writes;
-      //   serve 8: one read of both frozen models, the probed cells,
-      //     the ADC shortlist, the reranked top-k, and the scans and
-      //     broadcasts under them.
-      // graft's own tables are read with their declared schema (no
-      // footer-inference job), the PQ codebook without a sort, the
-      // per-cell model rows ride in the coding expression (no broadcast
-      // job), and each query ranks its probed cells inside one
-      // expression (no centroid-table broadcast job, no window).
-      // A Lloyd round as a grouped aggregate runs a map job and a result
-      // job, and reading the two models in two collects one job more:
-      // 14 / 5 / 9 jobs. Reading with schema inference, sorting and
-      // broadcasting cost 21 / 12 / 21; the probe cross join, the
-      // footer-inferred `embeddings` read and a local broadcast of the
-      // shortlist pairs 15 / 5 / 13.
-      assert(build <= 10, s"buildIvfPqIndex launched $build jobs")
-      assert(upsert <= 4, s"ivfPqUpsertBatch launched $upsert jobs")
-      assert(serve <= 8, s"ivfPqServe launched $serve jobs")
-      // the query side is one row per query, not one per probed
-      // (query, cell): a 16 × 256-double table each
-      val luts = lutBroadcasts.toArray.map(_.asInstanceOf[(Long, Long)]).toSeq
-      info(s"LUT broadcasts (rows, bytes): ${luts.mkString(", ")}")
-      assert(luts.nonEmpty, "ivfPqServe must broadcast its query-side LUT rows")
-      assert(luts.forall(_._1 <= Ann.QueryK),
-        s"the LUT broadcast must carry at most ${Ann.QueryK} rows, got ${luts.mkString(", ")}")
-      // the float IVF serve probes the same way
-      val ivfPath = tempDir("ivf-jobs") + "/idx"
-      Ann.buildIvfIndex(s, sf0001, ivfPath)
-      s.listenerManager.register(serveListener)
-      try { Ann.ivfServe(s, sf0001, ivfPath).collect(); ListenerBusDrain(sc) }
+    val build = jobsOf(Ann.buildIvfPqIndex(s, sf0001, path, col("vec_id") % 7 =!= 0))
+    val upsert = jobsOf(Ann.ivfPqUpsertBatch(s, path, corpus.filter(col("vec_id") % 7 === 0), 1L))
+    s.listenerManager.register(serveListener)
+    val serve = try jobsOf(Ann.ivfPqServe(s, sf0001, path).collect())
       finally s.listenerManager.unregister(serveListener)
-      assert(localBroadcastPlans.isEmpty,
-        s"a serve broadcast a driver-local table:\n${localBroadcastPlans.toArray.mkString("\n")}")
-    } finally sc.removeSparkListener(listener)
+    info(s"jobs: build $build, upsert batch $upsert, serve $serve")
+    // What each entry point pays:
+    //   build 10: one seed pick and one job per Lloyd round for each
+    //     of the two codebooks (2 + 2 rounds), then the writes;
+    //   upsert 4: the empty-batch check, one read of both frozen
+    //     models, the two halves' writes;
+    //   serve 8: one read of both frozen models, the probed cells,
+    //     the ADC shortlist, the reranked top-k, and the scans and
+    //     broadcasts under them.
+    // graft's own tables are read with their declared schema (no
+    // footer-inference job), the PQ codebook without a sort, the
+    // per-cell model rows ride in the coding expression (no broadcast
+    // job), and each query ranks its probed cells inside one
+    // expression (no centroid-table broadcast job, no window).
+    // A Lloyd round as a grouped aggregate runs a map job and a result
+    // job, and reading the two models in two collects one job more:
+    // 14 / 5 / 9 jobs. Reading with schema inference, sorting and
+    // broadcasting cost 21 / 12 / 21; the probe cross join, the
+    // footer-inferred `embeddings` read and a local broadcast of the
+    // shortlist pairs 15 / 5 / 13.
+    assert(build <= 10, s"buildIvfPqIndex launched $build jobs")
+    assert(upsert <= 4, s"ivfPqUpsertBatch launched $upsert jobs")
+    assert(serve <= 8, s"ivfPqServe launched $serve jobs")
+    // the query side is one row per query, not one per probed
+    // (query, cell): a 16 × 256-double table each
+    val luts = lutBroadcasts.toArray.map(_.asInstanceOf[(Long, Long)]).toSeq
+    info(s"LUT broadcasts (rows, bytes): ${luts.mkString(", ")}")
+    assert(luts.nonEmpty, "ivfPqServe must broadcast its query-side LUT rows")
+    assert(luts.forall(_._1 <= Ann.QueryK),
+      s"the LUT broadcast must carry at most ${Ann.QueryK} rows, got ${luts.mkString(", ")}")
+    // the float IVF serve probes the same way
+    val ivfPath = tempDir("ivf-jobs") + "/idx"
+    Ann.buildIvfIndex(s, sf0001, ivfPath)
+    s.listenerManager.register(serveListener)
+    // counted only for its bus drain: the listener has seen every plan
+    try jobsOf(Ann.ivfServe(s, sf0001, ivfPath).collect())
+    finally s.listenerManager.unregister(serveListener)
+    assert(localBroadcastPlans.isEmpty,
+      s"a serve broadcast a driver-local table:\n${localBroadcastPlans.toArray.mkString("\n")}")
 
     val (cent, pqCb) = Ann.readPqModels(s, path)
     val coded = Ann.pqCode(Ann.ivfAssign(corpus, cent), pqCb, cent)

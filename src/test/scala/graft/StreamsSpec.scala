@@ -1098,35 +1098,19 @@ class StreamsSpec extends SparkSpec {
   }
 
   test("streamed scorers: no micro-batch runs a schema-inference job; the perceptron reads its model once") {
-    import org.apache.spark.ListenerBusDrain
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.JobsOf
     import org.apache.spark.sql.DataFrame
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
     val sc = s.sparkContext
-    // jobs are attributed through a thread-local property, which the
-    // stream's execution thread inherits from the thread that starts it
-    val tag = "graft.streamsspec.modelJobs"
     // per job: its micro-batch (None outside the stream) and the
     // operator scopes of the RDDs it runs
     type Job = (Option[String], Seq[String])
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Job]
     val batchOf = """(?s).*\bbatch = (\d+).*""".r
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty(tag) != null)
-          jobs.add((Option(e.properties.getProperty("spark.job.description")).collect {
-            case batchOf(n) => n
-          }, e.stageInfos.flatMap(_.rddInfos.flatMap(_.scope.map(_.name)))))
-    }
-    def jobsOf(body: => Unit): Seq[Job] = {
-      ListenerBusDrain(sc)
-      jobs.clear()
-      sc.setLocalProperty(tag, "1")
-      try body finally sc.setLocalProperty(tag, null)
-      ListenerBusDrain(sc)
-      jobs.toArray.toSeq.map(_.asInstanceOf[Job])
+    def jobsOf(body: => Unit): Seq[Job] = JobsOf(sc)(body).map { e =>
+      (Option(e.properties.getProperty("spark.job.description")).collect { case batchOf(n) => n },
+        e.stageInfos.flatMap(_.rddInfos.flatMap(_.scope.map(_.name))))
     }
     val docRows = graft.sources.Ingest.table(s, sf0001, "documents")
       .select("doc_id", "lang", "text").collect()
@@ -1146,30 +1130,27 @@ class StreamsSpec extends SparkSpec {
     graft.operators.TextOps.buildLmModel(s, sf0001, lm)
     graft.operators.TextOps.buildDsirModel(s, sf0001, dsir)
     graft.operators.TextOps.buildPerceptronModel(s, sf0001, perc)
-    sc.addSparkListener(listener)
-    try {
-      for ((name, run) <- Seq[(String, (DataFrame, String, String) => Unit)](
-          "lmScore" -> (Streams.lmScore(_, lm, _, _)),
-          "dsirScore" -> ((a, o, c) => Streams.dsirScore(a.drop("lang"), dsir, o, c)),
-          "perceptronScore" -> ((a, o, c) => Streams.perceptronScore(a.drop("lang"), perc, o, c)))) {
-        val js = streamed(run)
-        val inBatch = js.filter(_._1.nonEmpty)
-        info(s"$name: ${js.size} jobs, ${inBatch.size} of them in micro-batches " +
-          inBatch.flatMap(_._1).distinct.mkString(", "))
-        assert(inBatch.flatMap(_._1).distinct.size == 2,
-          s"$name: fixture must run two micro-batches")
-        // Spark infers a parquet schema by reading footers in a job of
-        // its own, a bare `parallelize` outside any SQL operator (the
-        // stream reads its arrivals through `MicroBatchScan`)
-        assert(!js.exists(_._2.contains("parallelize")),
-          s"$name read its model with schema inference: ${js.mkString("\n")}")
-        // the weights are collected once per run, before the stream
-        // starts; no micro-batch scans the model
-        if (name == "perceptronScore")
-          assert(!inBatch.exists(_._2.exists(_.startsWith("Scan parquet"))),
-            s"$name: a micro-batch read the model: ${inBatch.mkString("\n")}")
-      }
-    } finally sc.removeSparkListener(listener)
+    for ((name, run) <- Seq[(String, (DataFrame, String, String) => Unit)](
+        "lmScore" -> (Streams.lmScore(_, lm, _, _)),
+        "dsirScore" -> ((a, o, c) => Streams.dsirScore(a.drop("lang"), dsir, o, c)),
+        "perceptronScore" -> ((a, o, c) => Streams.perceptronScore(a.drop("lang"), perc, o, c)))) {
+      val js = streamed(run)
+      val inBatch = js.filter(_._1.nonEmpty)
+      info(s"$name: ${js.size} jobs, ${inBatch.size} of them in micro-batches " +
+        inBatch.flatMap(_._1).distinct.mkString(", "))
+      assert(inBatch.flatMap(_._1).distinct.size == 2,
+        s"$name: fixture must run two micro-batches")
+      // Spark infers a parquet schema by reading footers in a job of
+      // its own, a bare `parallelize` outside any SQL operator (the
+      // stream reads its arrivals through `MicroBatchScan`)
+      assert(!js.exists(_._2.contains("parallelize")),
+        s"$name read its model with schema inference: ${js.mkString("\n")}")
+      // the weights are collected once per run, before the stream
+      // starts; no micro-batch scans the model
+      if (name == "perceptronScore")
+        assert(!inBatch.exists(_._2.exists(_.startsWith("Scan parquet"))),
+          s"$name: a micro-batch read the model: ${inBatch.mkString("\n")}")
+    }
   }
 
   test("transitionSteps: a cross-batch straggler cannot rewind the sequence state") {

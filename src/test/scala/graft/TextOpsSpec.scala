@@ -910,6 +910,88 @@ class TextOpsSpec extends SparkSpec {
     assert(fn === 0L, "the length rule's keep side is fully recalled at this scale")
   }
 
+  test("hashed perceptron: the slot-fold trainer is bit-equal to the join form, at any partitioning") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions._
+    import graft.plans.Materialize._
+    // The reference is the trainer as a chain of joins over the
+    // (doc_id, y, f, cnt) features: per epoch, a broadcast margin join
+    // and per-doc rollup, the misclassified set, its per-bucket y·cnt
+    // sums with the sign-safe mean step, and a full outer join folding
+    // them into the previous weights; the readout sums the epochs.
+    def meanStep(s: String, nm: String): String =
+      s"CAST(CASE WHEN $s >= 0 THEN ($s * 1000) DIV greatest($nm, 1) " +
+        s"ELSE -((-($s) * 1000) DIV greatest($nm, 1)) END AS BIGINT)"
+    def joinForm(feats: DataFrame): DataFrame = {
+      var w: DataFrame = null
+      val snapshots = Seq.newBuilder[DataFrame]
+      for (_ <- 1 to TextOps.HashedEpochs) {
+        val margins =
+          (if (w == null) feats.withColumn("w", lit(0L))
+           else feats.join(broadcast(w), Seq("f"), "left"))
+            .groupBy(col("doc_id"), col("y"))
+            .agg(sum(col("cnt") * coalesce(col("w"), lit(0L))).as("margin"))
+        val mis = margins.filter(col("y") * col("margin") <= 0L)
+          .select("doc_id", "y").materialized
+        val nm = mis.agg(count(lit(1)).as("nm"))
+        val delta = feats.join(mis.select("doc_id"), Seq("doc_id"), "left_semi")
+          .groupBy(col("f"))
+          .agg(sum(col("y") * col("cnt")).as("sraw"))
+          .crossJoin(broadcast(nm))
+          .select(col("f"), expr(meanStep("sraw", "nm")).as("dw"))
+        w =
+          (if (w == null) delta.select(col("f"), col("dw").as("w"))
+           else w.join(delta, Seq("f"), "full")
+             .select(col("f"),
+               (coalesce(col("w"), lit(0L)) + coalesce(col("dw"), lit(0L))).as("w")))
+            .materialized
+        snapshots += w
+      }
+      snapshots.result().reduce(_ unionByName _)
+        .groupBy(col("f")).agg(sum(col("w")).as("w"))
+    }
+    // both serves read a missing bucket as weight 0
+    def nonZero(w: DataFrame): Map[String, Long] =
+      w.filter(col("w") =!= 0L).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    def trainFeats(dir: String): DataFrame = TextOps.hashedFeatures(
+      graft.sources.Ingest.table(spark, dir, "documents").filter(TextOps.isTrainSplit)).materialized
+    val feats = trainFeats(sf0001)
+    val rows = TextOps.hashedDocRows(feats).materialized
+    // the same docs hashed on three keys into 7 partitions: at least
+    // four of them are empty
+    val sevenWay = rows.repartition(7, col("doc_id") % 3).materialized
+    val sizes = sevenWay.rdd.mapPartitions(it => Iterator(it.size)).collect()
+    assert(sizes.length == 7 && sizes.contains(0), s"fixture: partition sizes ${sizes.mkString(", ")}")
+    // every train doc passes the length rule: epoch 1 moves every
+    // weight it touches up, so from epoch 2 on no doc is misclassified
+    val long = (1 to 8).map(d => d.toLong -> (1 to 45).map(i => s"w${d}x$i").mkString(" "))
+    val tinyFeats = trainFeats(docsDir(long))
+    val tinyRows = TextOps.hashedDocRows(tinyFeats).materialized
+    val ys = tinyRows.select("y").collect().map(_.getLong(0))
+    assert(ys.nonEmpty && ys.forall(_ == 1L), s"fixture: train labels ${ys.mkString(", ")}")
+    val (ref, tinyRef) = (nonZero(joinForm(feats)), nonZero(joinForm(tinyFeats)))
+    for ((name, r, want) <- Seq(("as read", rows, ref), ("7 partitions", sevenWay, ref),
+        ("no misclassified doc after epoch 1", tinyRows, tinyRef))) {
+      assert(want.nonEmpty, s"$name: fixture trains no weight")
+      val got = nonZero(TextOps.hashedPerceptron(r))
+      val differ = (got.keySet ++ want.keySet).filter(b => got.get(b) != want.get(b))
+      assert(differ.isEmpty, s"$name: ${differ.size} of ${want.size} bucket weights differ from the " +
+        s"reference, e.g. ${differ.take(3).map(b => s"$b ${got.get(b)} vs ${want.get(b)}").mkString(", ")}")
+    }
+  }
+
+  test("hashed perceptron: training is one job per epoch plus the feature materialization") {
+    import org.apache.spark.JobsOf
+    val s = spark.newSession()
+    val jobs = JobsOf(s.sparkContext)(TextOps.trainHashedPerceptron(s, sf0001)).size
+    info(s"trainHashedPerceptron: $jobs jobs")
+    // one fold per epoch, the two shuffles and the checkpoint of the
+    // one-time feature rollup, and the documents read's footer job; the
+    // join form ran about 172, with two checkpoints and four joins per
+    // epoch
+    assert(jobs <= TextOps.HashedEpochs + 4, s"trainHashedPerceptron launched $jobs jobs")
+  }
+
   test("classifier calibration: deciles partition the test split; positive rate rises with margin") {
     val rows = TextOps.qClassifierCalibration(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
