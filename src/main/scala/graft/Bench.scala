@@ -1,5 +1,7 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Per-round benchmark: every SparkEntry query against
   * SPARK_GRAFT_SF_DIR, one JSON line on stdout.
@@ -19,7 +21,11 @@ import org.apache.spark.sql.SparkSession
   *     recorded into the JSON next to the wall
   *     numbers, plus a shuffle-amplification tripwire — bytes are
   *     machine-independent plan facts, so a wall-clock delta with
-  *     unchanged bytes is environment noise, not a plan regression.
+  *     unchanged bytes is environment noise, not a plan regression;
+  *   - per-query generated-class compiles and janino milliseconds, summed
+  *     over the measured passes, so a codegen cache miss shows as a
+  *     nonzero `codegen_compiles`; the warm-up pass's total is the
+  *     number of distinct classes one pass compiles.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -52,8 +58,13 @@ object Bench {
     // group, drained via a marker job before totals are read
     val metrics = new BenchMetricsListener
     spark.sparkContext.addSparkListener(metrics)
+    // (compiles, janino ms) per (query, pass): deltas of the JVM-wide
+    // codegen counters, which the local executor shares with the driver
+    val codegen = scala.collection.mutable.Map.empty[(String, Int), (Long, Long)]
     def runOne(name: String, pass: Int): Double = {
       spark.sparkContext.setJobGroup(s"$name#$pass", name, interruptOnCancel = false)
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val ns0 = CodeGenerator.compileTime
       val t0 = System.nanoTime()
       try SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
@@ -62,7 +73,11 @@ object Bench {
           Console.err.println(
             s"[bench] FAIL $name: ${e.getClass.getName}: ${String.valueOf(e.getMessage).linesIterator.take(3).mkString(" | ")}")
         return -1.0
-      } finally spark.sparkContext.clearJobGroup()
+      } finally {
+        codegen((name, pass)) = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0,
+          (CodeGenerator.compileTime - ns0) / 1000000)
+        spark.sparkContext.clearJobGroup()
+      }
       (System.nanoTime() - t0) / 1e9
     }
 
@@ -120,6 +135,16 @@ object Bench {
         s""""$n":{"shuffle_read":${b.shuffleRead},"shuffle_write":${b.shuffleWrite},"spill_disk":${b.spillDisk},"spill_mem":${b.spillMem},"input":${b.input}}""")
     }.mkString("{", ",", "}")
     val ampJson = ampFlags.map("\"" + _ + "\"").mkString("[", ",", "]")
+    def codegenOf(ps: Seq[(String, Int)]): (Long, Long) = {
+      val cs = ps.flatMap(codegen.get)
+      (cs.map(_._1).sum, cs.map(_._2).sum)
+    }
+    def codegenJson(c: (Long, Long)): String =
+      s"""{"codegen_compiles":${c._1},"compile_ms":${c._2}}"""
+    val measuredCodegen = names.map(n => n -> codegenOf((1 to 3).map(n -> _)))
+    val codegenJsonAll = measuredCodegen.map { case (n, c) => s""""$n":${codegenJson(c)}""" }
+      .mkString("{", ",", "}")
+    val warmupCodegen = codegenOf(names.map(_ -> 0))
 
     // Regression tripwire vs the COMMITTED baseline:
     // read the previous artifact at benchOut BEFORE overwriting it and
@@ -244,7 +269,7 @@ object Bench {
     val total = results.collect { case (_, v) if v >= 0 => v }.sum
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val full =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"failed":$failedJson,"bytes":$bytesJson,"shuffle_amp_flags":$ampJson,"wall_drift_flags":$wallDriftJson,"wall_drift_nobytes":$wallDriftNoBytesJson,"plan_regress_flags":$planRegressJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"failed":$failedJson,"bytes":$bytesJson,"shuffle_amp_flags":$ampJson,"wall_drift_flags":$wallDriftJson,"wall_drift_nobytes":$wallDriftNoBytesJson,"plan_regress_flags":$planRegressJson,"codegen":$codegenJsonAll,"codegen_warmup":${codegenJson(warmupCodegen)},"sf":"$sfDir"}"""
     // The driver keeps only the LAST ~2000 chars of stdout and sbt
     // appends its own "[success]" line after ours, so the ~4 KB
     // per-query line can never arrive whole (BENCH_r09 parsed:null,
@@ -272,7 +297,7 @@ object Bench {
       Console.err.println(s"[bench] WARN: spark.stop() failed: $e")
     }
     println(
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"failed":$failedJson,"regress":${planRegressFlags.size},"queries_file":"$benchOut","sf":"$sfDir"}""")
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"failed":$failedJson,"regress":${planRegressFlags.size},"compiles":${measuredCodegen.map(_._2._1).sum},"queries_file":"$benchOut","sf":"$sfDir"}""")
     Console.out.flush()
     // SPARK_GRAFT_STRICT=1 turns a plan regression into a hard CI
     // failure (local gate use); the driver's round bench stays exit-0

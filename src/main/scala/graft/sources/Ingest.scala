@@ -1,6 +1,10 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -12,9 +16,37 @@ import org.apache.spark.sql.types._
   */
 object Ingest {
 
-  /** Parquet table from a scale-factor directory. */
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** Parquet table from a scale-factor directory.
+    *
+    * A table stored as one file is read under [[footerSchema]], so the
+    * read runs no job; any other path (a directory, a glob) keeps
+    * Spark's schema inference, which runs one job per read to merge
+    * footers.
+    */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    footerSchema(spark, path).fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+  }
+
+  /** The schema Spark's parquet inference gives the single file at
+    * `path`, read from its footer on the driver; `None` when `path` is
+    * not one file. It is inference's own conversion: the Spark schema
+    * the footer stores if any, else the parquet schema converted under
+    * the session's SQL conf, so the NTZ and `nanosAsLong` rules
+    * [[events]] depends on hold.
+    */
+  private[graft] def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new Path(path)
+    val status = try Some(p.getFileSystem(conf).getFileStatus(p))
+      catch { case _: java.io.FileNotFoundException => None }
+    status.filter(_.isFile).map { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+      val footer = try new Footer(f.getPath, reader.getFooter) finally reader.close()
+      ParquetFileFormat.readSchemaFromFooter(footer,
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    }
+  }
 
   /** events table with its `ts` column normalized across physical encodings.
     *

@@ -488,6 +488,31 @@ class AnnSpec extends SparkSpec {
       s"the coding pass must carry its per-cell model rows in expressions, not broadcast them:\n$p")
   }
 
+  test("IVF-PQ lifecycle: a second fresh session compiles no generated class") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.functions.col
+    // build → two upserts → serve in a fresh newSession(), as each
+    // perfbench iteration runs it; the count is JVM-wide (the local
+    // executor compiles into the same counter)
+    def compilesOfLifecycle(tag: String): Long = {
+      val s = spark.newSession()
+      val path = tempDir(s"ivfpq-codegen-$tag") + "/idx"
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val (corpus, _) = Ann.split(s, sf0001)
+      Ann.buildIvfPqIndex(s, sf0001, path, col("vec_id") % 7 > 1)
+      Ann.ivfPqUpsertBatch(s, path, corpus.filter(col("vec_id") % 7 === 0), 1L)
+      Ann.ivfPqUpsertBatch(s, path, corpus.filter(col("vec_id") % 7 === 1), 2L)
+      Ann.ivfPqServe(s, sf0001, path).collect()
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    val first = compilesOfLifecycle("a")
+    val second = compilesOfLifecycle("b")
+    info(s"generated classes compiled: first session $first, second session $second")
+    // every class the lifecycle needs stays in the codegen cache under
+    // the one executor class loader GraftSession sets
+    assert(second === 0, s"the second session compiled $second classes")
+  }
+
   test("model reads: a shuffled multi-file codebook reads back; a missing, doubled or renamed row throws") {
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.functions.{col, rand, when}

@@ -187,6 +187,24 @@ class IngestSpec extends SparkSpec {
     assert(r.getLong(1) === 0, "ts and ts_ms must agree at millis precision")
   }
 
+  test("table: a one-file table reads with no job, under the schema inference gives it") {
+    import org.apache.spark.JobsOf
+    val names = new java.io.File(sf0001).list().filter(_.endsWith(".parquet"))
+      .map(_.stripSuffix(".parquet")).sorted.toSeq
+    assert(names.size >= 10, s"fixture: sf0.001 tables $names")
+    for (n <- names) {
+      var read: org.apache.spark.sql.DataFrame = null
+      val jobs = JobsOf(spark.sparkContext) { read = Ingest.table(spark, sf0001, n) }.size
+      assert(jobs === 0, s"Ingest.table($n) launched $jobs jobs")
+      assert(read.schema === spark.read.parquet(s"$sf0001/$n.parquet").schema, n)
+    }
+    // a table stored as a directory keeps inference
+    val dir = tempDir("ingest-dir")
+    spark.range(3).selectExpr("id", "CAST(id AS STRING) AS s").write.parquet(s"$dir/t.parquet")
+    assert(Ingest.footerSchema(spark, s"$dir/t.parquet").isEmpty)
+    assert(Ingest.table(spark, dir, "t").schema.fieldNames.toSeq === Seq("id", "s"))
+  }
+
   test("acquire: streamed copy with size+md5, atomic into place") {
     val dir = java.nio.file.Paths.get(tempDir("acq"))
     val src = dir.resolve("remote.csv")
